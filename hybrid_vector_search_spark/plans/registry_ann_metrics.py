@@ -27,8 +27,9 @@ from hybrid_vector_search_spark.functions.predicates import (
     filters_to_sql,
 )
 from hybrid_vector_search_spark.functions.vector import dot_score_pandas_udf
-from hybrid_vector_search_spark.operators.topk import grouped_topk, topk
+from hybrid_vector_search_spark.operators.topk import topk
 from hybrid_vector_search_spark.queryvecs import query_vector, sql_array_literal
+from hybrid_vector_search_spark.session import artifact
 from hybrid_vector_search_spark.sources.loaders import (
     load_table,
     spread,
@@ -48,7 +49,6 @@ from hybrid_vector_search_spark.plans.registry_hybrid_ann import (  # noqa: E402
     _ann_ivf_centroids,
     _ann_ivf_fixed_index,
     _ann_ivf_probed,
-    ann_ivf_topk,
 )
 from hybrid_vector_search_spark.plans.registry_corpus import (  # noqa: E402
     JACCARD_THRESHOLD,
@@ -60,7 +60,6 @@ from hybrid_vector_search_spark.plans.registry_corpus import (  # noqa: E402
 # ----------------------------------------------------- HNSW ANN (K5 close)
 
 _HNSW_QSEED = 53
-_HNSW_CACHE: dict = {}
 
 
 def _hnsw_persisted_index(spark: SparkSession, sf_dir: str):
@@ -71,7 +70,7 @@ def _hnsw_persisted_index(spark: SparkSession, sf_dir: str):
     graphs with zero insert work.
 
     r15: the parquet artifact is CONTENT-ADDRESSED and persistent across
-    processes (scratch.persistent_cache_path — the streaming-dedup
+    processes (scratch.persistent_artifact — the streaming-dedup
     prebuild pattern, r14 verdict next #3): the graph is a pure function
     of (corpus rows, hnsw module source, build params, and the partition
     split ``spread`` produces), so the fingerprint includes
@@ -79,43 +78,28 @@ def _hnsw_persisted_index(spark: SparkSession, sf_dir: str):
     own build, never a foreign partition layout. Was 9.2 s of every
     bench warmup; a warm process now reconstructs from the existing
     parquet."""
-    import hashlib
-    import inspect
-    import shutil as _sh
-
     from hybrid_vector_search_spark.operators import hnsw as _hnsw_mod
     from hybrid_vector_search_spark.operators.hnsw import HNSWIndex
-    from hybrid_vector_search_spark.scratch import (
-        cache_complete,
-        data_fingerprint,
-        mark_cache_complete,
-        persistent_cache_path,
-    )
+    from hybrid_vector_search_spark.scratch import persistent_artifact
     from hybrid_vector_search_spark.sources import loaders as _loaders
 
-    cached = _HNSW_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        return cached[1]
-    try:
-        parallelism = spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no SparkContext handle
-        parallelism = 0
-    h = hashlib.md5(inspect.getsource(_hnsw_mod).encode())
-    h.update(inspect.getsource(_loaders.spread).encode())
-    h.update(f"|par={parallelism}|v1".encode())
-    h.update(("|data=" + data_fingerprint(sf_dir)).encode())
-    path = persistent_cache_path(
-        "hnsw_" + sf_dir.strip("/").replace("/", "_"), h.hexdigest()
-    )
-    if cache_complete(path):
-        index = HNSWIndex(spark, path)
-    else:
-        _sh.rmtree(path, ignore_errors=True)  # torn prior build
-        corpus = load_corpus(spark, sf_dir, with_documents=False)
-        index = HNSWIndex.build(corpus, path)
-        mark_cache_complete(path)
-    _HNSW_CACHE[sf_dir] = (spark, index)
-    return index
+    def build():
+        try:
+            parallelism = spark.sparkContext.defaultParallelism
+        except Exception:  # Spark Connect: no SparkContext handle
+            parallelism = 0
+        path = persistent_artifact(
+            "hnsw",
+            [_hnsw_mod, _loaders.spread],
+            f"|par={parallelism}|v1",
+            sf_dir,
+            lambda p: HNSWIndex.build(
+                load_corpus(spark, sf_dir, with_documents=False), p
+            ),
+        )
+        return HNSWIndex(spark, path)
+
+    return artifact(spark, ("hnsw", sf_dir), build)
 
 
 def _hnsw_oracle() -> str:
@@ -650,9 +634,6 @@ def meta_price_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_JSONL_RT_CACHE: dict = {}
-
-
 def _jsonl_roundtrip_path(spark: SparkSession, sf_dir: str) -> str:
     """Session-cached JSONL landing artifact for the roundtrip query:
     documents re-shaped into business-metadata records, written as
@@ -660,30 +641,29 @@ def _jsonl_roundtrip_path(spark: SparkSession, sf_dir: str) -> str:
     of corrupt + required-null lines so the tolerant read path has
     something to drop. Built once per (session, sf_dir) — ingest
     infrastructure, like the streaming landing zone."""
-    cached = _JSONL_RT_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        return cached[1]
-    from hybrid_vector_search_spark.scratch import scratch_path
+    def build():
+        from hybrid_vector_search_spark.scratch import scratch_path
 
-    path = scratch_path("jsonlrt_" + sf_dir.strip("/").replace("/", "_"))
-    docs = load_table(spark, sf_dir, "documents")
-    biz = docs.select(
-        F.format_string("b%06d", F.col("doc_id")).alias("business_id"),
-        F.when(F.col("doc_id") % 11 == 0, F.lit(None).cast("string"))
-        .otherwise(F.upper("lang"))
-        .alias("state"),
-        F.col("source").alias("city"),
-        ((F.col("doc_id") % 45) / F.lit(10.0) + F.lit(1.0)).alias("stars"),
-        F.col("n_chars").cast("int").alias("review_count"),
-        _price_attr_spark().alias("attributes"),
-    )
-    biz.write.mode("overwrite").json(path)
-    with open(os.path.join(path, "zz-corrupt-extra.json"), "w") as f:
-        f.write('{"business_id": "zzz", "state": truncated\n')
-        f.write("not json at all\n")
-        f.write('{"business_id": "b999998", "city": "no-required-fields"}\n')
-    _JSONL_RT_CACHE[sf_dir] = (spark, path)
-    return path
+        path = scratch_path("jsonlrt_" + sf_dir.strip("/").replace("/", "_"))
+        docs = load_table(spark, sf_dir, "documents")
+        biz = docs.select(
+            F.format_string("b%06d", F.col("doc_id")).alias("business_id"),
+            F.when(F.col("doc_id") % 11 == 0, F.lit(None).cast("string"))
+            .otherwise(F.upper("lang"))
+            .alias("state"),
+            F.col("source").alias("city"),
+            ((F.col("doc_id") % 45) / F.lit(10.0) + F.lit(1.0)).alias("stars"),
+            F.col("n_chars").cast("int").alias("review_count"),
+            _price_attr_spark().alias("attributes"),
+        )
+        biz.write.mode("overwrite").json(path)
+        with open(os.path.join(path, "zz-corrupt-extra.json"), "w") as f:
+            f.write('{"business_id": "zzz", "state": truncated\n')
+            f.write("not json at all\n")
+            f.write('{"business_id": "b999998", "city": "no-required-fields"}\n')
+        return path
+
+    return artifact(spark, ("jsonl_rt", sf_dir), build)
 
 
 @register(
@@ -1590,9 +1570,6 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_a", "doc_b")
 
 
-_CSV_RT_CACHE: dict = {}
-
-
 def _csv_roundtrip_path(spark: SparkSession, sf_dir: str) -> str:
     """Session-cached CSV landing artifact: documents-derived payloads
     covering the four classic CSV hazards — embedded quotes+commas,
@@ -1600,45 +1577,44 @@ def _csv_roundtrip_path(spark: SparkSession, sf_dir: str) -> str:
     Written with an explicit null sentinel (``\\N``) because the default
     empty-string nullValue makes NULL and '' indistinguishable on
     read-back — the canonical CSV data-loss bug."""
-    cached = _CSV_RT_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        return cached[1]
-    from hybrid_vector_search_spark.scratch import scratch_path
+    def build():
+        from hybrid_vector_search_spark.scratch import scratch_path
 
-    path = scratch_path("csvrt_" + sf_dir.strip("/").replace("/", "_"))
-    docs = load_table(spark, sf_dir, "documents")
-    v = F.col("doc_id") % 4
-    payload = (
-        F.when(
-            v == 0,
-            F.concat(
-                F.lit('q:"'),
-                F.substring("text", 1, 10),
-                F.lit('",c:,'),
-            ),
+        path = scratch_path("csvrt_" + sf_dir.strip("/").replace("/", "_"))
+        docs = load_table(spark, sf_dir, "documents")
+        v = F.col("doc_id") % 4
+        payload = (
+            F.when(
+                v == 0,
+                F.concat(
+                    F.lit('q:"'),
+                    F.substring("text", 1, 10),
+                    F.lit('",c:,'),
+                ),
+            )
+            .when(
+                v == 1,
+                F.concat(
+                    F.lit("l1\n"), F.lit("l2:"), F.substring("text", 1, 5)
+                ),
+            )
+            .when(v == 2, F.lit(None).cast("string"))
+            .otherwise(F.lit(""))
         )
-        .when(
-            v == 1,
-            F.concat(
-                F.lit("l1\n"), F.lit("l2:"), F.substring("text", 1, 5)
-            ),
+        (
+            docs.select("doc_id", payload.alias("payload"))
+            .write.mode("overwrite")
+            .option("header", True)
+            .option("nullValue", "\\N")
+            # whitespace trimming defaults to TRUE on both write and read —
+            # silently eats trailing spaces (one more classic CSV data-loss)
+            .option("ignoreLeadingWhiteSpace", False)
+            .option("ignoreTrailingWhiteSpace", False)
+            .csv(path)
         )
-        .when(v == 2, F.lit(None).cast("string"))
-        .otherwise(F.lit(""))
-    )
-    (
-        docs.select("doc_id", payload.alias("payload"))
-        .write.mode("overwrite")
-        .option("header", True)
-        .option("nullValue", "\\N")
-        # whitespace trimming defaults to TRUE on both write and read —
-        # silently eats trailing spaces (one more classic CSV data-loss)
-        .option("ignoreLeadingWhiteSpace", False)
-        .option("ignoreTrailingWhiteSpace", False)
-        .csv(path)
-    )
-    _CSV_RT_CACHE[sf_dir] = (spark, path)
-    return path
+        return path
+
+    return artifact(spark, ("csv_rt", sf_dir), build)
 
 
 @register(
@@ -1693,40 +1669,36 @@ def etl_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-_ORC_RT_CACHE: dict = {}
-
-
 def _orc_roundtrip_path(spark: SparkSession, sf_dir: str) -> str:
     """Session-cached ORC landing artifact: a typed events derivation —
     TIMESTAMP, injected NULL doubles (the columns where a columnar
     sink's encoding bugs live), and a non-ASCII string tag — written
     once per session with Spark's built-in ORC sink."""
-    cached = _ORC_RT_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        return cached[1]
-    from hybrid_vector_search_spark.scratch import scratch_path
+    def build():
+        from hybrid_vector_search_spark.scratch import scratch_path
 
-    path = scratch_path("orcrt_" + sf_dir.strip("/").replace("/", "_"))
-    ev = load_table(spark, sf_dir, "events")
-    (
-        ev.select(
-            "event_id",
-            "ts",
-            "event_type",
-            F.when(F.col("event_id") % 7 == 0, F.lit(None).cast("double"))
-            .otherwise(F.col("value"))
-            .alias("value"),
-            F.concat(
-                F.col("event_type"),
-                F.lit(" §"),
-                (F.col("event_id") % 3).cast("string"),
-            ).alias("tag"),
+        path = scratch_path("orcrt_" + sf_dir.strip("/").replace("/", "_"))
+        ev = load_table(spark, sf_dir, "events")
+        (
+            ev.select(
+                "event_id",
+                "ts",
+                "event_type",
+                F.when(F.col("event_id") % 7 == 0, F.lit(None).cast("double"))
+                .otherwise(F.col("value"))
+                .alias("value"),
+                F.concat(
+                    F.col("event_type"),
+                    F.lit(" §"),
+                    (F.col("event_id") % 3).cast("string"),
+                ).alias("tag"),
+            )
+            .write.mode("overwrite")
+            .orc(path)
         )
-        .write.mode("overwrite")
-        .orc(path)
-    )
-    _ORC_RT_CACHE[sf_dir] = (spark, path)
-    return path
+        return path
+
+    return artifact(spark, ("orc_rt", sf_dir), build)
 
 
 @register(
@@ -1813,11 +1785,7 @@ def multimodal_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("media_id")
 
 
-
-
 # ----------------------------------- HNSW graph erasure (r14)
-
-_HNSW_PURGE_CACHE: dict[str, tuple] = {}
 
 
 @register(
@@ -1858,24 +1826,23 @@ def ann_hnsw_purge_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
         " residual_nodes long, bad_adjacency_refs long,"
         " bad_entry_refs long"
     )
-    cached = _HNSW_PURGE_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        return local_df(spark, [cached[1]], schema)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("id"), "embedding"
-    )
-    subjects = [
-        r["id"] for r in emb.filter(F.col("id") % 50 == 13)
-        .select("id").collect()
-    ]  # bounded: N/50 ids
-    index = HNSWIndex.build(
-        emb,
-        scratch_path("hnsw_purge_" + sf_dir.strip("/").replace("/", "_")),
-    )
-    a = index.purge_nodes(subjects)
-    row = (
-        a["rows_before"], a["purged_rows"], a["rows_after"],
-        a["residual_nodes"], a["bad_adjacency_refs"], a["bad_entry_refs"],
-    )
-    _HNSW_PURGE_CACHE[sf_dir] = (spark, row)
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            F.col("vec_id").alias("id"), "embedding"
+        )
+        subjects = [
+            r["id"] for r in emb.filter(F.col("id") % 50 == 13)
+            .select("id").collect()
+        ]  # bounded: N/50 ids
+        index = HNSWIndex.build(
+            emb,
+            scratch_path("hnsw_purge_" + sf_dir.strip("/").replace("/", "_")),
+        )
+        a = index.purge_nodes(subjects)
+        return (
+            a["rows_before"], a["purged_rows"], a["rows_after"],
+            a["residual_nodes"], a["bad_adjacency_refs"], a["bad_entry_refs"],
+        )
+
+    row = artifact(spark, ("hnsw_purge", sf_dir), build)
     return local_df(spark, [row], schema)

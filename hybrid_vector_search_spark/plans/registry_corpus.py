@@ -10,18 +10,17 @@ helpers are imported explicitly below.
 
 from __future__ import annotations
 
-from hybrid_vector_search_spark.operators import pq as PQ
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from hybrid_vector_search_spark.functions.portable import (
     grid_avg,
-    grid_avg_sql,
     round_portable,
     round_portable_sql,
 )
 from hybrid_vector_search_spark.operators.topk import grouped_topk, topk
 from hybrid_vector_search_spark.queryvecs import query_vector, sql_array_literal
+from hybrid_vector_search_spark.session import artifact
 from hybrid_vector_search_spark.sources.loaders import (
     load_table,
     spread,
@@ -33,9 +32,6 @@ from hybrid_vector_search_spark.plans.registry import (  # noqa: E402
 )
 from hybrid_vector_search_spark.plans.registry_hybrid_ann import (  # noqa: E402
     ANN_IVF_K,
-    _IVF_CACHE,
-    ann_ivf_upsert_snapshot,
-    ann_ivf_upsert_topk,
 )
 
 # ------------------------------------------------------------- multimodal
@@ -619,37 +615,30 @@ from hybrid_vector_search_spark.operators import dedup as DD  # noqa: E402
 
 JACCARD_THRESHOLD = 0.2
 
-# MinHash signature artifacts, keyed by sf_dir — like the IVF index cache:
+# MinHash signature artifacts, keyed by sf_dir — like the IVF index:
 # signature building is the offline stage, queries measure the plan over
 # the materialized artifact (and the pairs + components queries share it).
-_SIG_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-_NGRAM_IX_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
 
 
 def _ngram_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cached = _NGRAM_IX_CACHE.get(sf_dir)
-    ix = cached[1] if cached is not None and cached[0] is spark else None
-    if ix is None:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
-        ix = DD.ngram_shingle_index(docs, materialize=True)
-        _NGRAM_IX_CACHE[sf_dir] = (spark, ix)
-    return ix
+        return DD.ngram_shingle_index(docs, materialize=True)
 
-
+    return artifact(spark, ("ngram_ix", sf_dir), build)
 
 
 def _sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cached = _SIG_CACHE.get(sf_dir)
-    # rebuild when the owning session changed (see _IVF_CACHE note)
-    sig = cached[1] if cached is not None and cached[0] is spark else None
-    if sig is None:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
-        sig = DD.materialize_parquet(
+        return DD.materialize_parquet(
             DD.minhash_signatures(docs).select("doc_id", "sh", "sig"),
             "minhash_sig",
         )
-        _SIG_CACHE[sf_dir] = (spark, sig)
-    return sig
+
+    return artifact(spark, ("sig", sf_dir), build)
+
+
 COSINE_DUP_THRESHOLD = 0.45
 
 
@@ -1266,9 +1255,6 @@ def events_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROLLUP_CACHE: dict[str, tuple] = {}
-
-
 @register(
     "events_incremental_rollup",
     f"""SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
@@ -1304,9 +1290,7 @@ def events_incremental_rollup(
     )
     from hybrid_vector_search_spark.scratch import scratch_path
 
-    cached = _ROLLUP_CACHE.get(sf_dir)
-    path = cached[1] if cached is not None and cached[0] is spark else None
-    if path is None:
+    def build():
         ev = load_table(spark, sf_dir, "events")
         path = scratch_path(
             "rollup_" + sf_dir.strip("/").replace("/", "_")
@@ -1315,7 +1299,9 @@ def events_incremental_rollup(
         merge_rollup_batch(
             spark, path, ev.filter(F.col("user_id") % 5 == 0)
         )
-        _ROLLUP_CACHE[sf_dir] = (spark, path)
+        return path
+
+    path = artifact(spark, ("rollup", sf_dir), build)
     return (
         open_rollup(spark, path)
         .select(
@@ -1326,9 +1312,6 @@ def events_incremental_rollup(
         )
         .orderBy("day", "event_type")
     )
-
-
-_ROLLUP_SNAP_CACHE: dict[str, tuple[SparkSession, str]] = {}
 
 
 @register(
@@ -1375,9 +1358,7 @@ def events_rollup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _ROLLUP_SNAP_CACHE.get(sf_dir)
-    root = cached[1] if cached is not None and cached[0] is spark else None
-    if root is None:
+    def build():
         ev = load_table(spark, sf_dir, "events")
         root = scratch_path(
             "rollup_snap_" + sf_dir.strip("/").replace("/", "_")
@@ -1401,7 +1382,9 @@ def events_rollup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         M.commit_replace_values(root, merged, "day", touched)
-        _ROLLUP_SNAP_CACHE[sf_dir] = (spark, root)
+        return root
+
+    root = artifact(spark, ("rollup_snap", sf_dir), build)
     out = None
     for v in (1, 2):
         part = M.read_snapshot(spark, root, v).select(
@@ -2093,8 +2076,6 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 # ------------------------------------- clustered semantic dedup (r13)
 
 
@@ -2163,7 +2144,6 @@ def dedup_embedding_clustered_pairs(
 
 _BPE_ROUNDS = 4
 _BPE_VOCAB = 200
-_BPE_CACHE: dict[str, tuple] = {}
 
 
 def _bpe_oracle() -> str:
@@ -2228,71 +2208,72 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~|alphabet|² pairs, map-side combined); K rounds = K passes, the
     standard distributed-BPE shape. Beyond-reference (text/tokenizer
     family)."""
-    cached = _BPE_CACHE.get(sf_dir)
     schema = "merge_rank int, lhs string, rhs string, pair_count long"
-    if cached is not None and cached[0] is spark:
-        return local_df(spark, cached[1], schema)
-    tok = (
-        load_table(spark, sf_dir, "documents")
-        .select(
-            F.explode(
-                F.split(F.lower(F.trim("text")), r"\s+")
-            ).alias("word")
-        )
-        .filter(F.col("word").rlike("^[a-z]{2,12}$"))
-    )
-    vocab = (
-        tok.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .orderBy(F.desc("freq"), "word")
-        .limit(_BPE_VOCAB)
-    )
-    w = vocab.select(
-        "word",
-        "freq",
-        F.concat(
-            F.lit(" "), F.regexp_replace("word", "(.)", "$1 ")
-        ).alias("s"),
-    ).localCheckpoint(eager=True)  # pin the vocab; rounds chain on it
-    merges = []
-    for k in range(1, _BPE_ROUNDS + 1):
-        pairs = (
-            w.select(
-                "freq", F.split(F.trim("s"), " ").alias("t")
-            )
+
+    def build():
+        tok = (
+            load_table(spark, sf_dir, "documents")
             .select(
-                "freq",
                 F.explode(
-                    F.arrays_zip(
-                        F.expr("slice(t, 1, size(t) - 1)").alias("lhs"),
-                        F.expr("slice(t, 2, size(t) - 1)").alias("rhs"),
-                    )
-                ).alias("p"),
+                    F.split(F.lower(F.trim("text")), r"\s+")
+                ).alias("word")
             )
-            .select(
-                F.col("p.lhs").alias("lhs"),
-                F.col("p.rhs").alias("rhs"),
-                "freq",
+            .filter(F.col("word").rlike("^[a-z]{2,12}$"))
+        )
+        vocab = (
+            tok.groupBy("word")
+            .agg(F.count(F.lit(1)).alias("freq"))
+            .orderBy(F.desc("freq"), "word")
+            .limit(_BPE_VOCAB)
+        )
+        w = vocab.select(
+            "word",
+            "freq",
+            F.concat(
+                F.lit(" "), F.regexp_replace("word", "(.)", "$1 ")
+            ).alias("s"),
+        ).localCheckpoint(eager=True)  # pin the vocab; rounds chain on it
+        merges = []
+        for k in range(1, _BPE_ROUNDS + 1):
+            pairs = (
+                w.select(
+                    "freq", F.split(F.trim("s"), " ").alias("t")
+                )
+                .select(
+                    "freq",
+                    F.explode(
+                        F.arrays_zip(
+                            F.expr("slice(t, 1, size(t) - 1)").alias("lhs"),
+                            F.expr("slice(t, 2, size(t) - 1)").alias("rhs"),
+                        )
+                    ).alias("p"),
+                )
+                .select(
+                    F.col("p.lhs").alias("lhs"),
+                    F.col("p.rhs").alias("rhs"),
+                    "freq",
+                )
             )
-        )
-        best = (
-            pairs.groupBy("lhs", "rhs")
-            .agg(F.sum("freq").alias("cnt"))
-            .orderBy(F.desc("cnt"), "lhs", "rhs")
-            .first()
-        )
-        merges.append(
-            (k, best["lhs"], best["rhs"], int(best["cnt"]))
-        )
-        w = w.withColumn(
-            "s",
-            F.replace(
-                F.col("s"),
-                F.lit(f" {best['lhs']} {best['rhs']} "),
-                F.lit(f" {best['lhs']}{best['rhs']} "),
-            ),
-        )
-    _BPE_CACHE[sf_dir] = (spark, merges)
+            best = (
+                pairs.groupBy("lhs", "rhs")
+                .agg(F.sum("freq").alias("cnt"))
+                .orderBy(F.desc("cnt"), "lhs", "rhs")
+                .first()
+            )
+            merges.append(
+                (k, best["lhs"], best["rhs"], int(best["cnt"]))
+            )
+            w = w.withColumn(
+                "s",
+                F.replace(
+                    F.col("s"),
+                    F.lit(f" {best['lhs']} {best['rhs']} "),
+                    F.lit(f" {best['lhs']}{best['rhs']} "),
+                ),
+            )
+        return merges
+
+    merges = artifact(spark, ("bpe", sf_dir), build)
     return local_df(spark, merges, schema)
 
 
@@ -2400,7 +2381,6 @@ _BPEV_SRC_DOCS = 64    # docs whose prefix chains seed the merge table
 _BPEV_ENC_DOCS = 256   # fixture encode set (explicit cap, oracle-shared)
 _BPEV_KS = (4, 16, 64, 1024)
 _BPEV_UNROLL_MAX = 64  # largest K the unrolled-replace twin runs at
-_BPEV_CACHE: dict[str, tuple] = {}
 
 #: one normalization, three engines: lower → trim → collapse whitespace
 _BPEV_NORM_SQL = (
@@ -2555,75 +2535,73 @@ def text_bpe_encode_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         " tokens_after long, tokens_after_unrolled long,"
         " paths_agree boolean"
     )
-    cached = _BPEV_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        return local_df(spark, cached[1], schema).orderBy(
-            "n_merges"
-        )
-    merges = _bpev_merges(spark, sf_dir)
-    enc = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .orderBy("doc_id")
-        .limit(_BPEV_ENC_DOCS)
-        .select(
-            "doc_id",
-            F.concat(F.lit(" "), _bpev_norm_col(), F.lit(" ")).alias(
-                "s"
-            ),
-        )
-        .localCheckpoint(eager=True)  # one source read for all K passes
-    )
-    before = enc.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.size(F.split(F.trim("s"), " "))).alias("t"),
-    ).first()
-    rows = []
-    for k in _BPEV_KS:
-        table = merges[:k]
-        arrow = enc.mapInPandas(
-            bpe_encode_token_counts(table, text_col="s"),
-            "doc_id long, n_tok int",
-        )
-        if k <= _BPEV_UNROLL_MAX:
-            s = F.col("s")
-            for lhs, rhs in table:
-                s = F.replace(
-                    s,
-                    F.lit(f" {lhs} {rhs} "),
-                    F.lit(f" {lhs}_{rhs} "),
-                )
-            unrolled = enc.select(
+    def build():
+        merges = _bpev_merges(spark, sf_dir)
+        enc = (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "text")
+            .orderBy("doc_id")
+            .limit(_BPEV_ENC_DOCS)
+            .select(
                 "doc_id",
-                F.size(F.split(F.trim(s), " ")).alias("n_tok_u"),
+                F.concat(F.lit(" "), _bpev_norm_col(), F.lit(" ")).alias(
+                    "s"
+                ),
             )
-            agg = (
-                arrow.join(unrolled, "doc_id")
-                .agg(
-                    F.sum("n_tok").alias("a"),
-                    F.sum("n_tok_u").alias("u"),
-                    F.min(
-                        F.col("n_tok") == F.col("n_tok_u")
-                    ).alias("eq"),
+            .localCheckpoint(eager=True)  # one source read for all K passes
+        )
+        before = enc.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.size(F.split(F.trim("s"), " "))).alias("t"),
+        ).first()
+        rows = []
+        for k in _BPEV_KS:
+            table = merges[:k]
+            arrow = enc.mapInPandas(
+                bpe_encode_token_counts(table, text_col="s"),
+                "doc_id long, n_tok int",
+            )
+            if k <= _BPEV_UNROLL_MAX:
+                s = F.col("s")
+                for lhs, rhs in table:
+                    s = F.replace(
+                        s,
+                        F.lit(f" {lhs} {rhs} "),
+                        F.lit(f" {lhs}_{rhs} "),
+                    )
+                unrolled = enc.select(
+                    "doc_id",
+                    F.size(F.split(F.trim(s), " ")).alias("n_tok_u"),
                 )
-                .first()
-            )
-            rows.append(
-                (
-                    k,
-                    int(before["n"]),
-                    int(before["t"]),
-                    int(agg["a"]),
-                    int(agg["u"]),
-                    bool(agg["eq"]),
+                agg = (
+                    arrow.join(unrolled, "doc_id")
+                    .agg(
+                        F.sum("n_tok").alias("a"),
+                        F.sum("n_tok_u").alias("u"),
+                        F.min(
+                            F.col("n_tok") == F.col("n_tok_u")
+                        ).alias("eq"),
+                    )
+                    .first()
                 )
-            )
-        else:
-            a = arrow.agg(F.sum("n_tok")).first()[0]
-            rows.append(
-                (k, int(before["n"]), int(before["t"]), int(a), None, None)
-            )
-    _BPEV_CACHE[sf_dir] = (spark, rows)
+                rows.append(
+                    (
+                        k,
+                        int(before["n"]),
+                        int(before["t"]),
+                        int(agg["a"]),
+                        int(agg["u"]),
+                        bool(agg["eq"]),
+                    )
+                )
+            else:
+                a = arrow.agg(F.sum("n_tok")).first()[0]
+                rows.append(
+                    (k, int(before["n"]), int(before["t"]), int(a), None, None)
+                )
+        return rows
+
+    rows = artifact(spark, ("bpev", sf_dir), build)
     return local_df(spark, rows, schema).orderBy("n_merges")
 
 
@@ -2631,17 +2609,13 @@ def text_bpe_encode_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _COMPF_K = 1024
 _COMPF_THRESHOLD = 500  # per-mille saved that flags a doc as boilerplate
-_COMPF_CACHE: dict[str, tuple] = {}
-_BPEV_MERGE_CACHE: dict[str, tuple] = {}
 
 
 def _bpev_merges_cached(spark: SparkSession, sf_dir: str) -> list[tuple]:
-    got = _BPEV_MERGE_CACHE.get(sf_dir)
-    if got is not None and got[0] is spark:
-        return got[1]
-    merges = _bpev_merges(spark, sf_dir)
-    _BPEV_MERGE_CACHE[sf_dir] = (spark, merges)
-    return merges
+    return artifact(
+        spark, ("bpev_merge", sf_dir),
+        lambda: _bpev_merges(spark, sf_dir),
+    )
 
 
 def _compf_oracle() -> str:
@@ -2714,41 +2688,38 @@ def docs_compression_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "saved_bucket long, flagged boolean, n_docs long,"
         " min_saved long, max_saved long"
     )
-    cached = _COMPF_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        return local_df(spark, cached[1], schema).orderBy(
-            "saved_bucket"
+    def build():
+        merges = _bpev_merges_cached(spark, sf_dir)[:_COMPF_K]
+        enc = load_table(spark, sf_dir, "documents").select(
+            "doc_id",
+            F.concat(F.lit(" "), _bpev_norm_col(), F.lit(" ")).alias("s"),
         )
-    merges = _bpev_merges_cached(spark, sf_dir)[:_COMPF_K]
-    enc = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(F.lit(" "), _bpev_norm_col(), F.lit(" ")).alias("s"),
-    )
-    before = enc.select(
-        "doc_id", F.size(F.split(F.trim("s"), " ")).alias("nb")
-    )
-    after = enc.mapInPandas(
-        bpe_encode_token_counts(merges, text_col="s"),
-        "doc_id long, n_tok int",
-    )
-    saved = (
-        before.join(after, "doc_id")
-        .select(
-            F.expr("(1000 * (nb - n_tok)) div nb").alias("saved")
+        before = enc.select(
+            "doc_id", F.size(F.split(F.trim("s"), " ")).alias("nb")
         )
-    )
-    out = (
-        saved.groupBy(
-            F.expr("saved div 100").alias("saved_bucket"),
-            (F.col("saved") >= _COMPF_THRESHOLD).alias("flagged"),
+        after = enc.mapInPandas(
+            bpe_encode_token_counts(merges, text_col="s"),
+            "doc_id long, n_tok int",
         )
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("saved").alias("min_saved"),
-            F.max("saved").alias("max_saved"),
+        saved = (
+            before.join(after, "doc_id")
+            .select(
+                F.expr("(1000 * (nb - n_tok)) div nb").alias("saved")
+            )
         )
-        .orderBy("saved_bucket")
-    )
-    rows = [tuple(r) for r in out.collect()]
-    _COMPF_CACHE[sf_dir] = (spark, rows)
+        out = (
+            saved.groupBy(
+                F.expr("saved div 100").alias("saved_bucket"),
+                (F.col("saved") >= _COMPF_THRESHOLD).alias("flagged"),
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.min("saved").alias("min_saved"),
+                F.max("saved").alias("max_saved"),
+            )
+            .orderBy("saved_bucket")
+        )
+        return [tuple(r) for r in out.collect()]
+
+    rows = artifact(spark, ("compf", sf_dir), build)
     return local_df(spark, rows, schema).orderBy("saved_bucket")

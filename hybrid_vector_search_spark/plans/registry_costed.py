@@ -13,6 +13,7 @@ from hybrid_vector_search_spark.functions.predicates import (
     filters_to_sql,
 )
 from hybrid_vector_search_spark.queryvecs import query_vector, sql_array_literal
+from hybrid_vector_search_spark.session import artifact
 from hybrid_vector_search_spark.sources.loaders import (
     load_corpus,
 )
@@ -49,27 +50,24 @@ _PF_COSTED_SAFETY = 2
 # ingest-time aggregation" — it is catalog state like the fixed
 # centroids, so recomputing it on every bench pass was pure overhead
 # (guide §1.2): one agg job per pass in post_filter_costed_stats AND
-# strategy_costed_choice. Keyed like every artifact cache (session
-# identity + sf_dir); a new session recomputes from the parquet.
-_COSTED_STATS_CACHE: dict[str, tuple] = {}
+# strategy_costed_choice. A session artifact keyed by sf_dir; a new
+# session recomputes from the parquet.
 
 
 def _costed_column_stats(spark: SparkSession, sf_dir: str) -> dict:
-    got = _COSTED_STATS_CACHE.get(sf_dir)
-    if got is not None and got[0] is spark:
-        return got[1]
-    from hybrid_vector_search_spark.functions.colstats import (
-        collect_column_stats,
-    )
+    def build():
+        from hybrid_vector_search_spark.functions.colstats import (
+            collect_column_stats,
+        )
 
-    stats = collect_column_stats(
-        load_corpus(spark, sf_dir), ["label", "lang"], exact_ndv=True
-    )
-    _COSTED_STATS_CACHE[sf_dir] = (spark, stats)
-    return stats
+        return collect_column_stats(
+            load_corpus(spark, sf_dir), ["label", "lang"], exact_ndv=True
+        )
+
+    return artifact(spark, ("costed_stats", sf_dir), build)
 
 
-# Session cache for the costed-backend SERVING OBJECTS (r16, guide
+# The costed-backend SERVING OBJECTS are session artifacts too (r16, guide
 # §1.2). Constructing a backend runs fixed probe jobs over immutable
 # session artifacts — SearchBackend.__init__ counts the resident corpus,
 # the HNSW/LSH constructors probe the embedding dim — and the costed
@@ -79,16 +77,6 @@ def _costed_column_stats(spark: SparkSession, sf_dir: str) -> dict:
 # the persisted index artifacts — exactly the serving-tier/fixed-index
 # precedent — so it is built once per (session, sf_dir); search() still
 # executes its full driver-side escalation per call.
-_BACKEND_CACHE: dict[tuple, tuple] = {}
-
-
-def _cached_backend(spark: SparkSession, key: tuple, build):
-    got = _BACKEND_CACHE.get(key)
-    if got is not None and got[0] is spark:
-        return got[1]
-    backend = build()
-    _BACKEND_CACHE[key] = (spark, backend)
-    return backend
 
 
 def _post_filter_costed_oracle() -> str:
@@ -166,7 +154,7 @@ def post_filter_costed(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side escalation loop, not a single lazy plan."""
     from hybrid_vector_search_spark.operators.ivf import PostFilterBackend
 
-    backend = _cached_backend(
+    backend = artifact(
         spark,
         ("ivf_costed", sf_dir),
         lambda: PostFilterBackend(
@@ -300,7 +288,7 @@ def post_filter_costed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stats = _costed_column_stats(spark, sf_dir)
     est = estimate_allowed(stats, _PF_COSTED_CASE["filters"])
-    backend = _cached_backend(
+    backend = artifact(
         spark,
         ("ivf_costed_stats", sf_dir, int(est)),
         lambda: PostFilterBackend(
@@ -645,9 +633,6 @@ FROM (SELECT n, nlist, {est} AS est FROM stats, knobs)"""
     )
 
 
-_HARNESS_AUTO_CACHE: dict[str, tuple[SparkSession, list]] = {}
-
-
 @register(
     "harness_auto_costed_batch",
     _harness_auto_oracle(),
@@ -674,13 +659,10 @@ def harness_auto_costed_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs its independent per-query job chains pooled."""
     from hybrid_vector_search_spark.plans.harness import run_queries
 
-    got = _HARNESS_AUTO_CACHE.get(sf_dir)
-    if got is not None and got[0] is spark:
-        rows = got[1]
-    else:
-        corpus = load_corpus(spark, sf_dir)
-        rows = run_queries(corpus, "auto", concurrency=4)
-        _HARNESS_AUTO_CACHE[sf_dir] = (spark, rows)
+    rows = artifact(
+        spark, ("harness_auto", sf_dir),
+        lambda: run_queries(load_corpus(spark, sf_dir), "auto", concurrency=4),
+    )
     out = []
     for r in rows:
         note = r["notes"] or ""
@@ -824,7 +806,7 @@ def post_filter_costed_backends(spark: SparkSession, sf_dir: str) -> DataFrame:
         _hnsw_persisted_index,
     )
 
-    hb = _cached_backend(
+    hb = artifact(
         spark,
         ("hnsw_costed", sf_dir),
         lambda: HNSWBackend(
@@ -835,7 +817,7 @@ def post_filter_costed_backends(spark: SparkSession, sf_dir: str) -> DataFrame:
             safety=_PF_COSTED_SAFETY,
         ),
     )
-    lb = _cached_backend(
+    lb = artifact(
         spark,
         ("lsh_costed", sf_dir),
         lambda: LSHPostFilterBackend(

@@ -20,9 +20,9 @@ from hybrid_vector_search_spark.functions.predicates import (
 from hybrid_vector_search_spark.functions.vector import dot_score_pandas_udf
 from hybrid_vector_search_spark.operators.topk import grouped_topk, topk
 from hybrid_vector_search_spark.queryvecs import query_vector, sql_array_literal
+from hybrid_vector_search_spark.session import artifact, clear_artifacts
 from hybrid_vector_search_spark.sources.loaders import (
     load_table,
-    spread,
 )
 
 from hybrid_vector_search_spark.plans.registry import (  # noqa: E402
@@ -315,7 +315,6 @@ def hybrid_batch_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PARITY_COPIES = 76
 _PARITY_TILE = 6
 _PARITY_ID_SHIFT = 10_000_000
-_PARITY_CACHE: dict[str, tuple] = {}
 
 
 def _parity_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -333,34 +332,14 @@ def _parity_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     (corpus resident before timing).
 
     r15: the parquet artifact is CONTENT-ADDRESSED and persistent across
-    processes (scratch.persistent_cache_path, the streaming-dedup
+    processes (scratch.persistent_artifact, the streaming-dedup
     prebuild pattern — r14 verdict next #3): rows are a pure function of
     (testdata, this builder's source — which embeds every tile/shift
     constant — and the fixed 32-way split), so a warm process reuses the
     existing files and the 4.6 s build drops out of bench warmup."""
-    import hashlib
-    import inspect
-    import shutil as _sh
+    from hybrid_vector_search_spark.scratch import persistent_artifact
 
-    from hybrid_vector_search_spark.scratch import (
-        cache_complete,
-        data_fingerprint,
-        mark_cache_complete,
-        persistent_cache_path,
-    )
-
-    key = sf_dir
-    cached = _PARITY_CACHE.get(key)
-    if cached is not None and cached[0] is spark:
-        return cached[1]
-    _h = hashlib.md5(inspect.getsource(_parity_corpus).encode())
-    _h.update(("|data=" + data_fingerprint(sf_dir)).encode())
-    fp = _h.hexdigest()
-    path = persistent_cache_path(
-        "parity_corpus_" + sf_dir.strip("/").replace("/", "_"), fp
-    )
-    if not cache_complete(path):
-        _sh.rmtree(path, ignore_errors=True)  # torn prior build
+    def write(path: str) -> None:
         base = load_corpus(spark, sf_dir)
         scale = 1.0 / (_PARITY_TILE ** 0.5)
         copies = F.broadcast(
@@ -387,10 +366,10 @@ def _parity_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         tiled.repartition(32).write.mode("overwrite").parquet(path)
-        mark_cache_complete(path)
-    out = spark.read.parquet(path)
-    _PARITY_CACHE[key] = (spark, out)
-    return out
+
+    return artifact(spark, ("parity_corpus", sf_dir), lambda: spark.read.parquet(
+        persistent_artifact("parity_corpus", [_parity_corpus], "", sf_dir, write)
+    ))
 
 
 def _parity_qvec(seed: int) -> list[float]:
@@ -532,7 +511,6 @@ ORACLES["knn_batch_topk"] = _knn_batch_oracle()
 # (The KMeans build path stays exercised by tests/test_ivf.py and the
 # load_corpus_index fallback chain; the registry's ANN queries use the
 # fixed seeded quantizer below for oracle determinism.)
-_IVF_CACHE: dict[tuple, "object"] = {}
 
 
 ANN_IVF_K = 10
@@ -583,13 +561,7 @@ def _ann_ivf_fixed_index(spark: SparkSession, sf_dir: str, persist: bool = False
     layout whose probe step is native partition pruning."""
     from hybrid_vector_search_spark.operators.ivf import IVFIndex
 
-    key = (sf_dir, "fixed", persist)
-    cached = _IVF_CACHE.get(key)
-    # cache entries carry the owning session: a cached DataFrame bound to
-    # a stopped/replaced SparkSession would raise on first use, so a
-    # different session object triggers a rebuild
-    index = cached[1] if cached is not None and cached[0] is spark else None
-    if index is None:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings").withColumnRenamed(
             "vec_id", "id"
         )
@@ -606,14 +578,11 @@ def _ann_ivf_fixed_index(spark: SparkSession, sf_dir: str, persist: bool = False
             path = scratch_path(
                 "ivf_fixed_" + sf_dir.strip("/").replace("/", "_")
             )
-        index = IVFIndex.build_fixed(
+        return IVFIndex.build_fixed(
             emb, _ann_ivf_centroids(), persist_path=path
         )
-        _IVF_CACHE[key] = (spark, index)
-    return index
 
-
-_QUANT_CACHE: dict[str, tuple] = {}
+    return artifact(spark, ("ivf", sf_dir, "fixed", persist), build)
 
 
 def _quantized_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -629,41 +598,15 @@ def _quantized_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries use (quantize_int8_col / sign_pack_column / bucket_udf /
     the fixed-quantizer assignment), so derived candidate sets cannot
     drift from the strategies they evaluate."""
-    got = _QUANT_CACHE.get(sf_dir)
-    if got is not None and got[0] is spark:
-        return got[1]
-    import hashlib
-    import inspect
-    import shutil as _sh
-
     from hybrid_vector_search_spark.functions import vector as _vec_mod
     from hybrid_vector_search_spark.functions.vector import (
         quantize_int8_col,
         sign_pack_column,
     )
     from hybrid_vector_search_spark.operators import lsh as LSH
-    from hybrid_vector_search_spark.scratch import (
-        cache_complete,
-        data_fingerprint,
-        mark_cache_complete,
-        persistent_cache_path,
-    )
+    from hybrid_vector_search_spark.scratch import persistent_artifact
 
-    # r15: the codes are pure functions of (embedding, quantizer/LSH
-    # code, fixed centroids) — content-address the parquet so a warm
-    # process skips the 2.9 s recompute (streaming-dedup prebuild
-    # pattern); the session still serves it RAM-resident via persist().
-    h = hashlib.md5(inspect.getsource(_vec_mod).encode())
-    h.update(inspect.getsource(LSH).encode())
-    h.update(inspect.getsource(_quantized_corpus).encode())
-    h.update(inspect.getsource(_ann_ivf_centroids).encode())
-    h.update(("|data=" + data_fingerprint(sf_dir)).encode())
-    path = persistent_cache_path(
-        "quant_corpus_" + sf_dir.strip("/").replace("/", "_"),
-        h.hexdigest(),
-    )
-    if not cache_complete(path):
-        _sh.rmtree(path, ignore_errors=True)  # torn prior build
+    def write(path: str) -> None:
         index = _ann_ivf_fixed_index(spark, sf_dir)
         planes = LSH.hyperplanes(LSH.DEFAULT_NBITS, dim=64)
         (
@@ -680,11 +623,24 @@ def _quantized_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(path)
         )
-        mark_cache_complete(path)
-    df = spark.read.parquet(path).persist()
-    df.count()  # materialize once (ingest stage)
-    _QUANT_CACHE[sf_dir] = (spark, df)
-    return df
+
+    def build() -> DataFrame:
+        # r15: the codes are pure functions of (embedding, quantizer/LSH
+        # code, fixed centroids) — content-address the parquet so a warm
+        # process skips the 2.9 s recompute (streaming-dedup prebuild
+        # pattern); the session still serves it RAM-resident via persist().
+        path = persistent_artifact(
+            "quant_corpus",
+            [_vec_mod, LSH, _quantized_corpus, _ann_ivf_centroids],
+            "",
+            sf_dir,
+            write,
+        )
+        df = spark.read.parquet(path).persist()
+        df.count()  # materialize once (ingest stage)
+        return df
+
+    return artifact(spark, ("quant_corpus", sf_dir), build)
 
 
 @register("ann_ivf_topk", _ann_ivf_oracle())
@@ -759,7 +715,6 @@ def ann_ivf_local_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_UPSERT_QSEED = 43
-_UPSERT_LAYOUT_CACHE: dict[str, tuple[SparkSession, str]] = {}
 
 
 def _ann_ivf_upsert_oracle() -> str:
@@ -815,9 +770,8 @@ def ann_ivf_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hybrid_vector_search_spark.scratch import scratch_path
 
     cents = _ann_ivf_centroids()
-    cached = _UPSERT_LAYOUT_CACHE.get(sf_dir)
-    path = cached[1] if cached is not None and cached[0] is spark else None
-    if path is None:
+
+    def build():
         emb = (
             load_table(spark, sf_dir, "embeddings")
             .withColumnRenamed("vec_id", "id")
@@ -837,7 +791,9 @@ def ann_ivf_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_partitioned(
             spark, path, cents, updates.unionByName(inserts), deletes
         )
-        _UPSERT_LAYOUT_CACHE[sf_dir] = (spark, path)
+        return path
+
+    path = artifact(spark, ("upsert_layout", sf_dir), build)
     index = IVFIndex(
         spark.read.parquet(path), cents, partitioned_path=path
     )
@@ -848,7 +804,6 @@ def ann_ivf_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_SNAP_QSEED = 47
-_IVF_SNAP_CACHE: dict[str, tuple[SparkSession, str]] = {}
 
 
 def _ann_ivf_upsert_snapshot_oracle() -> str:
@@ -923,9 +878,8 @@ def ann_ivf_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hybrid_vector_search_spark.sources import manifest as M
 
     cents = _ann_ivf_centroids()
-    cached = _IVF_SNAP_CACHE.get(sf_dir)
-    root = cached[1] if cached is not None and cached[0] is spark else None
-    if root is None:
+
+    def build():
         emb = (
             load_table(spark, sf_dir, "embeddings")
             .withColumnRenamed("vec_id", "id")
@@ -984,7 +938,9 @@ def ann_ivf_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             "list_id",
             touched,
         )  # v2
-        _IVF_SNAP_CACHE[sf_dir] = (spark, root)
+        return root
+
+    root = artifact(spark, ("ivf_snap", sf_dir), build)
 
     qvec = query_vector(ANN_SNAP_QSEED)
     probed = _ann_ivf_probed(ANN_SNAP_QSEED)
@@ -1450,9 +1406,6 @@ def ann_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------- local serving tier (r13)
 
-_LOCAL_SERVE_CACHE: dict[str, tuple] = {}
-
-
 def _local_serve(spark: SparkSession, sf_dir: str):
     """Session-cached LocalCorpusServe over the wide corpus — built once
     (one Arrow collect behind the distributed size gate), then every
@@ -1460,19 +1413,22 @@ def _local_serve(spark: SparkSession, sf_dir: str):
     startup load (artifacts/artifacts.py:165-194)."""
     from hybrid_vector_search_spark.serving import LocalCorpusServe
 
-    cached = _LOCAL_SERVE_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        return cached[1]
-    serve = LocalCorpusServe.from_corpus(load_corpus(spark, sf_dir))
-    _LOCAL_SERVE_CACHE[sf_dir] = (spark, serve)
-    # a purge of the corpus root must reach RAM too: drop the resident
-    # tier so the next query rebuilds from post-purge storage (r14)
+    def build():
+        # a purge of the corpus root must reach RAM too: drop the resident
+        # tier so the next query rebuilds from post-purge storage (r14)
+        _on_purge(sf_dir, "local_serve")
+        return LocalCorpusServe.from_corpus(load_corpus(spark, sf_dir))
+
+    return artifact(spark, ("local_serve", sf_dir), build)
+
+
+def _on_purge(sf_dir: str, kind: str) -> None:
+    """Drop every ``kind`` session artifact when ``sf_dir`` is purged."""
     from hybrid_vector_search_spark.sources.purge import (
         register_resident_invalidator,
     )
 
-    register_resident_invalidator(sf_dir, _LOCAL_SERVE_CACHE.clear)
-    return serve
+    register_resident_invalidator(sf_dir, lambda: clear_artifacts(kind))
 
 
 def _local_rows_df(spark: SparkSession, rows) -> DataFrame:
@@ -1535,9 +1491,6 @@ def hybrid_topk_local_prefilter(
     return _local_rows_df(spark, rows)
 
 
-_SHARDED_SERVE_CACHE: dict[str, tuple] = {}
-
-
 def _local_serve_sharded(spark: SparkSession, sf_dir: str):
     """Session-cached 4-way ShardedCorpusServe — the serving tier past
     the single-collect RAM gate (r14): same residency model as
@@ -1548,19 +1501,13 @@ def _local_serve_sharded(spark: SparkSession, sf_dir: str):
     count takes over (tools/shard_serve_probe.py measures that shape)."""
     from hybrid_vector_search_spark.serving import ShardedCorpusServe
 
-    cached = _SHARDED_SERVE_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        return cached[1]
-    serve = ShardedCorpusServe.from_corpus(
-        load_corpus(spark, sf_dir), n_shards=4
-    )
-    _SHARDED_SERVE_CACHE[sf_dir] = (spark, serve)
-    from hybrid_vector_search_spark.sources.purge import (
-        register_resident_invalidator,
-    )
+    def build():
+        _on_purge(sf_dir, "sharded_serve")
+        return ShardedCorpusServe.from_corpus(
+            load_corpus(spark, sf_dir), n_shards=4
+        )
 
-    register_resident_invalidator(sf_dir, _SHARDED_SERVE_CACHE.clear)
-    return serve
+    return artifact(spark, ("sharded_serve", sf_dir), build)
 
 
 @register(
@@ -1610,8 +1557,6 @@ def hybrid_topk_sharded_prefilter(
 
 
 # --------------------------------------- costed serve dispatch (r15)
-
-_COSTED_SERVE_CACHE: dict[str, tuple] = {}
 
 #: (route label, budget overrides as fractions of the measured
 #: footprint, canonical case) — three synthetic footprint regimes over
@@ -1700,10 +1645,7 @@ def strategy_costed_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "route string, method string, multi_shard boolean,"
         " scored_vectors long, id long, score double"
     )
-    cached = _COSTED_SERVE_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        dispatches = cached[1]
-    else:
+    def build():
         corpus = load_corpus(spark, sf_dir)
         _n, _d, need = _resident_footprint(corpus, "embedding")
         dispatches = {}
@@ -1714,14 +1656,11 @@ def strategy_costed_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             if tb_div:
                 kwargs["max_total_bytes"] = max(need // tb_div, 1)
             dispatches[route] = serve_or_plan(corpus, **kwargs)
-        _COSTED_SERVE_CACHE[sf_dir] = (spark, dispatches)
-        from hybrid_vector_search_spark.sources.purge import (
-            register_resident_invalidator,
-        )
+        _on_purge(sf_dir, "costed_serve")
+        return dispatches
 
-        register_resident_invalidator(
-            sf_dir, _COSTED_SERVE_CACHE.clear
-        )
+    dispatches = artifact(spark, ("costed_serve", sf_dir), build)
+
     def run_route(route_spec):
         expect, _sb, _tb, case_name = route_spec
         cs = dispatches[expect]
@@ -1833,7 +1772,6 @@ _RECL_NLIST = 8
 _RECL_NPROBE = 2
 _RECL_STALE_THRESHOLD = 0.1  # unindexed fraction that triggers rebuild
 _RECL_QSEED = 31
-_RECL_CACHE: dict[str, tuple] = {}
 
 
 def _recl_oracle() -> str:
@@ -1920,73 +1858,70 @@ def ann_ivf_recluster_on_drift(
         "stale_frac double, assign_psi double, triggered boolean,"
         " id long, score double"
     )
-    cached = _RECL_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        return local_df(spark, cached[1], schema).orderBy(
-            F.desc("score"), "id"
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            F.col("vec_id").alias("id"), "embedding"
         )
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("id"), "embedding"
-    )
-    v1 = emb.filter(F.col("id") % 5 != 0)
-    v2 = emb
+        v1 = emb.filter(F.col("id") % 5 != 0)
+        v2 = emb
 
-    def lowest_cents(df) -> np.ndarray:
-        rows = df.orderBy("id").limit(_RECL_NLIST).collect()
-        return np.vstack(
-            [np.asarray(r["embedding"], dtype=np.float64) for r in rows]
+        def lowest_cents(df) -> np.ndarray:
+            rows = df.orderBy("id").limit(_RECL_NLIST).collect()
+            return np.vstack(
+                [np.asarray(r["embedding"], dtype=np.float64) for r in rows]
+            )
+
+        cents1 = lowest_cents(v1)
+        t1, t2 = v1.count(), v2.count()
+        stale = (t2 - t1) / t2
+        psi = assignment_drift_psi(v1, v2, cents1)
+        triggered = stale > _RECL_STALE_THRESHOLD
+
+        root = scratch_path(
+            "ivf_recluster_" + sf_dir.strip("/").replace("/", "_")
+        )
+        M.commit_append_clustered(
+            root,
+            v1.withColumn(
+                "list_id", assign_list_udf(cents1)(F.col("embedding"))
+            ),
+            "list_id",
+        )
+        # the maintenance commit: versioned clustered rewrite under fresh
+        # centroids — the pre-rebuild index remains readable at version 1
+        cents2 = lowest_cents(v2) if triggered else cents1
+        M.commit_rewrite_clustered(
+            root,
+            v2.withColumn(
+                "list_id", assign_list_udf(cents2)(F.col("embedding"))
+            ),
+            "list_id",
+        )
+        q = query_vector(_RECL_QSEED)
+        order = np.argsort(-(cents2 @ np.asarray(q, dtype=np.float64)),
+                           kind="stable")
+        probed = sorted(int(i) for i in order[:_RECL_NPROBE])
+        from hybrid_vector_search_spark.functions.vector import (
+            dot_score_column,
         )
 
-    cents1 = lowest_cents(v1)
-    t1, t2 = v1.count(), v2.count()
-    stale = (t2 - t1) / t2
-    psi = assignment_drift_psi(v1, v2, cents1)
-    triggered = stale > _RECL_STALE_THRESHOLD
-
-    root = scratch_path(
-        "ivf_recluster_" + sf_dir.strip("/").replace("/", "_")
-    )
-    M.commit_append_clustered(
-        root,
-        v1.withColumn(
-            "list_id", assign_list_udf(cents1)(F.col("embedding"))
-        ),
-        "list_id",
-    )
-    # the maintenance commit: versioned clustered rewrite under fresh
-    # centroids — the pre-rebuild index remains readable at version 1
-    cents2 = lowest_cents(v2) if triggered else cents1
-    M.commit_rewrite_clustered(
-        root,
-        v2.withColumn(
-            "list_id", assign_list_udf(cents2)(F.col("embedding"))
-        ),
-        "list_id",
-    )
-    q = query_vector(_RECL_QSEED)
-    order = np.argsort(-(cents2 @ np.asarray(q, dtype=np.float64)),
-                       kind="stable")
-    probed = sorted(int(i) for i in order[:_RECL_NPROBE])
-    from hybrid_vector_search_spark.functions.vector import (
-        dot_score_column,
-    )
-
-    scored = (
-        M.read_snapshot(spark, root)
-        .filter(F.col("list_id").isin(probed))
-        .select("id", dot_score_column(q).alias("score"))
-    )
-    rows = [
-        (
-            round(stale, 6),
-            round(psi, 6),
-            bool(triggered),
-            int(r["id"]),
-            round(float(r["score"]), 6),
+        scored = (
+            M.read_snapshot(spark, root)
+            .filter(F.col("list_id").isin(probed))
+            .select("id", dot_score_column(q).alias("score"))
         )
-        for r in topk(scored, ANN_IVF_K).collect()
-    ]
-    _RECL_CACHE[sf_dir] = (spark, rows)
+        return [
+            (
+                round(stale, 6),
+                round(psi, 6),
+                bool(triggered),
+                int(r["id"]),
+                round(float(r["score"]), 6),
+            )
+            for r in topk(scored, ANN_IVF_K).collect()
+        ]
+
+    rows = artifact(spark, ("recl", sf_dir), build)
     return local_df(spark, rows, schema).orderBy(
         F.desc("score"), "id"
     )

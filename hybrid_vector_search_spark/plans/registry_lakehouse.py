@@ -14,9 +14,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from hybrid_vector_search_spark.session import artifact
 from hybrid_vector_search_spark.sources.loaders import (
     load_table,
-    spread,
 )
 
 from hybrid_vector_search_spark.plans.registry import (  # noqa: E402
@@ -31,7 +32,29 @@ from hybrid_vector_search_spark.plans.registry_hybrid_ann import (  # noqa: E402
 )
 
 
-_SNAPSHOT_CACHE: dict[str, tuple] = {}
+def _snapshot_root(spark: SparkSession, sf_dir: str) -> str:
+    """The corpus_snapshot_reads table: v1 (80% of rows), an append v2
+    (the remaining 20%) and a one-file compaction rewrite v3, committed
+    once per session."""
+    from hybrid_vector_search_spark.scratch import scratch_path
+    from hybrid_vector_search_spark.sources import manifest as M
+
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "label"
+        )
+        root = scratch_path(
+            "snapshots_" + sf_dir.strip("/").replace("/", "_")
+        )
+        v1 = M.commit_append(root, emb.filter(F.col("vec_id") % 5 != 0))
+        v2 = M.commit_append(root, emb.filter(F.col("vec_id") % 5 == 0))
+        v3 = M.commit_rewrite(
+            root, M.read_snapshot(spark, root, v2), n_files=1
+        )
+        assert (v1, v2, v3) == (1, 2, 3)
+        return root
+
+    return artifact(spark, ("snapshot", sf_dir), build)
 
 
 @register(
@@ -67,24 +90,8 @@ def corpus_snapshot_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_manifest.py). ``side_effects``: commits build a
     persisted layout once per session."""
     from hybrid_vector_search_spark.sources import manifest as M
-    from hybrid_vector_search_spark.scratch import scratch_path
 
-    cached = _SNAPSHOT_CACHE.get(sf_dir)
-    root = cached[1] if cached is not None and cached[0] is spark else None
-    if root is None:
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "label"
-        )
-        root = scratch_path(
-            "snapshots_" + sf_dir.strip("/").replace("/", "_")
-        )
-        v1 = M.commit_append(root, emb.filter(F.col("vec_id") % 5 != 0))
-        v2 = M.commit_append(root, emb.filter(F.col("vec_id") % 5 == 0))
-        v3 = M.commit_rewrite(
-            root, M.read_snapshot(spark, root, v2), n_files=1
-        )
-        assert (v1, v2, v3) == (1, 2, 3)
-        _SNAPSHOT_CACHE[sf_dir] = (spark, root)
+    root = _snapshot_root(spark, sf_dir)
 
     def counts(version):
         return (
@@ -124,8 +131,7 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     table-format upgrade path."""
     from hybrid_vector_search_spark.sources import manifest as M
 
-    corpus_snapshot_reads(spark, sf_dir)  # ensure versions committed
-    root = _SNAPSHOT_CACHE[sf_dir][1]
+    root = _snapshot_root(spark, sf_dir)
     v2 = M.read_snapshot(spark, root, 2)
     v1 = M.read_snapshot(spark, root, 1)
     return (
@@ -133,9 +139,6 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("id"), "label")
         .orderBy("id")
     )
-
-
-_PRUNED_SCAN_CACHE: dict[str, tuple[SparkSession, str]] = {}
 
 
 @register(
@@ -173,12 +176,7 @@ def corpus_snapshot_pruned_scan(
     # n rides in the cache next to the root: re-deriving it per call is
     # one whole Spark job on every bench pass (guide §1.2 — don't
     # re-compute what the builder already knows)
-    cached = _PRUNED_SCAN_CACHE.get(sf_dir)
-    root, n = (
-        cached[1:] if cached is not None and cached[0] is spark
-        else (None, None)
-    )
-    if root is None:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "label"
         )
@@ -195,7 +193,9 @@ def corpus_snapshot_pruned_scan(
                 ),
                 n_files=1,
             )
-        _PRUNED_SCAN_CACHE[sf_dir] = (spark, root, n)
+        return root, n
+
+    root, n = artifact(spark, ("pruned_scan", sf_dir), build)
     w_lo, w_hi = (3 * n) // 8, (5 * n) // 8 - 1
     _v, kept, total = M.snapshot_files_pruned(root, "vec_id", w_lo, w_hi)
     return (
@@ -214,9 +214,6 @@ def corpus_snapshot_pruned_scan(
         )
         .orderBy("label")
     )
-
-
-_GROUP_PRUNED_CACHE: dict[str, tuple[SparkSession, str]] = {}
 
 
 def _group_pruned_oracle() -> str:
@@ -268,12 +265,7 @@ def corpus_snapshot_group_pruned_scan(
 
     # n rides in the cache next to the root (guide §1.2: the per-call
     # max job was one whole Spark job per bench pass)
-    cached = _GROUP_PRUNED_CACHE.get(sf_dir)
-    root, n = (
-        cached[1:] if cached is not None and cached[0] is spark
-        else (None, None)
-    )
-    if root is None:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "label"
         )
@@ -294,7 +286,9 @@ def corpus_snapshot_group_pruned_scan(
                 ),
             )
             M.commit_append_clustered(root, quarter, "q")
-        _GROUP_PRUNED_CACHE[sf_dir] = (spark, root, n)
+        return root, n
+
+    root, n = artifact(spark, ("group_pruned", sf_dir), build)
     w_lo, w_hi = n // 4, n // 2 - 1
     v = M.current_version(root)
     groups_total = len(M._read_manifest(root, v)["groups"])
@@ -325,9 +319,6 @@ def corpus_snapshot_group_pruned_scan(
         )
         .orderBy("label")
     )
-
-
-_SPEC_EVOLUTION_CACHE: dict[str, tuple[SparkSession, str]] = {}
 
 
 @register(
@@ -367,9 +358,7 @@ def corpus_snapshot_partition_evolution(
     # the max-id job and the `both` projection are builder-only: on a
     # warm call the query reads the committed layout, so neither should
     # run per pass (guide §1.2 — was one Spark job per bench pass)
-    cached = _SPEC_EVOLUTION_CACHE.get(sf_dir)
-    root = cached[1] if cached is not None and cached[0] is spark else None
-    if root is None:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "label"
         )
@@ -397,7 +386,9 @@ def corpus_snapshot_partition_evolution(
         M.commit_append_clustered(
             root, both.filter(F.col("vec_id") >= n // 2), "q"
         )
-        _SPEC_EVOLUTION_CACHE[sf_dir] = (spark, root)
+        return root
+
+    root = artifact(spark, ("spec_evolution", sf_dir), build)
     files_v1 = set(M._resolve_manifest(root, 1)["files"])
 
     def split(kept):
@@ -477,9 +468,6 @@ def corpus_snapshot_history(
     ).orderBy("version")
 
 
-_RESTORE_CACHE: dict[str, tuple[SparkSession, str]] = {}
-
-
 @register(
     "corpus_snapshot_restore",
     """SELECT 3 AS head_version, 1 AS restored_from, 'restore' AS op,
@@ -503,9 +491,7 @@ def corpus_snapshot_restore(
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _RESTORE_CACHE.get(sf_dir)
-    root = cached[1] if cached is not None and cached[0] is spark else None
-    if root is None:
+    def build():
         base = load_table(spark, sf_dir, "embeddings").select(
             F.col("vec_id").alias("id"), "label"
         )
@@ -515,7 +501,9 @@ def corpus_snapshot_restore(
         M.commit_append(root, base.filter(F.col("id") % 2 == 0))
         M.commit_append(root, base.filter(F.col("id") % 2 == 1))
         M.restore_snapshot(root, 1)
-        _RESTORE_CACHE[sf_dir] = (spark, root)
+        return root
+
+    root = artifact(spark, ("restore", sf_dir), build)
     head = M.current_version(root)
     desc = M.snapshot_history(root)[-1]
     return (
@@ -531,9 +519,6 @@ def corpus_snapshot_restore(
         )
         .orderBy("id")
     )
-
-
-_MANIFEST_COMPACT_CACHE: dict[str, tuple[SparkSession, str]] = {}
 
 
 @register(
@@ -566,12 +551,7 @@ def corpus_snapshot_manifest_compaction(
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _MANIFEST_COMPACT_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        # idempotent re-entry (bench min-of-N): replay the recorded
-        # before/after widths over the already-compacted table
-        _sp, root, groups_before, v1 = cached
-    else:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "label"
         )
@@ -594,7 +574,11 @@ def corpus_snapshot_manifest_compaction(
         v1 = M.compact_manifest_sidecars(root, target_groups=2)
         files_after = set(M.snapshot_files(root, v1)[1])
         assert files_after == files_before  # zero data movement
-        _MANIFEST_COMPACT_CACHE[sf_dir] = (spark, root, groups_before, v1)
+        return root, groups_before, v1
+
+    # idempotent re-entry (bench min-of-N): replay the recorded
+    # before/after widths over the already-compacted table
+    root, groups_before, v1 = artifact(spark, ("manifest_compact", sf_dir), build)
     groups_after = len(M._read_manifest(root, v1)["groups"])
     files_total = len(M.snapshot_files(root, v1)[1])
     return (
@@ -613,9 +597,6 @@ def corpus_snapshot_manifest_compaction(
             "n_labels",
         )
     )
-
-
-_WAP_CACHE: dict[str, tuple] = {}
 
 
 @register(
@@ -650,10 +631,7 @@ def corpus_snapshot_wap_publish(
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _WAP_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        _sp, root, before_rows, bad_rows = cached
-    else:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "label"
         )
@@ -698,7 +676,9 @@ def corpus_snapshot_wap_publish(
             == 0
         )
         M.update_branch(root, "published", v4)
-        _WAP_CACHE[sf_dir] = (spark, root, before_rows, bad_rows)
+        return root, before_rows, bad_rows
+
+    root, before_rows, bad_rows = artifact(spark, ("wap", sf_dir), build)
 
     published = M.read_branch(spark, root, "published")
     return published.agg(
@@ -712,7 +692,6 @@ def corpus_snapshot_wap_publish(
     )
 
 
-_BLOOM_SCAN_CACHE: dict[str, tuple[SparkSession, str]] = {}
 _BLOOM_PROBE_ID = 137  # present at every sf (ids are 0..N-1, N ≥ 500)
 _BLOOM_CLUSTERS = 4
 
@@ -782,9 +761,7 @@ def corpus_snapshot_bloom_scan(
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _BLOOM_SCAN_CACHE.get(sf_dir)
-    root = cached[1] if cached is not None and cached[0] is spark else None
-    if root is None:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings").select(
             F.col("vec_id").alias("id"), "label"
         ).withColumn(
@@ -794,7 +771,9 @@ def corpus_snapshot_bloom_scan(
             "snap_bloom_" + sf_dir.strip("/").replace("/", "_")
         )
         M.commit_append_clustered(root, emb, "b", bloom_columns=["id"])
-        _BLOOM_SCAN_CACHE[sf_dir] = (spark, root)
+        return root
+
+    root = artifact(spark, ("bloom_scan", sf_dir), build)
     _v, kept, total, kept_range = M.snapshot_files_pruned_eq(
         root, "id", _BLOOM_PROBE_ID
     )
@@ -811,7 +790,6 @@ def corpus_snapshot_bloom_scan(
     )
 
 
-_STATS_PLANNER_CACHE: dict[str, tuple[SparkSession, str]] = {}
 _SP_FILTERS = {"label": {"eq": 7}, "lang": {"eq": "zh"}}
 
 
@@ -905,9 +883,7 @@ def corpus_snapshot_stats_planner(
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _STATS_PLANNER_CACHE.get(sf_dir)
-    root = cached[1] if cached is not None and cached[0] is spark else None
-    if root is None:
+    def build():
         corpus = load_corpus(spark, sf_dir).select(
             "id", "label", "lang"
         ).withColumn("b", (F.col("id") % 4).cast("int"))
@@ -917,7 +893,9 @@ def corpus_snapshot_stats_planner(
         M.commit_append_clustered(
             root, corpus, "b", bloom_columns=["label", "lang"]
         )
-        _STATS_PLANNER_CACHE[sf_dir] = (spark, root)
+        return root
+
+    root = artifact(spark, ("stats_planner", sf_dir), build)
     stats = M.manifest_column_stats(root, ["label", "lang"])
     n = int(stats["__table__"]["count"])
     choice, est = choose_backend_costed(
@@ -949,9 +927,6 @@ def corpus_snapshot_stats_planner(
     )
 
 
-_TAG_READ_CACHE: dict[str, tuple[SparkSession, str]] = {}
-
-
 @register(
     "corpus_snapshot_tag_read",
     """SELECT 2 AS tagged_version, 2 AS retained_versions,
@@ -978,9 +953,7 @@ def corpus_snapshot_tag_read(
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _TAG_READ_CACHE.get(sf_dir)
-    root = cached[1] if cached is not None and cached[0] is spark else None
-    if root is None:
+    def build():
         base = load_table(spark, sf_dir, "embeddings").select(
             F.col("vec_id").alias("id"), "label"
         )
@@ -998,7 +971,9 @@ def corpus_snapshot_tag_read(
             ),
         )
         M.vacuum(root, keep_last=1)
-        _TAG_READ_CACHE[sf_dir] = (spark, root)
+        return root
+
+    root = artifact(spark, ("tag_read", sf_dir), build)
     v = M.resolve_tag(root, "train")
     retained = len(M.list_versions(root))
     return (
@@ -1011,9 +986,6 @@ def corpus_snapshot_tag_read(
         )
         .orderBy("id")
     )
-
-
-_ASOF_READ_CACHE: dict[str, tuple[SparkSession, str]] = {}
 
 
 @register(
@@ -1044,9 +1016,7 @@ def corpus_snapshot_asof_read(
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _ASOF_READ_CACHE.get(sf_dir)
-    root = cached[1] if cached is not None and cached[0] is spark else None
-    if root is None:
+    def build():
         base = load_table(spark, sf_dir, "embeddings").select(
             F.col("vec_id").alias("id"), "label"
         )
@@ -1069,7 +1039,9 @@ def corpus_snapshot_asof_read(
             ),
             meta={"event_ts": 300},
         )
-        _ASOF_READ_CACHE[sf_dir] = (spark, root)
+        return root
+
+    root = artifact(spark, ("asof_read", sf_dir), build)
     v100 = M.resolve_asof(root, 100, meta_key="event_ts")
     v250 = M.resolve_asof(root, 250, meta_key="event_ts")
     wall_latest = int(
@@ -1086,9 +1058,6 @@ def corpus_snapshot_asof_read(
         )
         .orderBy("id")
     )
-
-
-_UPSERT_ROWS_CACHE: dict[str, tuple[SparkSession, str]] = {}
 
 
 @register(
@@ -1135,9 +1104,7 @@ def corpus_snapshot_upsert_rows(
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _UPSERT_ROWS_CACHE.get(sf_dir)
-    root = cached[1] if cached is not None and cached[0] is spark else None
-    if root is None:
+    def build():
         base = load_table(spark, sf_dir, "embeddings").select(
             F.col("vec_id").alias("id"), "label"
         )
@@ -1155,7 +1122,9 @@ def corpus_snapshot_upsert_rows(
             )
         )
         M.commit_upsert_rows(root, batch, "id", n_files=1)
-        _UPSERT_ROWS_CACHE[sf_dir] = (spark, root)
+        return root
+
+    root = artifact(spark, ("upsert_rows", sf_dir), build)
     # r15 fused proof pass (guide §1.2/§2.4): the old shape unioned
     # agg(read_snapshot(1)) with agg(read_snapshot(2)), scanning v1's
     # files TWICE (once alone, once inside v2's merge-on-read). This
@@ -1233,9 +1202,6 @@ def corpus_snapshot_upsert_rows(
     )
 
 
-_ZORDER_CACHE: dict[str, tuple[SparkSession, str]] = {}
-
-
 @register(
     "corpus_snapshot_zorder_scan",
     """WITH m AS (SELECT MAX(vec_id) + 1 AS n FROM embeddings),
@@ -1270,10 +1236,7 @@ def corpus_snapshot_zorder_scan(
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _ZORDER_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        _sp, root, n = cached
-    else:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "label"
         )
@@ -1293,7 +1256,9 @@ def corpus_snapshot_zorder_scan(
             emb.withColumn("zb", M.zorder_bucket(zcols, 4)),
             "zb",
         )
-        _ZORDER_CACHE[sf_dir] = (spark, root, n)
+        return root, n
+
+    root, n = artifact(spark, ("zorder", sf_dir), build)
     w_lo, w_hi = (3 * n) // 8, (5 * n) // 8 - 1
     _v, kept_vec, total = M.snapshot_files_pruned(
         root, "vec_id", w_lo, w_hi
@@ -1316,9 +1281,6 @@ def corpus_snapshot_zorder_scan(
             "sum_id",
         )
     )
-
-
-_OPTIMIZE_Z_CACHE: dict[str, tuple[SparkSession, str]] = {}
 
 
 @register(
@@ -1361,10 +1323,7 @@ def corpus_snapshot_optimize_zorder(
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _OPTIMIZE_Z_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        _sp, root, n = cached
-    else:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "label"
         )
@@ -1389,7 +1348,9 @@ def corpus_snapshot_optimize_zorder(
             ),
             "zb",
         )
-        _OPTIMIZE_Z_CACHE[sf_dir] = (spark, root, n)
+        return root, n
+
+    root, n = artifact(spark, ("optimize_z", sf_dir), build)
     w_lo, w_hi = (3 * n) // 8, (5 * n) // 8 - 1
     preds = [("vec_id", w_lo, w_hi), ("label", 3, 3)]
     parts = []
@@ -1414,9 +1375,6 @@ def corpus_snapshot_optimize_zorder(
             )
         )
     return parts[0].unionByName(parts[1]).orderBy("phase")
-
-
-_SCHEMA_EVO_CACHE: dict[str, tuple[SparkSession, str]] = {}
 
 
 @register(
@@ -1450,9 +1408,7 @@ def corpus_snapshot_schema_evolution(
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _SCHEMA_EVO_CACHE.get(sf_dir)
-    root = cached[1] if cached is not None and cached[0] is spark else None
-    if root is None:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "label"
         )
@@ -1470,7 +1426,9 @@ def corpus_snapshot_schema_evolution(
             ),
         )
         M.commit_rename_column(root, "label", "cls")
-        _SCHEMA_EVO_CACHE[sf_dir] = (spark, root)
+        return root
+
+    root = artifact(spark, ("schema_evo", sf_dir), build)
 
     v1 = M.read_snapshot(spark, root, 1).select(
         F.lit(1).alias("version"),
@@ -1485,9 +1443,6 @@ def corpus_snapshot_schema_evolution(
         "weight",
     )
     return v1.unionByName(v4).orderBy("version", "id")
-
-
-_ROW_DELETE_CACHE: dict[str, tuple[SparkSession, str]] = {}
 
 
 @register(
@@ -1531,9 +1486,7 @@ def corpus_snapshot_row_deletes(
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _ROW_DELETE_CACHE.get(sf_dir)
-    root = cached[1] if cached is not None and cached[0] is spark else None
-    if root is None:
+    def build():
         ids = load_table(spark, sf_dir, "embeddings").select(
             F.col("vec_id").alias("id")
         )
@@ -1548,7 +1501,9 @@ def corpus_snapshot_row_deletes(
             root, ids.filter((F.col("id") % 21) == 0), n_files=1
         )
         M.commit_rewrite(root, M.read_snapshot(spark, root), n_files=2)
-        _ROW_DELETE_CACHE[sf_dir] = (spark, root)
+        return root
+
+    root = artifact(spark, ("row_delete", sf_dir), build)
     parts = []
     for v in (1, 2, 3, 4):
         n_data = len(M.snapshot_files(root, v)[1])
@@ -1571,9 +1526,6 @@ def corpus_snapshot_row_deletes(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out.orderBy("version")
-
-
-_CHANGELOG_CACHE: dict[str, tuple[SparkSession, str]] = {}
 
 
 @register(
@@ -1608,7 +1560,6 @@ def corpus_snapshot_changelog(
     closed range is reproducible forever — the property that lets a
     downstream consumer (index, replica, feature store) re-tail after
     a crash. Beyond-reference (SURVEY.md §2.9 maintenance family)."""
-    from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
     root = _changelog_root(spark, sf_dir)
@@ -1626,30 +1577,29 @@ def _changelog_root(spark: SparkSession, sf_dir: str) -> str:
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _CHANGELOG_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        return cached[1]
-    base = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("id"), "label"
-    )
-    n = base.agg(F.max("id")).first()[0] + 1  # bounded: one row
-    root = scratch_path(
-        "snap_cdc_" + sf_dir.strip("/").replace("/", "_")
-    )
-    M.commit_append(root, base, n_files=2)
-    M.commit_append(
-        root,
-        base.filter(F.col("id") % 4 == 0).select(
-            (F.col("id") + n).alias("id"), "label"
-        ),
-        n_files=1,
-    )
-    M.commit_delete_where(
-        root, base.filter(F.col("id") % 5 == 0), "id"
-    )
-    M.commit_rewrite(root, M.read_snapshot(spark, root), n_files=2)
-    _CHANGELOG_CACHE[sf_dir] = (spark, root)
-    return root
+    def build():
+        base = load_table(spark, sf_dir, "embeddings").select(
+            F.col("vec_id").alias("id"), "label"
+        )
+        n = base.agg(F.max("id")).first()[0] + 1  # bounded: one row
+        root = scratch_path(
+            "snap_cdc_" + sf_dir.strip("/").replace("/", "_")
+        )
+        M.commit_append(root, base, n_files=2)
+        M.commit_append(
+            root,
+            base.filter(F.col("id") % 4 == 0).select(
+                (F.col("id") + n).alias("id"), "label"
+            ),
+            n_files=1,
+        )
+        M.commit_delete_where(
+            root, base.filter(F.col("id") % 5 == 0), "id"
+        )
+        M.commit_rewrite(root, M.read_snapshot(spark, root), n_files=2)
+        return root
+
+    return artifact(spark, ("changelog", sf_dir), build)
 
 
 @register(
@@ -1731,7 +1681,6 @@ def corpus_snapshot_cdc_apply(
 # ----------------------------------------- GDPR physical purge (r13)
 
 _PURGE_USER = 13
-_PURGE_CACHE: dict[str, tuple] = {}
 
 
 @register(
@@ -1774,10 +1723,7 @@ def corpus_snapshot_purge_user(
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _PURGE_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        _sp, rows_before, purged_rows, residual, retained = cached
-    else:
+    def build():
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type"
         )
@@ -1812,9 +1758,9 @@ def corpus_snapshot_purge_user(
             else 0
         )
         retained = len(M.list_versions(root))
-        _PURGE_CACHE[sf_dir] = (
-            spark, rows_before, purged_rows, residual, retained,
-        )
+        return rows_before, purged_rows, residual, retained
+
+    rows_before, purged_rows, residual, retained = artifact(spark, ("purge", sf_dir), build)
     return local_df(spark, 
         [(
             int(rows_before),
@@ -1833,7 +1779,6 @@ def corpus_snapshot_purge_user(
 _CASCADE_SUBJECT = 13   # the erased user; docs/vectors owned via % mod
 _CASCADE_MOD = 50       # owner(doc) = doc_id % 50, owner(vec) = vec_id % 50
 _CASCADE_NLIST = 64
-_CASCADE_CACHE: dict[str, tuple] = {}
 
 
 def _cascade_oracle() -> str:
@@ -1964,94 +1909,90 @@ def corpus_purge_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         " rows_after long, residual_rows_any_file long,"
         " retained_versions long"
     )
-    cached = _CASCADE_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        return local_df(spark, cached[1], schema).orderBy("artifact")
-
-    s, m = _CASCADE_SUBJECT, _CASCADE_MOD
-    base = scratch_path(
-        "purge_cascade_" + sf_dir.strip("/").replace("/", "_")
-    )
-    # -- 1. base snapshot: two appends so the purge has history to kill
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type"
-    )
-    ev_root = os.path.join(base, "events_snapshot")
-    M.commit_append(ev_root, ev.filter(F.col("user_id") % 2 == 0), n_files=2)
-    M.commit_append(ev_root, ev.filter(F.col("user_id") % 2 == 1), n_files=2)
-    # -- 2. persisted IVF lists: fixed seeded quantizer (the lowest
-    # nlist vec_ids — deterministic, no KMeans iterations; the layout
-    # and the maintenance-commit path are the production ones)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    cents = np.vstack(
-        [
-            np.asarray(r["embedding"], dtype=np.float64)
-            for r in emb.orderBy("vec_id").limit(_CASCADE_NLIST).collect()
-        ]
-    )
-    ivf_root = os.path.join(base, "ivf_lists")
-    M.commit_append_clustered(
-        ivf_root,
-        emb.withColumn(
-            "list_id", assign_list_udf(cents)(F.col("embedding"))
-        ),
-        "list_id",
-    )
-    # -- 3. BM25 postings clustered by term bucket
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tok = tokenize(docs, "doc_id", "text")
-    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    postings = (
-        tok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .join(dl, "doc_id")
-        .withColumn(
-            "ck", (portable_hash_key(F.col("term")) % 32).cast("int")
+    def build():
+        s, m = _CASCADE_SUBJECT, _CASCADE_MOD
+        base = scratch_path(
+            "purge_cascade_" + sf_dir.strip("/").replace("/", "_")
         )
-    )
-    bm_root = os.path.join(base, "bm25_postings")
-    M.commit_append_clustered(bm_root, postings, "ck")
-    # -- 4 + 5. dedup posting index + survivors via the production
-    # ingest kernel (one batch = the whole corpus)
-    idx_root = os.path.join(base, "dedup_postings")
-    surv_root = os.path.join(base, "dedup_survivors")
-    DD.dedup_ingest_commit_batch(
-        spark, docs, 0, idx_root, surv_root, JACCARD_THRESHOLD
-    )
+        # -- 1. base snapshot: two appends so the purge has history to kill
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type"
+        )
+        ev_root = os.path.join(base, "events_snapshot")
+        M.commit_append(ev_root, ev.filter(F.col("user_id") % 2 == 0), n_files=2)
+        M.commit_append(ev_root, ev.filter(F.col("user_id") % 2 == 1), n_files=2)
+        # -- 2. persisted IVF lists: fixed seeded quantizer (the lowest
+        # nlist vec_ids — deterministic, no KMeans iterations; the layout
+        # and the maintenance-commit path are the production ones)
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding"
+        )
+        cents = np.vstack(
+            [
+                np.asarray(r["embedding"], dtype=np.float64)
+                for r in emb.orderBy("vec_id").limit(_CASCADE_NLIST).collect()
+            ]
+        )
+        ivf_root = os.path.join(base, "ivf_lists")
+        M.commit_append_clustered(
+            ivf_root,
+            emb.withColumn(
+                "list_id", assign_list_udf(cents)(F.col("embedding"))
+            ),
+            "list_id",
+        )
+        # -- 3. BM25 postings clustered by term bucket
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        tok = tokenize(docs, "doc_id", "text")
+        dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
+        postings = (
+            tok.groupBy("doc_id", "term")
+            .agg(F.count(F.lit(1)).alias("tf"))
+            .join(dl, "doc_id")
+            .withColumn(
+                "ck", (portable_hash_key(F.col("term")) % 32).cast("int")
+            )
+        )
+        bm_root = os.path.join(base, "bm25_postings")
+        M.commit_append_clustered(bm_root, postings, "ck")
+        # -- 4 + 5. dedup posting index + survivors via the production
+        # ingest kernel (one batch = the whole corpus)
+        idx_root = os.path.join(base, "dedup_postings")
+        surv_root = os.path.join(base, "dedup_survivors")
+        DD.dedup_ingest_commit_batch(
+            spark, docs, 0, idx_root, surv_root, JACCARD_THRESHOLD
+        )
 
-    # each builder REGISTERS its root (owner = a SQL expression over
-    # the root's own columns); the purge then ENUMERATES the registry —
-    # erasure must not depend on the caller remembering every index
-    register_derived_root(
-        base, "events_snapshot", ev_root, "user_id", source=sf_dir
-    )
-    register_derived_root(
-        base, "ivf_lists", ivf_root, f"vec_id % {m}",
-        cluster_column="list_id", targeted=True, source=sf_dir,
-    )
-    register_derived_root(
-        base, "bm25_postings", bm_root, f"doc_id % {m}",
-        cluster_column="ck", source=sf_dir,
-    )
-    register_derived_root(
-        base, "dedup_postings", idx_root, f"doc_id % {m}",
-        cluster_column="ck", source=sf_dir,
-    )
-    register_derived_root(
-        base, "dedup_survivors", surv_root, f"doc_id % {m}",
-        source=sf_dir,
-    )
-    audit = purge_user_cascade(spark, base, s)
-    rows = [tuple(r) for r in audit.collect()]
-    _CASCADE_CACHE[sf_dir] = (spark, rows)
+        # each builder REGISTERS its root (owner = a SQL expression over
+        # the root's own columns); the purge then ENUMERATES the registry —
+        # erasure must not depend on the caller remembering every index
+        register_derived_root(
+            base, "events_snapshot", ev_root, "user_id", source=sf_dir
+        )
+        register_derived_root(
+            base, "ivf_lists", ivf_root, f"vec_id % {m}",
+            cluster_column="list_id", targeted=True, source=sf_dir,
+        )
+        register_derived_root(
+            base, "bm25_postings", bm_root, f"doc_id % {m}",
+            cluster_column="ck", source=sf_dir,
+        )
+        register_derived_root(
+            base, "dedup_postings", idx_root, f"doc_id % {m}",
+            cluster_column="ck", source=sf_dir,
+        )
+        register_derived_root(
+            base, "dedup_survivors", surv_root, f"doc_id % {m}",
+            source=sf_dir,
+        )
+        audit = purge_user_cascade(spark, base, s)
+        return [tuple(r) for r in audit.collect()]
+
+    rows = artifact(spark, ("cascade", sf_dir), build)
     return local_df(spark, rows, schema).orderBy("artifact")
 
 
 # ------------------------------- snapshot drift monitoring (r14)
-
-_DRIFT_CACHE: dict[str, tuple] = {}
 
 
 def _drift_oracle() -> str:
@@ -2109,10 +2050,7 @@ def corpus_snapshot_drift_psi(
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _DRIFT_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        _sp, root, t1, t2, k = cached
-    else:
+    def build():
         root = scratch_path(
             "snap_drift_" + sf_dir.strip("/").replace("/", "_")
         )
@@ -2133,11 +2071,22 @@ def corpus_snapshot_drift_psi(
             .agg(
                 F.count(F.lit(1)).alias("t2"),
                 F.countDistinct("label").alias("k"),
+                F.count(F.when(F.col("label").isNull(), 1)).alias("nulls"),
             )
             .first()
         )
-        t2, k = row["t2"], row["k"]
-        _DRIFT_CACHE[sf_dir] = (spark, root, t1, t2, k)
+        if row["nulls"]:
+            # countDistinct drops NULL, so k would silently miss a bin
+            from hybrid_vector_search_spark.errors import ValidationError
+
+            raise ValidationError(
+                f"corpus_snapshot_drift_psi: {row['nulls']} embeddings "
+                f"row(s) in '{sf_dir}' have a NULL label; PSI bins need "
+                f"every row labelled"
+            )
+        return root, t1, row["t2"], row["k"]
+
+    root, t1, t2, k = artifact(spark, ("drift", sf_dir), build)
     s1 = M.read_snapshot(spark, root, 1)
     s2 = M.read_snapshot(spark, root, 2)
     g = round_portable(
@@ -2176,7 +2125,6 @@ def corpus_snapshot_drift_psi(
 # --------------------------- purge-registry completeness audit (r15)
 
 _REG_AUDIT_SUBJECT = 13
-_REG_AUDIT_CACHE: dict[str, tuple] = {}
 
 
 def _reg_audit_oracle() -> str:
@@ -2232,41 +2180,40 @@ def corpus_purge_registry_audit(
     )
 
     schema = "artifact string, registered boolean, subject_rows long"
-    cached = _REG_AUDIT_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        return local_df(spark, cached[1], schema).orderBy("artifact")
-    s = _REG_AUDIT_SUBJECT
-    base = scratch_path(
-        "purge_registry_audit_" + sf_dir.strip("/").replace("/", "_")
-    )
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type"
-    )
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.length("text").alias("n_chars_doc")
-    )
-    ev_root = os.path.join(base, "events_snapshot")
-    dl_root = os.path.join(base, "doc_lengths")
-    M.commit_append(ev_root, ev, n_files=2)
-    M.commit_append(dl_root, docs, n_files=2)
-    register_derived_root(
-        base, "events_snapshot", ev_root, "user_id", source=sf_dir
-    )
-    register_derived_root(
-        base, "doc_lengths", dl_root, "doc_id % 50", source=sf_dir
-    )
-    # the forgotten builder: a persisted export NOBODY registered
-    M.commit_append(os.path.join(base, "tmp_export"), ev, n_files=1)
-    # and an aggregate no owner probe can attribute
-    M.commit_append(
-        os.path.join(base, "anon_counts"),
-        ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")),
-        n_files=1,
-    )
-    purge_user_cascade(spark, base, s)
-    audit = audit_purge_registry(
-        spark, base, s, ["user_id", "doc_id % 50"]
-    )
-    rows = [tuple(r) for r in audit.collect()]
-    _REG_AUDIT_CACHE[sf_dir] = (spark, rows)
+    def build():
+        s = _REG_AUDIT_SUBJECT
+        base = scratch_path(
+            "purge_registry_audit_" + sf_dir.strip("/").replace("/", "_")
+        )
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type"
+        )
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", F.length("text").alias("n_chars_doc")
+        )
+        ev_root = os.path.join(base, "events_snapshot")
+        dl_root = os.path.join(base, "doc_lengths")
+        M.commit_append(ev_root, ev, n_files=2)
+        M.commit_append(dl_root, docs, n_files=2)
+        register_derived_root(
+            base, "events_snapshot", ev_root, "user_id", source=sf_dir
+        )
+        register_derived_root(
+            base, "doc_lengths", dl_root, "doc_id % 50", source=sf_dir
+        )
+        # the forgotten builder: a persisted export NOBODY registered
+        M.commit_append(os.path.join(base, "tmp_export"), ev, n_files=1)
+        # and an aggregate no owner probe can attribute
+        M.commit_append(
+            os.path.join(base, "anon_counts"),
+            ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")),
+            n_files=1,
+        )
+        purge_user_cascade(spark, base, s)
+        audit = audit_purge_registry(
+            spark, base, s, ["user_id", "doc_id % 50"]
+        )
+        return [tuple(r) for r in audit.collect()]
+
+    rows = artifact(spark, ("reg_audit", sf_dir), build)
     return local_df(spark, rows, schema).orderBy("artifact")

@@ -12,20 +12,17 @@ from __future__ import annotations
 
 from hybrid_vector_search_spark.operators import dedup as DD
 
-import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from hybrid_vector_search_spark.functions.portable import (
-    grid_avg,
-    grid_avg_sql,
     round_portable,
     round_portable_sql,
 )
 from hybrid_vector_search_spark.operators.topk import grouped_topk, topk
 from hybrid_vector_search_spark.queryvecs import query_vector, sql_array_literal
+from hybrid_vector_search_spark.session import artifact
 from hybrid_vector_search_spark.sources.loaders import (
     load_table,
-    spread,
 )
 
 from hybrid_vector_search_spark.plans.registry import (  # noqa: E402
@@ -41,18 +38,11 @@ from hybrid_vector_search_spark.plans.registry_hybrid_ann import (  # noqa: E402
     _ann_ivf_oracle,
     _ann_ivf_probed,
     _quantized_corpus,
-    ann_ivf_batch_topk,
-    ann_ivf_upsert_snapshot,
-    ann_ivf_upsert_topk,
-    hybrid_batch_canonical,
 )
 from hybrid_vector_search_spark.plans.registry_corpus import (  # noqa: E402
     MATRYOSHKA_C,
     _hamming_rerank_oracle,
-    _hamming_rerank_plan,
     _int8_rerank_oracle,
-    ann_matryoshka_rerank_topk,
-    text_tfidf_top_terms,
 )
 
 # ------------------------------------------- sampling & sequence packing
@@ -299,7 +289,6 @@ ORDER BY list_dot_product(embedding::DOUBLE[], {qlit}) DESC, vec_id ASC
 LIMIT 10"""
 
 
-_LSH_LAYOUT_CACHE: dict[str, tuple[SparkSession, tuple]] = {}
 LSH_PERSISTED_QSEED = 33
 
 
@@ -309,16 +298,14 @@ def _lsh_layout(spark: SparkSession, sf_dir: str) -> tuple:
     from hybrid_vector_search_spark.operators import lsh as LSH
     from hybrid_vector_search_spark.scratch import scratch_path
 
-    cached = _LSH_LAYOUT_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        return cached[1]
-    emb = load_table(spark, sf_dir, "embeddings").withColumnRenamed(
-        "vec_id", "id"
-    )
-    path = scratch_path("lsh_buckets_" + sf_dir.strip("/").replace("/", "_"))
-    layout_planes = LSH.build_bucketed_layout(emb, path)
-    _LSH_LAYOUT_CACHE[sf_dir] = (spark, layout_planes)
-    return layout_planes
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings").withColumnRenamed(
+            "vec_id", "id"
+        )
+        path = scratch_path("lsh_buckets_" + sf_dir.strip("/").replace("/", "_"))
+        return LSH.build_bucketed_layout(emb, path)
+
+    return artifact(spark, ("lsh_layout", sf_dir), build)
 
 
 @register("ann_lsh_topk", _lsh_oracle())
@@ -886,9 +873,8 @@ def metrics_lsh_radius_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 MATRYOSHKA_SWEEP_DIMS = (8, 16, 32, 64)
 MATRYOSHKA_SWEEP_QSEED = 101
 
-# prepared rung plans per (session, sf_dir) — cleared with every other
-# *_CACHE by registry.invalidate_caches()
-_MATRYOSHKA_SWEEP_PLAN_CACHE: dict[str, tuple] = {}
+# prepared rung plans per (session, sf_dir) — a session artifact, cleared
+# by registry.invalidate_caches()
 
 
 def _matryoshka_dim_sweep_oracle() -> str:
@@ -957,9 +943,7 @@ def metrics_matryoshka_dim_sweep(
     # session-cached quantized corpus — build them once per (session,
     # sf_dir) like every prepared artifact (r16, guide §1.2); each pass
     # still collects every rung (the sweep's real work)
-    got = _MATRYOSHKA_SWEEP_PLAN_CACHE.get(sf_dir)
-    plans = got[1] if got is not None and got[0] is spark else None
-    if plans is None:
+    def build():
         base = _quantized_corpus(spark, sf_dir)
         score = dot_score_sql("embedding", q).alias("score")
 
@@ -983,7 +967,9 @@ def metrics_matryoshka_dim_sweep(
             for d in MATRYOSHKA_SWEEP_DIMS
         }
         plans["exact"] = topk(base.select("id", score), ANN_IVF_K)
-        _MATRYOSHKA_SWEEP_PLAN_CACHE[sf_dir] = (spark, plans)
+        return plans
+
+    plans = artifact(spark, ("matryoshka_sweep_plan", sf_dir), build)
     keys = list(plans)
     with ThreadPoolExecutor(len(keys)) as ex:
         slices = dict(
@@ -1124,7 +1110,6 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk(fused, RRF_FINAL_K, score_col="rrf_score")
 
 
-_BM25_LAYOUT_CACHE: dict[str, tuple[SparkSession, str]] = {}
 BM25_K = 20
 
 
@@ -1136,16 +1121,15 @@ def _bm25_layout_path(spark: SparkSession, sf_dir: str) -> str:
     )
     from hybrid_vector_search_spark.scratch import scratch_path
 
-    cached = _BM25_LAYOUT_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        return cached[1]
-    corpus = load_corpus(spark, sf_dir).select("id", "text")
-    path = scratch_path(
-        "bm25_postings_" + sf_dir.strip("/").replace("/", "_")
-    )
-    build_postings_layout(corpus, path)
-    _BM25_LAYOUT_CACHE[sf_dir] = (spark, path)
-    return path
+    def build():
+        corpus = load_corpus(spark, sf_dir).select("id", "text")
+        path = scratch_path(
+            "bm25_postings_" + sf_dir.strip("/").replace("/", "_")
+        )
+        build_postings_layout(corpus, path)
+        return path
+
+    return artifact(spark, ("bm25_layout", sf_dir), build)
 
 
 def _bm25_oracle(terms_t: tuple = RRF_TERMS) -> str:
@@ -1197,7 +1181,6 @@ def retrieval_bm25_persisted_topk(
 
 
 BM25_INCR_TERMS = ("stream", "window", "merge")
-_BM25_INCR_CACHE: dict[str, tuple[SparkSession, str]] = {}
 
 
 @register(
@@ -1218,7 +1201,6 @@ def retrieval_bm25_incremental_topk(
     story for the lexical index family. Note BM25's global coupling:
     the append moves N, avgdl, and df, so OLD docs' scores legitimately
     change — the stats tables make that automatic."""
-    import os as _os
 
     from hybrid_vector_search_spark.operators.bm25 import (
         append_postings_batch,
@@ -1227,9 +1209,7 @@ def retrieval_bm25_incremental_topk(
     )
     from hybrid_vector_search_spark.scratch import scratch_path
 
-    cached = _BM25_INCR_CACHE.get(sf_dir)
-    path = cached[1] if cached is not None and cached[0] is spark else None
-    if path is None:
+    def build():
         corpus = load_corpus(spark, sf_dir).select("id", "text")
         path = scratch_path(
             "bm25_incr_" + sf_dir.strip("/").replace("/", "_")
@@ -1238,13 +1218,12 @@ def retrieval_bm25_incremental_topk(
         append_postings_batch(
             spark, path, corpus.filter(F.col("id") % 5 == 0)
         )
-        _BM25_INCR_CACHE[sf_dir] = (spark, path)
+        return path
+
+    path = artifact(spark, ("bm25_incr", sf_dir), build)
     return bm25_topk_plan(
         spark, path, list(BM25_INCR_TERMS), k=BM25_K
     ).select("id", "score")
-
-
-_BM25_SNAP_CACHE: dict[str, tuple[SparkSession, str]] = {}
 
 
 def _bm25_snapshot_oracle() -> str:
@@ -1321,9 +1300,7 @@ def retrieval_bm25_snapshot_topk(
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _BM25_SNAP_CACHE.get(sf_dir)
-    root = cached[1] if cached is not None and cached[0] is spark else None
-    if root is None:
+    def build():
         corpus = load_corpus(spark, sf_dir).select("id", "text")
         root = scratch_path(
             "bm25_snap_" + sf_dir.strip("/").replace("/", "_")
@@ -1362,7 +1339,9 @@ def retrieval_bm25_snapshot_topk(
         register_derived_root(
             root, "bm25_postings", root, "id", cluster_column="bucket"
         )
-        _BM25_SNAP_CACHE[sf_dir] = (spark, root)
+        return root
+
+    root = artifact(spark, ("bm25_snap", sf_dir), build)
     buckets = sorted(
         {term_bucket(t, DEFAULT_BUCKETS) for t in BM25_INCR_TERMS}
     )

@@ -34,6 +34,7 @@ from hybrid_vector_search_spark.plans.registry_relational import (
     _stream_parts,
 )
 from hybrid_vector_search_spark.plans.registry import ORACLES
+from hybrid_vector_search_spark.session import artifact
 from hybrid_vector_search_spark.sources.loaders import load_table
 from hybrid_vector_search_spark.functions import text as TX
 
@@ -445,7 +446,6 @@ def events_user_overlap_hll(
 # ------------------------------- sketch-backed metadata-only rollup
 
 _ROLLUP_LO, _ROLLUP_HI = "2024-01-08", "2024-01-17"
-_HLL_ROLLUP_CACHE: dict[str, tuple] = {}
 
 _ROLLUP_ORACLE = f"""WITH sliced AS (
   SELECT user_id, strftime(ts, '%Y-%m-%d') AS day FROM events
@@ -483,12 +483,11 @@ def events_hll_rollup_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hybrid_vector_search_spark.scratch import scratch_path
     from hybrid_vector_search_spark.sources import manifest as M
 
-    cached = _HLL_ROLLUP_CACHE.get(sf_dir)
-    root = cached[1] if cached is not None and cached[0] is spark else None
     ev = load_table(spark, sf_dir, "events").select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"), "user_id"
     )
-    if root is None:
+
+    def build():
         root = scratch_path(
             "hll_rollup_" + sf_dir.strip("/").replace("/", "_")
         )
@@ -503,7 +502,9 @@ def events_hll_rollup_range(spark: SparkSession, sf_dir: str) -> DataFrame:
                 group_cols=("day",),
             )
             M.commit_append(root, regs, n_files=1)
-        _HLL_ROLLUP_CACHE[sf_dir] = (spark, root)
+        return root
+
+    root = artifact(spark, ("hll_rollup", sf_dir), build)
     sk = M.read_snapshot_pruned(
         spark, root, "day", _ROLLUP_LO, _ROLLUP_HI
     )
@@ -645,7 +646,6 @@ def events_value_histogram_quantiles(
 
 _VDRIFT_BIN = 50.0
 _VDRIFT_SPLIT = "2024-01-15"
-_VDRIFT_CACHE: dict[str, tuple] = {}
 
 
 def _vdrift_oracle() -> str:
@@ -715,10 +715,7 @@ def events_value_drift_sketches(
             F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
         )
 
-    cached = _VDRIFT_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        _sp, root, tr, tc, k = cached
-    else:
+    def build():
         root = scratch_path(
             "vdrift_" + sf_dir.strip("/").replace("/", "_")
         )
@@ -746,7 +743,9 @@ def events_value_drift_sketches(
             F.count(F.lit(1)).alias("k"),
         ).first()
         tr, tc, k = int(tot["tr"]), int(tot["tc"]), int(tot["k"])
-        _VDRIFT_CACHE[sf_dir] = (spark, root, tr, tc, k)
+        return root, tr, tc, k
+
+    root, tr, tc, k = artifact(spark, ("vdrift", sf_dir), build)
     joined = _binned(M.read_snapshot(spark, root))
     pr = (F.col("n_ref") + 1).cast("double") / F.lit(float(tr + k))
     pc = (F.col("n_cur") + 1).cast("double") / F.lit(float(tc + k))

@@ -60,7 +60,8 @@ def _cleanup() -> None:  # pragma: no cover - exercised at interpreter exit
 #
 # Expensive PREBUILD artifacts (the streaming-dedup index: landing +
 # 3-batch drain + compaction — 27 s of every bench warmup at sf0.1)
-# are pure functions of (source data, builder code, parameters). Keying
+# are pure functions of (source data, builder code, parameters), and
+# every one of them is built through persistent_artifact. Keying
 # a STABLE path by a content fingerprint makes them reusable across
 # processes and rounds: same inputs → reuse; any code/param change →
 # new fingerprint → fresh build (and the stale sibling is swept). These
@@ -103,28 +104,43 @@ def data_fingerprint(data_dir: str) -> str:
     return h.hexdigest()
 
 
-def persistent_cache_path(name: str, fingerprint: str) -> str:
-    """Stable path ``<root>/hvs_pcache_<name>_<fp16>`` for a rebuildable
-    artifact; sweeps stale siblings of the same ``name`` with a
-    DIFFERENT fingerprint (superseded by a code/param change)."""
-    stem = f"hvs_pcache_{name}_"
-    final = os.path.join(scratch_root(), stem + fingerprint[:16])
+def prebuild_fingerprint(sources, params, sf_dir: str) -> str:
+    """md5 over the source text of every object in ``sources`` (modules
+    or functions), then ``params`` and ``data_fingerprint(sf_dir)``."""
+    import hashlib
+    import inspect
+
+    h = hashlib.md5()
+    for obj in sources:
+        h.update(inspect.getsource(obj).encode())
+    h.update(f"{params}|data={data_fingerprint(sf_dir)}".encode())
+    return h.hexdigest()
+
+
+def persistent_artifact(name: str, sources, params, sf_dir: str, build) -> str:
+    """Path of the persistent prebuild ``name`` over the data in
+    ``sf_dir``: ``<root>/hvs_pcache_<name>_<sf slug>_<fp16>``, keyed by
+    :func:`prebuild_fingerprint`. Stale siblings of the same stem with a
+    DIFFERENT fingerprint (superseded by a code/param/data change) are
+    swept. ``build(path)`` runs only when no completed build exists: a
+    torn prior build is removed first, and the completion marker is
+    written LAST, so only a build that ran to the end ever presents as
+    reusable."""
     root = scratch_root()
+    stem = f"hvs_pcache_{name}_{sf_dir.strip('/').replace('/', '_')}_"
+    path = os.path.join(
+        root, stem + prebuild_fingerprint(sources, params, sf_dir)[:16]
+    )
     if "://" not in root and os.path.isdir(root):
         for f in os.listdir(root):
-            if f.startswith(stem) and os.path.join(root, f) != final:
+            if f.startswith(stem) and os.path.join(root, f) != path:
                 shutil.rmtree(os.path.join(root, f), ignore_errors=True)
-    return final
-
-
-def cache_complete(path: str) -> bool:
-    """True iff a prior build of ``path`` ran to completion (marker
-    written LAST — a torn build never presents as reusable)."""
-    return os.path.exists(os.path.join(path, _COMPLETE_MARKER))
-
-
-def mark_cache_complete(path: str) -> None:
-    with open(
-        os.path.join(path, _COMPLETE_MARKER), "w", encoding="utf-8"
-    ) as f:
-        f.write("ok\n")
+    if not os.path.exists(os.path.join(path, _COMPLETE_MARKER)):
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path, exist_ok=True)
+        build(path)
+        with open(
+            os.path.join(path, _COMPLETE_MARKER), "w", encoding="utf-8"
+        ) as f:
+            f.write("ok\n")
+    return path

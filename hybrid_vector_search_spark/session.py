@@ -52,3 +52,45 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# ------------------------------------------------ session artifact store
+#
+# Every session-scoped artifact the registry builds (prepared plans, the
+# resident corpus, index layouts, landings, scratch roots) lives here,
+# keyed by a tuple whose first element names the artifact kind. An entry
+# carries the SparkSession that built it: a DataFrame bound to a stopped
+# or replaced session would raise on first use, so a different session
+# object rebuilds — the reference's reload-per-run contract
+# (src/harness/run.py:109-112). ``clear_artifacts`` is the explicit
+# refresh within one session.
+_ARTIFACTS: dict[tuple, tuple[SparkSession, object]] = {}
+
+
+def artifact(spark: SparkSession, key: tuple, build):
+    """``build()``'s result, built once per (session, ``key``)."""
+    got = _ARTIFACTS.get(key)
+    if got is not None and got[0] is spark:
+        return got[1]
+    value = build()
+    _ARTIFACTS[key] = (spark, value)
+    return value
+
+
+def _unpersist(value) -> None:
+    if isinstance(value, (tuple, list)):
+        for item in value:
+            _unpersist(item)
+    elif hasattr(value, "unpersist"):
+        try:
+            value.unpersist()
+        except Exception:  # session already stopped
+            pass
+
+
+def clear_artifacts(kind: str | None = None) -> None:
+    """Drop every stored artifact (or only those whose key starts with
+    ``kind``), unpersisting each DataFrame it holds (including
+    DataFrames inside tuples)."""
+    for key in [k for k in _ARTIFACTS if kind is None or k[0] == kind]:
+        _unpersist(_ARTIFACTS.pop(key)[1])

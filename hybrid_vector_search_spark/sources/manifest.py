@@ -2217,6 +2217,36 @@ def _schema_payload(df: DataFrame) -> dict:
     return df.schema.jsonValue()
 
 
+def _check_append_schema(root: str, logical: dict, df: DataFrame) -> None:
+    """Raise unless every field of the ``logical`` schema is a column of
+    the batch with the same Spark type — checked on the driver against
+    the batch's resolved schema, no Spark job."""
+    from pyspark.sql import types as T
+
+    have = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    fields = T.StructType.fromJson(logical).fields
+    missing = [f.name for f in fields if f.name not in have]
+    if missing:
+        raise ValidationError(
+            f"commit_append at '{root}': batch lacks "
+            f"physical column(s) {missing} of the table's "
+            f"logical schema — align the batch first "
+            f"(rename to current names / add typed-NULL "
+            f"columns) so its files read back correctly"
+        )
+    wrong = [
+        f"{f.name} {have[f.name]} (table: {f.dataType.simpleString()})"
+        for f in fields
+        if have[f.name] != f.dataType.simpleString()
+    ]
+    if wrong:
+        raise ValidationError(
+            f"commit_append at '{root}': batch column type(s) differ "
+            f"from the table's logical schema: {wrong} — cast the batch "
+            f"first so its files read back under the recorded schema"
+        )
+
+
 def commit_append(
     root: str,
     df: DataFrame,
@@ -2271,25 +2301,14 @@ def commit_append(
             # appends adopt the table's current logical schema when one
             # is recorded; new files carry NO column mapping, so every
             # logical field must resolve to a physical column of the
-            # batch — a batch still written under pre-rename names (or
-            # missing an added column) would otherwise commit fine and
-            # silently read back as typed NULLs
+            # batch, of the recorded type — a batch still written under
+            # pre-rename names (or missing an added column) would
+            # otherwise commit fine and silently read back as typed
+            # NULLs, and a divergent type would only fail later, when a
+            # scan applies the recorded read schema
             schema_out = cur.get("schema", schema)
             if cur.get("schema") is not None:
-                have = set(df.columns)
-                missing = [
-                    fld["name"]
-                    for fld in cur["schema"]["fields"]
-                    if fld["name"] not in have
-                ]
-                if missing:
-                    raise ValidationError(
-                        f"commit_append at '{root}': batch lacks "
-                        f"physical column(s) {missing} of the table's "
-                        f"logical schema — align the batch first "
-                        f"(rename to current names / add typed-NULL "
-                        f"columns) so its files read back correctly"
-                    )
+                _check_append_schema(root, cur["schema"], df)
         else:
             groups, dels = [], []
             schema_out = schema

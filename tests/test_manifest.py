@@ -1013,6 +1013,20 @@ def test_append_validates_schema_columns(spark, tmp_path):
         M.commit_append(root, _df(spark, 8, 9).withColumnRenamed("label", "cls"))
 
 
+def test_append_validates_schema_types(spark, tmp_path):
+    """A name-matching batch with a divergent column type is refused at
+    commit (not at a later scan), and no version is written."""
+    root = str(tmp_path / "tbl")
+    M.commit_append(root, _df(spark, 0, 5))  # id bigint
+    bad = spark.createDataFrame(
+        [(str(i), i % 3) for i in range(5, 8)], "id string, label int"
+    )
+    with pytest.raises(ValidationError, match="id string"):
+        M.commit_append(root, bad)
+    assert M.list_versions(root) == [1]
+    assert _ids(M.read_snapshot(spark, root)) == set(range(5))
+
+
 def test_covered_by_is_set_sized_not_range_sized(spark):
     """_covered_by on a wide integer range is O(|values|): a billion-
     wide file classifies instantly, and near-covered count equality

@@ -43,10 +43,14 @@ def test_ivf_search_plan_is_pure_jvm(spark, registry):
     available behind the flag. (The in-memory test index is exempt: its
     cached lineage PRINTS the one-off assignment UDF even though it
     never re-executes.)"""
+    from hybrid_vector_search_spark.plans.registry_hybrid_ann import (
+        ANN_IVF_QSEED,
+        _ann_ivf_fixed_index,
+    )
     from hybrid_vector_search_spark.queryvecs import query_vector
 
-    index = registry._ann_ivf_fixed_index(spark, SF, persist=True)
-    q = query_vector(registry.ANN_IVF_QSEED)
+    index = _ann_ivf_fixed_index(spark, SF, persist=True)
+    q = query_vector(ANN_IVF_QSEED)
     jvm_plan = _plan(index.search_plan(q, 10)[0])
     assert "ArrowEvalPython" not in jvm_plan
     assert "BatchEvalPython" not in jvm_plan

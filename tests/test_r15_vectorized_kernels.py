@@ -95,11 +95,14 @@ def test_upsert_rows_fused_matches_read_snapshot(spark):
     from hybrid_vector_search_spark.plans import (
         registry_lakehouse as L,
     )
+    from hybrid_vector_search_spark.session import artifact
     from hybrid_vector_search_spark.sources import manifest as M
 
     sf = "/root/testdata/sf0.001"
     fused = L.corpus_snapshot_upsert_rows(spark, sf).collect()
-    root = L._UPSERT_ROWS_CACHE[sf][1]
+    root = artifact(
+        spark, ("upsert_rows", sf), lambda: pytest.fail("not built")
+    )
     parts = []
     for v in (1, 2):
         n_data = len(M.snapshot_files(root, v)[1])

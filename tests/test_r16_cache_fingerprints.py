@@ -66,8 +66,12 @@ def test_streaming_dedup_cache_key_tracks_data(tmp_path):
     # the highest-cost persisted artifact family: its fingerprint must
     # rotate when any file under sf_dir is rewritten
     from hybrid_vector_search_spark.plans.registry_streaming_layouts import (
-        _sd_fingerprint,
+        _sd_key,
     )
+    from hybrid_vector_search_spark.scratch import prebuild_fingerprint
+
+    def _sd_fingerprint(sf_dir):
+        return prebuild_fingerprint(*_sd_key(), sf_dir)
 
     d = tmp_path / "sfX"
     d.mkdir()

@@ -152,10 +152,14 @@ def test_load_corpus_session_cache(spark, registry):
 
 
 def test_sink_sorted_total_order_without_shuffle(spark, registry):
+    from hybrid_vector_search_spark.plans.registry_relational import (
+        _sink_sorted,
+    )
+
     spark.range(100).selectExpr("id", "id % 7 AS k").createOrReplaceTempView(
         "__t_small"
     )
-    small = registry._sink_sorted(spark, "__t_small", "k", "id").collect()
+    small = _sink_sorted(spark, "__t_small", "k", "id").collect()
     assert [r["id"] for r in small] == sorted(
         range(100), key=lambda i: (i % 7, i)
     )
@@ -164,7 +168,7 @@ def test_sink_sorted_total_order_without_shuffle(spark, registry):
     # memory sink is driver-resident, so the sampling job + exchange
     # bought nothing) — assert the plan repartitions to 1 and sorts
     # locally rather than globally
-    df = registry._sink_sorted(spark, "__t_small", "k", "id")
+    df = _sink_sorted(spark, "__t_small", "k", "id")
     plan = df._jdf.queryExecution().analyzed().toString()
     assert "Repartition 1" in plan
     assert "global=true" not in plan

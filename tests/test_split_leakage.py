@@ -6,20 +6,21 @@ always share a split."""
 from pyspark.sql import functions as F
 
 import hybrid_vector_search_spark.operators.dedup as DD
-import hybrid_vector_search_spark.plans.registry as R
+import hybrid_vector_search_spark.plans.registry_corpus as C
+from hybrid_vector_search_spark.sources.loaders import load_table
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_cluster_aware_split_has_zero_leakage(spark):
-    leaked = R.docs_split_leakage(spark, SF)
+    leaked = C.docs_split_leakage(spark, SF)
     assert leaked.count() > 0  # the audit finds real contamination
     assert {r["split_a"] for r in leaked.collect()} != set()
 
-    ca = R.docs_cluster_aware_split(spark, SF)
-    docs = R.load_table(spark, SF, "documents")
+    ca = C.docs_cluster_aware_split(spark, SF)
+    docs = load_table(spark, SF, "documents")
     pairs = DD.minhash_lsh_pairs(
-        docs, R.JACCARD_THRESHOLD, sig=R._sig_table(spark, SF)
+        docs, C.JACCARD_THRESHOLD, sig=C._sig_table(spark, SF)
     )
     crossing = (
         pairs.join(
@@ -45,6 +46,6 @@ def test_cluster_aware_split_has_zero_leakage(spark):
     assert per_comp == 1
 
     # singletons keep the per-document assignment (component = own id)
-    base = {r["doc_id"]: r["split"] for r in R.docs_train_split(spark, SF).collect()}
+    base = {r["doc_id"]: r["split"] for r in C.docs_train_split(spark, SF).collect()}
     for r in ca.filter(F.col("doc_id") == F.col("component_id")).collect():
         assert base[r["doc_id"]] == r["split"]

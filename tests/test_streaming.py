@@ -27,6 +27,13 @@ DDL = (
 )
 
 
+def _stored(spark, key):
+    """The artifact a query stored in the session store under ``key``."""
+    from hybrid_vector_search_spark.session import artifact
+
+    return artifact(spark, key, lambda: pytest.fail(f"{key} was not built"))
+
+
 @pytest.fixture(scope="module")
 def events_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("events_stream"))
@@ -324,7 +331,7 @@ def test_stream_stream_join_equals_batch_join(spark):
     results, for an inner join over a finite drain)."""
     from pyspark.sql import functions as F
 
-    from hybrid_vector_search_spark.plans.registry import _landing
+    from hybrid_vector_search_spark.plans.registry_relational import _landing
     from hybrid_vector_search_spark.sources.loaders import load_table
     from hybrid_vector_search_spark.streaming.pipeline import (
         read_events_stream,
@@ -453,12 +460,20 @@ def test_streaming_ivf_ingest_exactly_once_and_pruned(spark):
     layout carries every corpus row exactly once, and the probe plan
     partition-prunes to the probed lists with no Python eval node."""
     from hybrid_vector_search_spark.plans import registry as R
+    from hybrid_vector_search_spark.plans.registry_hybrid_ann import (
+        ANN_IVF_K,
+        ANN_IVF_NPROBE,
+        _ann_ivf_centroids,
+    )
+    from hybrid_vector_search_spark.plans.registry_streaming_layouts import (
+        STREAM_IVF_QSEED,
+    )
     from hybrid_vector_search_spark.sources.loaders import load_table
 
     sf = "/root/testdata/sf0.001"
     r1 = [(r.id, r.score) for r in R.QUERIES["streaming_ivf_ingest"](spark, sf).collect()]
-    assert len(r1) == R.ANN_IVF_K
-    root = R._STREAM_IVF_CACHE[sf][1]
+    assert len(r1) == ANN_IVF_K
+    root = _stored(spark, ("stream_ivf", sf))
     ingested = spark.read.parquet(root + "/index")
     n = load_table(spark, sf, "embeddings").count()
     assert ingested.count() == n
@@ -471,13 +486,13 @@ def test_streaming_ivf_ingest_exactly_once_and_pruned(spark):
     plan, _ = __import__(
         "hybrid_vector_search_spark.operators.ivf", fromlist=["IVFIndex"]
     ).IVFIndex(
-        ingested, R._ann_ivf_centroids(), partitioned_path=root + "/index"
+        ingested, _ann_ivf_centroids(), partitioned_path=root + "/index"
     ).search_plan(
         __import__(
             "hybrid_vector_search_spark.queryvecs", fromlist=["query_vector"]
-        ).query_vector(R.STREAM_IVF_QSEED),
+        ).query_vector(STREAM_IVF_QSEED),
         k=10,
-        nprobe=R.ANN_IVF_NPROBE,
+        nprobe=ANN_IVF_NPROBE,
     )
     txt = plan._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in txt and "list_id" in txt
@@ -645,14 +660,11 @@ def test_streaming_dedup_ingest_replay_exactly_once(spark):
     import shutil
 
     from hybrid_vector_search_spark.plans import registry as R
-    from hybrid_vector_search_spark.plans.registry_streaming_layouts import (
-        _STREAM_DEDUP_CACHE,
-    )
     from hybrid_vector_search_spark.sources import manifest as M
 
     sf = "/root/testdata/sf0.001"
     rows1 = R.QUERIES["streaming_dedup_ingest"](spark, sf).collect()
-    root = _STREAM_DEDUP_CACHE[sf][1]
+    root = _stored(spark, ("stream_dedup", sf))
     v_idx = M.current_version(os.path.join(root, "index"))
     v_sur = M.current_version(os.path.join(root, "survivors"))
     assert v_idx == 3 and v_sur == 3  # one commit per micro-batch
@@ -673,14 +685,11 @@ def test_streaming_media_ingest_replay_exactly_once(spark):
     import shutil
 
     from hybrid_vector_search_spark.plans import registry as R
-    from hybrid_vector_search_spark.plans.registry_streaming_layouts import (
-        _STREAM_MEDIA_CACHE,
-    )
     from hybrid_vector_search_spark.sources import manifest as M
 
     sf = "/root/testdata/sf0.001"
     rows1 = R.QUERIES["streaming_media_ingest"](spark, sf).collect()
-    root = _STREAM_MEDIA_CACHE[sf][1]
+    root = _stored(spark, ("stream_media", sf))
     assert M.current_version(os.path.join(root, "survivors")) == 3
     # keep-first actually rejected something: strictly fewer survivors
     # than hashed input media — and the survivors table is a valid

@@ -54,6 +54,11 @@ def main() -> None:
 
     from hybrid_vector_search_spark.operators import dedup as DD
     from hybrid_vector_search_spark.plans import registry as R
+    from hybrid_vector_search_spark.plans.registry_corpus import (
+        JACCARD_THRESHOLD,
+        _sig_table,
+    )
+    from hybrid_vector_search_spark.sources.loaders import load_table
 
     spark = get_spark("graph_probe")
     factors = (
@@ -66,9 +71,9 @@ def main() -> None:
         # shared ingest artifact: the signature table (untimed, like
         # every probe's landing zone) + measured graph volumes
         pairs = DD.minhash_lsh_pairs(
-            R.load_table(spark, sf_dir, "documents"),
-            R.JACCARD_THRESHOLD,
-            sig=R._sig_table(spark, sf_dir),
+            load_table(spark, sf_dir, "documents"),
+            JACCARD_THRESHOLD,
+            sig=_sig_table(spark, sf_dir),
         )
         n_edges = pairs.count()
         n_nodes = (

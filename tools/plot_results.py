@@ -262,10 +262,13 @@ def plot_scored_vectors_per_query(pivot, methods, out: Path):
 def main() -> None:
     from hybrid_vector_search_spark.plans import registry as R
     from hybrid_vector_search_spark.plans.harness import load_results
+    from hybrid_vector_search_spark.plans.registry_relational import (
+        RESULTS_FIXTURE,
+    )
     from hybrid_vector_search_spark.session import get_spark
 
     spark = get_spark("plots")
-    rows = [r.asDict() for r in load_results(spark, R.RESULTS_FIXTURE).collect()]
+    rows = [r.asDict() for r in load_results(spark, RESULTS_FIXTURE).collect()]
 
     # A3: mean scored_vectors per method (oracle-checked aggregation)
     means_df = R.QUERIES["results_mean_scored_by_method"](spark, "")

@@ -215,6 +215,7 @@ def main() -> None:
     )
     spark = get_spark("scale_probe")
     from hybrid_vector_search_spark.plans import registry as R
+    from hybrid_vector_search_spark.plans.registry_relational import _landing
 
     results: dict[str, dict[int, float]] = {q: {} for q in probe_queries}
     rows_per_factor: dict[int, int] = {}
@@ -234,7 +235,7 @@ def main() -> None:
         # deployment), and leaving it inside run 1 let its one-off write
         # cost bleed into cells whenever run 2 was the noisy one
         # (VERDICT r3 #5: the ×4 > ×8 inversion)
-        R._landing(spark, d, "events")
+        _landing(spark, d, "events")
         if k == factors[0]:
             # untimed warmup pass at the first factor: the first timed
             # cell otherwise absorbs Python-worker spin-up + codegen

@@ -48,13 +48,13 @@ def main() -> None:
         IVFIndex,
         default_nlist,
     )
-    from hybrid_vector_search_spark.plans import registry as R
     from hybrid_vector_search_spark.plans.registry_corpus import (
         COSINE_DUP_THRESHOLD,
     )
     from hybrid_vector_search_spark.plans.registry_hybrid_ann import (
         _ann_ivf_centroids,
     )
+    from hybrid_vector_search_spark.sources.loaders import load_table
 
     spark = get_spark("semantic_probe")
     factors = (
@@ -73,7 +73,7 @@ def main() -> None:
     cells = []
     for k in factors:
         sf_dir = _sf_dir(spark, k)
-        emb = R.load_table(spark, sf_dir, "embeddings")
+        emb = load_table(spark, sf_dir, "embeddings")
         n = emb.count()
         cell = dict(k=k, n=n)
 

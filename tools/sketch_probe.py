@@ -56,7 +56,9 @@ def main() -> None:
     from hybrid_vector_search_spark.plans.registry_relational import (
         _DECON_MOD,
         _DECON_N,
+        _landing,
     )
+    from hybrid_vector_search_spark.sources.loaders import load_table
 
     spark = get_spark("sketch_probe")
     factors = (
@@ -66,9 +68,9 @@ def main() -> None:
     cells = []
     for k in factors:
         sf_dir = _sf_dir(spark, k)
-        R._landing(spark, sf_dir, "events")  # untimed ingest infra
-        ev = R.load_table(spark, sf_dir, "events")
-        docs = R.load_table(spark, sf_dir, "documents")
+        _landing(spark, sf_dir, "events")  # untimed ingest infra
+        ev = load_table(spark, sf_dir, "events")
+        docs = load_table(spark, sf_dir, "documents")
 
         # ---- state volumes (row counts — timing-noise-proof invariants)
         regs = SK.hll_registers(ev, "user_id").count()
