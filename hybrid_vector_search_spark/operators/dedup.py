@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hybrid_vector_search_spark.errors import ValidationError
 from hybrid_vector_search_spark.functions.text import (
     fingerprint_md5,
     normalized_text,
@@ -1284,8 +1285,6 @@ def embedding_near_dup_pairs(
     bounds comparisons to KMeans cells, or tile both sides into a grid
     join of GEMM blocks.
     """
-    from hybrid_vector_search_spark.errors import ValidationError
-
     spark = emb.sparkSession
     # size gate BEFORE any driver materialization: the agg is distributed
     # metadata-cheap work; collecting first and then checking (the r1 shape)

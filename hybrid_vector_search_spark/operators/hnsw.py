@@ -690,11 +690,12 @@ class HNSWIndex:
 
 
 from hybrid_vector_search_spark.operators.strategies import (  # noqa: E402
-    SearchBackend,
+    LadderBackend,
+    join_candidates,
 )
 
 
-class HNSWBackend(SearchBackend):
+class HNSWBackend(LadderBackend):
     """P3-shaped strategy on HNSW candidates: approximate top-K′ over the
     full corpus, semi-join against the allowed-id set, reference ladder
     K′ ∈ (200, 500, 1000) with early stop (src/baselines/
@@ -707,12 +708,13 @@ class HNSWBackend(SearchBackend):
     Two r3-ADVICE fixes shape the execution: (a) the per-partition
     graphs are built ONCE into a persisted :class:`HNSWIndex` (scratch
     parquet) on first use — searches reconstruct, never rebuild; (b)
-    ``search`` runs ONE distributed pass at K′ = max(ladder) and replays
-    the escalation ladder client-side over the ≤ max(ladder) collected
-    candidates — a rung's candidate set is exactly the top-K′ prefix of
-    the max rung's, so the stop rung and survivors are identical to the
-    loop the reference runs, for one corpus probe instead of up to
-    three."""
+    ``_prepare`` runs ONE distributed pass at K′ = max(ladder) and the
+    :class:`LadderBackend` rungs replay the escalation client-side over
+    the ≤ max(ladder) collected candidates — a rung's candidate set is
+    exactly the top-K′ prefix of the max rung's, so the stop rung and
+    survivors are identical to the loop the reference runs, for one
+    corpus probe instead of up to three. Skipped costed rungs therefore
+    save list scans, not Spark jobs."""
 
     name = "post_filter_hnsw"
 
@@ -726,25 +728,13 @@ class HNSWBackend(SearchBackend):
         k_ladder: Sequence[int] = (200, 500, 1000),
         index: "HNSWIndex | None" = None,
         costed: bool = False,
-        safety: int = 2,
         selectivity_hint: int | None = None,
     ):
-        super().__init__(corpus, n, id_col)
+        super().__init__(corpus, n, id_col, costed, selectivity_hint)
         self.M = int(M)
         self.ef_search = int(ef_search)
         self.k_ladder = tuple(k_ladder)
         self._index = index
-        # cost-based ladder entry — IDENTICAL clamp arithmetic to the IVF
-        # PostFilterBackend (operators/ivf.py): enter at
-        # clamp(ceil(K·N·safety / |allowed|), first_rung, last_rung) and
-        # skip every rung whose expected survivor yield cannot reach K.
-        # For HNSW the replay is client-side over one collected candidate
-        # ranking, so skipped rungs save list scans, not Spark jobs — the
-        # win here is the shared entry contract (ladder_entry / rungs_run
-        # stats) across all three post-filter backends.
-        self.costed = costed
-        self.safety = int(safety)
-        self.selectivity_hint = selectivity_hint  # stats/sketch |allowed|
         # eager corpus probe: surface a broken corpus HERE (the K6
         # chain's fall-through contract) rather than mid-query
         first = corpus.select("embedding").first()
@@ -765,8 +755,6 @@ class HNSWBackend(SearchBackend):
         return self._index
 
     def plan(self, qvec, filters, k, kprime: int | None = None):
-        from pyspark.sql import functions as F
-
         from hybrid_vector_search_spark.functions.predicates import (
             compile_filters,
         )
@@ -777,50 +765,19 @@ class HNSWBackend(SearchBackend):
             qvec, kprime, ef_search=max(self.ef_search, kprime)
         )
         pred = compile_filters(self.corpus.schema, filters)
-        allowed = self.corpus.filter(pred).select(self.id_col)
-        # Broadcast the graph-bounded candidate side (≤ kprime ≤
-        # max(k_ladder) rows), stream the unbounded allowed set — a
-        # broadcast of `allowed` dies at 100× when the filter passes most
-        # of the corpus. Inner join keeps the candidate scores.
-        kept = allowed.join(F.broadcast(cand), self.id_col, "inner").select(
-            self.id_col, "score"
-        )
+        kept = join_candidates(self.corpus, pred, cand, self.id_col)
         return _topk(kept, k, id_col=self.id_col), None
 
-    def search(self, qvec, filters, k):
-        import time as _time
-
+    def _prepare(self, q, pred):
+        """The one graph walk at K′ = max(ladder): the candidate ranking
+        (best first) and the ids among it that pass ``pred``."""
         from pyspark.sql import functions as F
+        from pyspark.sql import types as T
 
-        from hybrid_vector_search_spark.functions.predicates import (
-            compile_filters,
-        )
-        from hybrid_vector_search_spark.functions.vector import (
-            ensure_unit_l2,
-        )
-        from hybrid_vector_search_spark.sources.loaders import validate_K
-
-        validate_K(k, self.n)
-        q = ensure_unit_l2(qvec)
-        t0 = _time.perf_counter()
         kmax = max(self.k_ladder)
         cand = self.index.search_plan(
             q, kmax, ef_search=max(self.ef_search, kmax)
         )
-        pred = compile_filters(self.corpus.schema, filters)
-        # the costed-entry |allowed| count is independent of the graph
-        # walk and the survivor probe — submit it concurrently (guide
-        # §2.6: independent read-only jobs over the resident corpus) so
-        # the ladder-entry decision is ready when the candidates are;
-        # result and decision are identical, only the wall overlaps
-        from concurrent.futures import ThreadPoolExecutor
-
-        count_ex = ThreadPoolExecutor(1)
-        count_fut = None
-        if self.costed and self.selectivity_hint is None:
-            count_fut = count_ex.submit(
-                self.corpus.filter(pred).count
-            )
         # Collect the bounded candidate ranking once (≤ kmax ≤ 1000 rows),
         # then stream the UNBOUNDED allowed set against a broadcast of the
         # tiny collected id list — never broadcast `allowed` (it approaches
@@ -828,103 +785,46 @@ class HNSWBackend(SearchBackend):
         # candidates preserved can only build/broadcast the allowed side
         # (BroadcastHashJoin LeftOuter ⇒ BuildRight), so the pass flag is
         # derived via a semi-join in the safe direction + a driver-side set.
+        cand_rows = sorted(
+            cand.collect(), key=lambda r: (-r["score"], r[self.id_col])
+        )
+        spark = self.corpus.sparkSession
+        id_field = self.corpus.schema[self.id_col]
+        id_schema = T.StructType([id_field])
+        cand_id_vals = [(r[self.id_col],) for r in cand_rows]
+        # route the tiny collected id list through pandas + Arrow
+        # (LocalTableScan) instead of a pickled Python RDD, which costs a
+        # Python-worker task inside the semi-join job (the registry's
+        # local_df precedent) — OBJECT dtype so pandas never coerces ids
+        # through float64 (exact above 2^53, same hazard local_df
+        # guards); verified fallback keeps the plain path when
+        # conversion cannot represent the rows
         try:
-            cand_rows = sorted(
-                cand.collect(), key=lambda r: (-r["score"], r[self.id_col])
+            cand_ids = spark.createDataFrame(
+                pd.DataFrame(
+                    {
+                        self.id_col: pd.Series(
+                            [v[0] for v in cand_id_vals], dtype=object
+                        )
+                    }
+                ),
+                id_schema,
             )
-            from pyspark.sql import types as T
-
-            spark = self.corpus.sparkSession
-            id_field = self.corpus.schema[self.id_col]
-            id_schema = T.StructType([id_field])
-            cand_id_vals = [(r[self.id_col],) for r in cand_rows]
-            # route the tiny collected id list through pandas + Arrow
-            # (LocalTableScan) instead of a pickled Python RDD, which
-            # costs a Python-worker task inside the semi-join job
-            # (guide §4; the registry's local_df precedent) — OBJECT
-            # dtype so pandas never coerces ids through float64 (exact
-            # above 2^53, same hazard local_df guards); verified
-            # fallback keeps the plain path when conversion cannot
-            # represent the rows
-            try:
-                import pandas as _pd
-
-                cand_ids = spark.createDataFrame(
-                    _pd.DataFrame(
-                        {
-                            self.id_col: _pd.Series(
-                                [v[0] for v in cand_id_vals],
-                                dtype=object,
-                            )
-                        }
-                    ),
-                    id_schema,
-                )
-            except Exception:
-                cand_ids = spark.createDataFrame(cand_id_vals, id_schema)
-            passing = {
-                r[self.id_col]
-                for r in self.corpus.filter(pred)
-                .join(F.broadcast(cand_ids), self.id_col, "left_semi")
-                .select(self.id_col)
-                .collect()
-            }
-            # cost-based entry (same integer-ceil clamp as the IVF
-            # backend; |allowed| is the A2 selectivity count — at 100 TB
-            # it comes from catalog statistics or a sketch, not a scan)
-            ladder = list(self.k_ladder)
-            n_allowed: int | None = None
-            if self.costed:
-                n_allowed = (
-                    self.selectivity_hint
-                    if self.selectivity_hint is not None
-                    else count_fut.result()
-                )
-        finally:
-            # drain before returning/raising: shutdown(wait=True) joins
-            # the worker so an exception here never orphans an in-flight
-            # count job past interpreter teardown (the count itself is
-            # short and read-only)
-            count_ex.shutdown(wait=True)
-        if self.costed:
-            if n_allowed <= 0:
-                entry = ladder[-1]
-            else:
-                entry = -(-(k * self.n * self.safety) // n_allowed)
-            entry = min(max(entry, ladder[0]), ladder[-1])
-            ladder = [r for r in ladder if r >= entry]
-        entry_rung = ladder[0]
-        # client-side ladder replay over the collected candidate ranking
-        stop_kprime = ladder[-1]
-        rungs_run = 0
-        rows: list = []
-        for kprime in ladder:
-            rungs_run += 1
-            rows = [
-                r for r in cand_rows[:kprime] if r[self.id_col] in passing
-            ][:k]
-            stop_kprime = kprime
-            if len(rows) >= k:
-                break
-        latency_ms = (_time.perf_counter() - t0) * 1000.0
-        ids = [int(r[self.id_col]) for r in rows]
-        scores = [float(r["score"]) for r in rows]
-        stats = {
-            "method": self.name,
-            "K": k,
-            "latency_ms": latency_ms,
-            "scored_vectors": stop_kprime,
-            "ef_search": max(self.ef_search, kmax),
-            "kth_at_stop": scores[k - 1] if len(scores) >= k else None,
-            "bound_at_stop": scores[-1] if scores else None,
-            "scores": scores,
-            "ladder_entry": entry_rung,
-            "rungs_run": rungs_run,
-            **(
-                {"selectivity_est": n_allowed / self.n}
-                if n_allowed is not None
-                else {}
-            ),
-            "notes": self.compose_notes(f"ladder_stop={stop_kprime}"),
+        except Exception:
+            cand_ids = spark.createDataFrame(cand_id_vals, id_schema)
+        passing = {
+            r[self.id_col]
+            for r in self.corpus.filter(pred)
+            .join(F.broadcast(cand_ids), self.id_col, "left_semi")
+            .select(self.id_col)
+            .collect()
         }
-        return ids, stats
+        return cand_rows, passing
+
+    def _rung(self, kprime, q, pred, k, prepared):
+        cand_rows, passing = prepared
+        rows = [r for r in cand_rows[:kprime] if r[self.id_col] in passing]
+        return rows[:k], {
+            "scored_vectors": kprime,
+            "ef_search": max(self.ef_search, max(self.k_ladder)),
+        }

@@ -25,7 +25,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator, Sequence
 from contextlib import contextmanager
-from typing import Any
 
 # module-level: pandas_udf resolves the Iterator[pd.Series] hints against
 # module globals (PEP 563 strings under `from __future__ import annotations`)
@@ -37,11 +36,11 @@ from pyspark.sql import functions as F
 
 from hybrid_vector_search_spark.errors import ValidationError
 from hybrid_vector_search_spark.functions.predicates import compile_filters
-from hybrid_vector_search_spark.functions.vector import (
-    dot_score_pandas_udf,
-    ensure_unit_l2,
+from hybrid_vector_search_spark.functions.vector import dot_score_pandas_udf
+from hybrid_vector_search_spark.operators.strategies import (
+    LadderBackend,
+    join_candidates,
 )
-from hybrid_vector_search_spark.operators.strategies import SearchBackend
 from hybrid_vector_search_spark.operators.topk import topk
 
 DEFAULT_NPROBE = 32
@@ -417,33 +416,17 @@ class IVFIndex:
         return topk(scored, k, id_col=self.id_col), probed
 
 
-class PostFilterBackend(SearchBackend):
+class PostFilterBackend(LadderBackend):
     """P3: IVF ANN candidates over the full corpus, escalating K′ ladder,
     keep candidates passing the filters, stop when ≥K kept
-    (reference src/baselines/post_filter.py:17-109).
+    (reference src/baselines/post_filter.py:17-109). The ladder, its
+    costed entry and the stats are :class:`LadderBackend`'s; this class
+    supplies the IVF rung.
 
     Each rung re-plans from scratch with a larger K′ (reference behavior —
     post_filter.py:66-87); with a fixed probe set the larger rung's
     candidate set contains the smaller's, so the final rung's survivors are
     the reference's best-score-dedup union (A5) without re-accumulating.
-
-    ``costed=True`` replaces the blind fixed-entry escalation with a
-    COST-BASED ladder entry (the better-than-reference opportunity SURVEY
-    §4 names: the reference's fixed (200, 500, 1000) ladder runs — and
-    exhausts — every rung on strict filters, reference qids 1/5 in its
-    own results.jsonl). Expected survivors at K′ candidates ≈
-    K′ · selectivity, so the first rung that can plausibly yield K
-    survivors is ``K / selectivity`` — enter the ladder at
-    ``clamp(ceil(K·N·safety / |allowed|), first_rung, last_rung)`` and
-    skip every rung below it (integer ceil; safety×2 absorbs the
-    candidate set's non-uniform overlap with the filter). Strict filters
-    jump straight to the final rung (1 plan instead of 3); broad filters
-    still enter at the first rung, so the fast path is untouched. The
-    FINAL rung is identical in both regimes, so whenever the fixed
-    ladder would escalate to the end the answers are bit-identical.
-    |allowed| here is the same filtered count the harness computes for
-    the A2 selectivity metric; at 100 TB it comes from catalog/column
-    statistics or a sketch, not a scan.
     """
 
     name = "post_filter"
@@ -459,23 +442,14 @@ class PostFilterBackend(SearchBackend):
         k_ladder: Sequence[int] = DEFAULT_K_LADDER,
         seed: int = 42,
         costed: bool = False,
-        safety: int = 2,
         selectivity_hint: int | None = None,
     ):
-        super().__init__(corpus, n, id_col)
+        super().__init__(corpus, n, id_col, costed, selectivity_hint)
         self.nprobe = nprobe
         self.k_ladder = tuple(k_ladder)
         self._index = index
         self._nlist = nlist
         self._seed = seed
-        self.costed = costed
-        self.safety = int(safety)
-        # the 100 TB form of the costed entry's |allowed| input: catalog
-        # column statistics or a distinct-count sketch supply the number
-        # and the entry decision becomes O(1) — the count job runs ONLY
-        # when no hint is given (the docstring's promised substitution
-        # point, now an actual parameter)
-        self.selectivity_hint = selectivity_hint
 
     @property
     def index(self) -> IVFIndex:
@@ -487,105 +461,25 @@ class PostFilterBackend(SearchBackend):
         return self._index
 
     def plan(self, qvec, filters, k, kprime: int | None = None):
-        """One ladder rung as a composable plan: ANN candidates → semi-join
+        """One ladder rung as a composable plan: ANN candidates → join
         against the allowed set → top-K."""
         kprime = kprime or max(self.k_ladder)
         candidates, _probed = self.index.search_plan(qvec, kprime, self.nprobe)
         pred = compile_filters(self.corpus.schema, filters)
-        allowed = self.corpus.filter(pred).select(self.id_col)
-        # Broadcast the LADDER-BOUNDED side: candidates is a top-K′ plan
-        # (≤ max(k_ladder) rows by construction), while `allowed` is the
-        # filtered corpus and approaches the full id column as filter
-        # selectivity → 1 — broadcasting it would overflow the driver at
-        # 100× scale. Inner join keeps the candidate scores.
-        kept = allowed.join(F.broadcast(candidates), self.id_col, "inner").select(
-            self.id_col, "score"
-        )
+        kept = join_candidates(self.corpus, pred, candidates, self.id_col)
         return topk(kept, k, id_col=self.id_col), None
 
-    def search(self, qvec, filters, k):
-        import time
-
-        from hybrid_vector_search_spark.sources.loaders import validate_K
-
-        validate_K(k, self.n)
-        q = ensure_unit_l2(qvec)
-        pred = compile_filters(self.corpus.schema, filters)
-        allowed = self.corpus.filter(pred).select(self.id_col)
-
-        t0 = time.perf_counter()
-        ladder = list(self.k_ladder)
-        n_allowed: int | None = None
-        if self.costed:
-            # cost-based entry rung (see class docstring): one count over
-            # the filtered corpus — the A2 selectivity input the harness
-            # already computes — buys skipping every rung whose expected
-            # survivor yield cannot reach K. Integer ceil keeps the
-            # arithmetic exactly reproducible by the SQL oracle. A
-            # selectivity_hint (catalog stats / sketch) replaces the scan.
-            n_allowed = (
-                self.selectivity_hint
-                if self.selectivity_hint is not None
-                else allowed.count()
-            )
-            if n_allowed <= 0:
-                entry = ladder[-1]
-            else:
-                entry = -(-(k * self.n * self.safety) // n_allowed)
-            entry = min(max(entry, ladder[0]), ladder[-1])
-            ladder = [r for r in ladder if r >= entry]
-        entry_rung = ladder[0]
-
-        rows: list = []
-        rungs_run = 0
-        stop_kprime = ladder[-1]
-        probed: list[int] = []
-        for kprime in ladder:
-            rungs_run += 1
-            candidates, probed = self.index.search_plan(q, kprime, self.nprobe)
-            # broadcast the bounded candidate side (≤ kprime rows), stream
-            # the unbounded allowed set — see plan() for the scale rationale
-            kept = allowed.join(
-                F.broadcast(candidates), self.id_col, "inner"
-            ).select(self.id_col, "score")
-            rows = topk(kept, k, id_col=self.id_col).collect()
-            stop_kprime = kprime
-            if len(rows) >= k:
-                break
-        latency_ms = (time.perf_counter() - t0) * 1000.0
-
-        ids = [int(r[self.id_col]) for r in rows]
-        scores = [float(r["score"]) for r in rows]
-        stats: dict[str, Any] = {
-            "method": self.name,
-            "K": k,
-            "latency_ms": latency_ms,
-            # K′ at the stopping rung — the reference logs the last rung,
-            # not the ladder sum (quirk Q4; post_filter.py:101)
-            "scored_vectors": stop_kprime,
+    def _rung(self, kprime, q, pred, k, prepared):
+        candidates, probed = self.index.search_plan(q, kprime, self.nprobe)
+        kept = join_candidates(self.corpus, pred, candidates, self.id_col)
+        rows = topk(kept, k, id_col=self.id_col).collect()
+        # K′ at the stopping rung — the reference logs the last rung,
+        # not the ladder sum (quirk Q4; post_filter.py:101)
+        return rows, {
+            "scored_vectors": kprime,
             "lists_probed": len(probed),
             "nprobe": self.nprobe,
-            # fields the reference reserves but never fills
-            # (backend_interface.py:15-16) — we fill them: the kth kept
-            # score at stop, and the best possible unkept score bound
-            # (last ANN candidate's score at the stopping rung)
-            "kth_at_stop": scores[k - 1] if len(scores) >= k else None,
-            "bound_at_stop": scores[-1] if scores else None,
-            "scores": scores,
-            # ladder economics: where the ladder was entered and how many
-            # rungs actually ran (fixed regime always enters at rung 0;
-            # the costed regime's win IS rungs_run < len(k_ladder) on
-            # strict filters)
-            "ladder_entry": entry_rung,
-            "rungs_run": rungs_run,
-            **(
-                {"selectivity_est": n_allowed / self.n}
-                if n_allowed is not None
-                else {}
-            ),
-            "notes": self.compose_notes(f"ladder_stop={stop_kprime}"),
         }
-        return ids, stats
 
 
 #: begin/commit marker for the upsert's apply window. Underscore-prefixed

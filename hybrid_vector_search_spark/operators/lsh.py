@@ -125,16 +125,19 @@ def bucket_sql_expr(planes: np.ndarray, emb: str = "embedding") -> str:
 
 
 from hybrid_vector_search_spark.operators.strategies import (  # noqa: E402
-    SearchBackend,
+    LadderBackend,
 )
 
 
-class LSHPostFilterBackend(SearchBackend):
+class LSHPostFilterBackend(LadderBackend):
     """P3-shaped strategy on LSH buckets: rows in the probed buckets are
-    scored, semi-joined against the allowed-id set, and the probe radius
-    escalates (Hamming 0 → 1 → 2) until ≥K survivors — the LSH analogue
-    of the reference's K′ ladder (src/baselines/post_filter.py:66-87),
-    with probe radius instead of candidate count as the widening knob.
+    scored, post-filtered, and the probe radius escalates (Hamming
+    0 → 1 → 2) until ≥K survivors — the LSH analogue of the reference's
+    K′ ladder (src/baselines/post_filter.py:66-87), with probe radius
+    instead of candidate count as the widening knob. The ladder, its
+    costed entry and the stats are :class:`LadderBackend`'s: the probe
+    set at radius r covers ``Σ_{i≤r} C(nbits, i)`` of the ``2^nbits``
+    buckets, which is the entry rule's coverage map.
 
     Emits the §2.10 stats contract: ``lists_probed`` = probed buckets at
     stop, ``nprobe`` = final probe-set size, ``scored_vectors`` = rows
@@ -151,30 +154,28 @@ class LSHPostFilterBackend(SearchBackend):
         nbits: int = DEFAULT_NBITS,
         radius_ladder: Sequence[int] = (0, 1, 2),
         costed: bool = False,
-        safety: int = 2,
         selectivity_hint: int | None = None,
     ):
-        super().__init__(corpus, n, id_col)
+        super().__init__(corpus, n, id_col, costed, selectivity_hint)
         self.nbits = nbits
         self.radius_ladder = tuple(radius_ladder)
         self._planes: np.ndarray | None = None
-        # cost-based ladder entry — the LSH translation of the IVF
-        # backend's clamp arithmetic, with probe radius as the widening
-        # knob: the probe set at Hamming radius r covers P(r) = Σ_{i≤r}
-        # C(nbits, i) of the 2^nbits buckets, so expected survivors
-        # ≈ N·P(r)/2^nbits · selectivity = P(r)·|allowed|/2^nbits. The
-        # entry radius is the smallest rung whose P(r) reaches
-        # ceil(K·safety·2^nbits / |allowed|) — integer ceil, exactly
-        # reproducible by the SQL oracle — clamped to the last rung.
-        self.costed = costed
-        self.safety = int(safety)
-        self.selectivity_hint = selectivity_hint  # stats/sketch |allowed|
 
-    def probe_coverage(self, radius: int) -> int:
-        """P(r) = Σ_{i≤r} C(nbits, i): buckets the multi-probe set covers."""
+    @property
+    def ladder(self) -> tuple[int, ...]:
+        return self.radius_ladder
+
+    def _universe(self) -> int:
+        return 1 << self.nbits
+
+    def _coverage(self, radius: int) -> int:
+        """Buckets the multi-probe set at this radius covers."""
         from math import comb
 
         return sum(comb(self.nbits, i) for i in range(radius + 1))
+
+    def _stop_note(self, radius: int) -> str:
+        return f"radius_stop={radius},nbits={self.nbits}"
 
     @property
     def planes(self) -> np.ndarray:
@@ -182,6 +183,26 @@ class LSHPostFilterBackend(SearchBackend):
             dim = len(self.corpus.select("embedding").first()["embedding"])
             self._planes = hyperplanes(self.nbits, dim)
         return self._planes
+
+    def _probe(self, qvec, pred, radius: int):
+        """One rung's plans: the corpus rows in the buckets probed at this
+        radius, the ones among them passing ``pred`` as ``(id, score)``,
+        and the probed bucket ids."""
+        probes = probe_set(qvec, self.planes, radius)
+        in_probed = self.corpus.withColumn(
+            "bucket", bucket_udf(self.planes)(F.col("embedding"))
+        ).filter(F.col("bucket").isin(probes))
+        # LSH candidates ARE corpus rows (the probed-bucket scan keeps all
+        # metadata columns), so post-filtering needs NO join at all: apply
+        # the predicate to the same pruned scan. {x : bucket∈probes ∧ pred}
+        # is exactly candidates ∩ allowed, with zero shuffle and the filter
+        # pushed into the scan — unlike a semi-join against the unbounded
+        # allowed set, this survives selectivity → 1 at 100× scale.
+        kept = in_probed.filter(pred).select(
+            F.col(self.id_col),
+            dot_score_pandas_udf(qvec)(F.col("embedding")).alias("score"),
+        )
+        return in_probed, kept, probes
 
     def plan(self, qvec, filters, k, probe_hamming: int | None = None):
         """One ladder rung as a composable plan (same shape search() runs)."""
@@ -192,127 +213,26 @@ class LSHPostFilterBackend(SearchBackend):
         radius = (
             probe_hamming if probe_hamming is not None else self.radius_ladder[-1]
         )
-        probes = probe_set(qvec, self.planes, radius)
-        bucketed = self.corpus.withColumn(
-            "bucket", bucket_udf(self.planes)(F.col("embedding"))
-        )
-        # LSH candidates ARE corpus rows (the probed-bucket scan keeps all
-        # metadata columns), so post-filtering needs NO join at all: apply
-        # the predicate to the same pruned scan. {x : bucket∈probes ∧ pred}
-        # is exactly candidates ∩ allowed, with zero shuffle and the filter
-        # pushed into the scan — unlike a semi-join against the unbounded
-        # allowed set, this survives selectivity → 1 at 100× scale.
         pred = compile_filters(self.corpus.schema, filters)
-        kept = (
-            bucketed.filter(F.col("bucket").isin(probes))
-            .filter(pred)
-            .select(
-                F.col(self.id_col),
-                dot_score_pandas_udf(qvec)(F.col("embedding")).alias("score"),
-            )
-        )
+        _, kept, probes = self._probe(qvec, pred, radius)
         return topk(kept, k, id_col=self.id_col), probes
 
-    def search(self, qvec, filters, k):
-        import time
-
-        from hybrid_vector_search_spark.functions.predicates import (
-            compile_filters,
-        )
-        from hybrid_vector_search_spark.functions.vector import ensure_unit_l2
-        from hybrid_vector_search_spark.sources.loaders import validate_K
-
-        validate_K(k, self.n)
-        q = ensure_unit_l2(qvec)
-        pred = compile_filters(self.corpus.schema, filters)
-
-        t0 = time.perf_counter()
-        # cost-based entry radius (see __init__; |allowed| is the A2
-        # selectivity count — catalog stats or a sketch at 100 TB)
-        ladder = list(self.radius_ladder)
-        n_allowed: int | None = None
-        if self.costed:
-            n_allowed = (
-                self.selectivity_hint
-                if self.selectivity_hint is not None
-                else self.corpus.filter(pred).count()
-            )
-            if n_allowed <= 0:
-                needed_p = self.probe_coverage(ladder[-1]) + 1  # force last
-            else:
-                needed_p = -(
-                    -(k * self.safety * (1 << self.nbits)) // n_allowed
-                )
-            entry = next(
-                (r for r in ladder if self.probe_coverage(r) >= needed_p),
-                ladder[-1],
-            )
-            ladder = [r for r in ladder if r >= entry]
-        entry_radius = ladder[0]
-        rows: list = []
-        probes: list[int] = []
-        rungs_run = 0
-        stop_radius = ladder[-1]
-        bucketed = self.corpus.withColumn(
-            "bucket", bucket_udf(self.planes)(F.col("embedding"))
-        )
-        # the per-rung candidate count (the stats contract's
-        # ``scored_vectors`` at the stopping radius) is independent of
-        # the rung's survivor probe — submit both concurrently (guide
-        # §2.6: two read-only jobs over the resident corpus) and keep
-        # the count from the rung the ladder stops on. Identical value
-        # to the old post-loop count; in the escalation regime a
-        # non-stop rung's count is discarded (bounded extra work, the
-        # wall still improves because it overlaps the rung's probe).
+    def _rung(self, radius, q, pred, k, prepared):
         from concurrent.futures import ThreadPoolExecutor
 
-        scored_vectors = 0
-        with ThreadPoolExecutor(1) as _ex:
-            for radius in ladder:
-                rungs_run += 1
-                probes = probe_set(q, self.planes, radius)
-                in_probed = bucketed.filter(F.col("bucket").isin(probes))
-                cnt_fut = _ex.submit(in_probed.count)
-                # joinless post-filter: predicate applied to the pruned
-                # scan itself (see plan() — candidates are corpus rows,
-                # so no candidate⋈allowed join is ever needed)
-                kept = in_probed.filter(pred).select(
-                    F.col(self.id_col),
-                    dot_score_pandas_udf(q)(
-                        F.col("embedding")
-                    ).alias("score"),
-                )
-                rows = topk(kept, k, id_col=self.id_col).collect()
-                stop_radius = radius
-                scored_vectors = cnt_fut.result()
-                if len(rows) >= k:
-                    break
-        latency_ms = (time.perf_counter() - t0) * 1000.0
-
-        ids = [int(r[self.id_col]) for r in rows]
-        scores = [float(r["score"]) for r in rows]
-        stats = {
-            "method": self.name,
-            "K": k,
-            "latency_ms": latency_ms,
+        in_probed, kept, probes = self._probe(q, pred, radius)
+        # the rung's candidate count (``scored_vectors`` at the stopping
+        # radius) is independent of its survivor probe: both jobs run
+        # concurrently
+        with ThreadPoolExecutor(1) as pool:
+            counted = pool.submit(in_probed.count)
+            rows = topk(kept, k, id_col=self.id_col).collect()
+            scored_vectors = counted.result()
+        return rows, {
             "scored_vectors": scored_vectors,
             "lists_probed": len(probes),
             "nprobe": len(probes),
-            "kth_at_stop": scores[k - 1] if len(scores) >= k else None,
-            "bound_at_stop": scores[-1] if scores else None,
-            "scores": scores,
-            "ladder_entry": entry_radius,
-            "rungs_run": rungs_run,
-            **(
-                {"selectivity_est": n_allowed / self.n}
-                if n_allowed is not None
-                else {}
-            ),
-            "notes": self.compose_notes(
-                f"radius_stop={stop_radius},nbits={self.nbits}"
-            ),
         }
-        return ids, stats
 
 
 def build_bucketed_layout(

@@ -14,7 +14,9 @@ Strategy ↔ plan shape:
 * ``post_filter`` (reference P3, src/baselines/post_filter.py:17-109):
   ANN candidates over the full corpus via the IVF index, candidate ladder
   K′ ∈ (200, 500, 1000) with early stop, then filter candidates and keep
-  the best K — see operators/ivf.py for the index.
+  the best K — see operators/ivf.py for the index. The ladder itself
+  (costed entry, escalation, stats) is :class:`LadderBackend`, shared
+  with the HNSW and LSH candidate sources.
 * ``random`` (reference P4, src/backends/random.py:9-31): seeded sample,
   ignores filters (kept as the recall floor; reference quirk Q7).
 
@@ -27,10 +29,11 @@ from __future__ import annotations
 import time
 import uuid
 from abc import ABC, abstractmethod
-from collections.abc import Mapping, Sequence
+from collections.abc import Callable, Mapping, Sequence
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from hybrid_vector_search_spark.errors import ValidationError
@@ -230,6 +233,172 @@ class RandomBackend(SearchBackend):
         ids, stats = super().search(qvec, filters, k)
         stats["scored_vectors"] = 0
         return ids, stats
+
+
+#: survivor over-fetch of the costed ladder entry: the entry rung must be
+#: expected to yield K·LADDER_SAFETY survivors (×2 absorbs the candidate
+#: set's non-uniform overlap with the filter). The registry's SQL oracles
+#: replay the entry with this same constant.
+LADDER_SAFETY = 2
+
+
+def ladder_entry(
+    ladder: Sequence[int],
+    k: int,
+    n_allowed: int,
+    universe: int,
+    coverage: Callable[[int], int] = lambda rung: rung,
+) -> int:
+    """Costed entry rung of a post-filter escalation ladder.
+
+    A rung whose candidates cover ``coverage(rung)`` of ``universe``
+    units yields ≈ ``coverage(rung)·|allowed| / universe`` survivors, so
+    a rung can plausibly deliver K·LADDER_SAFETY survivors only when
+    ``coverage(rung) ≥ need = ceil(K·LADDER_SAFETY·universe / |allowed|)``
+    — integer ceil, exactly reproducible by the SQL oracle. Enter at the
+    first such rung, else at the last rung; ``|allowed| ≤ 0`` means the
+    last rung only. IVF and HNSW: ``universe = N``, coverage is K′ itself.
+    LSH: ``universe = 2^nbits`` buckets, ``coverage(r) = Σ_{i≤r}
+    C(nbits, i)`` for probe radius r."""
+    if n_allowed <= 0:
+        return ladder[-1]
+    need = -(-(k * LADDER_SAFETY * universe) // n_allowed)
+    return next((r for r in ladder if coverage(r) >= need), ladder[-1])
+
+
+def join_candidates(
+    corpus: DataFrame, pred: Column, candidates: DataFrame, id_col: str = "id"
+) -> DataFrame:
+    """``(id, score)`` of the ANN candidates whose corpus row passes
+    ``pred``. Broadcasts the LADDER-BOUNDED side: ``candidates`` is a
+    top-K′ plan (≤ max(ladder) rows by construction), while the filtered
+    corpus approaches the full id column as selectivity → 1 — broadcasting
+    it would overflow the driver at 100× scale. The inner join keeps the
+    candidate scores."""
+    allowed = corpus.filter(pred).select(id_col)
+    return allowed.join(F.broadcast(candidates), id_col, "inner").select(
+        id_col, "score"
+    )
+
+
+class LadderBackend(SearchBackend):
+    """The P3 post-filter escalation ladder (reference src/baselines/
+    post_filter.py:66-87), written once for every ANN candidate source:
+    run the rungs in order, keep the candidates passing the filters,
+    stop at the first rung with ≥K survivors (fewer than K after the last
+    rung is a valid short answer, never an error).
+
+    A subclass supplies ``_rung`` (one rung: its kept rows, best first,
+    and its own stats fields) and, when the rungs share one expensive
+    step, ``_prepare`` (run once per search, its result handed to every
+    rung). ``ladder`` names the rungs; ``_universe`` / ``_coverage`` map
+    them onto :func:`ladder_entry`.
+
+    ``costed=True`` replaces the fixed entry at the first rung with the
+    COST-BASED entry of :func:`ladder_entry` (the better-than-reference
+    opportunity SURVEY §4 names: the reference's fixed ladder runs — and
+    exhausts — every rung on strict filters, its qids 1/5 in
+    results.jsonl). Strict filters jump straight to the final rung;
+    broad filters still enter at the first, so the fast path is
+    untouched, and the final rung is the same in both regimes. The
+    |allowed| input is ``selectivity_hint`` when given — the 100 TB form:
+    catalog column statistics or a sketch, no scan — else one count job
+    over the filtered corpus, run alongside ``_prepare``.
+
+    Stats (§2.10): ``ladder_entry`` / ``rungs_run`` are the ladder
+    economics (the costed win IS ``rungs_run`` < len(ladder) on strict
+    filters); ``selectivity_est`` = |allowed|/N when costed.
+    ``kth_at_stop`` and ``bound_at_stop`` fill the fields the reference
+    reserves but never fills (backend_interface.py:15-16):
+    ``kth_at_stop`` is the K-th returned score, ``bound_at_stop`` is
+    ``scores[-1]``, the LOWEST RETURNED score — equal to ``kth_at_stop``
+    whenever K rows come back. It is not a bound on the scores of
+    unkept candidates."""
+
+    def __init__(
+        self,
+        corpus: DataFrame,
+        n: int | None = None,
+        id_col: str = "id",
+        costed: bool = False,
+        selectivity_hint: int | None = None,
+    ):
+        super().__init__(corpus, n, id_col)
+        self.costed = costed
+        self.selectivity_hint = selectivity_hint
+
+    @property
+    def ladder(self) -> tuple[int, ...]:
+        return self.k_ladder
+
+    def _universe(self) -> int:
+        return self.n
+
+    def _coverage(self, rung: int) -> int:
+        return rung
+
+    def _prepare(self, q: Any, pred: Column) -> Any:
+        return None
+
+    @abstractmethod
+    def _rung(
+        self, rung: int, q: Any, pred: Column, k: int, prepared: Any
+    ) -> tuple[list, dict[str, Any]]:
+        """Run one rung: ``(kept rows ≤ K, best first; own stats)``."""
+
+    def _stop_note(self, rung: int) -> str:
+        return f"ladder_stop={rung}"
+
+    def search(self, qvec, filters, k):
+        validate_K(k, self.n)
+        q = ensure_unit_l2(qvec)
+        pred = compile_filters(self.corpus.schema, filters)
+        t0 = time.perf_counter()
+        ladder = tuple(self.ladder)
+        n_allowed: int | None = None
+        # the |allowed| count is independent of the prepare step, so it
+        # runs alongside it; leaving the pool joins its worker, so an
+        # error never orphans an in-flight count job
+        with ThreadPoolExecutor(1) as pool:
+            counted = None
+            if self.costed and self.selectivity_hint is None:
+                counted = pool.submit(self.corpus.filter(pred).count)
+            prepared = self._prepare(q, pred)
+            if self.costed:
+                n_allowed = (
+                    self.selectivity_hint
+                    if counted is None
+                    else counted.result()
+                )
+        if n_allowed is not None:
+            entry = ladder_entry(
+                ladder, k, n_allowed, self._universe(), self._coverage
+            )
+            ladder = ladder[ladder.index(entry):]
+        for rungs_run, rung in enumerate(ladder, 1):
+            rows, fields = self._rung(rung, q, pred, k, prepared)
+            if len(rows) >= k:
+                break
+        latency_ms = (time.perf_counter() - t0) * 1000.0
+        scores = [float(r["score"]) for r in rows]
+        stats: dict[str, Any] = {
+            "method": self.name,
+            "K": k,
+            "latency_ms": latency_ms,
+            **fields,
+            "kth_at_stop": scores[k - 1] if len(scores) >= k else None,
+            "bound_at_stop": scores[-1] if scores else None,
+            "scores": scores,
+            "ladder_entry": ladder[0],
+            "rungs_run": rungs_run,
+            **(
+                {"selectivity_est": n_allowed / self.n}
+                if n_allowed is not None
+                else {}
+            ),
+            "notes": self.compose_notes(self._stop_note(rung)),
+        }
+        return [int(r[self.id_col]) for r in rows], stats
 
 
 def get_backend(

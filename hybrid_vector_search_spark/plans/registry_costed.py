@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from hybrid_vector_search_spark.functions.predicates import (
     filters_to_sql,
 )
+from hybrid_vector_search_spark.operators.strategies import LADDER_SAFETY
 from hybrid_vector_search_spark.queryvecs import query_vector, sql_array_literal
 from hybrid_vector_search_spark.session import artifact
 from hybrid_vector_search_spark.sources.loaders import (
@@ -42,7 +43,6 @@ _PF_COSTED_CASE = {
     "filters": {"label": {"eq": 7}, "lang": {"eq": "zh"}},
     "k": 10,
 }
-_PF_COSTED_SAFETY = 2
 
 # Session cache for the ingest-time column statistics the costed entry
 # decisions read (count / per-column not-null / exact ndv over the
@@ -119,7 +119,7 @@ counts AS (SELECT (SELECT count(*) FROM corpus) AS n,
                   (SELECT count(*) FROM allowed) AS na),
 entry AS (
   SELECT LEAST(1000, GREATEST(200,
-    ({k} * {_PF_COSTED_SAFETY} * n + na - 1) // na)) AS ec FROM counts),
+    ({k} * {LADDER_SAFETY} * n + na - 1) // na)) AS ec FROM counts),
 erung AS (SELECT CASE WHEN ec <= 200 THEN 200
                       WHEN ec <= 500 THEN 500
                       ELSE 1000 END AS r FROM entry),
@@ -162,7 +162,6 @@ def post_filter_costed(spark: SparkSession, sf_dir: str) -> DataFrame:
             index=_ann_ivf_fixed_index(spark, sf_dir),
             nprobe=ANN_IVF_NPROBE,
             costed=True,
-            safety=_PF_COSTED_SAFETY,
         ),
     )
     ids, stats = backend.search(
@@ -245,7 +244,7 @@ est AS (SELECT n, GREATEST(1, LEAST(n, CAST(FLOOR(
     + 0.5) AS BIGINT))) AS na FROM stats),
 entry AS (
   SELECT LEAST(1000, GREATEST(200,
-    ({k} * {_PF_COSTED_SAFETY} * n + na - 1) // na)) AS ec, na FROM est),
+    ({k} * {LADDER_SAFETY} * n + na - 1) // na)) AS ec, na FROM est),
 erung AS (SELECT CASE WHEN ec <= 200 THEN 200
                       WHEN ec <= 500 THEN 500
                       ELSE 1000 END AS r, na FROM entry),
@@ -296,7 +295,6 @@ def post_filter_costed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             index=_ann_ivf_fixed_index(spark, sf_dir),
             nprobe=ANN_IVF_NPROBE,
             costed=True,
-            safety=_PF_COSTED_SAFETY,
             selectivity_hint=est,
         ),
     )
@@ -349,7 +347,6 @@ def _strategy_costed_choice_oracle() -> str:
     from pyspark.sql import types as T
 
     k = _CHOICE_K
-    safety = _PF_COSTED_SAFETY
     schema = T.StructType(
         [
             T.StructField("label", T.IntegerType()),
@@ -413,7 +410,7 @@ surv_{qcase} AS (
 erung_{qcase} AS (SELECT CASE
     WHEN ec <= 200 THEN 200 WHEN ec <= 500 THEN 500 ELSE 1000 END AS r
   FROM (SELECT LEAST(1000, GREATEST(200,
-    ({k} * {safety} * n + est - 1) // est)) AS ec FROM est_{qcase})),
+    ({k} * {LADDER_SAFETY} * n + est - 1) // est)) AS ec FROM est_{qcase})),
 stop_{qcase} AS (SELECT CASE
     WHEN r <= 200
      AND (SELECT count(*) FROM surv_{qcase} WHERE rk <= 200) >= {k}
@@ -489,7 +486,6 @@ def strategy_costed_choice(spark: SparkSession, sf_dir: str) -> DataFrame:
                 index=index,
                 nprobe=ANN_IVF_NPROBE,
                 costed=True,
-                safety=_PF_COSTED_SAFETY,
                 selectivity_hint=est,
             )
         ids, st = backend.search(query_vector(seed), filters, _CHOICE_K)
@@ -697,7 +693,6 @@ def _pf_costed_backends_oracle() -> str:
     from hybrid_vector_search_spark.operators import lsh as LSH
 
     k = _PF_COSTED_CASE["k"]
-    safety = _PF_COSTED_SAFETY
     q = query_vector(_PF_COSTED_CASE["seed"])
     qlit = sql_array_literal(q)
     schema = T.StructType(
@@ -730,7 +725,7 @@ hcand AS (
   FROM corpus),
 hentry AS (
   SELECT LEAST(1000, GREATEST(200,
-    ({k} * {safety} * n + na - 1) // na)) AS ec FROM counts),
+    ({k} * {LADDER_SAFETY} * n + na - 1) // na)) AS ec FROM counts),
 herung AS (SELECT CASE WHEN ec <= 200 THEN 200
                       WHEN ec <= 500 THEN 500
                       ELSE 1000 END AS r FROM hentry),
@@ -749,7 +744,7 @@ hrows AS (
   FROM hsurv, hstop WHERE rk <= s
   ORDER BY score DESC, id ASC LIMIT {k}),
 lneed AS (SELECT CASE WHEN na <= 0 THEN {p[2] + 1}
-                      ELSE ({k} * {safety} * {1 << nbits} + na - 1) // na
+                      ELSE ({k} * {LADDER_SAFETY} * {1 << nbits} + na - 1) // na
                  END AS np FROM counts),
 lentry AS (SELECT CASE WHEN np <= {p[0]} THEN 0
                        WHEN np <= {p[1]} THEN 1
@@ -814,7 +809,6 @@ def post_filter_costed_backends(spark: SparkSession, sf_dir: str) -> DataFrame:
             index=_hnsw_persisted_index(spark, sf_dir),
             ef_search=EXHAUSTIVE_EF,
             costed=True,
-            safety=_PF_COSTED_SAFETY,
         ),
     )
     lb = artifact(
@@ -823,7 +817,6 @@ def post_filter_costed_backends(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: LSHPostFilterBackend(
             load_corpus(spark, sf_dir),
             costed=True,
-            safety=_PF_COSTED_SAFETY,
         ),
     )
 

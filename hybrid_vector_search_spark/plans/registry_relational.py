@@ -1300,8 +1300,8 @@ def hybrid_topk_post_filter_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-expressed as bucket pruning + broadcast left-semi. The probe
     radius is pinned at Hamming 1 so the plan is deterministic and fully
     oracle-checkable; the production ladder (radius 0→1→2 until ≥K
-    survivors) lives in LSHPostFilterBackend.search and is exercised by
-    the harness tests."""
+    survivors) is LSHPostFilterBackend.search (strategies.LadderBackend
+    over the LSH rung) and is exercised by the harness tests."""
     from hybrid_vector_search_spark.operators.lsh import LSHPostFilterBackend
 
     corpus = load_corpus(spark, sf_dir)

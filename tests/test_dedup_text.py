@@ -543,6 +543,15 @@ def test_compact_dedup_index_mechanics(spark, tmp_path):
     )
 
 
+def test_compact_dedup_index_refuses_empty_root(tmp_path):
+    """With no committed dedup index the compaction refuses with the
+    engine's ValidationError before touching Spark (no session given)."""
+    from hybrid_vector_search_spark.errors import ValidationError
+
+    with pytest.raises(ValidationError, match="no committed dedup index"):
+        DD.compact_dedup_index(None, str(tmp_path))
+
+
 def test_clustered_pairs_subset_of_exact(spark):
     """The cell-bounded semantic pair set is a SUBSET of the exact
     GEMM pair set (recall is what the cell join trades; precision must

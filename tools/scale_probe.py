@@ -413,8 +413,8 @@ def main() -> None:
         strict filter) at every factor. The one linear-in-K term in the
         costed path is the |allowed| count itself; at 100 TB that input
         comes from catalog/column statistics or a distinct-count sketch
-        instead of a scan (operators/ivf.py PostFilterBackend docstring),
-        making the entry decision O(1). Returns (sec, rungs_run,
+        instead of a scan (``selectivity_hint``, operators/strategies.py
+        LadderBackend and ladder_entry), making the entry decision O(1). Returns (sec, rungs_run,
         ladder_entry, result_rows)."""
         d = os.path.join(tempfile.gettempdir(), f"hvs_scale_x{k}")
         best = float("inf")
