@@ -380,8 +380,29 @@ def filters_to_sql(
 # ------------------------------------------------- pandas (serving tier)
 
 
+def _like_haystack(s, dtype: T.DataType):
+    """The lowercased string form of a column that ``like`` searches:
+    arrays pipe-joined, everything stringified, NULL kept as NA."""
+    if isinstance(dtype, T.ArrayType):
+        # Spark's array_join skips NULL elements (no nullReplacement
+        # given) — mirror that, never join a None as the literal
+        # string 'None'
+        joined = s.map(
+            lambda a: None
+            if a is None
+            else "|".join(str(x) for x in a if x is not None)
+        )
+    else:
+        joined = s.astype("string")
+    return joined.str.lower()
+
+
 def filters_mask_pandas(
-    schema: T.StructType, filters: Mapping[str, Any] | None, pdf
+    schema: T.StructType,
+    filters: Mapping[str, Any] | None,
+    pdf,
+    *,
+    lowered: dict | None = None,
 ):
     """The SAME filter semantics evaluated over an in-RAM pandas frame —
     the serving tier's predicate engine (serving.LocalCorpusServe), and
@@ -393,7 +414,12 @@ def filters_mask_pandas(
     every conjunct, lowercase-contains ``like`` with pipe-joined arrays,
     paired inclusive geo — and the parity is pinned by
     tests/test_predicates.py::test_pandas_mask_matches_spark over every
-    registry filter shape. Returns a boolean numpy array."""
+    registry filter shape. Returns a boolean numpy array.
+
+    ``lowered`` is a caller-held memo of ``like`` haystacks per column
+    of ``pdf``: a frame that never changes (the serving tier's resident
+    metadata) lowercases each searched column once instead of on every
+    call. It changes no answer."""
     import numpy as np
 
     n = len(pdf)
@@ -402,6 +428,8 @@ def filters_mask_pandas(
 
     validate_filters_schema(schema, filters)
     dtypes = {f.name: f.dataType for f in schema.fields}
+    if lowered is None:
+        lowered = {}
 
     mask = np.ones(n, dtype=bool)
     geo_lat: tuple | None = None
@@ -451,22 +479,11 @@ def filters_mask_pandas(
                 )
             elif op == "like":
                 needle = str(val).lower()
-                if isinstance(dtype, T.ArrayType):
-                    # Spark's array_join skips NULL elements (no
-                    # nullReplacement given) — mirror that, never join
-                    # a None as the literal string 'None'
-                    joined = s.map(
-                        lambda a: None
-                        if a is None
-                        else "|".join(
-                            str(x) for x in a if x is not None
-                        )
-                    )
-                else:
-                    joined = s.astype("string")
+                hay = lowered.get(col_name)
+                if hay is None:
+                    hay = lowered[col_name] = _like_haystack(s, dtype)
                 m = (
-                    joined.str.lower()
-                    .str.contains(needle, regex=False)
+                    hay.str.contains(needle, regex=False)
                     .fillna(False)
                     .to_numpy(dtype=bool)
                 )

@@ -40,17 +40,20 @@ def ensure_unit_l2(qvec: Sequence[float], tol: float = 1e-3) -> np.ndarray:
 
 
 def double_array_lit(vals: Sequence[float]) -> Column:
-    """A double-array literal Column built from ONE SQL parse instead
-    of one ``F.lit`` py4j round-trip per element (r15, guide §1.2 —
-    ~1 ms of driver chatter per element adds up in per-pass plan
-    builds). ``repr`` emits the shortest decimal that parses back to
-    the same float64, so values are bit-identical to the lit() path;
-    non-finite values fall back to the Column API."""
+    """A double-array literal Column as ONE foldable expression node:
+    ``CAST(split('<csv>', ',') AS ARRAY<DOUBLE>)``. Catalyst re-analyzes
+    every child of an expression on each DataFrame call over the plan,
+    so an ``array(...)`` of one literal per element costs 30–80 ms of
+    plan build per 384-d scoring plan; this node has three children
+    and constant-folds to the same array literal in the optimizer.
+    ``repr`` emits the shortest decimal that parses back to the same
+    float64 (the JVM's string→double cast is correctly rounded), so
+    values are bit-identical to the ``lit()`` path; non-finite values
+    and the empty array fall back to the Column API."""
     fv = [float(v) for v in vals]
     if fv and all(math.isfinite(v) for v in fv):
-        return F.expr(
-            "array(" + ", ".join(repr(v) + "D" for v in fv) + ")"
-        )
+        csv = ",".join(repr(v) for v in fv)
+        return F.expr(f"CAST(split('{csv}', ',') AS ARRAY<DOUBLE>)")
     return F.array(*[F.lit(v) for v in fv])
 
 
@@ -91,26 +94,12 @@ def dot_score_column(
     # cast: `.cast("array<double>")` materializes an intermediate array
     # per row before the product array — dropping it is a measured 25%
     # on the reference-shape full scan (318→240 ms, identical results).
-    # r15 (guide §1.2): the whole expression is parsed from ONE SQL
-    # string — the previous Column-API construction paid one py4j
-    # round-trip per element (64 lit() calls + array + two lambdas,
-    # measured 85 ms per plan BUILD vs 0.4 ms for the parse; identical
-    # analyzed expression, strict-equality-checked on random vectors).
-    # Literal doubles round-trip exactly: repr() emits the shortest
-    # decimal that parses back to the same float64 in both engines.
-    vals = [float(x) for x in qvec]
-    if all(math.isfinite(v) for v in vals):
-        lits = ", ".join(repr(v) + "D" for v in vals)
-        return F.expr(
-            f"aggregate(zip_with(`{embedding_col}`, array({lits}), "
-            "(a, b) -> CAST(a AS DOUBLE) * b), 0.0D, "
-            "(acc, x) -> acc + x)"
-        )
-    qlit = F.array(*[F.lit(v) for v in vals])
+    # The query is ONE literal node (double_array_lit), so the plan
+    # build does not grow with the dimension.
     return F.aggregate(
         F.zip_with(
             F.col(embedding_col),
-            qlit,
+            double_array_lit(qvec),
             lambda a, b: a.cast("double") * b,
         ),
         F.lit(0.0),

@@ -25,6 +25,7 @@ plan, the DuckDB oracle, and this tier (parity pytest-pinned).
 
 from __future__ import annotations
 
+import json
 from collections.abc import Mapping, Sequence
 from typing import Any
 
@@ -81,13 +82,22 @@ def _resident_footprint(
 
 class LocalCorpusServe:
     """In-RAM corpus: ids (int64), unit-norm float64 matrix, metadata
-    frame, and the corpus schema the filter DSL validates against."""
+    frame, and the corpus schema the filter DSL validates against.
+
+    The resident copy never changes, so predicate work that does not
+    depend on the query vector is kept beside ``meta``: the lowercased
+    form of each column a ``like`` has searched (filled lazily), and
+    the row set of the last filter set evaluated — a request that runs
+    :meth:`prefilter_topk` and then :meth:`count_allowed` evaluates its
+    mask once."""
 
     def __init__(self, ids, mat, meta, schema):
         self.ids = ids
         self.mat = mat
         self.meta = meta
         self.schema = schema
+        self._lowered: dict[str, Any] = {}
+        self._last_allowed: tuple[str, np.ndarray] | None = None
 
     @classmethod
     def from_corpus(
@@ -188,8 +198,7 @@ class LocalCorpusServe:
                     " in the serving metadata (embedding-column filters"
                     " run on the distributed plan)"
                 )
-        mask = filters_mask_pandas(self.schema, filters, self.meta)
-        idx = np.flatnonzero(mask)
+        idx = self._allowed(filters)
         if idx.size == 0:
             return []
         q = np.asarray(qvec, dtype=np.float64).reshape(-1)
@@ -201,12 +210,26 @@ class LocalCorpusServe:
     def count_allowed(self, filters: Mapping[str, Any] | None) -> int:
         """|rows passing the filters| over the resident metadata — the
         §2.10 ``scored_vectors`` number for the pre_filter serving
-        path (one extra pandas mask pass; stats are per-request
-        bookkeeping, not the hot loop)."""
+        path (after :meth:`prefilter_topk` with the same filters, no
+        second mask pass)."""
         if not filters:
             return len(self.ids)
-        mask = filters_mask_pandas(self.schema, filters, self.meta)
-        return int(np.count_nonzero(np.asarray(mask)))
+        return int(self._allowed(filters).size)
+
+    def _allowed(self, filters: Mapping[str, Any]) -> np.ndarray:
+        """Row positions passing ``filters``; the last filter set's
+        answer is kept (keyed by its canonical JSON)."""
+        key = json.dumps(filters, sort_keys=True, default=str)
+        last = self._last_allowed
+        if last is not None and last[0] == key:
+            return last[1]
+        idx = np.flatnonzero(
+            filters_mask_pandas(
+                self.schema, filters, self.meta, lowered=self._lowered
+            )
+        )
+        self._last_allowed = (key, idx)
+        return idx
 
 
 def _jvm_size_bytes(s: str) -> int:
@@ -434,7 +457,10 @@ class CostedServe:
     ``SearchBackend.search`` (method/K/latency_ms/scored_vectors/
     scores) and records the routing decision in ``notes`` —
     ``route=resident|sharded(n)|distributed`` — so every answer
-    carries its execution-shape provenance. Answers are value-identical
+    carries its execution-shape provenance. On the resident and sharded
+    routes ``scored_vectors`` is counted from the mask the answer was
+    computed with (each tier keeps its last one), so a filtered request
+    evaluates the predicate once. Answers are value-identical
     across the three routes (the registered ``strategy_costed_serve``
     query hash-pins all three against one DuckDB oracle)."""
 

@@ -1514,8 +1514,17 @@ def commit_append_clustered(
     above). ``bloom_cluster_prefix`` restricts the bloom pass to files
     whose cluster value starts with the prefix (e.g. only the 'b…'
     band-posting files of a dedup index — blooming files nobody
-    probe-prunes re-reads their bytes per commit for nothing)."""
+    probe-prunes re-reads their bytes per commit for nothing).
+
+    The batch must match the table's recorded schema, as in
+    :func:`commit_append`; a divergent batch is refused before any
+    file is written."""
     os.makedirs(root, exist_ok=True)
+    batch = df.drop("_cluster")
+    v0 = current_version(root)
+    logical = _read_manifest(root, v0).get("schema") if v0 >= 0 else None
+    if logical is not None:
+        _check_append_schema(root, logical, batch)
     new = _write_data_files_clustered(df, root, column)
     new_stats = _footer_stats(root, new)
     if bloom_columns:
@@ -1539,7 +1548,7 @@ def commit_append_clustered(
                 for c in bloom_columns
             },
         )
-    schema = _schema_payload(df.drop("_cluster"))
+    schema = _schema_payload(batch)
     new_entry = _new_group_entry(root, new, new_stats)
     for _ in range(_MAX_COMMIT_RETRIES):
         v = current_version(root)
@@ -1549,6 +1558,8 @@ def commit_append_clustered(
             groups = _groups_of(root, cur)
             dels = cur.get("delete_files", [])
             schema_out = cur.get("schema", schema)
+            if cur.get("schema") is not None:
+                _check_append_schema(root, cur["schema"], batch)
         else:
             groups, dels = [], []
             schema_out = schema
@@ -2432,7 +2443,9 @@ def commit_upsert_rows(
     publish, there is no torn state (the two-commit
     delete-then-append shape has a crash window between them; this
     has none), every older version still serves the pre-upsert rows,
-    and compaction retires the delete entry as usual."""
+    and compaction retires the delete entry as usual. A batch whose
+    columns diverge from the table's recorded schema is refused before
+    anything is written, as in :func:`commit_append`."""
     v0 = current_version(root)
     if v0 < 0:
         raise ValidationError(
@@ -2446,6 +2459,7 @@ def commit_upsert_rows(
                 f"commit_upsert_rows at '{root}': key column "
                 f"'{key_col}' not in the table schema (have: {names})"
             )
+        _check_append_schema(root, cur0["schema"], rows_df)
     sub_d = os.path.join("deletes", uuid.uuid4().hex[:12])
     (
         rows_df.select(key_col)
@@ -2465,6 +2479,8 @@ def commit_upsert_rows(
     for _ in range(_MAX_COMMIT_RETRIES):
         v = current_version(root)
         cur = _read_manifest(root, v)
+        if cur.get("schema") is not None:
+            _check_append_schema(root, cur["schema"], rows_df)
         nxt = v + 1
         all_groups = _groups_of(root, cur) + [
             {**new_entry, "added_version": nxt}

@@ -405,3 +405,64 @@ def test_assignment_drift_psi_and_recluster_polarity(spark):
     # stale_frac = 30/120 = 0.25 > 0.1 triggers; 0/120 does not
     assert (120 - 90) / 120 > 0.1
     assert not (120 - 120) / 120 > 0.1
+
+
+def test_costed_allowed_count_memoized_on_resident_corpus(spark, corpus):
+    """|allowed| does not change with the query vector: on a resident
+    corpus a second costed search with the same filters runs no count
+    job (DataFrame.count is poisoned for it), while new filters, an
+    uncached handle, or a search after invalidate_caches() count."""
+    from hybrid_vector_search_spark.operators.strategies import is_resident
+    from hybrid_vector_search_spark.plans.registry import invalidate_caches
+
+    n = corpus.count()
+    shared = dict(n=n, nlist=8, nprobe=4, seed=42)
+    resident = PostFilterBackend(corpus, costed=True, **shared)
+    resident.index  # build eagerly: the index build counts rows itself
+    uncached_df = corpus.filter(F.col("id").isNotNull())  # same rows
+    assert is_resident(corpus) and not is_resident(uncached_df)
+    uncached = PostFilterBackend(uncached_df, costed=True, **shared)
+    uncached._index = resident.index
+    f_a = {"n_chars": {"ge": 123}, "lang": {"eq": "en"}}
+    f_b = {"n_chars": {"ge": 124}, "lang": {"eq": "en"}}
+
+    # the concrete class: it overrides pyspark.sql.DataFrame.count
+    DataFrame = type(corpus)
+    real_count = DataFrame.count
+    calls = []
+
+    def counting(self):
+        calls.append(1)
+        return real_count(self)
+
+    def poisoned(self):
+        raise AssertionError("memoized |allowed| must run no count job")
+
+    def counted(backend, filters, seed):
+        DataFrame.count = counting
+        try:
+            before = len(calls)
+            _ids, st = backend.search(query_vector(seed), filters, 10)
+        finally:
+            DataFrame.count = real_count
+        return len(calls) - before, st
+
+    n1, st1 = counted(resident, f_a, 7)
+    assert n1 == 1
+    DataFrame.count = poisoned
+    try:
+        _ids, st2 = resident.search(query_vector(8), f_a, 10)
+    finally:
+        DataFrame.count = real_count
+    assert st2["selectivity_est"] == st1["selectivity_est"]
+    assert st2["ladder_entry"] == st1["ladder_entry"]
+    assert counted(resident, f_b, 7)[0] == 1      # new filters
+    assert counted(uncached, f_a, 7)[0] == 1      # uncached handle
+    assert counted(uncached, f_a, 8)[0] == 1      # ... on every search
+    # invalidate_caches() unpersists the registry's copy of this corpus,
+    # and with it this handle's plan: cache it again
+    invalidate_caches()
+    corpus.cache()
+    assert is_resident(corpus)
+    assert counted(resident, f_a, 9)[0] == 1      # store was cleared
+    assert counted(resident, f_a, 10)[0] == 0

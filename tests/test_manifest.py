@@ -2338,3 +2338,22 @@ def test_branch_pointer_race_never_leaks_raw_errors(spark, tmp_path):
     assert bad == [], bad
     assert resolved and set(resolved) <= set(versions)
     assert M.resolve_branch(root, "published") in versions
+
+
+def test_clustered_append_and_upsert_validate_schema_types(spark, tmp_path):
+    """commit_append_clustered and commit_upsert_rows refuse a batch
+    whose column type diverges from the table's, as commit_append does:
+    no version is written and the table still reads back."""
+    good = spark.createDataFrame([(i, i) for i in range(4)], "id long, v int")
+    bad = spark.createDataFrame([(9, "x")], "id long, v string")
+    for name, commit in (
+        ("clustered", lambda root, df: M.commit_append_clustered(root, df, "id")),
+        ("upsert", lambda root, df: M.commit_upsert_rows(root, df, "id")),
+    ):
+        root = str(tmp_path / name)
+        M.commit_append(root, good)
+        with pytest.raises(ValidationError, match="v string"):
+            commit(root, bad)
+        assert M.list_versions(root) == [1], name
+        assert _ids(M.read_snapshot(spark, root)) == set(range(4)), name
+        assert commit(root, good.filter("id < 2")) == 2, name

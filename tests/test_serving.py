@@ -341,3 +341,55 @@ def test_get_serving_backend_name_dispatch(spark):
         get_serving_backend("exact")
     with pytest.raises(ValidationError, match="requires index"):
         get_serving_backend("post_filter")
+
+
+def test_costed_serve_one_mask_per_request(serve, monkeypatch):
+    """A filtered request evaluates the pandas mask once: the count in
+    its stats comes from the same mask as its answer. ``like`` columns
+    are lowercased once per tier, and the answers do not change."""
+    from hybrid_vector_search_spark import serving
+    from hybrid_vector_search_spark.functions import predicates
+    from hybrid_vector_search_spark.queryvecs import query_vector
+
+    # a fresh tier over the fixture's arrays: no memo from earlier tests
+    tier = LocalCorpusServe(serve.ids, serve.mat, serve.meta, serve.schema)
+    cs = serving.CostedServe(
+        None, "resident", tier, len(tier.ids), "id", "embedding"
+    )
+    filter_sets = (
+        {"text": {"like": "the"}},
+        {"label": {"in": [1, 2]}},
+        {"text": {"like": "THE"}, "lang": {"eq": "en"}},
+    )
+    requests = list(enumerate(filter_sets * 2))
+    expect = [  # each from a tier with no memo
+        [i for i, _ in LocalCorpusServe(
+            serve.ids, serve.mat, serve.meta, serve.schema
+        ).prefilter_topk(query_vector(i), f, 10)]
+        for i, f in requests
+    ]
+    n_allowed = [
+        int(predicates.filters_mask_pandas(tier.schema, f, tier.meta).sum())
+        for f in filter_sets
+    ]
+    calls = []
+    real_mask = serving.filters_mask_pandas
+    monkeypatch.setattr(
+        serving,
+        "filters_mask_pandas",
+        lambda *a, **k: calls.append(1) or real_mask(*a, **k),
+    )
+    lowered = []
+    real_hay = predicates._like_haystack
+    monkeypatch.setattr(
+        predicates,
+        "_like_haystack",
+        lambda *a: lowered.append(1) or real_hay(*a),
+    )
+    for i, f in requests:
+        before = len(calls)
+        ids, stats = cs.search(query_vector(i), f, 10)
+        assert len(calls) - before == 1, f
+        assert stats["scored_vectors"] == n_allowed[i % 3], f
+        assert ids == expect[i], f
+    assert len(lowered) == 1  # the text column, lowercased once

@@ -250,3 +250,36 @@ def test_narrow_join_plan_shape(spark):
     for cols in re.findall(r"\[([^\]]*)\]", plan_str):
         if "n_chars" in cols:
             assert "embedding" not in cols, plan_str
+
+
+def test_cached_handle_scores_resident_frame(spark):
+    """A handle resident in Spark's cache manager is filtered and scored
+    in place — no LEFT-SEMI join, no re-read of the un-joined sides —
+    and answers exactly as the narrow shape does on the same data."""
+    from hybrid_vector_search_spark.operators.strategies import is_resident
+
+    filter_sets = (
+        {"lang": {"eq": "en"}},
+        {"label": {"eq": 1}, "n_chars": {"ge": 100}},
+        {"n_chars": {"ge": 1}},
+    )
+    corpus, _, _ = _split_corpus(spark)
+    assert not is_resident(corpus)
+    narrow = [ExactBackend(corpus, 6).search(Q_E1, f, 3) for f in filter_sets]
+    corpus.cache()
+    try:
+        assert is_resident(corpus)
+        b = ExactBackend(corpus, 6)
+        for f, (ids, stats) in zip(filter_sets, narrow):
+            df, _ = b.plan(Q_E1, f, 3)
+            plan_str = df._jdf.queryExecution().executedPlan().toString()
+            assert "LeftSemi" not in plan_str, f
+            assert "InMemoryTableScan" in plan_str, f
+            got_ids, got_stats = b.search(Q_E1, f, 3)
+            assert got_ids == ids, f
+            assert got_stats["scored_vectors"] == stats["scored_vectors"], f
+            assert got_stats["scores"] == stats["scores"], f
+    finally:
+        # the cache lookup is by plan: leave no cached twin behind for
+        # the narrow-shape tests of other handles over the same rows
+        corpus.unpersist(blocking=True)

@@ -118,3 +118,68 @@ def test_sign_pack_column_matches_driver_twin(spark):
         assert got[i] == want == manual, i
     # 63 bits only: bit 63 never set, packed value always >= 0
     assert all(pk >= 0 for pk in got.values())
+
+
+def _array_of_lits(vals):
+    """The former ``double_array_lit`` form: one literal per element."""
+    return F.expr("array(" + ", ".join(repr(float(v)) + "D" for v in vals) + ")")
+
+
+def _bits(x):
+    import struct
+
+    return None if x is None else struct.pack(">d", x)
+
+
+def test_double_array_lit_is_one_node_and_bit_identical(spark):
+    """``double_array_lit`` is one CAST(split(...)) node whose values,
+    and the ``dot_score_column`` scores built on it, are bit-identical
+    to the one-literal-per-element form — on random unit vectors and on
+    the signed zero, the smallest subnormal, a tiny normal and the
+    largest finite double."""
+    from hybrid_vector_search_spark.functions.vector import double_array_lit
+
+    rng = np.random.RandomState(75)
+    vecs = rng.randn(40, 8)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "id long, embedding array<float>",
+    )
+    special = [-0.0, 5e-324, 1e-300, 1.7976931348623157e308,
+               -5e-324, 0.5, -1.0, 1e-300]
+    queries = [special]
+    for _ in range(3):
+        q = rng.randn(8)
+        queries.append([float(x) for x in q / np.linalg.norm(q)])
+    for q in queries:
+        lit = double_array_lit(q)
+        assert "split" in str(lit).lower() and "array(" not in str(lit)
+        new_arr, old_arr = spark.range(1).select(
+            lit.alias("a"), _array_of_lits(q).alias("b")
+        ).first()
+        assert [_bits(v) for v in new_arr] == [_bits(v) for v in old_arr]
+        old_score = F.aggregate(
+            F.zip_with(F.col("embedding"), _array_of_lits(q),
+                       lambda a, b: a.cast("double") * b),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        rows = df.select(
+            "id",
+            dot_score_column(q).alias("new"),
+            old_score.alias("old"),
+        ).collect()
+        assert all(_bits(r["new"]) == _bits(r["old"]) for r in rows), q
+
+
+def test_double_array_lit_non_finite_falls_back(spark):
+    """NaN and ±inf have no repr the string cast reads back the same
+    way: they keep the Column-API literal."""
+    from hybrid_vector_search_spark.functions.vector import double_array_lit
+
+    got = spark.range(1).select(
+        double_array_lit([1.0, float("inf"), float("-inf"), float("nan")])
+        .alias("a")
+    ).first()["a"]
+    assert got[:3] == [1.0, float("inf"), float("-inf")]
+    assert math.isnan(got[3])
