@@ -35,34 +35,42 @@ only the sidecars a predicate's group-level [min,max] cannot rule
 out; ANALYZE-free planner statistics fold descriptor summaries alone
 (zero sidecar reads); renames edit O(groups) mapping entries while
 sidecars stay untouched. Sidecars are reference-counted by vacuum
-exactly like data files. Format-1 (inline) manifests remain readable;
-the first commit over one migrates its entries into sidecars.
+exactly like data files. Format 1 (inline manifests) lives in ONE
+read-side adapter, ``_read_descriptor``: it presents an inline manifest
+as in-memory groups and writes nothing (a read must not write); the
+first commit over such a table persists those groups as sidecars.
 
 **Multi-writer (r10)**: the commit arbiter is ``os.link(tmp, final)``
 — creating a hard link fails with ``FileExistsError`` when ``final``
 exists, which is an atomic compare-and-swap on POSIX (``os.rename``
 would silently OVERWRITE a concurrent winner's manifest — a lost
 update). The linked inode is the fully-written temp file, so a reader
-can never observe a partial manifest either. A loser of the race
-REBASES: its data files are already safely on disk (immutable, under a
-fresh uuid dir — no writer ever collides on data paths), so it just
-re-reads the new current manifest, recomputes the file list, and
-retries at v+1. Appends always rebase cleanly (append ∘ append
-commutes). A rewrite/compaction rebases only when every file it
-rewrote is still present in the new current version — i.e. concurrent
-APPENDS are folded in (their files are carried over), while a
-concurrent rewrite of the same files is a genuine conflict and
-raises. On an object store the same protocol rides on conditional PUT
-(If-None-Match); the filesystem hard link is the local stand-in.
+can never observe a partial manifest either. Every publish runs ONE
+loop, ``_commit(root, op, build_payload)``: each attempt reads the
+current descriptor, re-checks a data-writing op's batch against the
+recorded schema, asks the op's ``build_payload`` for v+1, and tries
+the CAS; an exhausted budget raises one ``CommitConflictError``. A
+loser of the race REBASES: its data files are already safely on disk
+(immutable, under a fresh uuid dir — no writer ever collides on data
+paths), so the loop re-reads the new current manifest and rebuilds.
+Appends always rebase cleanly (append ∘ append commutes). A
+rewrite/compaction rebases only when every file it rewrote is still
+present in the new current version — i.e. concurrent APPENDS are
+folded in (their files are carried over), while a concurrent rewrite
+of the same files is a genuine conflict and raises. On an object
+store the same protocol rides on conditional PUT (If-None-Match); the
+filesystem hard link is the local stand-in.
 
 **File skipping (r10)**: commits record per-file min/max for the
 table's scalar columns, harvested from the parquet FOOTERS of the
 just-written files (metadata pages only — no data scan, the same
-source Iceberg's stats come from). ``read_snapshot_pruned`` drops
-files whose [min,max] cannot overlap the predicate BEFORE Spark sees
-them — partition-pruning semantics without hive directories, and it
-composes with time travel (each version prunes against its own stats).
-Files without stats for the column are conservatively kept.
+source Iceberg's stats come from). Every pruned read (range, in,
+multi, eq, probe) runs one group walk, ``_prune_files``, with its own
+admit tests, and drops files whose [min,max] (and, for eq/probe,
+bloom) rules the predicate out BEFORE Spark sees them —
+partition-pruning semantics without hive directories, and it composes
+with time travel (each version prunes against its own stats). Files
+without stats for the column are conservatively kept.
 
 **Schema evolution (r10)**: the manifest carries the snapshot's
 logical schema and a per-file logical→physical column mapping.
@@ -225,9 +233,10 @@ def _read_manifest(root: str, version: int) -> dict:
 # through a process-wide LRU keyed by path, safe because sidecars are
 # immutable. ANALYZE-free planner statistics (manifest_column_stats)
 # fold the descriptor summaries alone: zero sidecar reads. Format-1
-# manifests (and tests' hand-built inline payloads) stay readable via
-# passthrough; the first commit over one migrates its files into
-# sidecars bucketed by (added_version, column mapping).
+# manifests (and tests' hand-built inline payloads) are read through
+# ``_read_descriptor``'s in-memory adapter; the first commit over one
+# migrates its files into sidecars bucketed by (added_version, column
+# mapping).
 
 _GROUP_DIR = "groups"
 
@@ -402,36 +411,72 @@ def _physical_stats(st: dict, mapping: dict) -> dict:
     return out
 
 
-def _legacy_group_entries(root: str, cur: dict) -> list[dict]:
-    """Migrate a format-1 manifest's inline file list into sidecar
-    groups, bucketed by (added_version, column mapping) so every group
-    keeps the uniform per-group metadata format 2 relies on. One-time
-    per table (the descriptor this feeds is format 2; orphaned
-    sidecars from a lost CAS race are vacuumed like data orphans)."""
-    added = cur.get("added_versions", {})
-    stats = cur.get("stats", {})
-    mappings = cur.get("column_mapping", {})
+def _read_descriptor(root: str, version: int) -> dict:
+    """Version ``version``'s descriptor in the format-2 shape, whichever
+    format stores it — the ONE place format 1 exists. A format-1
+    (inline) manifest is adapted IN MEMORY: its files are bucketed by
+    (added_version, column mapping) into group entries that carry their
+    per-file entries inline (``"inline": (rels, stats_by_rel)``, stats
+    re-keyed physically) plus the same summary rollup a sidecar group
+    gets, so every reader and commit walks groups one way. Nothing is
+    written — a read must not write; the first COMMIT over such a
+    table persists the inline groups as sidecars
+    (:func:`_legacy_group_entries`)."""
+    m = _read_manifest(root, version)
+    if "groups" in m:
+        return m
+    added = m.get("added_versions", {})
+    stats = m.get("stats", {})
+    mappings = m.get("column_mapping", {})
     buckets: dict = OrderedDict()
-    for rel in cur["files"]:
+    for rel in m["files"]:
         mp = mappings.get(rel, {})
         key = (int(added.get(rel, 0)), json.dumps(mp, sort_keys=True))
         buckets.setdefault(key, []).append(rel)
-    entries = []
+    groups = []
     for (av, mp_json), rels in buckets.items():
         mp = json.loads(mp_json)
         by_rel = {r: _physical_stats(stats.get(r, {}), mp) for r in rels}
-        entry = _new_group_entry(root, rels, by_rel, mapping=mp)
-        entry["added_version"] = av
-        entries.append(entry)
-    return entries
+        groups.append(
+            {
+                "inline": (rels, by_rel),
+                "count": len(rels),
+                "mapping": mp,
+                "summary": _group_summary(rels, by_rel),
+                "added_version": av,
+            }
+        )
+    inline_keys = ("files", "stats", "column_mapping", "added_versions")
+    out = {k: val for k, val in m.items() if k not in inline_keys}
+    out["groups"] = groups
+    return out
 
 
-def _groups_of(root: str, cur: dict) -> list[dict]:
-    """The current snapshot's group entries — native for format 2,
-    migrated on the fly for a legacy inline manifest."""
-    if "groups" in cur:
-        return list(cur["groups"])
-    return _legacy_group_entries(root, cur)
+def _group_files(
+    root: str, entry: dict
+) -> tuple[list[str], dict, dict | None]:
+    """(rels, {rel: physical stats}, {rel: added_version} | None) of one
+    group entry — its sidecar through the LRU, or the inline entries of
+    a group :func:`_read_descriptor` adapted from format 1."""
+    if "inline" in entry:
+        rels, by_rel = entry["inline"]
+        return rels, by_rel, None
+    return _load_group(root, entry["path"])
+
+
+def _legacy_group_entries(root: str, groups: list[dict]) -> list[dict]:
+    """The migration half of format 1: every inline group a commit is
+    about to publish is written out as an immutable sidecar (one-time
+    per table; orphaned sidecars from a lost CAS race are vacuumed like
+    data orphans). Sidecar-backed groups pass through unchanged."""
+    out = []
+    for g in groups:
+        if "inline" in g:
+            rels, by_rel = g["inline"]
+            g = {k: val for k, val in g.items() if k != "inline"}
+            g["path"] = _write_group_file(root, rels, by_rel)
+        out.append(g)
+    return out
 
 
 def _logical_stats(st: dict, mapping: dict) -> dict:
@@ -455,18 +500,16 @@ def _logical_stats(st: dict, mapping: dict) -> dict:
 def _resolve_manifest(root: str, version: int) -> dict:
     """A snapshot in the format-1 LOGICAL shape (``files`` / ``stats``
     / ``column_mapping`` / ``added_versions`` materialized) whichever
-    physical format stores it — every reader and rebase path consumes
-    this. For format 2 the per-group sidecars come through the LRU, so
-    repeated resolutions re-parse nothing."""
-    m = _read_manifest(root, version)
-    if "groups" not in m:
-        return m
+    physical format stores it — the full-snapshot readers consume this.
+    The per-group sidecars come through the LRU, so repeated
+    resolutions re-parse nothing."""
+    m = _read_descriptor(root, version)
     files: list[str] = []
     stats: dict = {}
     mapping: dict = {}
     added: dict = {}
     for entry in m["groups"]:
-        rels, by_rel, avs = _load_group(root, entry["path"])
+        rels, by_rel, avs = _group_files(root, entry)
         files.extend(rels)
         mp = entry.get("mapping", {})
         av = int(entry.get("added_version", 0))
@@ -484,31 +527,35 @@ def _resolve_manifest(root: str, version: int) -> dict:
     return out
 
 
-def _subset_group_entry(
-    root: str, entry: dict, keep: set
-) -> dict | None:
-    """Shrink a group to the files in ``keep``: unchanged entry when
-    all survive, None when none do, else a REWRITTEN sidecar holding
-    the surviving subset (the original stays immutable for older
-    versions; vacuum reclaims it when no retained descriptor points
-    at it)."""
-    rels, by_rel, avs = _load_group(root, entry["path"])
-    kept = [r for r in rels if r in keep]
-    if len(kept) == len(rels):
-        return entry
-    if not kept:
-        return None
-    sub = _new_group_entry(
-        root, kept, {r: by_rel.get(r, {}) for r in kept},
-        mapping=entry.get("mapping", {}),
-        av_by_rel={r: int(avs[r]) for r in kept} if avs is not None else None,
-    )
-    sub["added_version"] = (
-        min(int(avs[r]) for r in kept)
-        if avs is not None
-        else int(entry.get("added_version", 0))
-    )
-    return sub
+def _subset_groups(root: str, groups: list[dict], keep: set) -> list[dict]:
+    """Shrink each group to its files in ``keep``: an unchanged entry
+    when all survive, dropped when none do, else a REWRITTEN sidecar
+    holding the surviving subset (the original stays immutable for
+    older versions; vacuum reclaims it when no retained descriptor
+    points at it)."""
+    out = []
+    for entry in groups:
+        rels, by_rel, avs = _group_files(root, entry)
+        kept = [r for r in rels if r in keep]
+        if len(kept) == len(rels):
+            out.append(entry)
+            continue
+        if not kept:
+            continue
+        sub = _new_group_entry(
+            root, kept, {r: by_rel.get(r, {}) for r in kept},
+            mapping=entry.get("mapping", {}),
+            av_by_rel=(
+                {r: int(avs[r]) for r in kept} if avs is not None else None
+            ),
+        )
+        sub["added_version"] = (
+            min(int(avs[r]) for r in kept)
+            if avs is not None
+            else int(entry.get("added_version", 0))
+        )
+        out.append(sub)
+    return out
 
 
 def _live_delete_files_grouped(
@@ -529,26 +576,41 @@ def _live_delete_files_grouped(
 
 
 def _descriptor_payload(
-    groups: list[dict], schema, op: str, added: int,
-    delete_files: list[dict], meta: dict | None = None,
+    cur: dict | None, groups: list[dict], op: str, added: int,
+    meta: dict | None = None, schema=None,
+    new_deletes: Sequence[dict] = (),
 ) -> dict:
+    """The descriptor a data commit publishes over ``cur`` (None for a
+    fresh table): ``groups``, ``cur``'s logical schema (``schema`` when
+    it records none), ``cur``'s delete entries that some group can
+    still reach, then the commit's own ``new_deletes``."""
+    cur = cur or {}
     return {
         "format": 2,
         "groups": groups,
-        "schema": schema,
+        "schema": cur.get("schema", schema),
         "op": op,
         "added": added,
-        "delete_files": delete_files,
+        "delete_files": _live_delete_files_grouped(
+            groups, cur.get("delete_files", [])
+        ) + list(new_deletes),
         **(meta or {}),
     }
+
+
+def _pin(root: str, version: int | None) -> int:
+    """The snapshot a read addresses — latest when ``version`` is None;
+    raises on a table with no commit."""
+    v = current_version(root) if version is None else int(version)
+    if v < 0:
+        raise ValidationError(f"no committed snapshot at '{root}'")
+    return v
 
 
 def snapshot_files(root: str, version: int | None = None) -> tuple[int, list[str]]:
     """(version, absolute data-file paths) of a snapshot — latest when
     ``version`` is None."""
-    v = current_version(root) if version is None else int(version)
-    if v < 0:
-        raise ValidationError(f"no committed snapshot at '{root}'")
+    v = _pin(root, version)
     m = _resolve_manifest(root, v)
     return v, [os.path.join(root, rel) for rel in m["files"]]
 
@@ -557,10 +619,9 @@ def snapshot_delete_files(root: str, version: int | None = None) -> list[dict]:
     """The snapshot's LIVE equality-delete entries (each
     ``{"path", "column", "version"}``) — empty once compaction has
     rewritten every file the deletes applied to."""
-    v = current_version(root) if version is None else int(version)
-    if v < 0:
-        raise ValidationError(f"no committed snapshot at '{root}'")
-    return list(_read_manifest(root, v).get("delete_files", []))
+    return list(
+        _read_manifest(root, _pin(root, version)).get("delete_files", [])
+    )
 
 
 _DELETE_SCHEMA_MEMO: dict[str, object] = {}
@@ -791,9 +852,7 @@ def read_snapshot(
     scans — the property a training run pins a data snapshot with.
     Time travel pins the SCHEMA too: reading v1 after a v2 rename
     still yields v1's column names."""
-    v = current_version(root) if version is None else int(version)
-    if v < 0:
-        raise ValidationError(f"no committed snapshot at '{root}'")
+    v = _pin(root, version)
     key = (os.path.normpath(root), v)
     try:
         st = os.stat(os.path.join(root, _manifest_name(v)))
@@ -817,56 +876,77 @@ def read_snapshot(
     return df
 
 
-def snapshot_files_pruned(
+# ---------------------------------------------------------------------------
+# file pruning — ONE group walk behind every pruned read
+
+
+def _prune_files(
     root: str,
-    column: str,
-    lo,
-    hi,
-    version: int | None = None,
+    version: int | None,
+    admit,
+    files_admit=None,
     _memo: dict | None = None,
 ) -> tuple[int, list[str], int]:
-    """(version, kept absolute file paths, total files in version):
-    drop files whose manifest [min,max] for ``column`` cannot overlap
-    [lo, hi] — data skipping decided from manifest metadata alone,
-    BEFORE Spark lists or opens anything. Files without recorded stats
-    for the column are conservatively KEPT (pruning must never change
-    results, only bytes read). Format-2 snapshots prune at the GROUP
-    level first: a sidecar whose summary [min,max] is disjoint from
-    [lo, hi] is skipped without being opened — the metadata read is
-    O(surviving groups), not O(table files)."""
-    v = current_version(root) if version is None else int(version)
-    if v < 0:
-        raise ValidationError(f"no committed snapshot at '{root}'")
-    m = _read_manifest(root, v)
-    if "groups" not in m:
-        stats = m.get("stats", {})
-        kept = []
-        for rel in m["files"]:
-            mm = stats.get(rel, {}).get(column)
-            if mm is not None and (mm[0] > hi or mm[1] < lo):
-                continue  # provably disjoint from [lo, hi]
-            kept.append(rel)
-        return v, [os.path.join(root, r) for r in kept], len(m["files"])
+    """(version, kept absolute paths, total files in version): the one
+    file pruner every ``snapshot_files_*pruned*`` function runs —
+    data skipping decided from manifest metadata alone, BEFORE Spark
+    lists or opens anything, pruning at TWO levels.
+
+    ``admit(minmax, mapping)`` is the range test: ``minmax`` maps
+    PHYSICAL column names to ``[min, max]`` and ``mapping`` is the
+    group's logical→physical column mapping. It runs first on a group's
+    summary rollup — a group it rules out is skipped without its
+    sidecar being opened, so the metadata read is O(surviving groups),
+    not O(table files) — and then on each file's stats entry. A column
+    without stats must be admitted (pruning may never change results,
+    only bytes read). ``files_admit(entries, mapping)``, when given, is
+    a batch test over the stats entries of a group's range-admitted
+    files (the bloom tests), one bool per entry. ``_memo`` receives
+    ``rel -> (mapping, added_version)`` for every kept file — what
+    :func:`_restricted_view` assembles the pruned read from."""
+    v = _pin(root, version)
     kept, total = [], 0
-    for entry in m["groups"]:
-        total += int(entry["count"])
-        phys = entry.get("mapping", {}).get(column, column)
-        gmm = entry.get("summary", {}).get("minmax", {}).get(phys)
-        if gmm is not None and (gmm[0] > hi or gmm[1] < lo):
-            continue  # whole sidecar provably disjoint — never opened
-        rels, by_rel, avs = _load_group(root, entry["path"])
-        mp = entry.get("mapping", {})
-        av = int(entry.get("added_version", 0))
-        for rel in rels:
-            mm = by_rel.get(rel, {}).get(phys)
-            if mm is not None and (mm[0] > hi or mm[1] < lo):
-                continue
-            kept.append(rel)
-            if _memo is not None:
-                _memo[rel] = (
-                    mp, int(avs[rel]) if avs is not None else av
-                )
+    for g in _read_descriptor(root, v)["groups"]:
+        total += int(g["count"])
+        mp = g.get("mapping", {})
+        if not admit(g.get("summary", {}).get("minmax", {}), mp):
+            continue  # whole group provably outside — never opened
+        rels, by_rel, avs = _group_files(root, g)
+        cands = [r for r in rels if admit(by_rel.get(r, {}), mp)]
+        if files_admit is not None and cands:
+            oks = files_admit([by_rel.get(r, {}) for r in cands], mp)
+            cands = [r for r, ok in zip(cands, oks) if ok]
+        kept.extend(cands)
+        if _memo is not None:
+            av = int(g.get("added_version", 0))
+            for r in cands:
+                _memo[r] = (mp, int(avs[r]) if avs is not None else av)
     return v, [os.path.join(root, r) for r in kept], total
+
+
+def _overlaps(column: str, lo, hi):
+    """Range admit test: [min,max] of ``column`` can overlap [lo, hi]."""
+
+    def admit(minmax: dict, mp: dict) -> bool:
+        mm = minmax.get(mp.get(column, column))
+        return mm is None or not (mm[0] > hi or mm[1] < lo)
+
+    return admit
+
+
+def _holds_any(column: str, values):
+    """Range admit test: [min,max] of ``column`` can hold one of
+    ``values``."""
+
+    def admit(minmax: dict, mp: dict) -> bool:
+        mm = minmax.get(mp.get(column, column))
+        return mm is None or any(mm[0] <= x <= mm[1] for x in values)
+
+    return admit
+
+
+def _admit_all(_minmax: dict, _mp: dict) -> bool:
+    return True
 
 
 def _restricted_view(md: dict, memo: dict, files_abs: list[str], root: str) -> dict:
@@ -888,6 +968,35 @@ def _restricted_view(md: dict, memo: dict, files_abs: list[str], root: str) -> d
     }
 
 
+def _read_pruned(
+    spark: SparkSession, root: str, prune
+) -> tuple[DataFrame, list[str]]:
+    """(scan, kept absolute paths) of the files ``prune(memo)`` keeps —
+    a pruned-files call returning (version, files, total) — under the
+    snapshot's logical schema, through :func:`_restricted_view`."""
+    memo: dict = {}
+    v, files, _total = prune(memo)
+    view = _restricted_view(_read_manifest(root, v), memo, files, root)
+    return _apply_logical_schema(spark, root, view, files=files), files
+
+
+def snapshot_files_pruned(
+    root: str,
+    column: str,
+    lo,
+    hi,
+    version: int | None = None,
+    _memo: dict | None = None,
+) -> tuple[int, list[str], int]:
+    """(version, kept absolute file paths, total files in version):
+    drop files whose manifest [min,max] for ``column`` cannot overlap
+    [lo, hi]. Files without recorded stats for the column are
+    conservatively KEPT; a group whose summary [min,max] is disjoint
+    from [lo, hi] is skipped without its sidecar being opened
+    (:func:`_prune_files`)."""
+    return _prune_files(root, version, _overlaps(column, lo, hi), _memo=_memo)
+
+
 def read_snapshot_pruned(
     spark: SparkSession,
     root: str,
@@ -902,21 +1011,12 @@ def read_snapshot_pruned(
     construction — just fewer files opened."""
     from pyspark.sql import functions as F
 
-    v = current_version(root) if version is None else int(version)
-    if v < 0:
-        raise ValidationError(f"no committed snapshot at '{root}'")
-    md = _read_manifest(root, v)
-    if "groups" not in md:
-        m = _resolve_manifest(root, v)
-        _v, files, _total = snapshot_files_pruned(root, column, lo, hi, v)
-        df = _apply_logical_schema(spark, root, m, files=files)
-        return df.filter(F.col(column).between(lo, hi))
-    memo: dict = {}
-    _v, files, _total = snapshot_files_pruned(
-        root, column, lo, hi, v, _memo=memo
-    )
-    df = _apply_logical_schema(
-        spark, root, _restricted_view(md, memo, files, root), files=files
+    df, _files = _read_pruned(
+        spark,
+        root,
+        lambda memo: snapshot_files_pruned(
+            root, column, lo, hi, version, _memo=memo
+        ),
     )
     return df.filter(F.col(column).between(lo, hi))
 
@@ -968,10 +1068,6 @@ def snapshot_files_probe_pruned(
 
     import numpy as _np
 
-    v = current_version(root) if version is None else int(version)
-    if v < 0:
-        raise ValidationError(f"no committed snapshot at '{root}'")
-    m = _read_manifest(root, v)
     cvals = None if cluster_col is None else set(cluster_values)
     pvals = list(probe_values)
     # probe positions are a pure function of (value, m, k): hash each
@@ -991,12 +1087,6 @@ def snapshot_files_probe_pruned(
                     out[i, pos // 8] |= 1 << (pos % 8)
             mask_cache[(m_bits, k_hashes)] = got = out
         return got
-
-    def cluster_ok(entry: dict, c_phys: str | None) -> bool:
-        if cvals is None:
-            return True
-        mm = (entry or {}).get(c_phys)
-        return mm is None or any(mm[0] <= x <= mm[1] for x in cvals)
 
     probe_hashes = (
         None
@@ -1109,51 +1199,15 @@ def snapshot_files_probe_pruned(
                 out[i] = bool(admitted[j])
         return out
 
-    if "groups" not in m:
-        stats = m.get("stats", {})
-        cands = [
-            rel
-            for rel in m["files"]
-            if cluster_ok(stats.get(rel, {}), cluster_col)
-        ]
-        admits = bloom_batch_admits(
-            [stats.get(r, {}) for r in cands], bloom_col
-        )
-        kept = [r for r, a in zip(cands, admits) if a]
-        return v, [os.path.join(root, r) for r in kept], len(m["files"])
-    kept, total = [], 0
-    for ge in m["groups"]:
-        total += int(ge["count"])
-        mp = ge.get("mapping", {})
-        c_phys = (
-            None if cluster_col is None else mp.get(cluster_col, cluster_col)
-        )
-        b_phys = mp.get(bloom_col, bloom_col)
-        if cvals is not None:
-            gmm = ge.get("summary", {}).get("minmax", {}).get(c_phys)
-            if gmm is not None and not any(
-                gmm[0] <= x <= gmm[1] for x in cvals
-            ):
-                continue  # whole sidecar outside the probed slice
-        rels, by_rel, avs = _load_group(root, ge["path"])
-        av = int(ge.get("added_version", 0))
-        cands = [
-            rel
-            for rel in rels
-            if cluster_ok(by_rel.get(rel, {}), c_phys)
-        ]
-        admits = bloom_batch_admits(
-            [by_rel.get(r, {}) for r in cands], b_phys
-        )
-        for rel, admit in zip(cands, admits):
-            if not admit:
-                continue
-            kept.append(rel)
-            if _memo is not None:
-                _memo[rel] = (
-                    mp, int(avs[rel]) if avs is not None else av
-                )
-    return v, [os.path.join(root, r) for r in kept], total
+    return _prune_files(
+        root,
+        version,
+        _admit_all if cvals is None else _holds_any(cluster_col, cvals),
+        lambda entries, mp: bloom_batch_admits(
+            entries, mp.get(bloom_col, bloom_col)
+        ),
+        _memo=_memo,
+    )
 
 
 def read_snapshot_probe_pruned(
@@ -1181,27 +1235,15 @@ def read_snapshot_probe_pruned(
     pruning."""
     from pyspark.sql import functions as F
 
-    v = current_version(root) if version is None else int(version)
-    if v < 0:
-        raise ValidationError(f"no committed snapshot at '{root}'")
-    md = _read_manifest(root, v)
-    if "groups" not in md:
-        m = _resolve_manifest(root, v)
-        _v, files, _total = snapshot_files_probe_pruned(
-            root, cluster_col, cluster_values, bloom_col, probe_values, v,
-            probe_hash=probe_hash, file_bucket=file_bucket,
-        )
-        df = _apply_logical_schema(spark, root, m, files=files)
-    else:
-        memo: dict = {}
-        _v, files, _total = snapshot_files_probe_pruned(
-            root, cluster_col, cluster_values, bloom_col, probe_values, v,
-            _memo=memo, probe_hash=probe_hash, file_bucket=file_bucket,
-        )
-        df = _apply_logical_schema(
-            spark, root, _restricted_view(md, memo, files, root),
-            files=files,
-        )
+    df, files = _read_pruned(
+        spark,
+        root,
+        lambda memo: snapshot_files_probe_pruned(
+            root, cluster_col, cluster_values, bloom_col, probe_values,
+            version, _memo=memo, probe_hash=probe_hash,
+            file_bucket=file_bucket,
+        ),
+    )
     if files_out is not None:
         files_out.extend(files)
     if row_filter:
@@ -1419,15 +1461,6 @@ def _compute_file_blooms(
     return out
 
 
-def _merge_bloom_stats(
-    new_stats: dict, blooms_by_col: dict[str, dict[str, dict]]
-) -> dict:
-    for column, per_file in blooms_by_col.items():
-        for rel, bloom in per_file.items():
-            new_stats.setdefault(rel, {})[bloom_key(column)] = bloom
-    return new_stats
-
-
 def _bloom_admits(stats_entry: dict | None, column: str, value) -> bool:
     """False only when the file's bloom PROVES the value absent; files
     without a bloom for the column are conservatively admitted."""
@@ -1454,46 +1487,18 @@ def snapshot_files_pruned_eq(
     of the range stats — the case blooms exist for is a file whose
     [min,max] spans the probe value (interleaved keys, z-order
     residue) but which provably does not contain it."""
-    v = current_version(root) if version is None else int(version)
-    if v < 0:
-        raise ValidationError(f"no committed snapshot at '{root}'")
-    me = _read_manifest(root, v)
-    if "groups" not in me:
-        stats = me.get("stats", {})
-        kept, kept_minmax = [], 0
-        for rel in me["files"]:
-            entry = stats.get(rel, {})
-            mm = entry.get(column)
-            if mm is not None and not (mm[0] <= value <= mm[1]):
-                continue
-            kept_minmax += 1
-            if not _bloom_admits(entry, column, value):
-                continue
-            kept.append(rel)
-        return (
-            v,
-            [os.path.join(root, r) for r in kept],
-            len(me["files"]),
-            kept_minmax,
-        )
-    kept, kept_minmax, total = [], 0, 0
-    for ge in me["groups"]:
-        total += int(ge["count"])
-        phys = ge.get("mapping", {}).get(column, column)
-        gmm = ge.get("summary", {}).get("minmax", {}).get(phys)
-        if gmm is not None and not (gmm[0] <= value <= gmm[1]):
-            continue  # whole sidecar outside the point — never opened
-        rels, by_rel, _avs = _load_group(root, ge["path"])
-        for rel in rels:
-            entry = by_rel.get(rel, {})
-            mm = entry.get(phys)
-            if mm is not None and not (mm[0] <= value <= mm[1]):
-                continue
-            kept_minmax += 1
-            if not _bloom_admits(entry, phys, value):
-                continue
-            kept.append(rel)
-    return v, [os.path.join(root, r) for r in kept], total, kept_minmax
+    kept_minmax = 0
+
+    def bloom_admits(entries: list[dict], mp: dict) -> list[bool]:
+        nonlocal kept_minmax
+        kept_minmax += len(entries)
+        phys = mp.get(column, column)
+        return [_bloom_admits(e, phys, value) for e in entries]
+
+    v, kept, total = _prune_files(
+        root, version, _holds_any(column, (value,)), bloom_admits
+    )
+    return v, kept, total, kept_minmax
 
 
 def commit_append_clustered(
@@ -1519,65 +1524,13 @@ def commit_append_clustered(
     The batch must match the table's recorded schema, as in
     :func:`commit_append`; a divergent batch is refused before any
     file is written."""
-    os.makedirs(root, exist_ok=True)
-    batch = df.drop("_cluster")
-    v0 = current_version(root)
-    logical = _read_manifest(root, v0).get("schema") if v0 >= 0 else None
-    if logical is not None:
-        _check_append_schema(root, logical, batch)
-    new = _write_data_files_clustered(df, root, column)
-    new_stats = _footer_stats(root, new)
-    if bloom_columns:
-        rels_bloom = new
-        if bloom_cluster_prefix is not None:
-            # a clustered file's value IS its [min,max] on the cluster
-            # column (min==max by construction)
-            rels_bloom = [
-                r
-                for r in new
-                if str(
-                    (new_stats.get(r, {}).get(column) or [""])[0]
-                ).startswith(bloom_cluster_prefix)
-            ]
-        new_stats = _merge_bloom_stats(
-            new_stats,
-            {
-                c: _compute_file_blooms(
-                    root, rels_bloom, c, int(bloom_bits), int(bloom_hashes)
-                )
-                for c in bloom_columns
-            },
-        )
-    schema = _schema_payload(batch)
-    new_entry = _new_group_entry(root, new, new_stats)
-    for _ in range(_MAX_COMMIT_RETRIES):
-        v = current_version(root)
-        nxt = v + 1 if v >= 0 else 1
-        if v >= 0:
-            cur = _read_manifest(root, v)
-            groups = _groups_of(root, cur)
-            dels = cur.get("delete_files", [])
-            schema_out = cur.get("schema", schema)
-            if cur.get("schema") is not None:
-                _check_append_schema(root, cur["schema"], batch)
-        else:
-            groups, dels = [], []
-            schema_out = schema
-        all_groups = groups + [{**new_entry, "added_version": nxt}]
-        payload = _descriptor_payload(
-            all_groups,
-            schema_out,
-            "append",
-            len(new),
-            _live_delete_files_grouped(all_groups, dels),
-            meta,
-        )
-        if _try_commit_manifest(root, nxt, payload):
-            return nxt
-    raise CommitConflictError(
-        f"commit_append_clustered at '{root}': CAS retry budget "
-        f"({_MAX_COMMIT_RETRIES}) exhausted under contention"
+    batch, entry = _stage_batch(
+        root, df, "commit_append_clustered", cluster=column,
+        bloom_columns=bloom_columns,
+        bloom_cluster_prefix=bloom_cluster_prefix,
+        bloom_bits=bloom_bits, bloom_hashes=bloom_hashes,
     )
+    return _append_commit(root, "commit_append_clustered", batch, entry, meta)
 
 
 def zorder_column(columns: list, bits: int = 16):
@@ -1655,46 +1608,9 @@ def snapshot_files_pruned_in(
     [min,max] for ``column`` provably contains NONE of ``values`` —
     the probe-set shape of file skipping (IVF: keep only probed list
     files). Files without stats are conservatively kept."""
-    v = current_version(root) if version is None else int(version)
-    if v < 0:
-        raise ValidationError(f"no committed snapshot at '{root}'")
-    m = _read_manifest(root, v)
-    vals = set(values)
-    if "groups" not in m:
-        stats = m.get("stats", {})
-        kept = []
-        for rel in m["files"]:
-            mm = stats.get(rel, {}).get(column)
-            if mm is not None and not any(
-                mm[0] <= x <= mm[1] for x in vals
-            ):
-                continue
-            kept.append(rel)
-        return v, [os.path.join(root, r) for r in kept], len(m["files"])
-    kept, total = [], 0
-    for ge in m["groups"]:
-        total += int(ge["count"])
-        phys = ge.get("mapping", {}).get(column, column)
-        gmm = ge.get("summary", {}).get("minmax", {}).get(phys)
-        if gmm is not None and not any(
-            gmm[0] <= x <= gmm[1] for x in vals
-        ):
-            continue  # no probed value can live in this sidecar
-        rels, by_rel, avs = _load_group(root, ge["path"])
-        mp = ge.get("mapping", {})
-        av = int(ge.get("added_version", 0))
-        for rel in rels:
-            mm = by_rel.get(rel, {}).get(phys)
-            if mm is not None and not any(
-                mm[0] <= x <= mm[1] for x in vals
-            ):
-                continue
-            kept.append(rel)
-            if _memo is not None:
-                _memo[rel] = (
-                    mp, int(avs[rel]) if avs is not None else av
-                )
-    return v, [os.path.join(root, r) for r in kept], total
+    return _prune_files(
+        root, version, _holds_any(column, set(values)), _memo=_memo
+    )
 
 
 def read_snapshot_pruned_in(
@@ -1709,23 +1625,12 @@ def read_snapshot_pruned_in(
     unpruned filtered read, fewer files opened."""
     from pyspark.sql import functions as F
 
-    v = current_version(root) if version is None else int(version)
-    if v < 0:
-        raise ValidationError(f"no committed snapshot at '{root}'")
-    md = _read_manifest(root, v)
-    if "groups" not in md:
-        m = _resolve_manifest(root, v)
-        _v, files, _total = snapshot_files_pruned_in(
-            root, column, values, v
-        )
-        df = _apply_logical_schema(spark, root, m, files=files)
-        return df.filter(F.col(column).isin(list(values)))
-    memo: dict = {}
-    _v, files, _total = snapshot_files_pruned_in(
-        root, column, values, v, _memo=memo
-    )
-    df = _apply_logical_schema(
-        spark, root, _restricted_view(md, memo, files, root), files=files
+    df, _files = _read_pruned(
+        spark,
+        root,
+        lambda memo: snapshot_files_pruned_in(
+            root, column, values, version, _memo=memo
+        ),
     )
     return df.filter(F.col(column).isin(list(values)))
 
@@ -1740,52 +1645,13 @@ def snapshot_files_pruned_multi(
     each file is a compact box in the combined key space, so the
     intersection prunes multiplicatively where single-column
     clustering prunes on one column only."""
-    v = current_version(root) if version is None else int(version)
-    if v < 0:
-        raise ValidationError(f"no committed snapshot at '{root}'")
-    m = _read_manifest(root, v)
-    if "groups" not in m:
-        stats = m.get("stats", {})
-        kept = []
-        for rel in m["files"]:
-            st = stats.get(rel, {})
-            drop = False
-            for column, lo, hi in preds:
-                mm = st.get(column)
-                if mm is not None and (mm[0] > hi or mm[1] < lo):
-                    drop = True
-                    break
-            if not drop:
-                kept.append(rel)
-        return v, [os.path.join(root, r) for r in kept], len(m["files"])
-    kept, total = [], 0
-    for ge in m["groups"]:
-        total += int(ge["count"])
-        mp = ge.get("mapping", {})
-        smm = ge.get("summary", {}).get("minmax", {})
-        if any(
-            smm.get(mp.get(c, c)) is not None
-            and (smm[mp.get(c, c)][0] > hi or smm[mp.get(c, c)][1] < lo)
-            for c, lo, hi in preds
-        ):
-            continue  # sidecar disjoint from some conjunct — skipped
-        rels, by_rel, avs = _load_group(root, ge["path"])
-        av = int(ge.get("added_version", 0))
-        for rel in rels:
-            st = by_rel.get(rel, {})
-            drop = False
-            for column, lo, hi in preds:
-                mm = st.get(mp.get(column, column))
-                if mm is not None and (mm[0] > hi or mm[1] < lo):
-                    drop = True
-                    break
-            if not drop:
-                kept.append(rel)
-                if _memo is not None:
-                    _memo[rel] = (
-                        mp, int(avs[rel]) if avs is not None else av
-                    )
-    return v, [os.path.join(root, r) for r in kept], total
+    tests = [_overlaps(c, lo, hi) for c, lo, hi in preds]
+    return _prune_files(
+        root,
+        version,
+        lambda minmax, mp: all(t(minmax, mp) for t in tests),
+        _memo=_memo,
+    )
 
 
 def read_snapshot_pruned_multi(
@@ -1799,23 +1665,12 @@ def read_snapshot_pruned_multi(
     filtered read, files opened ∝ the predicate box's grid cells."""
     from pyspark.sql import functions as F
 
-    v = current_version(root) if version is None else int(version)
-    if v < 0:
-        raise ValidationError(f"no committed snapshot at '{root}'")
-    md = _read_manifest(root, v)
-    if "groups" not in md:
-        m = _resolve_manifest(root, v)
-        _v, files, _total = snapshot_files_pruned_multi(root, preds, v)
-        df = _apply_logical_schema(spark, root, m, files=files)
-        for column, lo, hi in preds:
-            df = df.filter(F.col(column).between(lo, hi))
-        return df
-    memo: dict = {}
-    _v, files, _total = snapshot_files_pruned_multi(
-        root, preds, v, _memo=memo
-    )
-    df = _apply_logical_schema(
-        spark, root, _restricted_view(md, memo, files, root), files=files
+    df, _files = _read_pruned(
+        spark,
+        root,
+        lambda memo: snapshot_files_pruned_multi(
+            root, preds, version, _memo=memo
+        ),
     )
     for column, lo, hi in preds:
         df = df.filter(F.col(column).between(lo, hi))
@@ -1870,24 +1725,20 @@ def commit_replace_values(
     replaced values conflicts. Pass ``base_version`` = the version the
     replacement content was derived from when a writer may land
     between that read and this call (commit_rewrite's rule)."""
-    base_v = (
-        current_version(root) if base_version is None else int(base_version)
-    )
-    if base_v < 0:
-        raise ValidationError(
-            f"nothing to replace at '{root}': no committed snapshot"
-        )
+    base_v, base_files = _rewrite_base(root, base_version, "replace")
     vals = set(values)
-    base_files = set(_resolve_manifest(root, base_v)["files"])
-    new = _write_data_files_clustered(df, root, column)
-    new_stats = _footer_stats(root, new)
-    new_entry = _new_group_entry(root, new, new_stats)
-    for _ in range(_MAX_COMMIT_RETRIES):
-        v = current_version(root)
-        curd = _read_manifest(root, v)
-        cur = _resolve_manifest(root, v)
-        cur_files = set(cur["files"])
-        if not base_files <= cur_files:
+    batch, entry = _stage_batch(
+        root, df, "commit_replace_values", cluster=column
+    )
+
+    def build(nxt: int, cur: dict) -> dict:
+        # the replace column's [min,max] per current file, in file order
+        mm_of: dict = {}
+        for g in cur["groups"]:
+            rels, by_rel, _avs = _group_files(root, g)
+            phys = g.get("mapping", {}).get(column, column)
+            mm_of.update((r, by_rel.get(r, {}).get(phys)) for r in rels)
+        if not base_files <= mm_of.keys():
             raise CommitConflictError(
                 f"commit_replace_values at '{root}': base version "
                 f"{base_v} files were replaced by a concurrent commit"
@@ -1895,10 +1746,8 @@ def commit_replace_values(
         _check_no_deletes_since_base(
             cur, base_v, "commit_replace_values", root
         )
-        cur_stats = cur.get("stats", {})
-        carried = []
-        for rel in cur["files"]:
-            mm = cur_stats.get(rel, {}).get(column)
+        carried = set()
+        for rel, mm in mm_of.items():
             if mm is None:
                 raise ValidationError(
                     f"commit_replace_values at '{root}': file '{rel}' "
@@ -1914,7 +1763,7 @@ def commit_replace_values(
                     f"replacing it would drop unreplaced rows"
                 )
             if cls == "disjoint":
-                carried.append(rel)
+                carried.add(rel)
             elif rel not in base_files:
                 # a concurrent commit added rows INTO a replaced
                 # cluster after our base — folding it away would lose
@@ -1926,32 +1775,13 @@ def commit_replace_values(
         # carried files stay in their (possibly shrunken) sidecars —
         # only groups that LOST files get a rewritten subset sidecar,
         # untouched groups are carried by reference
-        carried_set = set(carried)
-        kept_groups = [
-            g
-            for g in (
-                _subset_group_entry(root, e, carried_set)
-                for e in _groups_of(root, curd)
-            )
-            if g is not None
-        ]
-        all_groups = kept_groups + [{**new_entry, "added_version": v + 1}]
-        payload = _descriptor_payload(
-            all_groups,
-            cur.get("schema"),
-            "replace",
-            len(new),
-            _live_delete_files_grouped(
-                all_groups, cur.get("delete_files", [])
-            ),
-            meta,
+        groups = _subset_groups(root, cur["groups"], carried)
+        groups.append({**entry, "added_version": nxt})
+        return _descriptor_payload(
+            cur, groups, "replace", entry["count"], meta
         )
-        if _try_commit_manifest(root, v + 1, payload):
-            return v + 1
-    raise CommitConflictError(
-        f"commit_replace_values at '{root}': CAS retry budget "
-        f"({_MAX_COMMIT_RETRIES}) exhausted under contention"
-    )
+
+    return _commit(root, "commit_replace_values", build, batch=batch)
 
 
 def _footer_stats(root: str, rels: list[str]) -> dict:
@@ -2065,95 +1895,47 @@ def manifest_column_stats(
     ``choose_backend_costed`` consume it unchanged. Raises when a file
     lacks the needed footer/bloom coverage — a wrong estimate only
     costs performance, but a silently PARTIAL one would be unbounded-
-    wrong, so absence is loud."""
-    v = current_version(root) if version is None else int(version)
-    if v < 0:
-        raise ValidationError(f"no committed snapshot at '{root}'")
-    me = _read_manifest(root, v)
-    if "groups" in me:
-        # format 2: fold the DESCRIPTOR summaries alone — row/null
-        # counts sum, min/max fold, ndv from the per-group bloom
-        # UNIONS (union of unions == union of per-file bitsets), so
-        # planner statistics cost O(groups) with zero sidecar reads
-        total = 0
-        for g in me["groups"]:
-            rows = g.get("summary", {}).get("rows")
-            if rows is None:
-                raise ValidationError(
-                    f"manifest_column_stats at '{root}': sidecar "
-                    f"'{g['path']}' predates footer row counts — "
-                    f"recommit or OPTIMIZE"
-                )
-            total += int(rows)
-        out = {"__table__": {"count": total}}
-        for col in columns:
-            nulls = 0
-            mn = mx = None
-            blooms = []
-            for g in me["groups"]:
-                s = g.get("summary", {})
-                phys = g.get("mapping", {}).get(col, col)
-                if phys not in s.get("nulls", {}):
-                    raise ValidationError(
-                        f"manifest_column_stats at '{root}': sidecar "
-                        f"'{g['path']}' has no null count for '{col}'"
-                    )
-                nulls += int(s["nulls"][phys])
-                mm = s.get("minmax", {}).get(phys)
-                if mm is not None:
-                    mn = mm[0] if mn is None else min(mn, mm[0])
-                    mx = mm[1] if mx is None else max(mx, mm[1])
-                bl = s.get("bloom", {}).get(phys)
-                if bl is None:
-                    raise ValidationError(
-                        f"manifest_column_stats at '{root}': sidecar "
-                        f"'{g['path']}' has no bloom for '{col}' — "
-                        f"commit with bloom_columns=['{col}'] to "
-                        f"enable ndv estimation"
-                    )
-                blooms.append(bl)
-            out[col] = {
-                "count": total,
-                "nulls": nulls,
-                "ndv": ndv_from_blooms(blooms),
-                "min": mn,
-                "max": mx,
-            }
-        return out
-    stats = me.get("stats", {})
+    wrong, so absence is loud. The fold reads the DESCRIPTOR summaries
+    alone — row/null counts sum, min/max fold, ndv from the per-group
+    bloom UNIONS (union of unions == union of per-file bitsets) — so
+    planner statistics cost O(groups) with zero sidecar reads."""
+    groups = _read_descriptor(root, _pin(root, version))["groups"]
+
+    def missing(g: dict, what: str) -> ValidationError:
+        return ValidationError(
+            f"manifest_column_stats at '{root}': sidecar "
+            f"'{g.get('path', 'inline')}' {what}"
+        )
+
     total = 0
-    for rel in me["files"]:
-        entry = stats.get(rel, {})
-        if "__rows__" not in entry:
-            raise ValidationError(
-                f"manifest_column_stats at '{root}': file '{rel}' "
-                f"predates footer row counts — recommit or OPTIMIZE"
+    for g in groups:
+        rows = g.get("summary", {}).get("rows")
+        if rows is None:
+            raise missing(
+                g, "predates footer row counts — recommit or OPTIMIZE"
             )
-        total += int(entry["__rows__"])
+        total += int(rows)
     out: dict = {"__table__": {"count": total}}
     for col in columns:
         nulls = 0
         mn = mx = None
         blooms = []
-        for rel in me["files"]:
-            entry = stats.get(rel, {})
-            nk = f"__nulls__:{col}"
-            if nk not in entry:
-                raise ValidationError(
-                    f"manifest_column_stats at '{root}': file '{rel}' "
-                    f"has no null count for '{col}'"
-                )
-            nulls += int(entry[nk])
-            mm = entry.get(col)
+        for g in groups:
+            s = g.get("summary", {})
+            phys = g.get("mapping", {}).get(col, col)
+            if phys not in s.get("nulls", {}):
+                raise missing(g, f"has no null count for '{col}'")
+            nulls += int(s["nulls"][phys])
+            mm = s.get("minmax", {}).get(phys)
             if mm is not None:
                 mn = mm[0] if mn is None else min(mn, mm[0])
                 mx = mm[1] if mx is None else max(mx, mm[1])
-            bl = entry.get(bloom_key(col))
+            bl = s.get("bloom", {}).get(phys)
             if bl is None:
-                raise ValidationError(
-                    f"manifest_column_stats at '{root}': file '{rel}' "
+                raise missing(
+                    g,
                     f"has no bloom for '{col}' — commit with "
-                    f"bloom_columns=['{col}'] to enable ndv estimation"
+                    f"bloom_columns=['{col}'] to enable ndv estimation",
                 )
             blooms.append(bl)
         out[col] = {
@@ -2228,10 +2010,16 @@ def _schema_payload(df: DataFrame) -> dict:
     return df.schema.jsonValue()
 
 
-def _check_append_schema(root: str, logical: dict, df: DataFrame) -> None:
+def _check_append_schema(
+    root: str, logical: dict, df: DataFrame, op: str = "commit_append"
+) -> None:
     """Raise unless every field of the ``logical`` schema is a column of
     the batch with the same Spark type — checked on the driver against
-    the batch's resolved schema, no Spark job."""
+    the batch's resolved schema, no Spark job. New files carry NO
+    column mapping, so a batch still written under pre-rename names (or
+    missing an added column) would otherwise commit fine and silently
+    read back as typed NULLs, and a divergent type would only fail
+    later, when a scan applies the recorded read schema."""
     from pyspark.sql import types as T
 
     have = {f.name: f.dataType.simpleString() for f in df.schema.fields}
@@ -2239,7 +2027,7 @@ def _check_append_schema(root: str, logical: dict, df: DataFrame) -> None:
     missing = [f.name for f in fields if f.name not in have]
     if missing:
         raise ValidationError(
-            f"commit_append at '{root}': batch lacks "
+            f"{op} at '{root}': batch lacks "
             f"physical column(s) {missing} of the table's "
             f"logical schema — align the batch first "
             f"(rename to current names / add typed-NULL "
@@ -2252,10 +2040,136 @@ def _check_append_schema(root: str, logical: dict, df: DataFrame) -> None:
     ]
     if wrong:
         raise ValidationError(
-            f"commit_append at '{root}': batch column type(s) differ "
+            f"{op} at '{root}': batch column type(s) differ "
             f"from the table's logical schema: {wrong} — cast the batch "
             f"first so its files read back under the recorded schema"
         )
+
+
+def _commit(
+    root: str, op: str, build_payload, batch: DataFrame | None = None
+) -> int:
+    """The ONE commit loop — every publish in this module runs it.
+
+    Each attempt reads the current version and its descriptor (None for
+    a fresh table), re-checks ``batch`` — the frame of an op that adds
+    data files — against the recorded logical schema (a concurrent
+    schema change may have landed since the op's own pre-write check),
+    asks ``build_payload(nxt, cur)`` for the descriptor of version
+    ``nxt`` rebased on ``cur``, persists any inline format-1 groups
+    the payload carries (:func:`_legacy_group_entries`), and tries the
+    CAS. ``build_payload`` raises :class:`CommitConflictError` itself
+    when the rebase is unsafe, and returns None when there is nothing
+    to publish (the current version is returned). A lost race re-reads
+    and retries; an exhausted budget raises one conflict naming
+    ``op``."""
+    for _ in range(_MAX_COMMIT_RETRIES):
+        v = current_version(root)
+        cur = _read_descriptor(root, v) if v >= 0 else None
+        if batch is not None and (cur or {}).get("schema") is not None:
+            _check_append_schema(root, cur["schema"], batch, op)
+        nxt = v + 1 if v >= 0 else 1  # versions are 1-based
+        payload = build_payload(nxt, cur)
+        if payload is None:
+            return v
+        payload["groups"] = _legacy_group_entries(root, payload["groups"])
+        # resolved as a module global on every attempt, so a test can
+        # stage a race by swapping it
+        if _try_commit_manifest(root, nxt, payload):
+            return nxt
+    raise CommitConflictError(
+        f"{op} at '{root}': CAS retry budget "
+        f"({_MAX_COMMIT_RETRIES}) exhausted under contention"
+    )
+
+
+def _stage_batch(
+    root: str,
+    df: DataFrame,
+    op: str,
+    n_files: int | None = 1,
+    cluster: str | None = None,
+    stats_columns: bool = True,
+    bloom_columns: list[str] | None = None,
+    bloom_cluster_prefix: str | None = None,
+    bloom_bits: int = BLOOM_BITS,
+    bloom_hashes: int = BLOOM_HASHES,
+) -> tuple[DataFrame, dict]:
+    """The prelude of every commit that adds data files, run once
+    before its CAS loop: refuse a batch that diverges from the table's
+    recorded schema BEFORE a byte is written, write the batch as
+    immutable data files (one per distinct ``cluster`` value when
+    given), harvest per-file footer stats, record per-file blooms for
+    ``bloom_columns`` (only on files whose cluster value starts with
+    ``bloom_cluster_prefix``, when given — blooming files nobody
+    probe-prunes re-reads their bytes per commit for nothing), and
+    write the batch's ONE immutable sidecar, which every rebase retry
+    reuses. Returns (the batch as checked — ``df`` without the
+    ``_cluster`` helper column — and its group entry, whose
+    ``added_version`` the commit stamps)."""
+    os.makedirs(root, exist_ok=True)
+    batch = df if cluster is None else df.drop("_cluster")
+    v = current_version(root)
+    logical = _read_manifest(root, v).get("schema") if v >= 0 else None
+    if logical is not None:
+        _check_append_schema(root, logical, batch, op)
+    if cluster is None:
+        new = _write_data_files(df, root, n_files)
+    else:
+        new = _write_data_files_clustered(df, root, cluster)
+    stats = _footer_stats(root, new) if stats_columns else {}
+    bloomed = new
+    if bloom_cluster_prefix is not None:
+        # a clustered file's value IS its [min,max] on the cluster
+        # column (min==max by construction)
+        bloomed = [
+            r
+            for r in new
+            if str((stats.get(r, {}).get(cluster) or [""])[0]).startswith(
+                bloom_cluster_prefix
+            )
+        ]
+    for c in bloom_columns or ():
+        blooms = _compute_file_blooms(
+            root, bloomed, c, int(bloom_bits), int(bloom_hashes)
+        )
+        for rel, bloom in blooms.items():
+            stats.setdefault(rel, {})[bloom_key(c)] = bloom
+    return batch, _new_group_entry(root, new, stats)
+
+
+def _append_commit(
+    root: str, op: str, batch: DataFrame, entry: dict, meta: dict | None
+) -> int:
+    """Publish a staged batch as v+1 = v's groups + the batch's group:
+    appends always rebase cleanly (append ∘ append commutes) and adopt
+    the table's current logical schema when one is recorded."""
+    schema = _schema_payload(batch)
+
+    def build(nxt: int, cur: dict | None) -> dict:
+        groups = (cur["groups"] if cur else []) + [
+            {**entry, "added_version": nxt}
+        ]
+        return _descriptor_payload(
+            cur, groups, "append", entry["count"], meta, schema=schema
+        )
+
+    return _commit(root, op, build, batch=batch)
+
+
+def _rewrite_base(
+    root: str, base_version: int | None, what: str
+) -> tuple[int, set[str]]:
+    """(version, its files) a replace-style commit rebases from: the
+    caller's pinned read, else the current version at entry."""
+    base_v = (
+        current_version(root) if base_version is None else int(base_version)
+    )
+    if base_v < 0:
+        raise ValidationError(
+            f"nothing to {what} at '{root}': no committed snapshot"
+        )
+    return base_v, set(_resolve_manifest(root, base_v)["files"])
 
 
 def commit_append(
@@ -2281,63 +2195,54 @@ def commit_append(
     micro-batch id — committed ATOMICALLY with the version, which is
     what makes :func:`last_committed_meta`-guarded foreachBatch sinks
     exactly-once under replay). ``stats_columns`` harvests per-file
-    min/max from the new files' footers for file skipping."""
-    os.makedirs(root, exist_ok=True)
-    new = _write_data_files(df, root, n_files)
-    new_stats = _footer_stats(root, new) if stats_columns else {}
-    if bloom_columns:
-        new_stats = _merge_bloom_stats(
-            new_stats,
-            {
-                c: _compute_file_blooms(
-                    root, new, c, BLOOM_BITS, BLOOM_HASHES
-                )
-                for c in bloom_columns
-            },
-        )
-    schema = _schema_payload(df)
-    # O(batch) metadata: one immutable sidecar for the batch, written
-    # ONCE before the CAS loop (a rebase retry reuses it) — the
-    # descriptor carries prior commits' sidecars by reference, so
-    # nothing existing is re-serialized however many files the table
-    # holds
-    new_entry = _new_group_entry(root, new, new_stats)
-    for _ in range(_MAX_COMMIT_RETRIES):
-        v = current_version(root)
-        nxt = v + 1 if v >= 0 else 1  # versions are 1-based
-        if v >= 0:
-            cur = _read_manifest(root, v)
-            groups = _groups_of(root, cur)
-            dels = cur.get("delete_files", [])
-            # appends adopt the table's current logical schema when one
-            # is recorded; new files carry NO column mapping, so every
-            # logical field must resolve to a physical column of the
-            # batch, of the recorded type — a batch still written under
-            # pre-rename names (or missing an added column) would
-            # otherwise commit fine and silently read back as typed
-            # NULLs, and a divergent type would only fail later, when a
-            # scan applies the recorded read schema
-            schema_out = cur.get("schema", schema)
-            if cur.get("schema") is not None:
-                _check_append_schema(root, cur["schema"], df)
-        else:
-            groups, dels = [], []
-            schema_out = schema
-        all_groups = groups + [{**new_entry, "added_version": nxt}]
-        payload = _descriptor_payload(
-            all_groups,
-            schema_out,
-            "append",
-            len(new),
-            _live_delete_files_grouped(all_groups, dels),
-            meta,
-        )
-        if _try_commit_manifest(root, nxt, payload):
-            return nxt
-    raise CommitConflictError(
-        f"commit_append at '{root}': CAS retry budget "
-        f"({_MAX_COMMIT_RETRIES}) exhausted under contention"
+    min/max from the new files' footers for file skipping. The
+    metadata written is O(batch): one immutable sidecar, while the
+    descriptor carries prior commits' sidecars by reference."""
+    batch, entry = _stage_batch(
+        root, df, "commit_append", n_files=n_files,
+        stats_columns=stats_columns, bloom_columns=bloom_columns,
     )
+    return _append_commit(root, "commit_append", batch, entry, meta)
+
+
+def _write_delete_file(
+    root: str, keys_df: DataFrame, column: str
+) -> list[str]:
+    """Write the distinct ``column`` values of ``keys_df`` as one
+    immutable equality-delete file under a fresh ``deletes/<uuid>/``
+    dir and return its root-relative path(s)."""
+    sub = os.path.join("deletes", uuid.uuid4().hex[:12])
+    out_dir = os.path.join(root, sub)
+    (
+        keys_df.select(column)
+        .distinct()
+        .coalesce(1)
+        .write.mode("errorifexists")
+        .parquet(out_dir)
+    )
+    return sorted(
+        os.path.join(sub, f)
+        for f in os.listdir(out_dir)
+        if f.endswith(".parquet")
+    )
+
+
+def _require_column(root: str, op: str, column: str, what: str) -> None:
+    """Raise unless the table has a snapshot and, when it records a
+    schema, ``column`` is one of its fields."""
+    v = current_version(root)
+    if v < 0:
+        raise ValidationError(
+            f"nothing to {what} at '{root}': no committed snapshot"
+        )
+    schema = _read_manifest(root, v).get("schema")
+    if schema is not None:
+        names = [f["name"] for f in schema["fields"]]
+        if column not in names:
+            raise ValidationError(
+                f"{op} at '{root}': column '{column}' "
+                f"not in the table schema (have: {names})"
+            )
 
 
 def commit_delete_where(
@@ -2359,56 +2264,19 @@ def commit_delete_where(
     written once under a fresh uuid dir, the manifest commit loops on
     the CAS, and a rebase recomputes the entry's version — delete ∘
     append serializes cleanly in either order."""
-    v0 = current_version(root)
-    if v0 < 0:
-        raise ValidationError(
-            f"nothing to delete at '{root}': no committed snapshot"
-        )
-    cur0 = _read_manifest(root, v0)
-    if cur0.get("schema") is not None:
-        names = [f["name"] for f in cur0["schema"]["fields"]]
-        if column not in names:
-            raise ValidationError(
-                f"commit_delete_where at '{root}': column '{column}' "
-                f"not in the table schema (have: {names})"
-            )
-    sub = os.path.join("deletes", uuid.uuid4().hex[:12])
-    out_dir = os.path.join(root, sub)
-    (
-        keys_df.select(column)
-        .distinct()
-        .coalesce(1)
-        .write.mode("errorifexists")
-        .parquet(out_dir)
-    )
-    new_rels = sorted(
-        os.path.join(sub, f)
-        for f in os.listdir(out_dir)
-        if f.endswith(".parquet")
-    )
-    for _ in range(_MAX_COMMIT_RETRIES):
-        v = current_version(root)
-        cur = _read_manifest(root, v)
-        nxt = v + 1
-        groups = _groups_of(root, cur)
-        payload = _descriptor_payload(
-            groups,
-            cur.get("schema"),
-            "delete",
-            0,
-            _live_delete_files_grouped(groups, cur.get("delete_files", []))
-            + [
+    _require_column(root, "commit_delete_where", column, "delete")
+    new_rels = _write_delete_file(root, keys_df, column)
+
+    def build(nxt: int, cur: dict) -> dict:
+        return _descriptor_payload(
+            cur, cur["groups"], "delete", 0, meta,
+            new_deletes=[
                 {"path": p, "column": column, "version": nxt}
                 for p in new_rels
             ],
-            meta,
         )
-        if _try_commit_manifest(root, nxt, payload):
-            return nxt
-    raise CommitConflictError(
-        f"commit_delete_where at '{root}': CAS retry budget "
-        f"({_MAX_COMMIT_RETRIES}) exhausted under contention"
-    )
+
+    return _commit(root, "commit_delete_where", build)
 
 
 def committed_meta(root: str, key: str, version: int | None = None, default=None):
@@ -2446,65 +2314,26 @@ def commit_upsert_rows(
     and compaction retires the delete entry as usual. A batch whose
     columns diverge from the table's recorded schema is refused before
     anything is written, as in :func:`commit_append`."""
-    v0 = current_version(root)
-    if v0 < 0:
-        raise ValidationError(
-            f"nothing to upsert at '{root}': no committed snapshot"
-        )
-    cur0 = _read_manifest(root, v0)
-    if cur0.get("schema") is not None:
-        names = [f["name"] for f in cur0["schema"]["fields"]]
-        if key_col not in names:
-            raise ValidationError(
-                f"commit_upsert_rows at '{root}': key column "
-                f"'{key_col}' not in the table schema (have: {names})"
-            )
-        _check_append_schema(root, cur0["schema"], rows_df)
-    sub_d = os.path.join("deletes", uuid.uuid4().hex[:12])
-    (
-        rows_df.select(key_col)
-        .distinct()
-        .coalesce(1)
-        .write.mode("errorifexists")
-        .parquet(os.path.join(root, sub_d))
+    _require_column(root, "commit_upsert_rows", key_col, "upsert")
+    batch, entry = _stage_batch(
+        root, rows_df, "commit_upsert_rows", n_files=n_files
     )
-    del_rels = sorted(
-        os.path.join(sub_d, f)
-        for f in os.listdir(os.path.join(root, sub_d))
-        if f.endswith(".parquet")
-    )
-    new = _write_data_files(rows_df, root, n_files)
-    new_stats = _footer_stats(root, new)
-    new_entry = _new_group_entry(root, new, new_stats)
-    for _ in range(_MAX_COMMIT_RETRIES):
-        v = current_version(root)
-        cur = _read_manifest(root, v)
-        if cur.get("schema") is not None:
-            _check_append_schema(root, cur["schema"], rows_df)
-        nxt = v + 1
-        all_groups = _groups_of(root, cur) + [
-            {**new_entry, "added_version": nxt}
-        ]
-        payload = _descriptor_payload(
-            all_groups,
-            cur.get("schema"),
+    del_rels = _write_delete_file(root, rows_df, key_col)
+
+    def build(nxt: int, cur: dict) -> dict:
+        return _descriptor_payload(
+            cur,
+            cur["groups"] + [{**entry, "added_version": nxt}],
             "upsert",
-            len(new),
-            _live_delete_files_grouped(
-                all_groups, cur.get("delete_files", [])
-            )
-            + [
+            entry["count"],
+            meta,
+            new_deletes=[
                 {"path": p, "column": key_col, "version": nxt}
                 for p in del_rels
             ],
-            meta,
         )
-        if _try_commit_manifest(root, nxt, payload):
-            return nxt
-    raise CommitConflictError(
-        f"commit_upsert_rows at '{root}': CAS retry budget "
-        f"({_MAX_COMMIT_RETRIES}) exhausted under contention"
-    )
+
+    return _commit(root, "commit_upsert_rows", build, batch=batch)
 
 
 def last_committed_meta(root: str, key: str, default=None):
@@ -2518,6 +2347,40 @@ def last_committed_meta(root: str, key: str, default=None):
     return _read_manifest(root, v).get(key, default)
 
 
+def _rewrite_commit(
+    root: str, op: str, base: tuple[int, set[str]], batch: DataFrame,
+    entry: dict, meta: dict | None = None,
+) -> int:
+    """Publish a staged rewrite of base version ``base_v``'s files:
+    v+1 = the rewritten group + whatever a concurrent APPEND added since
+    base (carried by reference; base-era groups drop, or shrink to the
+    files the base didn't cover). A base file missing from the current
+    version (another rewrite won) or a row delete landed since base is
+    a genuine conflict and raises."""
+    base_v, base_files = base
+    schema = _schema_payload(batch)
+
+    def build(nxt: int, cur: dict) -> dict:
+        cur_files = {
+            r for g in cur["groups"] for r in _group_files(root, g)[0]
+        }
+        if not base_files <= cur_files:
+            raise CommitConflictError(
+                f"{op} at '{root}': base version {base_v} files were "
+                f"replaced by a concurrent commit — rewrite vs rewrite "
+                f"does not commute; re-read and retry"
+            )
+        _check_no_deletes_since_base(cur, base_v, op, root)
+        groups = [{**entry, "added_version": nxt}] + _subset_groups(
+            root, cur["groups"], cur_files - base_files
+        )
+        return _descriptor_payload(
+            cur, groups, "rewrite", entry["count"], meta, schema=schema
+        )
+
+    return _commit(root, op, build, batch=batch)
+
+
 def commit_rewrite(
     root: str,
     df: DataFrame,
@@ -2529,7 +2392,9 @@ def commit_rewrite(
     """Publish a full REWRITE (compaction / overwrite) as v+1: the new
     snapshot references only the rewritten files, while every retained
     older manifest still references the old ones — compaction without
-    breaking time travel.
+    breaking time travel. ``bloom_columns`` re-records per-file blooms
+    for the rewritten files (without them the ANALYZE-free stats of
+    :func:`manifest_column_stats` go loud).
 
     Under concurrency: the rewrite pins the version it read (its
     BASE). If the CAS loses to a concurrent APPEND, the rewrite
@@ -2546,74 +2411,32 @@ def commit_rewrite(
     ``read_snapshot`` and this call would otherwise be classified as
     part of the base — its files replaced by rewrite output that never
     read them (a lost update the r11 threaded OPTIMIZE∥append test
-    caught live). :func:`optimize` pins the pair atomically."""
-    base_v = (
-        current_version(root) if base_version is None else int(base_version)
+    caught live). :func:`optimize` pins the pair atomically. The batch
+    must match the table's recorded schema, as in :func:`commit_append`."""
+    base = _rewrite_base(root, base_version, "rewrite")
+    batch, entry = _stage_batch(
+        root, df, "commit_rewrite", n_files=n_files,
+        stats_columns=stats_columns, bloom_columns=bloom_columns,
     )
-    if base_v < 0:
-        raise ValidationError(
-            f"nothing to rewrite at '{root}': no committed snapshot"
+    return _rewrite_commit(root, "commit_rewrite", base, batch, entry)
+
+
+def _bloomed_columns(root: str, version: int) -> list[str]:
+    """The logical columns whose bloom EVERY group of ``version``
+    carries in its summary — what a full rewrite re-records so the
+    ndv estimates and eq/probe file skipping survive it."""
+    d = _read_descriptor(root, version)
+    names = [f["name"] for f in (d.get("schema") or {}).get("fields", [])]
+    return [
+        c
+        for c in names
+        if d["groups"]
+        and all(
+            g.get("mapping", {}).get(c, c)
+            in g.get("summary", {}).get("bloom", {})
+            for g in d["groups"]
         )
-    base_files = set(_resolve_manifest(root, base_v)["files"])
-    new = _write_data_files(df, root, n_files)
-    new_stats = _footer_stats(root, new) if stats_columns else {}
-    if bloom_columns:
-        # re-record blooms for the rewritten files: without this an
-        # OPTIMIZE would drop the replaced files' blooms and the
-        # ANALYZE-free stats (manifest_column_stats) would go loud
-        new_stats = _merge_bloom_stats(
-            new_stats,
-            {
-                c: _compute_file_blooms(
-                    root, new, c, BLOOM_BITS, BLOOM_HASHES
-                )
-                for c in bloom_columns
-            },
-        )
-    schema = _schema_payload(df)
-    new_entry = _new_group_entry(root, new, new_stats)
-    for _ in range(_MAX_COMMIT_RETRIES):
-        v = current_version(root)
-        cur = _read_manifest(root, v)
-        cur_groups = _groups_of(root, cur)
-        cur_files = {
-            r for e in cur_groups for r in _load_group(root, e["path"])[0]
-        }
-        if not base_files <= cur_files:
-            raise CommitConflictError(
-                f"commit_rewrite at '{root}': base version {base_v} "
-                f"files were replaced by a concurrent commit — rewrite "
-                f"vs rewrite does not commute; re-read and retry"
-            )
-        _check_no_deletes_since_base(cur, base_v, "commit_rewrite", root)
-        # carried = concurrent appends since base: their whole sidecars
-        # survive by reference; base-era sidecars drop (or shrink to
-        # the files the base didn't cover)
-        carried_set = cur_files - base_files
-        kept_groups = [
-            g
-            for g in (
-                _subset_group_entry(root, e, carried_set)
-                for e in cur_groups
-            )
-            if g is not None
-        ]
-        all_groups = [{**new_entry, "added_version": v + 1}] + kept_groups
-        payload = _descriptor_payload(
-            all_groups,
-            cur.get("schema", schema),
-            "rewrite",
-            len(new),
-            _live_delete_files_grouped(
-                all_groups, cur.get("delete_files", [])
-            ),
-        )
-        if _try_commit_manifest(root, v + 1, payload):
-            return v + 1
-    raise CommitConflictError(
-        f"commit_rewrite at '{root}': CAS retry budget "
-        f"({_MAX_COMMIT_RETRIES}) exhausted under contention"
-    )
+    ]
 
 
 def optimize(
@@ -2623,8 +2446,9 @@ def optimize(
     compact, and on a conflict re-read and retry — the compaction
     command a maintenance job runs against live writers. ``n_files``
     defaults to the volume-derived count (:func:`_write_data_files`).
-    Retries are bounded by the CAS budget per attempt and
-    ``_MAX_COMMIT_RETRIES`` attempts overall."""
+    Columns every live group keeps a bloom for keep it
+    (:func:`_bloomed_columns`). Retries are bounded by the CAS budget
+    per attempt and ``_MAX_COMMIT_RETRIES`` attempts overall."""
     for _ in range(_MAX_COMMIT_RETRIES):
         v = current_version(root)
         try:
@@ -2633,6 +2457,7 @@ def optimize(
                 read_snapshot(spark, root, v),
                 n_files=n_files,
                 base_version=v,
+                bloom_columns=_bloomed_columns(root, v) or None,
             )
         except CommitConflictError:
             continue
@@ -2661,77 +2486,15 @@ def commit_rewrite_clustered(
     base-pinned exactly like :func:`commit_rewrite` — pass
     ``base_version`` = the version ``df`` was read at when a writer may
     land between the read and this call."""
-    base_v = (
-        current_version(root) if base_version is None else int(base_version)
+    base = _rewrite_base(root, base_version, "rewrite")
+    batch, entry = _stage_batch(
+        root, df, "commit_rewrite_clustered", cluster=column,
+        bloom_columns=bloom_columns,
+        bloom_cluster_prefix=bloom_cluster_prefix,
+        bloom_hashes=bloom_hashes,
     )
-    if base_v < 0:
-        raise ValidationError(
-            f"nothing to rewrite at '{root}': no committed snapshot"
-        )
-    base_files = set(_resolve_manifest(root, base_v)["files"])
-    new = _write_data_files_clustered(df, root, column)
-    new_stats = _footer_stats(root, new)
-    if bloom_columns:
-        rels_bloom = new
-        if bloom_cluster_prefix is not None:
-            rels_bloom = [
-                r
-                for r in new
-                if str(
-                    (new_stats.get(r, {}).get(column) or [""])[0]
-                ).startswith(bloom_cluster_prefix)
-            ]
-        new_stats = _merge_bloom_stats(
-            new_stats,
-            {
-                c: _compute_file_blooms(
-                    root, rels_bloom, c, BLOOM_BITS, int(bloom_hashes)
-                )
-                for c in bloom_columns
-            },
-        )
-    schema = _schema_payload(df.drop("_cluster"))
-    new_entry = _new_group_entry(root, new, new_stats)
-    for _ in range(_MAX_COMMIT_RETRIES):
-        v = current_version(root)
-        cur = _read_manifest(root, v)
-        cur_groups = _groups_of(root, cur)
-        cur_files = {
-            r for e in cur_groups for r in _load_group(root, e["path"])[0]
-        }
-        if not base_files <= cur_files:
-            raise CommitConflictError(
-                f"commit_rewrite_clustered at '{root}': base version "
-                f"{base_v} files were replaced by a concurrent commit"
-            )
-        _check_no_deletes_since_base(
-            cur, base_v, "commit_rewrite_clustered", root
-        )
-        carried_set = cur_files - base_files
-        kept_groups = [
-            g
-            for g in (
-                _subset_group_entry(root, e, carried_set)
-                for e in cur_groups
-            )
-            if g is not None
-        ]
-        all_groups = [{**new_entry, "added_version": v + 1}] + kept_groups
-        payload = _descriptor_payload(
-            all_groups,
-            cur.get("schema", schema),
-            "rewrite",
-            len(new),
-            _live_delete_files_grouped(
-                all_groups, cur.get("delete_files", [])
-            ),
-            meta,
-        )
-        if _try_commit_manifest(root, v + 1, payload):
-            return v + 1
-    raise CommitConflictError(
-        f"commit_rewrite_clustered at '{root}': CAS retry budget "
-        f"({_MAX_COMMIT_RETRIES}) exhausted under contention"
+    return _rewrite_commit(
+        root, "commit_rewrite_clustered", base, batch, entry, meta
     )
 
 
@@ -2744,20 +2507,19 @@ def _metadata_only_commit(root: str, mutate, op: str) -> int:
     current manifest, let ``mutate(payload)`` adjust schema/mapping,
     CAS-publish as v+1. Rebases trivially (re-reads current and
     re-applies) since no files are written."""
-    for _ in range(_MAX_COMMIT_RETRIES):
-        v = current_version(root)
-        if v < 0:
+
+    def build(nxt: int, cur: dict | None) -> dict:
+        if cur is None:
             raise ValidationError(
                 f"no committed snapshot at '{root}' to evolve"
             )
-        cur = _read_manifest(root, v)
         payload = {
             "format": 2,
             # deep-copy group entries: mutate() edits mappings in place
             # and the source descriptor dict may be shared
             "groups": [
                 {**g, "mapping": dict(g.get("mapping", {}))}
-                for g in _groups_of(root, cur)
+                for g in cur["groups"]
             ],
             "schema": cur.get("schema"),
             "op": op,
@@ -2767,11 +2529,9 @@ def _metadata_only_commit(root: str, mutate, op: str) -> int:
             ],
         }
         mutate(payload)
-        if _try_commit_manifest(root, v + 1, payload):
-            return v + 1
-    raise CommitConflictError(
-        f"{op} at '{root}': CAS retry budget exhausted under contention"
-    )
+        return payload
+
+    return _commit(root, op, build)
 
 
 def commit_add_column(root: str, name: str, spark_type: str) -> int:
@@ -2883,20 +2643,19 @@ def compact_manifest_sidecars(
     checks use the merged group's MIN add version (conservative — an
     entry is pruned only when provably unreachable) while readers
     sequence against the exact per-file versions."""
-    for _ in range(_MAX_COMMIT_RETRIES):
-        v = current_version(root)
-        if v < 0:
+
+    def build(nxt: int, cur: dict | None) -> dict | None:
+        if cur is None:
             raise ValidationError(
                 f"no committed snapshot at '{root}' to compact"
             )
-        cur = _read_manifest(root, v)
-        groups = _groups_of(root, cur)
+        groups = cur["groups"]
         if len(groups) <= max(int(target_groups), 1):
-            return v  # already compact — publishing a no-op helps nobody
+            return None  # already compact — a no-op publish helps nobody
         # flatten, bucketed by mapping generation, preserving file order
         buckets: "OrderedDict[str, list]" = OrderedDict()
         for g in groups:
-            rels, by_rel, avs = _load_group(root, g["path"])
+            rels, by_rel, avs = _group_files(root, g)
             g_av = int(g.get("added_version", 0))
             mp_key = json.dumps(g.get("mapping", {}), sort_keys=True)
             bucket = buckets.setdefault(mp_key, [])
@@ -2934,26 +2693,14 @@ def compact_manifest_sidecars(
         # pinned-constant readers of the new latest version
         structural = {
             "format", "groups", "schema", "op", "added",
-            "delete_files", "version", "files", "stats",
-            "column_mapping", "added_versions",
+            "delete_files", "version",
         }
-        meta = {k: v2 for k, v2 in cur.items() if k not in structural}
-        payload = _descriptor_payload(
-            new_groups,
-            cur.get("schema"),
-            "rewrite_manifests",
-            0,
-            _live_delete_files_grouped(
-                new_groups, cur.get("delete_files", [])
-            ),
-            meta,
+        meta = {k: val for k, val in cur.items() if k not in structural}
+        return _descriptor_payload(
+            cur, new_groups, "rewrite_manifests", 0, meta
         )
-        if _try_commit_manifest(root, v + 1, payload):
-            return v + 1
-    raise CommitConflictError(
-        f"compact_manifest_sidecars at '{root}': CAS retry budget "
-        f"({_MAX_COMMIT_RETRIES}) exhausted under contention"
-    )
+
+    return _commit(root, "compact_manifest_sidecars", build)
 
 
 # Auto-compaction trigger policy for continuously-appending tables
@@ -2999,8 +2746,7 @@ def maybe_compact_sidecars(
     v = current_version(root)
     if v < 0:
         return None
-    cur = _read_manifest(root, v)
-    if len(cur.get("groups", [])) <= max(int(max_groups), 1):
+    if len(_read_descriptor(root, v)["groups"]) <= max(int(max_groups), 1):
         return None
     try:
         return compact_manifest_sidecars(root, target_groups)
@@ -3096,25 +2842,17 @@ def restore_snapshot(root: str, version: int) -> int:
             f"cannot restore '{root}' to version {v}: not retained "
             f"(have: {list_versions(root)})"
         )
-    src = _read_manifest(root, v)
     content = {
         k: val
-        for k, val in src.items()
+        for k, val in _read_descriptor(root, v).items()
         if k not in ("version", "committed_at")
     }
-    for _ in range(_MAX_COMMIT_RETRIES):
-        nxt = current_version(root) + 1
-        payload = {
-            **content,
-            "op": "restore",
-            "added": 0,
-            "restored_from": v,
-        }
-        if _try_commit_manifest(root, nxt, payload):
-            return nxt
-    raise CommitConflictError(
-        f"restore at '{root}': CAS retry budget exhausted under "
-        f"contention"
+    return _commit(
+        root,
+        "restore",
+        lambda nxt, cur: {
+            **content, "op": "restore", "added": 0, "restored_from": v
+        },
     )
 
 
@@ -3712,12 +3450,11 @@ def vacuum(
     referenced_groups: set[str] = set()
     dropped_groups: set[str] = set()
     for v in vs:
-        md = _read_manifest(root, v)
-        m = _resolve_manifest(root, v)
-        refs = set(m["files"]) | {
-            d["path"] for d in m.get("delete_files", [])
-        }
-        grefs = {g["path"] for g in md.get("groups", [])}
+        md = _read_descriptor(root, v)
+        refs = {
+            r for g in md["groups"] for r in _group_files(root, g)[0]
+        } | {d["path"] for d in md.get("delete_files", [])}
+        grefs = {g["path"] for g in md["groups"] if "path" in g}
         if v in keep:
             referenced.update(refs)
             referenced_groups.update(grefs)

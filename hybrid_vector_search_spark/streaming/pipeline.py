@@ -208,6 +208,8 @@ def run_available_now(
     ``availableNow`` processes the backlog in micro-batches then stops —
     the bounded-execution mode that makes a streaming job testable and
     also serves as incremental batch ("run the stream until caught up").
+    A drain still running after ``timeout_sec`` is stopped and raises
+    ``RuntimeError`` before anything reads the sink table.
 
     ``expect_single_data_batch``: fail loudly if the drain consumed input
     across more than one micro-batch (batch 0). Callers whose oracle
@@ -334,9 +336,9 @@ def run_available_now(
     try:
         q = writer.start()
         try:
-            q.awaitTermination(timeout_sec)
+            drained = q.awaitTermination(timeout_sec)
         finally:
-            if q.isActive:  # pragma: no cover - defensive stop on timeout
+            if q.isActive:  # stop a query that outlived its timeout
                 q.stop()
     finally:
         if prev_parts is not None:
@@ -345,6 +347,15 @@ def run_available_now(
             session.conf.set(_FLUSH_KEY, prev_flush)
         if ephemeral is not None:
             shutil.rmtree(ephemeral, ignore_errors=True)
+    if drained is False:
+        # the memory sink holds whatever batches committed before the
+        # stop — reading it as the drain's result would be silently
+        # partial
+        raise RuntimeError(
+            f"run_available_now: query '{table_name}' did not finish "
+            f"within {timeout_sec} s — refusing to serve a partial "
+            f"memory sink"
+        )
     if expect_single_data_batch:
         data_batches = [
             p["batchId"]
@@ -448,7 +459,9 @@ def sink_to_parquet(
     a no-op, not a duplicate (asserted in tests/test_streaming.py). With
     ``partition_by`` the landing layout is hive-partitioned, so the
     downstream batch jobs get partition pruning on the sink column for
-    free. Append-mode only, matching the sink's contract."""
+    free. Append-mode only, matching the sink's contract. A drain still
+    running after ``timeout_sec`` is stopped and raises ``RuntimeError``:
+    the landing dir then holds only part of the input."""
     writer = (
         stream_df.writeStream.format("parquet")
         .option("path", out_dir)
@@ -460,10 +473,17 @@ def sink_to_parquet(
         writer = writer.partitionBy(partition_by)
     q = writer.start()
     try:
-        q.awaitTermination(timeout_sec)
+        drained = q.awaitTermination(timeout_sec)
     finally:
-        if q.isActive:  # pragma: no cover - defensive stop on timeout
+        if q.isActive:  # stop a query that outlived its timeout
             q.stop()
+    if drained is False:
+        # the landing dir holds only the batches committed before the
+        # stop — downstream reads would see a partial drain
+        raise RuntimeError(
+            f"sink_to_parquet: query writing '{out_dir}' did not finish "
+            f"within {timeout_sec} s — the landing dir is partial"
+        )
 
 
 def view_purchase_join_stream(

@@ -196,8 +196,6 @@ def test_costed_entry_from_column_stats_zero_jobs(spark, corpus):
     costed entry picks the SAME rung as the scan-fed entry on both the
     strict and broad cases, and the search runs ZERO count jobs
     (DataFrame.count is poisoned for the duration)."""
-    from pyspark.sql import DataFrame
-
     from hybrid_vector_search_spark.functions.colstats import (
         collect_column_stats,
         estimate_allowed,
@@ -227,6 +225,8 @@ def test_costed_entry_from_column_stats_zero_jobs(spark, corpus):
         hinted._index = scan_fed.index
         ids_s, st_s = scan_fed.search(q, filters, 10)
 
+        # the concrete class: it overrides pyspark.sql.DataFrame.count
+        DataFrame = type(corpus)
         real_count = DataFrame.count
 
         def poisoned(self):

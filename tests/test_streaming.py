@@ -284,6 +284,37 @@ def test_drain_shuffle_partitions_sizes_state_and_restores(spark, events_dir):
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
 
+def test_drain_timeout_raises_before_sink_is_read(
+    spark, events_dir, tmp_path, monkeypatch
+):
+    """A drain whose ``awaitTermination`` times out is stopped and
+    raises, in both shared helpers — neither hands back the partial
+    memory sink / landing dir as if the drain had finished."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from hybrid_vector_search_spark.streaming.pipeline import sink_to_parquet
+
+    monkeypatch.setattr(
+        StreamingQuery, "awaitTermination", lambda self, timeout=None: False
+    )
+    agg = windowed_agg_stream(
+        read_events_stream(spark, events_dir), "1 hour", watermark="2 hours"
+    )
+    with pytest.raises(RuntimeError, match="'timeout_out' did not finish"):
+        run_available_now(
+            agg, "timeout_out", checkpoint_dir=str(tmp_path / "ck1"),
+            timeout_sec=7,
+        )
+    with pytest.raises(RuntimeError, match="did not finish within 7 s"):
+        sink_to_parquet(
+            read_events_stream(spark, events_dir),
+            str(tmp_path / "out"),
+            str(tmp_path / "ck2"),
+            timeout_sec=7,
+        )
+    assert not any(q.isActive for q in spark.streams.active)
+
+
 def test_parquet_sink_exactly_once_across_drains(spark, tmp_path):
     """File sink + checkpoint: draining twice over unchanged input adds
     nothing (committed batches are not rewritten); newly-landed files
