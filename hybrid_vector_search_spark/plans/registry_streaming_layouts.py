@@ -26,6 +26,7 @@ from hybrid_vector_search_spark.session import artifact
 from hybrid_vector_search_spark.sources.loaders import (
     load_table,
 )
+from hybrid_vector_search_spark.streaming.pipeline import _drain
 
 from hybrid_vector_search_spark.plans.registry import (  # noqa: E402
     local_df,
@@ -513,19 +514,13 @@ def streaming_topk_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("label", T.IntegerType()),
         ]
     )
-    q = (
+    _drain(
         spark.readStream.schema(schema)
         .parquet(land)
         .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "streaming_topk_view",
     )
-    try:
-        q.awaitTermination(120)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive stop on timeout
-            q.stop()
     return (
         spark.read.parquet(state)
         .select("id", F.round("score", 6).alias("score"))
@@ -589,22 +584,16 @@ def streaming_incremental_rollup(
             T.StructField("props", T.StringType()),
         ]
     )
-    q = (
+    _drain(
         spark.readStream.schema(schema)
         # several files per micro-batch: the drain exercises bootstrap
         # AND repeated partition-local merges, not one bulk build
         .option("maxFilesPerTrigger", 2)
         .parquet(land)
         .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "streaming_incremental_rollup",
     )
-    try:
-        q.awaitTermination(120)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive stop on timeout
-            q.stop()
     return (
         open_rollup(spark, table)
         .select(
@@ -669,20 +658,14 @@ def streaming_snapshot_ingest(
             T.StructField("label", T.IntegerType()),
         ]
     )
-    q = (
+    _drain(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2)  # several commits, not one bulk
         .parquet(land)
         .writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "streaming_snapshot_ingest",
     )
-    try:
-        q.awaitTermination(120)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive stop on timeout
-            q.stop()
     return (
         M.read_snapshot(spark, table)
         .select(F.col("vec_id").alias("id"), "label")
@@ -783,22 +766,16 @@ def streaming_cdc_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
             # empty delta (row-preserving rewrite): no commit, no
             # marker advance — re-deriving it on replay is a no-op
 
-    q = (
+    _drain(
         spark.readStream.schema(
             T.StructType([T.StructField("version", T.LongType())])
         )
         .option("maxFilesPerTrigger", 1)  # one commit per micro-batch
         .json(_os.path.join(src, "manifest-*.json"))
         .writeStream.foreachBatch(apply_versions)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "streaming_cdc_replica",
     )
-    try:
-        q.awaitTermination(120)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive stop on timeout
-            q.stop()
     applied = int(M.last_committed_meta(replica, "applied_version", -1))
     n_data = len(M.snapshot_files(replica)[1])
     n_del_files = len(M.snapshot_delete_files(replica))
@@ -1264,16 +1241,14 @@ def _drain_file_stream(spark: SparkSession, root: str, schema, commit_fn):
     ``foreachBatch(commit_fn)``, checkpointed under ``root/ckpt`` (the
     at-least-once half of the ingest entries' exactly-once story; the
     other half is each commit body's batch-id guard)."""
-    q = (
+    _drain(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(root, "landing"))
         .writeStream.foreachBatch(commit_fn)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", os.path.join(root, "ckpt")),
+        f"_drain_file_stream: drain of '{root}'",
     )
-    q.awaitTermination()
 
 
 def _stream_dedup_oracle() -> str:
@@ -1795,27 +1770,11 @@ def streaming_ingest_quarantine(
         ).parquet(quar_dir)
         bdf.unpersist()
 
-    q = (
+    _drain(
         routed.writeStream.foreachBatch(_route)
-        .option(
-            "checkpointLocation", base + "/ckpt"
-        )
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", base + "/ckpt"),
+        "streaming_ingest_quarantine",
     )
-    try:
-        drained = q.awaitTermination(120)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive stop on timeout
-            q.stop()
-    if not drained:
-        # a still-running query would keep appending to the sinks while
-        # we read them back — nondeterministic counts (r13 advice);
-        # mirror run_available_now: stop (above) and refuse the audit
-        raise RuntimeError(
-            "streaming_ingest_quarantine: drain did not finish within "
-            "120 s — refusing to audit partially-written sinks"
-        )
 
     from pyspark.errors import AnalysisException
 

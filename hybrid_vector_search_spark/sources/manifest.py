@@ -561,9 +561,11 @@ def _subset_groups(root: str, groups: list[dict], keep: set) -> list[dict]:
 def _live_delete_files_grouped(
     groups: list[dict], delete_files: list[dict]
 ) -> list[dict]:
-    """Group-level form of :func:`_live_delete_files`: a delete at
-    version d stays live while ANY group added before d still has
-    files — decided from descriptor counts alone."""
+    """The delete entries a descriptor over ``groups`` keeps: a delete
+    at version d reaches only files added at versions < d, so it stays
+    live while ANY group added before d still has files — decided from
+    descriptor counts alone. Pruning here is what makes a plain rewrite
+    double as apply-deletes compaction."""
     return [
         d
         for d in delete_files
@@ -646,33 +648,16 @@ def _read_delete_keys(spark, root: str, rel: str, col_name: str):
     return spark.read.schema(st).parquet(path).toDF(col_name)
 
 
-def _live_delete_files(
-    files: list[str], added_versions: dict, delete_files: list[dict]
-) -> list[dict]:
-    """Drop delete entries that apply to NO file in the new manifest —
-    a delete at version d reaches only files added at versions < d
-    (files without a recorded add version are legacy: treated as added
-    at 0, so every delete reaches them). Pruning here is what makes a
-    plain rewrite double as apply-deletes compaction."""
-    return [
-        d
-        for d in delete_files
-        if any(
-            int(added_versions.get(rel, 0)) < int(d["version"])
-            for rel in files
-        )
-    ]
-
-
 def _check_no_deletes_since_base(cur: dict, base_v: int, op: str, root: str) -> None:
     """Serializable-rewrite validation (Iceberg's second rule): a
     replace-style commit may rebase over concurrent APPENDS, but NOT
     over a row-delete/upsert that landed after its base — the rewritten
-    files would be stamped past the delete's version, ``_carry_
-    versioning`` would prune the now-unreachable delete entry, and the
-    deleted rows (still present in the data the rewrite read at base)
-    would silently resurrect. Raises so the caller re-reads (with the
-    delete now applied by the scan) and redoes the rewrite."""
+    files would be stamped past the delete's version,
+    :func:`_live_delete_files_grouped` would prune the now-unreachable
+    delete entry, and the deleted rows (still present in the data the
+    rewrite read at base) would silently resurrect. Raises so the
+    caller re-reads (with the delete now applied by the scan) and
+    redoes the rewrite."""
     fresh = [
         d
         for d in cur.get("delete_files", [])
@@ -1946,30 +1931,6 @@ def manifest_column_stats(
             "max": mx,
         }
     return out
-
-
-def _carry_versioning(
-    cur: dict | None, files: list[str], new: list[str], version: int
-) -> dict:
-    """The ``added_versions`` / ``delete_files`` fields every commit
-    carries forward: prior files keep their recorded add version
-    (legacy files default to 0 — every delete reaches them), the
-    commit's new files are stamped with the version being published,
-    and delete entries no live file can see are pruned."""
-    prior_added = (cur or {}).get("added_versions", {})
-    new_set = set(new)
-    added = {
-        rel: int(prior_added.get(rel, 0))
-        for rel in files
-        if rel not in new_set
-    }
-    added.update({rel: int(version) for rel in new})
-    return {
-        "added_versions": added,
-        "delete_files": _live_delete_files(
-            files, added, (cur or {}).get("delete_files", [])
-        ),
-    }
 
 
 def _try_commit_manifest(root: str, version: int, payload: dict) -> bool:

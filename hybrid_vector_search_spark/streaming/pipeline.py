@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
@@ -192,12 +193,37 @@ def _has_streaming_aggregation(df: DataFrame) -> bool | None:
     return "Aggregate [" in plan or "\nAggregate" in plan
 
 
+DRAIN_TIMEOUT_S = 120
+
+
+def _drain(writer: DataStreamWriter, what: str) -> list[dict]:
+    """Start the configured ``writer`` as one ``availableNow`` drain and
+    wait for it — every drain in the package goes through here.
+
+    The query gets ``DRAIN_TIMEOUT_S`` to consume its backlog. One still
+    running then is stopped and raises ``RuntimeError`` naming ``what``
+    before the caller reads anything: its sink holds only the batches
+    committed so far, and a running query would keep writing into it.
+    Returns the drain's per-micro-batch progress reports."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        drained = q.awaitTermination(DRAIN_TIMEOUT_S)
+    finally:
+        if q.isActive:
+            q.stop()
+    if not drained:
+        raise RuntimeError(
+            f"{what} did not finish within {DRAIN_TIMEOUT_S} s — refusing "
+            f"to read a partial sink"
+        )
+    return q.recentProgress
+
+
 def run_available_now(
     stream_df: DataFrame,
     table_name: str,
     output_mode: str = "complete",
     checkpoint_dir: str | None = None,
-    timeout_sec: int = 120,
     expect_single_data_batch: bool = False,
     shuffle_partitions: int | None = None,
     flush_no_data_batch: bool = True,
@@ -208,8 +234,9 @@ def run_available_now(
     ``availableNow`` processes the backlog in micro-batches then stops —
     the bounded-execution mode that makes a streaming job testable and
     also serves as incremental batch ("run the stream until caught up").
-    A drain still running after ``timeout_sec`` is stopped and raises
-    ``RuntimeError`` before anything reads the sink table.
+    The drain runs through :func:`_drain`: one still running after
+    ``DRAIN_TIMEOUT_S`` is stopped and raises ``RuntimeError`` before
+    anything reads the sink table.
 
     ``expect_single_data_batch``: fail loudly if the drain consumed input
     across more than one micro-batch (batch 0). Callers whose oracle
@@ -330,16 +357,10 @@ def run_available_now(
         stream_df.writeStream.format("memory")
         .queryName(table_name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
         .option("checkpointLocation", checkpoint_dir or ephemeral)
     )
     try:
-        q = writer.start()
-        try:
-            drained = q.awaitTermination(timeout_sec)
-        finally:
-            if q.isActive:  # stop a query that outlived its timeout
-                q.stop()
+        progress = _drain(writer, f"run_available_now: query '{table_name}'")
     finally:
         if prev_parts is not None:
             session.conf.set("spark.sql.shuffle.partitions", prev_parts)
@@ -347,20 +368,9 @@ def run_available_now(
             session.conf.set(_FLUSH_KEY, prev_flush)
         if ephemeral is not None:
             shutil.rmtree(ephemeral, ignore_errors=True)
-    if drained is False:
-        # the memory sink holds whatever batches committed before the
-        # stop — reading it as the drain's result would be silently
-        # partial
-        raise RuntimeError(
-            f"run_available_now: query '{table_name}' did not finish "
-            f"within {timeout_sec} s — refusing to serve a partial "
-            f"memory sink"
-        )
     if expect_single_data_batch:
         data_batches = [
-            p["batchId"]
-            for p in (q.recentProgress or [])
-            if p.get("numInputRows", 0) > 0
+            p["batchId"] for p in progress if p.get("numInputRows", 0) > 0
         ]
         if any(b != 0 for b in data_batches):
             raise AssertionError(
@@ -448,7 +458,6 @@ def sink_to_parquet(
     out_dir: str,
     checkpoint_dir: str,
     partition_by: str | None = None,
-    timeout_sec: int = 120,
 ) -> None:
     """Exactly-once streaming parquet sink — the landing-zone writer.
 
@@ -459,31 +468,19 @@ def sink_to_parquet(
     a no-op, not a duplicate (asserted in tests/test_streaming.py). With
     ``partition_by`` the landing layout is hive-partitioned, so the
     downstream batch jobs get partition pruning on the sink column for
-    free. Append-mode only, matching the sink's contract. A drain still
-    running after ``timeout_sec`` is stopped and raises ``RuntimeError``:
+    free. Append-mode only, matching the sink's contract. The drain
+    runs through :func:`_drain`: one still running after
+    ``DRAIN_TIMEOUT_S`` is stopped and raises ``RuntimeError``, since
     the landing dir then holds only part of the input."""
     writer = (
         stream_df.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .trigger(availableNow=True)
     )
     if partition_by:
         writer = writer.partitionBy(partition_by)
-    q = writer.start()
-    try:
-        drained = q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:  # stop a query that outlived its timeout
-            q.stop()
-    if drained is False:
-        # the landing dir holds only the batches committed before the
-        # stop — downstream reads would see a partial drain
-        raise RuntimeError(
-            f"sink_to_parquet: query writing '{out_dir}' did not finish "
-            f"within {timeout_sec} s — the landing dir is partial"
-        )
+    _drain(writer, f"sink_to_parquet: query writing '{out_dir}'")
 
 
 def view_purchase_join_stream(

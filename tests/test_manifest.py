@@ -961,29 +961,16 @@ def test_vacuum_protects_inflight_writer_files(spark, tmp_path):
     M.commit_append(root, _df(spark, 10, 20))
     M.commit_rewrite(root, M.read_snapshot(spark, root), n_files=1)
 
-    # writer W: data files on disk, manifest not yet published
-    w_files = M._write_data_files(_df(spark, 50, 55), root, 1)
+    # writer W: data files and sidecar staged, manifest not yet published
+    batch, entry = M._stage_batch(root, _df(spark, 50, 55), "commit_append")
+    w_files = M._group_files(root, entry)[0]
     stats = M.vacuum(root, keep_last=1)
     # dropped-version files reclaimed immediately; W's fresh files kept
     assert stats["deleted_files"] == 2
-    for rel in w_files:
+    for rel in w_files + [entry["path"]]:
         assert os.path.exists(os.path.join(root, rel))
     # W now publishes; its snapshot reads back complete
-    cur = M._resolve_manifest(root, M.current_version(root))
-    carry = M._carry_versioning(cur, cur["files"] + w_files, w_files, 4)
-    assert M._try_commit_manifest(
-        root,
-        4,
-        {
-            "files": cur["files"] + w_files,
-            "stats": cur.get("stats", {}),
-            "column_mapping": {},
-            "schema": cur.get("schema"),
-            "op": "append",
-            "added": len(w_files),
-            **carry,
-        },
-    )
+    assert M._append_commit(root, "commit_append", batch, entry, None) == 4
     assert _ids(M.read_snapshot(spark, root)) == (
         set(range(20)) | set(range(50, 55))
     )

@@ -212,6 +212,7 @@ def test_streaming_hll_registers_merge_across_restarts(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from hybrid_vector_search_spark.streaming.pipeline import (
+        _drain,
         read_events_stream,
     )
 
@@ -241,18 +242,16 @@ def test_streaming_hll_registers_merge_across_restarts(spark, tmp_path):
             .groupBy("bucket")
             .agg(F.max("rho").alias("m_j"))
         )
-        q = (
+        _drain(
             stream.writeStream.foreachBatch(
                 lambda bdf, _id: regs.update(
                     {int(r.bucket): int(r.m_j) for r in bdf.collect()}
                 )
             )
             .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
+            "HLL register drain",
         )
-        q.awaitTermination(120)
 
     spark.createDataFrame(rows1, ddl).coalesce(1).write.mode(
         "overwrite"

@@ -12,6 +12,7 @@ from hybrid_vector_search_spark.streaming import (
     sessionize_stream,
     windowed_agg_stream,
 )
+from hybrid_vector_search_spark.streaming.pipeline import _drain
 
 ROWS = [
     (0, datetime(2024, 1, 1, 0, 0, 0), 1, "view", 1.0, '{"k": 5}'),
@@ -94,18 +95,16 @@ def test_session_state_carries_across_batches(spark, tmp_path):
 
     def drain():
         sess = sessionize_stream(read_events_stream(spark, d), gap_minutes=30)
-        q = (
+        _drain(
             sess.writeStream.foreachBatch(
                 lambda bdf, _id: out.update(
                     {int(r.event_id): int(r.session_seq) for r in bdf.collect()}
                 )
             )
             .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
+            "session state drain",
         )
-        q.awaitTermination(120)
 
     first = ROWS[:2]  # user 1: two events 10 min apart → one session
     spark.createDataFrame(first, DDL).coalesce(1).write.mode(
@@ -144,7 +143,7 @@ def test_dedup_stream_drops_in_window_duplicates(spark, tmp_path):
 
     def drain():
         stream = spark.readStream.schema(ddl).parquet(d)
-        q = (
+        _drain(
             dedup_stream(stream, watermark="1 hour")
             .writeStream.foreachBatch(
                 lambda bdf, _id: kept.update(
@@ -152,11 +151,9 @@ def test_dedup_stream_drops_in_window_duplicates(spark, tmp_path):
                 )
             )
             .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
+            "dedup drain",
         )
-        q.awaitTermination(120)
 
     spark.createDataFrame(batch1, ddl).coalesce(1).write.parquet(
         d, mode="overwrite"
@@ -228,7 +225,7 @@ def test_stateful_totals_state_survives_restart(spark, tmp_path):
 
     def drain():
         tot = stateful_user_totals_stream(read_events_stream(spark, d))
-        q = (
+        _drain(
             tot.writeStream.foreachBatch(
                 lambda bdf, _id: out.update(
                     {
@@ -238,11 +235,9 @@ def test_stateful_totals_state_survives_restart(spark, tmp_path):
                 )
             )
             .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
+            "stateful totals drain",
         )
-        q.awaitTermination(120)
 
     spark.createDataFrame(ROWS[:3], DDL).coalesce(1).write.mode(
         "overwrite"
@@ -303,16 +298,85 @@ def test_drain_timeout_raises_before_sink_is_read(
     with pytest.raises(RuntimeError, match="'timeout_out' did not finish"):
         run_available_now(
             agg, "timeout_out", checkpoint_dir=str(tmp_path / "ck1"),
-            timeout_sec=7,
         )
-    with pytest.raises(RuntimeError, match="did not finish within 7 s"):
+    with pytest.raises(RuntimeError, match="did not finish within 120 s"):
         sink_to_parquet(
             read_events_stream(spark, events_dir),
             str(tmp_path / "out"),
             str(tmp_path / "ck2"),
-            timeout_sec=7,
         )
     assert not any(q.isActive for q in spark.streams.active)
+
+
+def test_every_drain_site_fails_loudly_on_timeout(spark, tmp_path, monkeypatch):
+    """Registry drains forced past their timeout stop their query and
+    raise naming it — none returns a frame over a partial view or sink,
+    and none leaves its query running. ``_drain_file_stream`` (the
+    ingest entries' shared drain) runs on a private root, so no
+    persistent prebuild is left half built."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from hybrid_vector_search_spark.plans import registry_streaming_layouts as L
+    from hybrid_vector_search_spark.plans.registry import (
+        QUERIES,
+        invalidate_caches,
+    )
+
+    sf_dir = "/root/testdata/sf0.001"
+    root = str(tmp_path / "ingest")
+    ddl = "doc_id long, text string"
+    spark.createDataFrame([(0, "a"), (1, "b")], ddl).write.parquet(
+        os.path.join(root, "landing")
+    )
+    monkeypatch.setattr(
+        StreamingQuery, "awaitTermination", lambda self, timeout=None: False
+    )
+    try:
+        for name in ("streaming_topk_view", "streaming_ingest_quarantine"):
+            with pytest.raises(RuntimeError, match=f"{name} did not finish"):
+                QUERIES[name](spark, sf_dir)
+            assert not any(q.isActive for q in spark.streams.active), name
+        with pytest.raises(
+            RuntimeError, match="_drain_file_stream: .* did not finish"
+        ):
+            L._drain_file_stream(spark, root, ddl, lambda _df, _bid: None)
+        assert not any(q.isActive for q in spark.streams.active)
+    finally:
+        for q in spark.streams.active:
+            q.stop()
+        invalidate_caches()
+
+
+def test_one_drain_helper():
+    """Structural guard: the package starts, waits for and stops an
+    ``availableNow`` query in one place — ``streaming.pipeline._drain``
+    holds the only ``awaitTermination`` and ``isActive`` references and
+    the only ``availableNow=True`` keyword."""
+    import ast
+    import pathlib
+
+    from hybrid_vector_search_spark.streaming import pipeline
+
+    pkg = pathlib.Path(pipeline.__file__).resolve().parents[1]
+    found = {"awaitTermination": [], "isActive": [], "availableNow": []}
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        mod = path.relative_to(pkg).with_suffix("").as_posix()
+        for top in tree.body:
+            where = f"{mod}.{getattr(top, 'name', '<module>')}"
+            for node in ast.walk(top):
+                if isinstance(node, ast.Attribute) and node.attr in found:
+                    found[node.attr].append(where)
+                if (
+                    isinstance(node, ast.keyword)
+                    and node.arg == "availableNow"
+                    and isinstance(node.value, ast.Constant)
+                    and node.value.value is True
+                ):
+                    found["availableNow"].append(where)
+    assert found == {
+        k: ["streaming/pipeline._drain"] for k in found
+    }, found
 
 
 def test_parquet_sink_exactly_once_across_drains(spark, tmp_path):
@@ -634,16 +698,14 @@ def test_streaming_topk_view_incremental_across_batches(spark, tmp_path):
         os.rename(stage, state)
         shutil.rmtree(old, ignore_errors=True)
 
-    q = (
+    _drain(
         spark.readStream.schema("vec_id long, embedding array<float>, label int")
         .option("maxFilesPerTrigger", 1)
         .parquet(land)
         .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "top-K view drain",
     )
-    q.awaitTermination(120)
 
     got = [
         (r["id"], round(r["score"], 6))
