@@ -39,6 +39,17 @@ def ensure_unit_l2(qvec: Sequence[float], tol: float = 1e-3) -> np.ndarray:
     return v
 
 
+def _double_array_sql(vals: Sequence[float]) -> str | None:
+    """``CAST(split('<csv>', ',') AS ARRAY<DOUBLE>)`` for ``vals``, or
+    None when a value is not finite or there are none (see
+    :func:`double_array_lit`)."""
+    fv = [float(v) for v in vals]
+    if not fv or not all(math.isfinite(v) for v in fv):
+        return None
+    csv = ",".join(repr(v) for v in fv)
+    return f"CAST(split('{csv}', ',') AS ARRAY<DOUBLE>)"
+
+
 def double_array_lit(vals: Sequence[float]) -> Column:
     """A double-array literal Column as ONE foldable expression node:
     ``CAST(split('<csv>', ',') AS ARRAY<DOUBLE>)``. Catalyst re-analyzes
@@ -50,11 +61,10 @@ def double_array_lit(vals: Sequence[float]) -> Column:
     float64 (the JVM's string→double cast is correctly rounded), so
     values are bit-identical to the ``lit()`` path; non-finite values
     and the empty array fall back to the Column API."""
-    fv = [float(v) for v in vals]
-    if fv and all(math.isfinite(v) for v in fv):
-        csv = ",".join(repr(v) for v in fv)
-        return F.expr(f"CAST(split('{csv}', ',') AS ARRAY<DOUBLE>)")
-    return F.array(*[F.lit(v) for v in fv])
+    sql = _double_array_sql(vals)
+    if sql is not None:
+        return F.expr(sql)
+    return F.array(*[F.lit(float(v)) for v in vals])
 
 
 def long_array_lit(vals: Sequence[int]) -> Column:
@@ -94,8 +104,17 @@ def dot_score_column(
     # cast: `.cast("array<double>")` materializes an intermediate array
     # per row before the product array — dropping it is a measured 25%
     # on the reference-shape full scan (318→240 ms, identical results).
-    # The query is ONE literal node (double_array_lit), so the plan
-    # build does not grow with the dimension.
+    # The whole expression is ONE SQL node around the query's CSV
+    # literal: the Column-API form (Python lambdas, one py4j call per
+    # node) took ~20 ms to build per scoring plan, this well under 1 ms.
+    # Non-finite query values keep the Column-API form.
+    qsql = _double_array_sql(qvec)
+    if qsql is not None:
+        emb = "`" + embedding_col.replace("`", "``") + "`"
+        return F.expr(
+            f"aggregate(zip_with({emb}, {qsql}, "
+            "(x, y) -> CAST(x AS DOUBLE) * y), 0D, (acc, x) -> acc + x)"
+        )
     return F.aggregate(
         F.zip_with(
             F.col(embedding_col),
@@ -206,17 +225,6 @@ def per_qid_dot_scores(
     return df.select(id_col, qid_col, emb_col).mapInPandas(
         fn, f"{id_col} LONG, {qid_col} INT, score DOUBLE"
     )
-
-
-def dot_score_sql(embedding: Column | str, qvec: Sequence[float]) -> Column:
-    """Pure-SQL inner product against a literal query vector via
-    ``zip_with`` + ``aggregate`` (stays in whole-stage codegen)."""
-    emb = F.col(embedding) if isinstance(embedding, str) else embedding
-    qlit = double_array_lit(qvec)  # one parse, not |q| lit() calls
-    prods = F.zip_with(
-        emb.cast(T.ArrayType(T.DoubleType())), qlit, lambda x, y: x * y
-    )
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def cosine_score_col(a: Column | str, b: Column | str) -> Column:

@@ -691,13 +691,14 @@ class HNSWIndex:
 
 from hybrid_vector_search_spark.operators.strategies import (  # noqa: E402
     LadderBackend,
+    collect_ranking,
     join_candidates,
 )
 
 
 class HNSWBackend(LadderBackend):
     """P3-shaped strategy on HNSW candidates: approximate top-K′ over the
-    full corpus, semi-join against the allowed-id set, reference ladder
+    full corpus, keep the candidates in the allowed-id set, reference ladder
     K′ ∈ (200, 500, 1000) with early stop (src/baselines/
     post_filter.py:66-87 — same ladder, HNSW instead of IVF as the
     candidate source; reference index parity at src/dataio/
@@ -708,7 +709,7 @@ class HNSWBackend(LadderBackend):
     Two r3-ADVICE fixes shape the execution: (a) the per-partition
     graphs are built ONCE into a persisted :class:`HNSWIndex` (scratch
     parquet) on first use — searches reconstruct, never rebuild; (b)
-    ``_prepare`` runs ONE distributed pass at K′ = max(ladder) and the
+    ``_ranking`` runs ONE distributed pass at K′ = max(ladder) and the
     :class:`LadderBackend` rungs replay the escalation client-side over
     the ≤ max(ladder) collected candidates — a rung's candidate set is
     exactly the top-K′ prefix of the max rung's, so the stop rung and
@@ -768,63 +769,12 @@ class HNSWBackend(LadderBackend):
         kept = join_candidates(self.corpus, pred, cand, self.id_col)
         return _topk(kept, k, id_col=self.id_col), None
 
-    def _prepare(self, q, pred):
-        """The one graph walk at K′ = max(ladder): the candidate ranking
-        (best first) and the ids among it that pass ``pred``."""
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
+    def _ranking(self, q):
+        """The one graph walk at K′ = max(ladder), collected (≤ max(ladder)
+        rows) and ranked best first."""
         kmax = max(self.k_ladder)
-        cand = self.index.search_plan(
-            q, kmax, ef_search=max(self.ef_search, kmax)
+        ef = max(self.ef_search, kmax)
+        ids, scores = collect_ranking(
+            self.index.search_plan(q, kmax, ef_search=ef), kmax, self.id_col
         )
-        # Collect the bounded candidate ranking once (≤ kmax ≤ 1000 rows),
-        # then stream the UNBOUNDED allowed set against a broadcast of the
-        # tiny collected id list — never broadcast `allowed` (it approaches
-        # the full id column as selectivity → 1). A left-outer with the
-        # candidates preserved can only build/broadcast the allowed side
-        # (BroadcastHashJoin LeftOuter ⇒ BuildRight), so the pass flag is
-        # derived via a semi-join in the safe direction + a driver-side set.
-        cand_rows = sorted(
-            cand.collect(), key=lambda r: (-r["score"], r[self.id_col])
-        )
-        spark = self.corpus.sparkSession
-        id_field = self.corpus.schema[self.id_col]
-        id_schema = T.StructType([id_field])
-        cand_id_vals = [(r[self.id_col],) for r in cand_rows]
-        # route the tiny collected id list through pandas + Arrow
-        # (LocalTableScan) instead of a pickled Python RDD, which costs a
-        # Python-worker task inside the semi-join job (the registry's
-        # local_df precedent) — OBJECT dtype so pandas never coerces ids
-        # through float64 (exact above 2^53, same hazard local_df
-        # guards); verified fallback keeps the plain path when
-        # conversion cannot represent the rows
-        try:
-            cand_ids = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        self.id_col: pd.Series(
-                            [v[0] for v in cand_id_vals], dtype=object
-                        )
-                    }
-                ),
-                id_schema,
-            )
-        except Exception:
-            cand_ids = spark.createDataFrame(cand_id_vals, id_schema)
-        passing = {
-            r[self.id_col]
-            for r in self.corpus.filter(pred)
-            .join(F.broadcast(cand_ids), self.id_col, "left_semi")
-            .select(self.id_col)
-            .collect()
-        }
-        return cand_rows, passing
-
-    def _rung(self, kprime, q, pred, k, prepared):
-        cand_rows, passing = prepared
-        rows = [r for r in cand_rows[:kprime] if r[self.id_col] in passing]
-        return rows[:k], {
-            "scored_vectors": kprime,
-            "ef_search": max(self.ef_search, max(self.k_ladder)),
-        }
+        return ids, scores, {"ef_search": ef}

@@ -23,7 +23,9 @@ Defaults mirror the reference: ``nlist ≈ √N`` clamped to [64, 4096]
 
 from __future__ import annotations
 
+from collections import OrderedDict
 from collections.abc import Iterator, Sequence
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 # module-level: pandas_udf resolves the Iterator[pd.Series] hints against
@@ -39,9 +41,10 @@ from hybrid_vector_search_spark.functions.predicates import compile_filters
 from hybrid_vector_search_spark.functions.vector import dot_score_pandas_udf
 from hybrid_vector_search_spark.operators.strategies import (
     LadderBackend,
+    collect_ranking,
     join_candidates,
 )
-from hybrid_vector_search_spark.operators.topk import topk
+from hybrid_vector_search_spark.operators.topk import topk, topk_positions
 
 DEFAULT_NPROBE = 32
 DEFAULT_K_LADDER = (200, 500, 1000)
@@ -97,6 +100,8 @@ class IVFIndex:
         self.id_col = id_col
         self.partitioned_path = partitioned_path
         self._row_count: int | None = None
+        self._serve_cache: OrderedDict = OrderedDict()
+        self._serve_cache_bytes = 0
 
     @property
     def nlist(self) -> int:
@@ -273,31 +278,36 @@ class IVFIndex:
         Falls back loudly when the index has no persisted layout; the
         micro-batch Spark path stays the answer for q ≥ 2 and the only
         answer when the serving node cannot see the storage directly."""
-        import os
+        ids, scores, _ = self.local_ranking(qvec, k, nprobe)
+        return [(int(i), float(s)) for i, s in zip(ids, scores)]
 
+    def local_ranking(
+        self,
+        qvec: Sequence[float],
+        k: int,
+        nprobe: int = DEFAULT_NPROBE,
+    ) -> tuple[np.ndarray, np.ndarray, int]:
+        """:meth:`serve_local_topk` as arrays: ``(ids, scores, rows
+        scored)``, best first."""
         if self.partitioned_path is None:
             raise ValidationError(
                 "serve_local_topk requires a persisted partitioned "
                 "layout (IVFIndex.build*(persist_path=...))"
             )
         q = np.asarray(qvec, dtype=np.float64).reshape(-1)
-        ids_parts: list[np.ndarray] = []
-        emb_parts: list[np.ndarray] = []
-        for li in self.probe(qvec, nprobe):
-            blk = self._serve_block(li)
-            if blk is None:
-                continue  # empty list: the writer emitted no directory
-            ids_parts.append(blk[0])
-            emb_parts.append(blk[1])
-        if not ids_parts:
-            return []
-        ids = np.concatenate(ids_parts)
-        scores = np.concatenate([e @ q for e in emb_parts])
-        k = min(int(k), len(ids))
-        # exact (score DESC, id ASC) order — lexsort keys are least
-        # significant first
-        order = np.lexsort((ids, -scores))[:k]
-        return [(int(ids[i]), float(scores[i])) for i in order]
+        # an empty list has no directory: the writer emitted none
+        blocks = [
+            b for b in self._serve_blocks(self.probe(qvec, nprobe))
+            if b is not None
+        ]
+        if not blocks:
+            return np.zeros(0, np.int64), np.zeros(0), 0
+        ids = np.concatenate([b[0] for b in blocks])
+        scores = np.concatenate(
+            [b[1].astype(np.float64) @ q for b in blocks]
+        )
+        top = topk_positions(ids, scores, k)
+        return ids[top], scores[top], len(ids)
 
     def serve_local_batch(
         self,
@@ -317,69 +327,73 @@ class IVFIndex:
         )  # (Q, D)
         probes = {qid: self.probe(qvecs[qid], nprobe) for qid in qids}
         union = sorted({li for p in probes.values() for li in p})
-        blocks = [
-            (li, blk) for li in union
-            if (blk := self._serve_block(li)) is not None
-        ]
+        blocks = {
+            li: (b[0], b[1].astype(np.float64))
+            for li, b in zip(union, self._serve_blocks(union))
+            if b is not None
+        }
         out: list[tuple[int, int, float]] = []
         for qi, qid in enumerate(qids):
-            mine = set(probes[qid])
-            ids_parts = [b[0] for li, b in blocks if li in mine]
-            if not ids_parts:
+            mine = [blocks[li] for li in probes[qid] if li in blocks]
+            if not mine:
                 continue
-            ids = np.concatenate(ids_parts)
-            scores = np.concatenate(
-                [b[1] @ qmat[qi] for li, b in blocks if li in mine]
-            )
-            kq = min(int(k), len(ids))
-            order = np.lexsort((ids, -scores))[:kq]
+            ids = np.concatenate([b[0] for b in mine])
+            scores = np.concatenate([b[1] @ qmat[qi] for b in mine])
+            top = topk_positions(ids, scores, k)
             out.extend(
-                (qid, int(ids[i]), float(scores[i])) for i in order
+                (qid, int(ids[i]), float(scores[i])) for i in top
             )
         return out
 
     # serving-tier block cache: hot probed lists stay RAM-resident as
-    # (ids, float64 matrix) — the in-process residency the reference's
-    # 15.7 ms/query assumes (its FAISS index holds the WHOLE corpus in
-    # memory; this holds at most SERVE_CACHE_BYTES of hot lists, LRU).
-    # First touch of a list pays the Arrow decode; steady-state serving
-    # is pure GEMM + merge.
+    # (ids, embedding matrix in the layout's own float32) — the
+    # in-process residency the reference's 15.7 ms/query assumes (its
+    # FAISS index holds the WHOLE corpus in memory; this holds at most
+    # SERVE_CACHE_BYTES of hot lists, LRU). A query upcasts its blocks
+    # to float64 before scoring: the same scores as float64 blocks, at
+    # half the resident bytes. First touch of a list pays the Arrow
+    # decode; steady-state serving is upcast + GEMM + merge.
     SERVE_CACHE_BYTES = 1 << 30
 
-    def _serve_block(self, list_id: int):
+    def _serve_blocks(self, list_ids: Sequence[int]) -> list:
+        """The cached ``(ids, matrix)`` block of each list in
+        ``list_ids`` (None for a list with no directory), reading the
+        missed lists concurrently: the Arrow decode releases the GIL."""
+        cache = self._serve_cache
+        got = {}
+        for li in list_ids:
+            if li in cache:
+                cache.move_to_end(li)
+                got[li] = cache[li][0]
+        missed = [li for li in dict.fromkeys(list_ids) if li not in got]
+        if missed:
+            # at most 8 reads in flight: each is a few small files
+            with ThreadPoolExecutor(min(len(missed), 8)) as pool:
+                got.update(zip(missed, pool.map(self._read_block, missed)))
+        for li in missed:
+            blk = got[li]
+            nbytes = 0 if blk is None else blk[0].nbytes + blk[1].nbytes
+            while cache and (
+                self._serve_cache_bytes + nbytes > self.SERVE_CACHE_BYTES
+            ):
+                _, (_, old_b) = cache.popitem(last=False)
+                self._serve_cache_bytes -= old_b
+            cache[li] = (blk, nbytes)
+            self._serve_cache_bytes += nbytes
+        return [got[li] for li in list_ids]
+
+    def _read_block(self, list_id: int):
         import os
-        from collections import OrderedDict
 
         import pyarrow.parquet as pq
 
-        cache = getattr(self, "_serve_cache", None)
-        if cache is None:
-            cache = self._serve_cache = OrderedDict()
-            self._serve_cache_bytes = 0
-        got = cache.get(list_id)
-        if got is not None:
-            cache.move_to_end(list_id)
-            return got[0]
         d = os.path.join(self.partitioned_path, f"list_id={list_id}")
         if not os.path.isdir(d):
-            cache[list_id] = (None, 0)
             return None
         t = pq.read_table(d, columns=[self.id_col, "embedding"])
         ids = t.column(self.id_col).to_numpy()
-        flat = t.column("embedding").combine_chunks()
-        emb = np.asarray(flat.flatten(), dtype=np.float64).reshape(
-            len(t), -1
-        )
-        nbytes = int(ids.nbytes + emb.nbytes)
-        while (
-            cache
-            and self._serve_cache_bytes + nbytes > self.SERVE_CACHE_BYTES
-        ):
-            _, (_, old_b) = cache.popitem(last=False)
-            self._serve_cache_bytes -= old_b
-        cache[list_id] = ((ids, emb), nbytes)
-        self._serve_cache_bytes += nbytes
-        return ids, emb
+        flat = t.column("embedding").combine_chunks().flatten()
+        return ids, np.asarray(flat).reshape(len(t), -1)
 
     def search_plan(
         self,
@@ -420,14 +434,23 @@ class PostFilterBackend(LadderBackend):
     """P3: IVF ANN candidates over the full corpus, escalating K′ ladder,
     keep candidates passing the filters, stop when ≥K kept
     (reference src/baselines/post_filter.py:17-109). The ladder, its
-    costed entry and the stats are :class:`LadderBackend`'s; this class
-    supplies the IVF rung.
+    costed entry, the filter membership and the stats are
+    :class:`LadderBackend`'s; this class supplies the IVF candidate
+    ranking.
 
-    Each rung re-plans from scratch with a larger K′ (reference behavior —
-    post_filter.py:66-87); with a fixed probe set the larger rung's
-    candidate set contains the smaller's, so the final rung's survivors are
-    the reference's best-score-dedup union (A5) without re-accumulating.
-    """
+    One ranking per search, at K′ = max(ladder): with a fixed probe set a
+    rung's top-K′ is the K′-prefix of the top max(ladder), so each rung
+    is a slice and the final rung's survivors are the reference's
+    best-score-dedup union (A5) without re-accumulating. The ranking
+    comes from wherever :func:`serving.ann_serve_or_plan` routes the
+    index: on ``local_probe`` (a persisted layout whose probed lists fit
+    the serve budget) from :meth:`IVFIndex.local_ranking` — an Arrow read
+    of the probed lists, cached across queries, and no Spark job; else
+    from one collect of :meth:`IVFIndex.search_plan`. On a resident
+    corpus whose filter set was seen before, a search then submits no
+    Spark job at all — the reference's in-memory metadata gather.
+    Scores on the local route are numpy's float64 GEMV, equal to the
+    plan's sequential float64 sum to ~1e-16."""
 
     name = "post_filter"
 
@@ -469,15 +492,18 @@ class PostFilterBackend(LadderBackend):
         kept = join_candidates(self.corpus, pred, candidates, self.id_col)
         return topk(kept, k, id_col=self.id_col), None
 
-    def _rung(self, kprime, q, pred, k, prepared):
-        candidates, probed = self.index.search_plan(q, kprime, self.nprobe)
-        kept = join_candidates(self.corpus, pred, candidates, self.id_col)
-        rows = topk(kept, k, id_col=self.id_col).collect()
-        # K′ at the stopping rung — the reference logs the last rung,
-        # not the ladder sum (quirk Q4; post_filter.py:101)
-        return rows, {
-            "scored_vectors": kprime,
-            "lists_probed": len(probed),
+    def _ranking(self, q):
+        from hybrid_vector_search_spark.serving import ann_serve_or_plan
+
+        index, kmax = self.index, max(self.k_ladder)
+        route = ann_serve_or_plan(index, self.nprobe, n=self.n).route
+        if route == "local_probe":
+            ids, scores, _ = index.local_ranking(q, kmax, self.nprobe)
+        else:
+            plan, _probed = index.search_plan(q, kmax, self.nprobe)
+            ids, scores = collect_ranking(plan, kmax, self.id_col)
+        return ids, scores, {
+            "lists_probed": min(self.nprobe, index.nlist),
             "nprobe": self.nprobe,
         }
 

@@ -217,6 +217,9 @@ class LSHPostFilterBackend(LadderBackend):
         _, kept, probes = self._probe(qvec, pred, radius)
         return topk(kept, k, id_col=self.id_col), probes
 
+    def _prepare(self, q, pred, filters, counted):
+        return None  # each radius scans its own buckets: no shared ranking
+
     def _rung(self, radius, q, pred, k, prepared):
         from concurrent.futures import ThreadPoolExecutor
 
@@ -228,7 +231,7 @@ class LSHPostFilterBackend(LadderBackend):
             counted = pool.submit(in_probed.count)
             rows = topk(kept, k, id_col=self.id_col).collect()
             scored_vectors = counted.result()
-        return rows, {
+        return [r[self.id_col] for r in rows], [r["score"] for r in rows], {
             "scored_vectors": scored_vectors,
             "lists_probed": len(probes),
             "nprobe": len(probes),

@@ -31,20 +31,18 @@ import time
 import uuid
 from abc import ABC, abstractmethod
 from collections.abc import Callable, Mapping, Sequence
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 from typing import Any
 
+import numpy as np
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from hybrid_vector_search_spark.errors import ValidationError
 from hybrid_vector_search_spark.functions.predicates import compile_filters
-from hybrid_vector_search_spark.functions.vector import (
-    dot_score_pandas_udf,
-    ensure_unit_l2,
-)
-from hybrid_vector_search_spark.operators.topk import topk
+from hybrid_vector_search_spark.functions.vector import ensure_unit_l2
+from hybrid_vector_search_spark.operators.topk import topk, topk_positions
 from hybrid_vector_search_spark.session import artifact
 from hybrid_vector_search_spark.sources.loaders import validate_K
 
@@ -112,23 +110,47 @@ def is_resident(df: DataFrame) -> bool:
 
 
 def allowed_count(
-    corpus: DataFrame, filters: Mapping[str, Any] | None, pred: Column
-) -> int:
-    """|rows of ``corpus`` passing ``pred``| (``pred`` compiled from
-    ``filters``). The count does not change with the query vector, and
-    the rows of a resident corpus cannot change under its cache, so on
-    a resident corpus it is counted once per (corpus plan, canonical
-    filters) and kept in the session artifact store, which
-    ``invalidate_caches()`` clears. An uncached handle counts on every
-    call: its files may change between queries."""
+    corpus: DataFrame,
+    filters: Mapping[str, Any] | None,
+    pred: Column,
+    id_col: str = "id",
+) -> tuple[int, np.ndarray | None]:
+    """``(|allowed|, allowed ids)`` for the rows of ``corpus`` passing
+    ``pred`` (compiled from ``filters``). Neither changes with the query
+    vector, and the rows of a resident corpus cannot change under its
+    cache, so on a resident corpus the answer is built once per (corpus
+    plan, canonical filters) and kept in the session artifact store,
+    which ``invalidate_caches()`` clears: a count job, then, when the
+    ids fit the broadcast budget (|allowed| × 8 B ≤
+    ``spark.sql.autoBroadcastJoinThreshold``), one collect of the ids,
+    kept sorted as int64 so membership is one ``np.searchsorted``. Past
+    the budget the ids are ``None`` and the caller tests membership with
+    a job. An uncached handle counts on every call and keeps no ids: its
+    files may change between queries. Reusing work that does not depend
+    on the query vector across the queries of a session is the idea of
+    the incremental top-K similarity search framework for interactive
+    sessions (EDBT 2020, PAPERS.md)."""
     if not is_resident(corpus):
-        return corpus.filter(pred).count()
+        return corpus.filter(pred).count(), None
+
+    def build() -> tuple[int, np.ndarray | None]:
+        allowed = corpus.filter(pred).select(id_col)
+        n = allowed.count()
+        # the threshold as the planner reads it: bytes, -1 when off
+        conf = corpus.sparkSession._jsparkSession.sessionState().conf()
+        if n * 8 > conf.autoBroadcastJoinThreshold():
+            return n, None
+        ids = np.fromiter((r[0] for r in allowed.collect()), np.int64)
+        ids.sort()
+        return len(ids), ids
+
     key = (
         "allowed_count",
         corpus.semanticHash(),
+        id_col,
         json.dumps(filters or {}, sort_keys=True, default=str),
     )
-    return artifact(corpus.sparkSession, key, corpus.filter(pred).count)
+    return artifact(corpus.sparkSession, key, build)
 
 
 #: filter-dict key → the column it actually constrains (geo box keys
@@ -314,10 +336,11 @@ def join_candidates(
     corpus: DataFrame, pred: Column, candidates: DataFrame, id_col: str = "id"
 ) -> DataFrame:
     """``(id, score)`` of the ANN candidates whose corpus row passes
-    ``pred``. Broadcasts the LADDER-BOUNDED side: ``candidates`` is a
-    top-K′ plan (≤ max(ladder) rows by construction), while the filtered
-    corpus approaches the full id column as selectivity → 1 — broadcasting
-    it would overflow the driver at 100× scale. The inner join keeps the
+    ``pred`` — the composable ``plan()`` form of a post-filter rung.
+    Broadcasts the LADDER-BOUNDED side: ``candidates`` is a top-K′ plan
+    (≤ max(ladder) rows by construction), while the filtered corpus
+    approaches the full id column as selectivity → 1 — broadcasting it
+    would overflow the driver at 100× scale. The inner join keeps the
     candidate scores."""
     allowed = corpus.filter(pred).select(id_col)
     return allowed.join(F.broadcast(candidates), id_col, "inner").select(
@@ -332,11 +355,22 @@ class LadderBackend(SearchBackend):
     stop at the first rung with ≥K survivors (fewer than K after the last
     rung is a valid short answer, never an error).
 
-    A subclass supplies ``_rung`` (one rung: its kept rows, best first,
-    and its own stats fields) and, when the rungs share one expensive
-    step, ``_prepare`` (run once per search, its result handed to every
-    rung). ``ladder`` names the rungs; ``_universe`` / ``_coverage`` map
-    them onto :func:`ladder_entry`.
+    The prepared ladder: a subclass supplies ``_ranking`` — its candidate
+    ranking at K′ = max(ladder), best first (IVF: the probed lists' top
+    K′; HNSW: the graph walk) — and the base marks which candidates pass
+    the filters once per search. A rung K′ is then a slice: the top-K′
+    of a (score DESC, id ASC) ranking is the K′-prefix of the top
+    max(ladder), so stop rung and survivors are those of the loop the
+    reference runs, for one candidate ranking instead of one per rung.
+    Membership comes from :func:`allowed_count`: on a resident corpus
+    its memo holds the sorted allowed ids, so a filter set seen before
+    costs no Spark job; an uncached handle, or an allowed set past the
+    broadcast budget, runs one filter job per search that returns the
+    candidate ids passing the filters (:meth:`_passing`). A source whose
+    rungs are not prefixes of one ranking (LSH: each radius scans other
+    buckets) overrides ``_prepare`` and ``_rung`` instead. ``ladder``
+    names the rungs; ``_universe`` / ``_coverage`` map them onto
+    :func:`ladder_entry`.
 
     ``costed=True`` replaces the fixed entry at the first rung with the
     COST-BASED entry of :func:`ladder_entry` (the better-than-reference
@@ -383,14 +417,63 @@ class LadderBackend(SearchBackend):
     def _coverage(self, rung: int) -> int:
         return rung
 
-    def _prepare(self, q: Any, pred: Column) -> Any:
-        return None
+    def _ranking(self, q: Any) -> tuple[np.ndarray, np.ndarray, dict]:
+        """The candidate ranking at K′ = max(ladder), best first:
+        ``(int64 ids, float64 scores, the source's own stats fields)``."""
+        raise NotImplementedError
 
-    @abstractmethod
+    def _prepare(
+        self, q: Any, pred: Column, filters: Mapping[str, Any] | None,
+        counted: Future | None,
+    ) -> Any:
+        """The ranking and which of its candidates pass the filters;
+        ``counted`` is the in-flight :func:`allowed_count`, if any."""
+        ids, scores, fields = self._ranking(q)
+        allowed = None
+        if filters and is_resident(self.corpus):
+            allowed = (
+                counted.result() if counted is not None
+                else allowed_count(self.corpus, filters, pred, self.id_col)
+            )[1]
+        if not filters:
+            keep = np.ones(len(ids), dtype=bool)
+        elif allowed is not None:
+            keep = _in_sorted(allowed, ids)
+        else:
+            keep = self._passing(pred, ids)
+        return ids, scores, keep, fields
+
+    def _passing(self, pred: Column, ids: np.ndarray) -> np.ndarray:
+        """Which candidate ids pass ``pred``, by one job: the filtered
+        corpus keeps the rows whose id is among the ≤ max(ladder)
+        candidates — one ``IN`` list, a hash set in each task — so
+        nothing as large as the allowed side, which approaches the full
+        id column as selectivity → 1, is broadcast or collected."""
+        if len(ids) == 0:
+            return np.zeros(0, dtype=bool)
+        listed = ", ".join(str(i) for i in ids.tolist())
+        among = F.expr(f"`{self.id_col}` IN ({listed})")
+        passing = np.fromiter(
+            (
+                r[0]
+                for r in self.corpus.filter(pred & among)
+                .select(self.id_col)
+                .collect()
+            ),
+            np.int64,
+        )
+        return np.isin(ids, passing)
+
     def _rung(
         self, rung: int, q: Any, pred: Column, k: int, prepared: Any
-    ) -> tuple[list, dict[str, Any]]:
-        """Run one rung: ``(kept rows ≤ K, best first; own stats)``."""
+    ) -> tuple[Sequence[int], Sequence[float], dict[str, Any]]:
+        """Run one rung: ``(kept ids ≤ K, their scores, best first; own
+        stats)``."""
+        ids, scores, keep, fields = prepared
+        kept = np.flatnonzero(keep[:rung])[:k]
+        # K′ at the stopping rung — the reference logs the last rung,
+        # not the ladder sum (quirk Q4; post_filter.py:101)
+        return ids[kept], scores[kept], {"scored_vectors": rung, **fields}
 
     def _stop_note(self, rung: int) -> str:
         return f"ladder_stop={rung}"
@@ -409,14 +492,14 @@ class LadderBackend(SearchBackend):
             counted = None
             if self.costed and self.selectivity_hint is None:
                 counted = pool.submit(
-                    allowed_count, self.corpus, filters, pred
+                    allowed_count, self.corpus, filters, pred, self.id_col
                 )
-            prepared = self._prepare(q, pred)
+            prepared = self._prepare(q, pred, filters, counted)
             if self.costed:
                 n_allowed = (
                     self.selectivity_hint
                     if counted is None
-                    else counted.result()
+                    else counted.result()[0]
                 )
         if n_allowed is not None:
             entry = ladder_entry(
@@ -424,11 +507,11 @@ class LadderBackend(SearchBackend):
             )
             ladder = ladder[ladder.index(entry):]
         for rungs_run, rung in enumerate(ladder, 1):
-            rows, fields = self._rung(rung, q, pred, k, prepared)
-            if len(rows) >= k:
+            ids, scores, fields = self._rung(rung, q, pred, k, prepared)
+            if len(ids) >= k:
                 break
         latency_ms = (time.perf_counter() - t0) * 1000.0
-        scores = [float(r["score"]) for r in rows]
+        scores = [float(s) for s in scores]
         stats: dict[str, Any] = {
             "method": self.name,
             "K": k,
@@ -446,7 +529,27 @@ class LadderBackend(SearchBackend):
             ),
             "notes": self.compose_notes(self._stop_note(rung)),
         }
-        return [int(r[self.id_col]) for r in rows], stats
+        return [int(i) for i in ids], stats
+
+
+def collect_ranking(
+    plan: DataFrame, k: int, id_col: str = "id"
+) -> tuple[np.ndarray, np.ndarray]:
+    """The ``(id, score)`` rows of ``plan``, collected: int64 ids and
+    float64 scores of its top ``k``, best first."""
+    rows = plan.collect()
+    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
+    scores = np.array([r["score"] for r in rows], dtype=np.float64)
+    top = topk_positions(ids, scores, k)
+    return ids[top], scores[top]
+
+
+def _in_sorted(sorted_ids: np.ndarray, ids: np.ndarray) -> np.ndarray:
+    """Membership of ``ids`` in the sorted array ``sorted_ids``."""
+    if len(sorted_ids) == 0:
+        return np.zeros(len(ids), dtype=bool)
+    pos = np.searchsorted(sorted_ids, ids)
+    return sorted_ids[np.minimum(pos, len(sorted_ids) - 1)] == ids
 
 
 def get_backend(

@@ -12,6 +12,7 @@ every query's top-K in a single job.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -22,6 +23,28 @@ def topk(
     """Global top-K by ``score DESC, id ASC`` — plans as TakeOrderedAndProject
     (per-partition bounded heap + driver merge), no full sort, no shuffle."""
     return df.orderBy(F.col(score_col).desc(), F.col(id_col).asc()).limit(k)
+
+
+def topk_positions(ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
+    """Positions of the driver-side top-K by ``score DESC, id ASC`` —
+    the reference's argpartition + sort of the K slice, made exact on
+    ties: ``np.partition`` finds the K-th score, and only the rows at or
+    above it (every row tied with the K-th included) go through the
+    (score DESC, id ASC) ``lexsort``. NaN scores rank last, as in a
+    full ``lexsort``."""
+    neg = -np.asarray(scores, dtype=np.float64)
+    n = len(neg)
+    k = min(int(k), n)
+    if k <= 0:
+        return np.zeros(0, dtype=np.intp)
+    cand = np.arange(n)
+    if k < n:
+        # np.partition places NaN last, so the K-th is NaN only when
+        # fewer than K scores are numbers: then every row is a candidate
+        kth = np.partition(neg, k - 1)[k - 1]
+        if kth == kth:
+            cand = np.flatnonzero(neg <= kth)
+    return cand[np.lexsort((ids[cand], neg[cand]))[:k]]
 
 
 def grouped_topk(

@@ -1684,7 +1684,7 @@ def _int8_rerank_plan(
     import numpy as np
 
     from hybrid_vector_search_spark.functions.vector import (
-        dot_score_sql,
+        dot_score_column,
         long_array_lit,
         quantize_int8_col,
     )
@@ -1708,7 +1708,7 @@ def _int8_rerank_plan(
         id_col="vec_id",
     )
     rescored = cand.select(
-        "vec_id", dot_score_sql("embedding", q).alias("score")
+        "vec_id", dot_score_column(q).alias("score")
     )
     return topk(rescored, k, id_col="vec_id")
 
@@ -1759,7 +1759,7 @@ def _hamming_rerank_plan(
     rerank), seed-parameterized for the same one-builder reason as
     :func:`_int8_rerank_plan`."""
     from hybrid_vector_search_spark.functions.vector import (
-        dot_score_sql,
+        dot_score_column,
         sign_pack_column,
         sign_pack_value,
     )
@@ -1775,7 +1775,7 @@ def _hamming_rerank_plan(
         .limit(cand_k)
     )
     rescored = cand.select(
-        "vec_id", dot_score_sql("embedding", q).alias("score")
+        "vec_id", dot_score_column(q).alias("score")
     )
     return topk(rescored, k, id_col="vec_id")
 
@@ -1843,7 +1843,7 @@ def ann_matryoshka_rerank_topk(
     is a pure function of the embedding, so the oracle replays slice,
     ranking, and rerank exactly (ties by id at both stages)."""
     from hybrid_vector_search_spark.functions.vector import (
-        dot_score_sql,
+        dot_score_column,
         double_array_lit,
     )
 
@@ -1865,7 +1865,7 @@ def ann_matryoshka_rerank_topk(
         .limit(MATRYOSHKA_C)
     )
     rescored = cand.select(
-        "vec_id", dot_score_sql("embedding", q).alias("score")
+        "vec_id", dot_score_column(q).alias("score")
     )
     return topk(rescored, ANN_IVF_K, id_col="vec_id").select(
         F.col("vec_id").alias("id"), F.round("score", 6).alias("score")
@@ -1948,7 +1948,7 @@ def ann_mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     so every float matches the oracle's list_dot_product fold
     bit-for-bit before the 6-decimal round. ``side_effects``: the
     selection loop is driver-side."""
-    from hybrid_vector_search_spark.functions.vector import dot_score_sql
+    from hybrid_vector_search_spark.functions.vector import dot_score_column
 
     q = query_vector(MMR_QSEED)
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1956,7 +1956,7 @@ def ann_mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.select(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("e"),
-            dot_score_sql("embedding", q).alias("rel"),
+            dot_score_column(q).alias("rel"),
         )
         .orderBy(F.col("rel").desc(), F.col("vec_id").asc())
         .limit(MMR_C)

@@ -1378,7 +1378,7 @@ def ann_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebooks), so the oracle replays assignment, probe, encoding, ADC
     ranking, and rerank end-to-end — the composed pipeline gets the
     same value-hash certificate its three ingredients each have."""
-    from hybrid_vector_search_spark.functions.vector import dot_score_sql
+    from hybrid_vector_search_spark.functions.vector import dot_score_column
 
     q = query_vector(_IVFPQ_QSEED)
     index = _ann_ivf_fixed_index(spark, sf_dir)
@@ -1397,7 +1397,7 @@ def ann_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(cand.select("id")), "id"
     )
     scored = rerank.select(
-        "id", dot_score_sql("embedding", q).alias("score")
+        "id", dot_score_column(q).alias("score")
     )
     return topk(scored, ANN_IVF_K).select(
         "id", F.round("score", 6).alias("score")

@@ -450,7 +450,7 @@ def metrics_recall_by_method(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from hybrid_vector_search_spark.functions.vector import (
-        dot_score_sql,
+        dot_score_column,
         long_array_lit,
         sign_pack_value,
     )
@@ -474,7 +474,7 @@ def metrics_recall_by_method(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ham = F.bit_count(F.col("pk").bitwiseXOR(F.lit(qbits)))
     base = _quantized_corpus(spark, sf_dir)
-    score = dot_score_sql("embedding", q).alias("score")
+    score = dot_score_column(q).alias("score")
 
     plans = {
         "exact": topk(base.select("id", score), ANN_IVF_K),
@@ -694,7 +694,7 @@ def metrics_hamming_c_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly _hamming_rerank_plan's, so the sets cannot drift from the
     registered query's."""
     from hybrid_vector_search_spark.functions.vector import (
-        dot_score_sql,
+        dot_score_column,
         sign_pack_value,
     )
 
@@ -703,7 +703,7 @@ def metrics_hamming_c_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow = _quantized_corpus(spark, sf_dir).select(
         F.col("id").alias("vec_id"),
         F.bit_count(F.col("pk").bitwiseXOR(F.lit(qbits))).alias("ham"),
-        dot_score_sql("embedding", q).alias("score"),
+        dot_score_column(q).alias("score"),
     )
     collected = (
         narrow.orderBy(F.col("ham").asc(), F.col("vec_id").asc())
@@ -813,7 +813,7 @@ def metrics_lsh_radius_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans."""
     from pyspark.sql import Window
 
-    from hybrid_vector_search_spark.functions.vector import dot_score_sql
+    from hybrid_vector_search_spark.functions.vector import dot_score_column
     from hybrid_vector_search_spark.operators import lsh as LSH
 
     q = query_vector(LSH_SWEEP_QSEED)
@@ -834,7 +834,7 @@ def metrics_lsh_radius_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bucket_udf expression the registered LSH queries assign
         _quantized_corpus(spark, sf_dir)
         .select(
-            "id", dot_score_sql("embedding", q).alias("score"), mr.alias("mr")
+            "id", dot_score_column(q).alias("score"), mr.alias("mr")
         )
         .withColumn("cnt", F.count(F.lit(1)).over(w))
         .withColumn(
@@ -934,7 +934,7 @@ def metrics_matryoshka_dim_sweep(
     from concurrent.futures import ThreadPoolExecutor
 
     from hybrid_vector_search_spark.functions.vector import (
-        dot_score_sql,
+        dot_score_column,
         double_array_lit,
     )
 
@@ -945,7 +945,7 @@ def metrics_matryoshka_dim_sweep(
     # still collects every rung (the sweep's real work)
     def build():
         base = _quantized_corpus(spark, sf_dir)
-        score = dot_score_sql("embedding", q).alias("score")
+        score = dot_score_column(q).alias("score")
 
         def pscore(d):
             qp = double_array_lit(q[:d])  # one parse per rung

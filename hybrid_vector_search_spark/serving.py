@@ -35,6 +35,7 @@ from hybrid_vector_search_spark.errors import ValidationError
 from hybrid_vector_search_spark.functions.predicates import (
     filters_mask_pandas,
 )
+from hybrid_vector_search_spark.operators.topk import topk_positions
 
 #: matrix-footprint budget for ONE resident shard (N×D×8 bytes + the
 #: measured metadata footprint) — the peak a single Arrow collect +
@@ -149,12 +150,11 @@ class LocalCorpusServe:
         return cls(ids, mat, meta, corpus.schema)
 
     def _topk(self, ids, scores, k: int) -> list[tuple[int, float]]:
-        k = min(int(k), len(ids))
-        if k <= 0:
-            return []
         # exact (score DESC, id ASC) — the engine-wide tiebreak
-        order = np.lexsort((ids, -scores))[:k]
-        return [(int(ids[i]), float(scores[i])) for i in order]
+        return [
+            (int(ids[i]), float(scores[i]))
+            for i in topk_positions(ids, scores, k)
+        ]
 
     def exact_topk(
         self, qvec: Sequence[float], k: int
@@ -269,8 +269,10 @@ def _merge_topk(
     scores = np.fromiter(
         (c[1] for c in cand), dtype=np.float64, count=len(cand)
     )
-    order = np.lexsort((ids, -scores))[: min(int(k), len(cand))]
-    return [(int(ids[i]), float(scores[i])) for i in order]
+    return [
+        (int(ids[i]), float(scores[i]))
+        for i in topk_positions(ids, scores, k)
+    ]
 
 
 class ShardedCorpusServe:
@@ -559,8 +561,9 @@ class CostedAnnServe:
       the partition-pruned Spark plan (``IVFIndex.search_plan``).
 
     Unfiltered point probes only — that is what the serving tier is
-    for; filtered post_filter queries keep the candidate-ladder
-    strategies (operators/ivf.py PostFilterBackend)."""
+    for; the filtered post_filter strategy (operators/ivf.py
+    PostFilterBackend) takes the same route decision for its candidate
+    ranking and keeps its own ladder."""
 
     def __init__(self, index, route: str, nprobe: int):
         self.index = index
@@ -574,16 +577,10 @@ class CostedAnnServe:
 
         t0 = time.perf_counter()
         if self.route == "local_probe":
-            rows = self.index.serve_local_topk(
+            ids, scores, scored = self.index.local_ranking(
                 qvec, k, nprobe=self.nprobe
             )
-            # blocks are LRU-cached by serve_local_topk's read, so the
-            # scored-rows count is a cheap cache walk
-            scored = 0
-            for li in self.index.probe(qvec, self.nprobe):
-                blk = self.index._serve_block(li)
-                if blk is not None:
-                    scored += len(blk[0])
+            rows = [(int(i), float(s)) for i, s in zip(ids, scores)]
             notes = f"route=local_probe(nprobe={self.nprobe})"
         else:
             plan, _probed = self.index.search_plan(

@@ -110,3 +110,22 @@ def test_plans_keep_no_private_caches():
                 if any(getattr(o, "id", None) == "spark" for o in operands):
                     found.append(f"{path.name}:{node.lineno} `is spark`")
     assert not found, found
+
+
+def test_get_spark_turns_dataframe_debugging_off(spark):
+    """``get_spark`` turns off PySpark's per-call call-site capture
+    (about five py4j round trips per Column function call)."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_invalidate_rebuilds_every_prepared_plan(spark):
+    """After ``invalidate_caches()`` every query not marked
+    ``side_effects`` returns a new prepared plan object: no builder keeps
+    a plan of its own past the refresh. Only plan identity is checked;
+    no action runs on the plans."""
+    names = sorted(set(R.QUERIES) - R.SIDE_EFFECT_QUERIES)
+    before = {name: R.QUERIES[name](spark, SF) for name in names}
+    assert all(R.QUERIES[name](spark, SF) is before[name] for name in names)
+    R.invalidate_caches()
+    kept = [n for n in names if R.QUERIES[n](spark, SF) is before[n]]
+    assert not kept

@@ -466,3 +466,224 @@ def test_costed_allowed_count_memoized_on_resident_corpus(spark, corpus):
     assert is_resident(corpus)
     assert counted(resident, f_a, 9)[0] == 1      # store was cleared
     assert counted(resident, f_a, 10)[0] == 0
+
+
+# ------------------------------------------- prepared ladder (one ranking)
+
+STRICT = {"lang": {"eq": "zh"}, "label": {"in": [7]}}  # ~1.5% of corpus
+BROAD = {"lang": {"in": ["en", "fr"]}}  # >50% of corpus
+
+
+def _submitted_jobs(spark) -> int:
+    """Jobs submitted so far (the DAG scheduler's counter; unlike the
+    status store's job list it is never trimmed), once the listener bus
+    has caught up."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(10_000)
+    return int(sc.dagScheduler().numTotalJobs())
+
+
+def _jobs_of(spark, fn):
+    before = _submitted_jobs(spark)
+    out = fn()
+    return out, _submitted_jobs(spark) - before
+
+
+@pytest.fixture(scope="module")
+def fixed_indexes(spark, corpus, tmp_path_factory):
+    """One fixed-quantizer index twice: over a persisted layout (the
+    ``local_probe`` candidate route) and in memory (the ``distributed``
+    route, one collect of ``search_plan``). Same centroids, so both
+    assign and probe identically."""
+    emb = corpus.select("id", "embedding")
+    sample = emb.orderBy("id").limit(8).collect()
+    cents = np.vstack([r["embedding"] for r in sample]).astype(np.float64)
+    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
+    path = str(tmp_path_factory.mktemp("ivf_fixed") / "layout")
+    return {
+        "local_probe": IVFIndex.build_fixed(emb, cents, persist_path=path),
+        "distributed": IVFIndex.build_fixed(emb, cents),
+    }
+
+
+def _join_per_rung(backend, q, filters, k):
+    """The post-filter search as written before the prepared ladder: one
+    probe plan per rung, joined against the filtered corpus and
+    collected, the count job for the costed entry."""
+    from hybrid_vector_search_spark.functions.predicates import (
+        compile_filters,
+    )
+    from hybrid_vector_search_spark.functions.vector import ensure_unit_l2
+    from hybrid_vector_search_spark.operators.strategies import (
+        join_candidates,
+        ladder_entry,
+    )
+    from hybrid_vector_search_spark.operators.topk import topk
+
+    q = ensure_unit_l2(q)
+    pred = compile_filters(backend.corpus.schema, filters)
+    ladder = backend.k_ladder
+    stats = {}
+    if backend.costed:
+        n_allowed = backend.corpus.filter(pred).count()
+        stats["selectivity_est"] = n_allowed / backend.n
+        entry = ladder_entry(ladder, k, n_allowed, backend.n)
+        ladder = ladder[ladder.index(entry):]
+    for rungs_run, kprime in enumerate(ladder, 1):
+        cand, probed = backend.index.search_plan(q, kprime, backend.nprobe)
+        rows = topk(join_candidates(backend.corpus, pred, cand), k).collect()
+        if len(rows) >= k:
+            break
+    stats.update(
+        ladder_entry=ladder[0], rungs_run=rungs_run, scored_vectors=kprime,
+        lists_probed=len(probed),
+    )
+    return [r["id"] for r in rows], [r["score"] for r in rows], stats
+
+
+LADDER_STATS = (
+    "ladder_entry", "rungs_run", "scored_vectors", "lists_probed",
+    "selectivity_est",
+)
+
+
+@pytest.mark.parametrize("route", ["local_probe", "distributed"])
+@pytest.mark.parametrize("costed", [False, True])
+def test_prepared_ladder_matches_join_per_rung(
+    spark, corpus, fixed_indexes, route, costed
+):
+    """One candidate ranking per search, sliced per rung, returns the
+    ids, scores and ladder stats of the join-per-rung search on both
+    candidate routes, fixed and costed ladders, strict and broad
+    filters, resident and uncached handles. The local route scores in
+    numpy (float64 GEMV), the plan in a sequential float64 sum: equal
+    to 1e-9, and exactly equal on the plan route. On the resident
+    corpus a search for a filter set seen before submits only the
+    ranking's job, which the local route does without Spark."""
+    from hybrid_vector_search_spark.serving import ann_serve_or_plan
+
+    index = fixed_indexes[route]
+    n = corpus.count()
+    assert ann_serve_or_plan(index, 4, n=n).route == route
+    uncached = corpus.filter(F.col("id").isNotNull())
+    for handle in (corpus, uncached):
+        backend = PostFilterBackend(
+            handle, n, index=index, nprobe=4, costed=costed
+        )
+        for seed, filters in ((7, STRICT), (8, BROAD), (9, {})):
+            q = query_vector(seed)
+            want_ids, want_scores, want = _join_per_rung(
+                backend, q, filters, 10
+            )
+            if handle is corpus:
+                backend.search(q, filters, 10)  # the allowed-id memo
+                (ids, st), jobs = _jobs_of(
+                    spark, lambda: backend.search(q, filters, 10)
+                )
+                # the ranking: no job on the local route, else one collect
+                assert jobs == (route == "distributed"), (route, filters)
+            else:
+                ids, st = backend.search(q, filters, 10)
+            assert ids == want_ids, (route, costed, filters)
+            if route == "distributed":
+                assert st["scores"] == want_scores
+            else:
+                assert np.allclose(st["scores"], want_scores, rtol=0, atol=1e-9)
+            assert {s: st.get(s) for s in LADDER_STATS} == {
+                s: want.get(s) for s in LADDER_STATS
+            }, (route, costed, filters)
+    # the strict filter exhausts the fixed ladder; the costed entry
+    # jumps to its last rung
+    _ids, st = PostFilterBackend(
+        corpus, n, index=index, nprobe=4, costed=costed
+    ).search(query_vector(7), STRICT, 10)
+    assert (st["ladder_entry"], st["rungs_run"]) == (
+        (1000, 1) if costed else (200, 3)
+    )
+
+
+def test_warm_costed_search_on_resident_corpus_submits_no_job(
+    spark, corpus, fixed_indexes
+):
+    """On a resident corpus with a persisted layout, once a filter set
+    has been seen, a costed post-filter search submits no Spark job: the
+    candidates come from the cached probed lists and the survivors from
+    the memoized allowed ids. An uncached handle submits its count and
+    one membership job per search."""
+    from hybrid_vector_search_spark.functions.predicates import (
+        compile_filters,
+    )
+    from hybrid_vector_search_spark.operators.strategies import is_resident
+
+    index = fixed_indexes["local_probe"]
+    n = corpus.count()
+    assert is_resident(corpus)
+    filters = {"n_chars": {"ge": 150}, "lang": {"ne": "de"}}
+    uncached_df = corpus.filter(F.col("id").isNotNull())
+    _, count_jobs = _jobs_of(
+        spark,
+        lambda: uncached_df.filter(
+            compile_filters(corpus.schema, filters)
+        ).count(),
+    )
+    assert count_jobs >= 1
+    resident = PostFilterBackend(corpus, n, index=index, nprobe=4, costed=True)
+    (_ids, st1), first = _jobs_of(
+        spark, lambda: resident.search(query_vector(21), filters, 10)
+    )
+    assert first == count_jobs + 1  # the memo: its count, one id collect
+    for seed in (22, 23):
+        (ids, st), warm = _jobs_of(
+            spark, lambda: resident.search(query_vector(seed), filters, 10)
+        )
+        assert warm == 0 and len(ids) == 10
+        assert st["selectivity_est"] == st1["selectivity_est"]
+    uncached = PostFilterBackend(
+        uncached_df, n, index=index, nprobe=4, costed=True
+    )
+    for seed in (21, 22):
+        (ids, st), jobs = _jobs_of(
+            spark, lambda: uncached.search(query_vector(seed), filters, 10)
+        )
+        assert jobs == count_jobs + 1  # its count, one membership job
+    assert ids == resident.search(query_vector(22), filters, 10)[0]
+
+
+def test_allowed_set_over_broadcast_budget_takes_job_path(
+    spark, corpus, fixed_indexes
+):
+    """An allowed set whose ids would pass the broadcast budget keeps
+    only its count in the memo; membership is then one semi-join job per
+    search, with the same answer as the join-per-rung search."""
+    from hybrid_vector_search_spark.functions.predicates import (
+        compile_filters,
+    )
+    from hybrid_vector_search_spark.operators.strategies import allowed_count
+
+    index = fixed_indexes["local_probe"]
+    n = corpus.count()
+    filters = {"n_chars": {"ge": 120}, "label": {"ne": 3}}
+    pred = compile_filters(corpus.schema, filters)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "64")  # 8 ids
+    try:
+        backend = PostFilterBackend(
+            corpus, n, index=index, nprobe=4, costed=True
+        )
+        backend.search(query_vector(31), filters, 10)  # builds the memo
+        n_allowed, ids_kept = allowed_count(corpus, filters, pred)
+        assert ids_kept is None and n_allowed * 8 > 64
+        q = query_vector(32)
+        (ids, st), jobs = _jobs_of(
+            spark, lambda: backend.search(q, filters, 10)
+        )
+    finally:
+        spark.conf.set(key, prev)
+    assert jobs == 1  # the membership semi-join
+    want_ids, want_scores, want = _join_per_rung(backend, q, filters, 10)
+    assert ids == want_ids
+    assert np.allclose(st["scores"], want_scores, rtol=0, atol=1e-9)
+    assert {s: st.get(s) for s in LADDER_STATS} == {
+        s: want.get(s) for s in LADDER_STATS
+    }

@@ -80,6 +80,31 @@ def test_tiebreak_score_desc_id_asc(serve):
     assert out == [(9, 0.9), (1, 0.5), (3, 0.5), (7, 0.5)]
 
 
+def test_topk_positions_exact_on_ties_straddling_k():
+    """The partition-then-sort top-K keeps every row tied with the K-th
+    score, so a tie across position K resolves by id exactly as a full
+    (score DESC, id ASC) sort does; NaN scores rank last."""
+    import numpy as np
+
+    from hybrid_vector_search_spark.operators.topk import topk_positions
+
+    ids = np.array([5, 3, 9, 1, 7, 2], dtype=np.int64)
+    scores = np.array([0.5, 0.9, 0.5, 0.5, 0.1, 0.5])
+    # K=3 cuts through the four rows tied at 0.5: ids 1 and 2 win
+    assert ids[topk_positions(ids, scores, 3)].tolist() == [3, 1, 2]
+    assert topk_positions(ids, scores, 0).size == 0
+    rng = np.random.default_rng(11)
+    for trial in range(300):
+        n = int(rng.integers(1, 80))
+        ids = rng.permutation(10 * n)[:n].astype(np.int64)
+        scores = rng.integers(0, 4, n).astype(np.float64)
+        if trial % 4 == 0:
+            scores[rng.integers(0, n, 3)] = np.nan
+        for k in (1, 2, n // 2, n - 1, n, n + 3):
+            want = np.lexsort((ids, -scores))[: max(min(k, n), 0)]
+            assert topk_positions(ids, scores, k).tolist() == want.tolist()
+
+
 # ---------------------------------------------- sharded tier (r14)
 
 

@@ -183,3 +183,38 @@ def test_double_array_lit_non_finite_falls_back(spark):
     ).first()["a"]
     assert got[:3] == [1.0, float("inf"), float("-inf")]
     assert math.isnan(got[3])
+
+
+def test_dot_score_column_is_one_sql_node_bit_identical(spark, kernel_corpus):
+    """``dot_score_column`` is one SQL expression around the query's CSV
+    literal, with scores bit-identical to the Column-API form and to the
+    array-level cast form (the former ``dot_score_sql``); a non-finite
+    query keeps the Column-API form."""
+    df, vecs = kernel_corpus
+    rng = np.random.RandomState(77)
+    q = rng.randn(vecs.shape[1])
+    q = [float(x) for x in q / np.linalg.norm(q)]
+    col = dot_score_column(q)
+    assert str(col).startswith("Column<'aggregate(zip_with(`embedding`")
+    column_api = F.aggregate(
+        F.zip_with(F.col("embedding"), _array_of_lits(q),
+                   lambda a, b: a.cast("double") * b),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    array_cast = F.aggregate(
+        F.zip_with(F.col("embedding").cast("array<double>"),
+                   _array_of_lits(q), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    rows = df.select(
+        col.alias("new"), column_api.alias("api"), array_cast.alias("cast")
+    ).collect()
+    assert rows and all(
+        _bits(r["new"]) == _bits(r["api"]) == _bits(r["cast"]) for r in rows
+    )
+    inf_q = [float("inf")] + [0.0] * (vecs.shape[1] - 1)
+    assert "array(Infinity" in str(dot_score_column(inf_q))
+    got = df.filter("id = 5").select(dot_score_column(inf_q).alias("s"))
+    assert math.isinf(got.first()["s"]) or math.isnan(got.first()["s"])
