@@ -28,6 +28,7 @@ scalable plan at 100 TB.
 from __future__ import annotations
 
 import json
+import math
 from collections.abc import Iterable, Mapping
 from typing import Any
 
@@ -195,6 +196,35 @@ def _like_col(col: Column, dtype: T.DataType) -> Column:
     return col.cast(T.StringType())
 
 
+def _sql_literal(v: Any) -> str | None:
+    """The Spark SQL literal that reads back as ``F.lit(v)`` does, or
+    None when there is none here: non-finite or out-of-range numbers,
+    other types, and strings holding ``${``, which the SQL parser's
+    variable substitution would rewrite."""
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        return str(v) if -(2**63) <= v < 2**63 else None
+    if isinstance(v, float):
+        # repr is the shortest decimal that parses back to the same
+        # double; the D suffix makes it a DOUBLE, not a DECIMAL
+        return f"{v!r}D" if math.isfinite(v) else None
+    if isinstance(v, str) and "${" not in v:
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return None
+
+
+def _in_column(col_name: str, col: Column, vals: list[Any]) -> Column:
+    """``col IN (vals)`` as ONE SQL expression: one parse instead of one
+    py4j literal per value (``Column.isin``), the same ``In`` node with
+    the same literal types. Values with no SQL literal keep ``isin``."""
+    lits = [_sql_literal(v) for v in vals]
+    if None in lits:
+        return col.isin(vals)
+    name = col_name.replace("`", "``")
+    return F.expr(f"`{name}` IN ({', '.join(lits)})")
+
+
 def compile_filters(
     schema: T.StructType, filters: Mapping[str, Any] | None
 ) -> Column:
@@ -253,7 +283,7 @@ def compile_filters(
 
             elif op == "in":
                 ok, vals_cast = _cast_iterable(val, dtype)
-                m = col.isin(vals_cast) if ok else F.lit(False)
+                m = _in_column(col_name, col, vals_cast) if ok else F.lit(False)
 
             elif op == "like":
                 needle = str(val).lower()
@@ -397,6 +427,16 @@ def _like_haystack(s, dtype: T.DataType):
     return joined.str.lower()
 
 
+def _as_spark_compares(s, dtype: T.DataType):
+    """``s`` as Spark compares it with a filter literal: a FLOAT column
+    meets the double literal ``_cast_scalar`` makes in double, so its
+    float32 values are widened (a float32 comparison would find the
+    float32 value nearest 36.1 equal to 36.1; Spark finds it below)."""
+    if isinstance(dtype, T.FloatType):
+        return s.astype("float64")
+    return s
+
+
 def filters_mask_pandas(
     schema: T.StructType,
     filters: Mapping[str, Any] | None,
@@ -445,8 +485,9 @@ def filters_mask_pandas(
     for col_name, ops in filters.items():
         if col_name in {"lat_between", "lon_between"}:
             continue
-        s = pdf[col_name]
         dtype = dtypes[col_name]
+        raw = pdf[col_name]
+        s = _as_spark_compares(raw, dtype)
 
         for op, val in ops.items():
             if op in _COMPARE_OPS:
@@ -481,7 +522,7 @@ def filters_mask_pandas(
                 needle = str(val).lower()
                 hay = lowered.get(col_name)
                 if hay is None:
-                    hay = lowered[col_name] = _like_haystack(s, dtype)
+                    hay = lowered[col_name] = _like_haystack(raw, dtype)
                 m = (
                     hay.str.contains(needle, regex=False)
                     .fillna(False)
@@ -503,7 +544,8 @@ def filters_mask_pandas(
             raise FilterSpecError(
                 "Geo filters require 'latitude' and 'longitude' columns"
             )
-        lat, lon = pdf["latitude"], pdf["longitude"]
+        lat = _as_spark_compares(pdf["latitude"], dtypes["latitude"])
+        lon = _as_spark_compares(pdf["longitude"], dtypes["longitude"])
         casts = [
             _cast_scalar(geo_lat[0], dtypes["latitude"]),
             _cast_scalar(geo_lat[1], dtypes["latitude"]),

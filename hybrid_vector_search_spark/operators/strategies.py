@@ -10,7 +10,9 @@ Strategy ↔ plan shape:
   src/baselines/pre_filter.py:7-68): ``filter → score → TakeOrderedAndProject``.
   In Spark these are the *same* plan — Catalyst predicate pushdown makes
   "gather the allowed subset first" automatic; both names are kept for the
-  stats contract. Scoring is float64 (reference oracle upcast).
+  stats contract. Scoring is float64 (reference oracle upcast). On a
+  corpus held in Spark's cache manager ``search`` answers from the
+  driver-resident serve tier instead (:class:`ExactBackend`).
 * ``post_filter`` (reference P3, src/baselines/post_filter.py:17-109):
   ANN candidates over the full corpus via the IVF index, candidate ladder
   K′ ∈ (200, 500, 1000) with early stop, then filter candidates and keep
@@ -21,12 +23,14 @@ Strategy ↔ plan shape:
   ignores filters (kept as the recall floor; reference quirk Q7).
 
 Row counts ("scored_vectors") are captured with ``Observation`` metrics on
-the scan — no second pass over the data.
+the scan — no second pass over the data — or, on the resident route, from
+the serve tier's filter mask.
 """
 
 from __future__ import annotations
 
 import json
+import threading
 import time
 import uuid
 from abc import ABC, abstractmethod
@@ -40,10 +44,13 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from hybrid_vector_search_spark.errors import ValidationError
-from hybrid_vector_search_spark.functions.predicates import compile_filters
+from hybrid_vector_search_spark.functions.predicates import (
+    compile_filters,
+    validate_filters_schema,
+)
 from hybrid_vector_search_spark.functions.vector import ensure_unit_l2
 from hybrid_vector_search_spark.operators.topk import topk, topk_positions
-from hybrid_vector_search_spark.session import artifact
+from hybrid_vector_search_spark.session import resident_artifact, stored
 from hybrid_vector_search_spark.sources.loaders import validate_K
 
 
@@ -71,6 +78,14 @@ class SearchBackend(ABC):
     def search(
         self, qvec: Sequence[float], filters: Mapping[str, Any] | None, k: int
     ) -> tuple[list[int], dict[str, Any]]:
+        return self.plan_search(qvec, filters, k)
+
+    def plan_search(
+        self, qvec: Sequence[float], filters: Mapping[str, Any] | None, k: int
+    ) -> tuple[list[int], dict[str, Any]]:
+        """Answer by collecting :meth:`plan`: one Spark job, with
+        ``scored_vectors`` read from the plan's row-count
+        ``Observation``."""
         validate_K(k, self.n)
         q = ensure_unit_l2(qvec)
         t0 = time.perf_counter()
@@ -118,39 +133,74 @@ def allowed_count(
     """``(|allowed|, allowed ids)`` for the rows of ``corpus`` passing
     ``pred`` (compiled from ``filters``). Neither changes with the query
     vector, and the rows of a resident corpus cannot change under its
-    cache, so on a resident corpus the answer is built once per (corpus
-    plan, canonical filters) and kept in the session artifact store,
-    which ``invalidate_caches()`` clears: a count job, then, when the
-    ids fit the broadcast budget (|allowed| × 8 B ≤
+    cache, so on a resident corpus the answer is memoized per (Spark
+    cache entry, canonical filters) in the session artifact store
+    (:func:`session.resident_artifact`; ``invalidate_caches()`` clears
+    it, and a re-cached plan is a new entry): a count job, then, when
+    the ids fit the broadcast budget (|allowed| × 8 B ≤
     ``spark.sql.autoBroadcastJoinThreshold``), one collect of the ids,
     kept sorted as int64 so membership is one ``np.searchsorted``. Past
     the budget the ids are ``None`` and the caller tests membership with
-    a job. An uncached handle counts on every call and keeps no ids: its
-    files may change between queries. Reusing work that does not depend
-    on the query vector across the queries of a session is the idea of
-    the incremental top-K similarity search framework for interactive
-    sessions (EDBT 2020, PAPERS.md)."""
-    if not is_resident(corpus):
-        return corpus.filter(pred).count(), None
-
-    def build() -> tuple[int, np.ndarray | None]:
-        allowed = corpus.filter(pred).select(id_col)
-        n = allowed.count()
-        # the threshold as the planner reads it: bytes, -1 when off
-        conf = corpus.sparkSession._jsparkSession.sessionState().conf()
-        if n * 8 > conf.autoBroadcastJoinThreshold():
-            return n, None
-        ids = np.fromiter((r[0] for r in allowed.collect()), np.int64)
-        ids.sort()
-        return len(ids), ids
-
+    a job. The same budget bounds all the memo's id arrays together:
+    keeping one evicts the least recently used others until their bytes
+    fit, and an evicted array is collected again on its next use (its
+    count is kept). An uncached handle counts on every call and keeps
+    no ids: its files may change between queries. Reusing work that
+    does not depend on the query vector across the queries of a session
+    is the idea of the incremental top-K similarity search framework
+    for interactive sessions (EDBT 2020, PAPERS.md)."""
     key = (
         "allowed_count",
-        corpus.semanticHash(),
         id_col,
         json.dumps(filters or {}, sort_keys=True, default=str),
     )
-    return artifact(corpus.sparkSession, key, build)
+    memo = resident_artifact(
+        corpus, key, lambda: _Allowed(corpus.filter(pred).count())
+    )
+    if memo is None:
+        return corpus.filter(pred).count(), None
+    # the threshold as the planner reads it: bytes, -1 when off
+    conf = corpus.sparkSession._jsparkSession.sessionState().conf()
+    budget = conf.autoBroadcastJoinThreshold()
+    if memo.n * 8 > budget:
+        return memo.n, None
+    with _ALLOWED_LOCK:
+        memo.used = time.monotonic()
+        if memo.ids is None:
+            rows = corpus.filter(pred).select(id_col).collect()
+            ids = np.fromiter((r[0] for r in rows), np.int64)
+            ids.sort()
+            _evict_allowed(budget - ids.nbytes)
+            memo.ids = ids
+        return memo.n, memo.ids
+
+
+class _Allowed:
+    """One :func:`allowed_count` memo: the count, the sorted ids while
+    they are kept, and when they were last used."""
+
+    def __init__(self, n: int):
+        self.n = int(n)
+        self.ids: np.ndarray | None = None
+        self.used = 0.0
+
+
+_ALLOWED_LOCK = threading.Lock()
+
+
+def _evict_allowed(room: int) -> None:
+    """Drop the least recently used allowed-id arrays until the kept
+    ones take at most ``room`` bytes."""
+    held = sorted(
+        (m for m in stored("allowed_count") if m.ids is not None),
+        key=lambda m: m.used,
+    )
+    total = sum(m.ids.nbytes for m in held)
+    for m in held:
+        if total <= room:
+            break
+        total -= m.ids.nbytes
+        m.ids = None
 
 
 #: filter-dict key → the column it actually constrains (geo box keys
@@ -179,6 +229,28 @@ class ExactBackend(SearchBackend):
     """P1: filter → float64 exact IP scoring → top-K. Serves as the
     correctness oracle (reference src/backends/exact.py:29-57).
 
+    ``search`` picks its route once per call:
+
+    * resident — the corpus is held in Spark's cache manager and
+      :func:`serving.resident_serve` (the :func:`serving.serve_or_plan`
+      decision, memoized per cache entry) routes it ``resident`` or
+      ``sharded``, and the tier's metadata holds every filter column.
+      The answer comes from the driver-resident tier (the reference's
+      ``vectors[allowed]`` gather and one GEMV, src/baselines/
+      pre_filter.py:49-52): no Spark job and no ``Column`` is built;
+      filters are checked by the pure-Python validator, so an unknown
+      column raises the same ``FilterSpecError``. The tier is the one
+      object ``serve_or_plan`` returns for the corpus, so the serving
+      tier and this strategy share one driver copy. The first search on
+      a corpus nothing has served yet pays its footprint aggregate and
+      one Arrow collect; a corpus past the driver budgets memoizes the
+      ``distributed`` decision, so the aggregate runs once. Stats come
+      from ``CostedServe.tier_search``: ``scored_vectors`` counts the
+      tier's mask and ``notes`` carries ``route=resident|sharded(n)``.
+    * plan — every other case, and every uncached handle (a snapshot
+      read, say: its files may change between queries): :meth:`plan`,
+      collected by :meth:`plan_search` as one Spark job.
+
     Scoring is the JVM expression (functions/vector.py dot_score_column,
     no Python worker in the plan): a single-query scan pays an Arrow
     transfer of the whole embedding column under the pandas-UDF kernel,
@@ -204,6 +276,26 @@ class ExactBackend(SearchBackend):
     frame)."""
 
     name = "exact"
+
+    def search(self, qvec, filters, k):
+        validate_K(k, self.n)
+        q = ensure_unit_l2(qvec)
+        validate_filters_schema(self.corpus.schema, filters)
+        served = self._served()
+        if served is None or not served.holds(filters):
+            return self.plan_search(q, filters, k)
+        ids, stats = served.tier_search(q, filters, k, self.name)
+        stats["notes"] = self.compose_notes(stats["notes"])
+        return ids, stats
+
+    def _served(self) -> Any:
+        """The memoized serve dispatch of a resident corpus, or None."""
+        from hybrid_vector_search_spark.serving import resident_serve
+
+        try:
+            return resident_serve(self.corpus, id_col=self.id_col)
+        except ValidationError:  # an empty corpus: nothing to hold
+            return None
 
     def plan(self, qvec, filters, k):
         from hybrid_vector_search_spark.functions.vector import (

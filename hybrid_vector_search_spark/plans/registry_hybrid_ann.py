@@ -1410,25 +1410,39 @@ def _local_serve(spark: SparkSession, sf_dir: str):
     """Session-cached LocalCorpusServe over the wide corpus — built once
     (one Arrow collect behind the distributed size gate), then every
     local query is in-process. The residency twin of the reference's
-    startup load (artifacts/artifacts.py:165-194)."""
-    from hybrid_vector_search_spark.serving import LocalCorpusServe
+    startup load (artifacts/artifacts.py:165-194). It is the tier of the
+    memoized ``serve_or_plan`` dispatch over the cached corpus, the one
+    exact and pre_filter searches on that corpus answer from."""
+    from hybrid_vector_search_spark.serving import (
+        LocalCorpusServe,
+        serve_or_plan,
+    )
 
     def build():
         # a purge of the corpus root must reach RAM too: drop the resident
         # tier so the next query rebuilds from post-purge storage (r14)
         _on_purge(sf_dir, "local_serve")
-        return LocalCorpusServe.from_corpus(load_corpus(spark, sf_dir))
+        corpus = load_corpus(spark, sf_dir)
+        served = serve_or_plan(corpus)
+        if served.route == "resident":
+            return served.tier
+        return LocalCorpusServe.from_corpus(corpus)
 
     return artifact(spark, ("local_serve", sf_dir), build)
 
 
 def _on_purge(sf_dir: str, kind: str) -> None:
-    """Drop every ``kind`` session artifact when ``sf_dir`` is purged."""
+    """Drop every ``kind`` session artifact, and every memoized
+    ``serving.serve_or_plan`` tier, when ``sf_dir`` is purged."""
     from hybrid_vector_search_spark.sources.purge import (
         register_resident_invalidator,
     )
 
-    register_resident_invalidator(sf_dir, lambda: clear_artifacts(kind))
+    def drop() -> None:
+        clear_artifacts(kind)
+        clear_artifacts("serve_or_plan")
+
+    register_resident_invalidator(sf_dir, drop)
 
 
 def _local_rows_df(spark: SparkSession, rows) -> DataFrame:

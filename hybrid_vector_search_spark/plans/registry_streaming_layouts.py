@@ -259,12 +259,15 @@ def harness_stats_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``backend.search()`` call (driver-side collect, the harness path —
     reference src/backend_interface.py:7-31 + the 14-field results row
     of src/harness/run.py) whose deterministic stats fields come back
-    as a 1-row DataFrame. scored_vectors flows through the plan's
-    ``Observation`` (the row count of the filtered corpus measured by
-    the SAME job that scored it — U7's instrumentation shape, minus the
-    wall-clock fields the oracle cannot replay); the k-th score and top
-    id pin the ids/scores arrays. A broken Observation, a dropped
-    filter, or a tie-break regression all hash-mismatch."""
+    as a 1-row DataFrame. The registry corpus is resident, so the
+    search answers from the driver-resident serve tier and
+    scored_vectors is the count of the tier's filter mask; on an
+    uncached handle it flows through the plan's ``Observation`` (the
+    row count of the filtered corpus measured by the SAME job that
+    scored it — U7's instrumentation shape). Both routes drop the
+    wall-clock fields the oracle cannot replay; the k-th score and top
+    id pin the ids/scores arrays. A broken mask or Observation, a
+    dropped filter, or a tie-break regression all hash-mismatch."""
     from hybrid_vector_search_spark.operators.strategies import get_backend
 
     corpus = load_corpus(spark, sf_dir)

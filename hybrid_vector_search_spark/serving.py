@@ -26,6 +26,7 @@ plan, the DuckDB oracle, and this tier (parity pytest-pinned).
 from __future__ import annotations
 
 import json
+import time
 from collections.abc import Mapping, Sequence
 from typing import Any
 
@@ -36,6 +37,7 @@ from hybrid_vector_search_spark.functions.predicates import (
     filters_mask_pandas,
 )
 from hybrid_vector_search_spark.operators.topk import topk_positions
+from hybrid_vector_search_spark.session import resident_artifact
 
 #: matrix-footprint budget for ONE resident shard (N×D×8 bytes + the
 #: measured metadata footprint) — the peak a single Arrow collect +
@@ -189,15 +191,13 @@ class LocalCorpusServe:
         not hold the embedding column (it lives as the float64 matrix),
         and a silent KeyError is worse than a documented divergence —
         route such filters through the distributed plan."""
-        for col in filters or {}:
-            if col not in {"lat_between", "lon_between"} and (
-                col not in self.meta.columns
-            ):
-                raise ValidationError(
-                    f"LocalCorpusServe: column '{col}' is not resident"
-                    " in the serving metadata (embedding-column filters"
-                    " run on the distributed plan)"
-                )
+        unheld = self.unheld(filters)
+        if unheld:
+            raise ValidationError(
+                f"LocalCorpusServe: column '{unheld[0]}' is not resident"
+                " in the serving metadata (embedding-column filters"
+                " run on the distributed plan)"
+            )
         idx = self._allowed(filters)
         if idx.size == 0:
             return []
@@ -206,6 +206,16 @@ class LocalCorpusServe:
             scores = self.mat @ q
             return self._topk(self.ids[idx], scores[idx], k)
         return self._topk(self.ids[idx], self.mat[idx] @ q, k)
+
+    def unheld(self, filters: Mapping[str, Any] | None) -> list[str]:
+        """The columns ``filters`` names that the resident metadata does
+        not hold (the embedding column lives as the matrix, not in it)."""
+        return [
+            col
+            for col in filters or {}
+            if col not in {"lat_between", "lon_between"}
+            and col not in self.meta.columns
+        ]
 
     def count_allowed(self, filters: Mapping[str, Any] | None) -> int:
         """|rows passing the filters| over the resident metadata — the
@@ -429,6 +439,9 @@ class ShardedCorpusServe:
             lambda s: s.prefilter_topk(qvec, filters, k), k
         )
 
+    def unheld(self, filters: Mapping[str, Any] | None) -> list[str]:
+        return self.shards[0].unheld(filters)
+
     def count_allowed(self, filters: Mapping[str, Any] | None) -> int:
         """Global |allowed| — the sum of per-shard mask counts (shard
         membership partitions the rows, so the counts are disjoint)."""
@@ -459,10 +472,13 @@ class CostedServe:
     ``SearchBackend.search`` (method/K/latency_ms/scored_vectors/
     scores) and records the routing decision in ``notes`` —
     ``route=resident|sharded(n)|distributed`` — so every answer
-    carries its execution-shape provenance. On the resident and sharded
-    routes ``scored_vectors`` is counted from the mask the answer was
-    computed with (each tier keeps its last one), so a filtered request
-    evaluates the predicate once. Answers are value-identical
+    carries its execution-shape provenance. The resident and sharded
+    routes answer through :meth:`tier_search`, the one helper that also
+    serves ``ExactBackend.search`` on a resident corpus: its
+    ``scored_vectors`` is counted from the mask the answer was computed
+    with (each tier keeps its last one), so a filtered request
+    evaluates the predicate once. The distributed route runs the Spark
+    plan (``ExactBackend.plan_search``). Answers are value-identical
     across the three routes (the registered ``strategy_costed_serve``
     query hash-pins all three against one DuckDB oracle)."""
 
@@ -505,8 +521,6 @@ class CostedServe:
         filters: Mapping[str, Any] | None,
         k: int,
     ) -> tuple[list[int], dict[str, Any]]:
-        import time
-
         from hybrid_vector_search_spark.functions.vector import (
             ensure_unit_l2,
         )
@@ -515,24 +529,39 @@ class CostedServe:
         validate_K(k, self.n)
         q = ensure_unit_l2(qvec)
         method = "pre_filter" if filters else "exact"
-        if self.route == "distributed":
-            ids, stats = self._backend(method).search(q, filters, k)
-            base = stats.get("notes")
-            stats["notes"] = (
-                f"{self._note()}; {base}" if base else self._note()
-            )
-            return ids, stats
+        if self.route != "distributed":
+            return self.tier_search(q, filters, k, method)
+        ids, stats = self._backend(method).plan_search(q, filters, k)
+        base = stats.get("notes")
+        stats["notes"] = f"{self._note()}; {base}" if base else self._note()
+        return ids, stats
+
+    def holds(self, filters: Mapping[str, Any] | None) -> bool:
+        """Whether the tier can answer ``filters``: the route is
+        resident or sharded and its metadata holds every filter
+        column."""
+        return self.tier is not None and not self.tier.unheld(filters)
+
+    def tier_search(
+        self,
+        q: np.ndarray,
+        filters: Mapping[str, Any] | None,
+        k: int,
+        method: str,
+    ) -> tuple[list[int], dict[str, Any]]:
+        """The answer from the resident or sharded tier for a validated
+        unit query, with its §2.10 stats: ``method`` as given,
+        ``scored_vectors`` from the tier's mask, ``notes`` the route."""
         t0 = time.perf_counter()
         rows = (
             self.tier.prefilter_topk(q, filters, k)
             if filters
             else self.tier.exact_topk(q, k)
         )
-        latency_ms = (time.perf_counter() - t0) * 1000.0
         stats: dict[str, Any] = {
             "method": method,
             "K": int(k),
-            "latency_ms": latency_ms,
+            "latency_ms": (time.perf_counter() - t0) * 1000.0,
             "scored_vectors": self.tier.count_allowed(filters),
             "scores": [s for _, s in rows],
             "notes": self._note(),
@@ -573,8 +602,6 @@ class CostedAnnServe:
     def search(
         self, qvec: Sequence[float], k: int
     ) -> tuple[list[int], dict[str, Any]]:
-        import time
-
         t0 = time.perf_counter()
         if self.route == "local_probe":
             ids, scores, scored = self.index.local_ranking(
@@ -697,7 +724,41 @@ def serve_or_plan(
     :class:`CostedServe` routed to the cheapest exact tier it fits:
     resident under the single-collect budget, sharded under the total
     driver-RAM budget (shard count derived from the measured bytes),
-    distributed Spark plans beyond. See :class:`CostedServe`."""
+    distributed Spark plans beyond. See :class:`CostedServe`.
+
+    On a corpus held in Spark's cache manager the decision and its tier
+    are memoized per (cache entry, budgets, columns) in the session
+    artifact store (:func:`session.resident_artifact`): every call with
+    the same arguments returns the same object, so the serving tier and
+    ``ExactBackend.search`` (through :func:`resident_serve`) share one
+    driver copy, and a re-cached corpus is measured and collected
+    again. An uncached corpus is measured on every call."""
+    args = (int(shard_bytes), int(max_total_bytes), embedding_col, id_col)
+    served = _resident_route(corpus, *args)
+    return served if served is not None else _route(corpus, *args)
+
+
+def resident_serve(corpus, id_col: str = "id") -> CostedServe | None:
+    """``serve_or_plan(corpus, id_col=id_col)`` when ``corpus`` is held
+    in Spark's cache manager (the memoized object), else None."""
+    return _resident_route(
+        corpus, MAX_SERVE_BYTES, MAX_TOTAL_SERVE_BYTES, "embedding", id_col
+    )
+
+
+def _resident_route(corpus, *args) -> CostedServe | None:
+    return resident_artifact(
+        corpus, ("serve_or_plan", *args), lambda: _route(corpus, *args)
+    )
+
+
+def _route(
+    corpus,
+    shard_bytes: int,
+    max_total_bytes: int,
+    embedding_col: str,
+    id_col: str,
+) -> CostedServe:
     n, d, need = _resident_footprint(corpus, embedding_col)
     if n == 0 or d == 0:
         raise ValidationError(

@@ -11,6 +11,7 @@ rather than the 200 default.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -79,6 +80,66 @@ def artifact(spark: SparkSession, key: tuple, build):
     value = build()
     _ARTIFACTS[key] = (spark, value)
     return value
+
+
+def cache_entry(df) -> int | None:
+    """Id of the Spark cache entry holding ``df``'s plan, or None when
+    the plan is not cached. The id is the RDD id of the entry's cached
+    column buffers: ``unpersist()`` and a later ``.cache()`` of the same
+    plan make a new entry with a new id, while the plan (and its
+    ``semanticHash``) stays the same. The lookup is by plan, as
+    ``df.storageLevel``'s is, so every handle over a cached plan finds
+    the entry."""
+    got = (
+        df.sparkSession._jsparkSession.sharedState()
+        .cacheManager()
+        .lookupCachedData(df._jdf)
+    )
+    if got.isEmpty():
+        return None
+    builder = got.get().cachedRepresentation().cacheBuilder()
+    return int(builder.cachedColumnBuffers().id())
+
+
+_RESIDENT_LOCK = threading.RLock()
+
+
+def resident_artifact(df, key: tuple, build):
+    """``build()``'s result memoized per Spark cache entry holding
+    ``df``'s plan (:func:`cache_entry`), or None when the plan is not
+    cached. For work that depends only on the rows of a cached frame:
+    they cannot change under the entry, and a re-cached plan is a new
+    entry, so a memo never outlives the rows it was built from. A miss
+    first drops every resident entry whose cache entry is gone, then
+    builds under one lock, so concurrent first callers build once."""
+    entry = cache_entry(df)
+    if entry is None:
+        return None
+    spark = df.sparkSession
+    full = (key[0], ("cache_entry", entry), *key[1:])
+    got = _ARTIFACTS.get(full)
+    if got is not None and got[0] is spark:
+        return got[1]
+    with _RESIDENT_LOCK:
+        live = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+        for k in list(_ARTIFACTS):
+            gone = _entry_of(k)
+            if gone is not None and gone not in live:
+                del _ARTIFACTS[k]
+        return artifact(spark, full, build)
+
+
+def _entry_of(key: tuple) -> int | None:
+    """The cache entry id a :func:`resident_artifact` key carries."""
+    tag = key[1] if len(key) > 1 else None
+    if isinstance(tag, tuple) and tag[:1] == ("cache_entry",):
+        return tag[1]
+    return None
+
+
+def stored(kind: str) -> list:
+    """The values of every stored artifact of ``kind``."""
+    return [v for k, (_s, v) in list(_ARTIFACTS.items()) if k[0] == kind]
 
 
 def _unpersist(value) -> None:

@@ -5,6 +5,22 @@ from pyspark.sql import types as T
 from hybrid_vector_search_spark.session import get_spark
 
 
+def submitted_jobs(spark) -> int:
+    """Jobs submitted so far (the DAG scheduler's counter; unlike the
+    status store's job list it is never trimmed), once the listener bus
+    has caught up."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(10_000)
+    return int(sc.dagScheduler().numTotalJobs())
+
+
+def jobs_of(spark, fn):
+    """``(fn(), the number of Spark jobs it submitted)``."""
+    before = submitted_jobs(spark)
+    out = fn()
+    return out, submitted_jobs(spark) - before
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(

@@ -2,6 +2,7 @@
 
 import numpy as np
 import pytest
+from conftest import jobs_of
 from pyspark.sql import functions as F
 
 from hybrid_vector_search_spark.operators.ivf import (
@@ -474,21 +475,6 @@ STRICT = {"lang": {"eq": "zh"}, "label": {"in": [7]}}  # ~1.5% of corpus
 BROAD = {"lang": {"in": ["en", "fr"]}}  # >50% of corpus
 
 
-def _submitted_jobs(spark) -> int:
-    """Jobs submitted so far (the DAG scheduler's counter; unlike the
-    status store's job list it is never trimmed), once the listener bus
-    has caught up."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty(10_000)
-    return int(sc.dagScheduler().numTotalJobs())
-
-
-def _jobs_of(spark, fn):
-    before = _submitted_jobs(spark)
-    out = fn()
-    return out, _submitted_jobs(spark) - before
-
-
 @pytest.fixture(scope="module")
 def fixed_indexes(spark, corpus, tmp_path_factory):
     """One fixed-quantizer index twice: over a persisted layout (the
@@ -577,7 +563,7 @@ def test_prepared_ladder_matches_join_per_rung(
             )
             if handle is corpus:
                 backend.search(q, filters, 10)  # the allowed-id memo
-                (ids, st), jobs = _jobs_of(
+                (ids, st), jobs = jobs_of(
                     spark, lambda: backend.search(q, filters, 10)
                 )
                 # the ranking: no job on the local route, else one collect
@@ -620,7 +606,7 @@ def test_warm_costed_search_on_resident_corpus_submits_no_job(
     assert is_resident(corpus)
     filters = {"n_chars": {"ge": 150}, "lang": {"ne": "de"}}
     uncached_df = corpus.filter(F.col("id").isNotNull())
-    _, count_jobs = _jobs_of(
+    _, count_jobs = jobs_of(
         spark,
         lambda: uncached_df.filter(
             compile_filters(corpus.schema, filters)
@@ -628,12 +614,12 @@ def test_warm_costed_search_on_resident_corpus_submits_no_job(
     )
     assert count_jobs >= 1
     resident = PostFilterBackend(corpus, n, index=index, nprobe=4, costed=True)
-    (_ids, st1), first = _jobs_of(
+    (_ids, st1), first = jobs_of(
         spark, lambda: resident.search(query_vector(21), filters, 10)
     )
     assert first == count_jobs + 1  # the memo: its count, one id collect
     for seed in (22, 23):
-        (ids, st), warm = _jobs_of(
+        (ids, st), warm = jobs_of(
             spark, lambda: resident.search(query_vector(seed), filters, 10)
         )
         assert warm == 0 and len(ids) == 10
@@ -642,7 +628,7 @@ def test_warm_costed_search_on_resident_corpus_submits_no_job(
         uncached_df, n, index=index, nprobe=4, costed=True
     )
     for seed in (21, 22):
-        (ids, st), jobs = _jobs_of(
+        (ids, st), jobs = jobs_of(
             spark, lambda: uncached.search(query_vector(seed), filters, 10)
         )
         assert jobs == count_jobs + 1  # its count, one membership job
@@ -675,7 +661,7 @@ def test_allowed_set_over_broadcast_budget_takes_job_path(
         n_allowed, ids_kept = allowed_count(corpus, filters, pred)
         assert ids_kept is None and n_allowed * 8 > 64
         q = query_vector(32)
-        (ids, st), jobs = _jobs_of(
+        (ids, st), jobs = jobs_of(
             spark, lambda: backend.search(q, filters, 10)
         )
     finally:

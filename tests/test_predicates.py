@@ -92,6 +92,68 @@ def test_cast_failure_matches_no_rows(tiny_corpus):
     assert allowed_ids(tiny_corpus, {"review_count": {"ge": "abc"}}) == []
 
 
+def test_in_is_one_sql_node_with_isin_answers(spark, monkeypatch):
+    """An ``in`` conjunct is one parsed ``In`` expression (no per-value
+    ``Column.isin`` literal), and it keeps the answers of the ``isin``
+    form on NULLs, mixed and uncastable values, quotes and backslashes,
+    signed zero and extreme doubles; values with no SQL literal (NaN,
+    ``${``) keep ``isin``."""
+    from pyspark.sql import functions as F
+
+    from hybrid_vector_search_spark.functions.predicates import _cast_iterable
+
+    df = spark.createDataFrame(
+        [
+            (0, 1, 10, 1.5, 2.5, "a'b", True),
+            (1, 2, 3_000_000_000, -0.0, 1e-300, "c\\d", False),
+            (2, None, None, None, None, None, None),
+            (3, 3, 7, 1.7976931348623157e308, float("nan"), "${x}", True),
+            (4, 7, -5, 5e-324, 0.5, "zh", False),
+        ],
+        "id long, i int, l long, d double, f float, s string, b boolean",
+    )
+    cases = [
+        ("i", [1, "2", "x", 3.7]),  # mixed: ints, a numeric string, junk
+        ("i", ["x", "y"]),  # nothing castable: lit(False)
+        ("l", [3_000_000_000, -5]),
+        ("d", [0.0, 1.7976931348623157e308, "5e-324"]),
+        ("d", [float("nan"), 1.5]),
+        ("f", [2.5, 0.5]),
+        ("s", ["a'b", "c\\d", "zh"]),
+        ("s", ["${x}", "zh"]),
+        ("b", [True]),
+        ("b", ["false", "t"]),
+    ]
+    schema = {f.name: f.dataType for f in df.schema.fields}
+    for col, vals in cases:
+        ok, cast = _cast_iterable(vals, schema[col])
+        want = (
+            F.col(col).isin(cast) & F.col(col).isNotNull()
+            if ok else F.lit(False)
+        )
+        expect = sorted(r.id for r in df.filter(want).select("id").collect())
+        assert allowed_ids(df, {col: {"in": vals}}) == expect, (col, vals)
+
+    Column = type(F.col("x"))  # the concrete class defines isin
+    isin = Column.isin
+    calls = []
+    monkeypatch.setattr(
+        Column, "isin", lambda self, *a: calls.append(a) or isin(self, *a)
+    )
+
+    def nodes(node):  # the Column's expression nodes, as py4j built them
+        kids = node.children()
+        return 1 + sum(nodes(kids.apply(i)) for i in range(kids.size()))
+
+    few = compile_filters(df.schema, {"l": {"in": [1, 3_000_000_000]}})
+    many = compile_filters(df.schema, {"l": {"in": list(range(50))}})
+    assert not calls
+    assert nodes(few._jc.node()) == nodes(many._jc.node())
+    assert "SqlExpression(`l` IN (0, 1, 2," in many._jc.node().toString()
+    compile_filters(df.schema, {"s": {"in": ["${x}"]}})
+    assert len(calls) == 1
+
+
 def test_in_uncastable_elements_dropped(tiny_corpus):
     assert allowed_ids(tiny_corpus, {"review_count": {"in": ["abc", 10, "3"]}}) == [0, 4]
 
@@ -223,6 +285,9 @@ def test_pandas_mask_matches_spark(spark):
 
 
 def test_pandas_mask_geo(spark, tiny_corpus):
+    """Geo boxes and comparisons on FLOAT columns agree with Spark,
+    which compares a float column with a double literal in double: the
+    float32 value 36.1 is below 36.1."""
     import numpy as np
 
     from hybrid_vector_search_spark.functions.predicates import (
@@ -230,19 +295,22 @@ def test_pandas_mask_geo(spark, tiny_corpus):
         filters_mask_pandas,
     )
 
-    filters = {
-        "lat_between": [25.0, 30.0],
-        "lon_between": [-85.0, -80.0],
-    }
-    want = sorted(
-        r["id"]
-        for r in tiny_corpus.filter(
-            compile_filters(tiny_corpus.schema, filters)
-        )
-        .select("id")
-        .collect()
-    )
     pdf = tiny_corpus.drop("embedding").toPandas()
-    mask = filters_mask_pandas(tiny_corpus.schema, filters, pdf)
-    got = sorted(pdf["id"].to_numpy()[np.asarray(mask)].tolist())
-    assert got == want
+    for filters in (
+        {"lat_between": [25.0, 30.0], "lon_between": [-85.0, -80.0]},
+        {"lat_between": [36.1, 40.0], "lon_between": [-90.0, -80.0]},
+        {"latitude": {"eq": 36.1}},
+        {"latitude": {"lt": 36.1}, "stars": {"ge": 2.5}},
+        {"latitude": {"between": [28.5, 36.1]}},
+    ):
+        want = sorted(
+            r["id"]
+            for r in tiny_corpus.filter(
+                compile_filters(tiny_corpus.schema, filters)
+            )
+            .select("id")
+            .collect()
+        )
+        mask = filters_mask_pandas(tiny_corpus.schema, filters, pdf)
+        got = sorted(pdf["id"].to_numpy()[np.asarray(mask)].tolist())
+        assert got == want, filters
