@@ -769,7 +769,7 @@ class HNSWBackend(LadderBackend):
         kept = join_candidates(self.corpus, pred, cand, self.id_col)
         return _topk(kept, k, id_col=self.id_col), None
 
-    def _ranking(self, q):
+    def _ranking(self, q, resident):
         """The one graph walk at K′ = max(ladder), collected (≤ max(ladder)
         rows) and ranked best first."""
         kmax = max(self.k_ladder)

@@ -303,9 +303,7 @@ class IVFIndex:
         if not blocks:
             return np.zeros(0, np.int64), np.zeros(0), 0
         ids = np.concatenate([b[0] for b in blocks])
-        scores = np.concatenate(
-            [b[1].astype(np.float64) @ q for b in blocks]
-        )
+        scores = np.concatenate([b[1] @ q for b in blocks])
         top = topk_positions(ids, scores, k)
         return ids[top], scores[top], len(ids)
 
@@ -328,7 +326,7 @@ class IVFIndex:
         probes = {qid: self.probe(qvecs[qid], nprobe) for qid in qids}
         union = sorted({li for p in probes.values() for li in p})
         blocks = {
-            li: (b[0], b[1].astype(np.float64))
+            li: b
             for li, b in zip(union, self._serve_blocks(union))
             if b is not None
         }
@@ -346,13 +344,15 @@ class IVFIndex:
         return out
 
     # serving-tier block cache: hot probed lists stay RAM-resident as
-    # (ids, embedding matrix in the layout's own float32) — the
-    # in-process residency the reference's 15.7 ms/query assumes (its
-    # FAISS index holds the WHOLE corpus in memory; this holds at most
-    # SERVE_CACHE_BYTES of hot lists, LRU). A query upcasts its blocks
-    # to float64 before scoring: the same scores as float64 blocks, at
-    # half the resident bytes. First touch of a list pays the Arrow
-    # decode; steady-state serving is upcast + GEMM + merge.
+    # (ids, float64 embedding matrix) — the in-process residency the
+    # reference's 15.7 ms/query assumes (its FAISS index holds the WHOLE
+    # corpus in memory; this holds at most SERVE_CACHE_BYTES of lists,
+    # LRU, sized as ann_serve_or_plan estimates them: rows × (D×8 + 8)).
+    # A list is upcast from the layout's float32 once, when it is read
+    # (exact, so scores are those of scoring float32 upcast per query);
+    # steady-state serving is GEMV + merge. A post-filter search on the
+    # tier route reads the whole layout once when it fits this budget
+    # (PostFilterBackend._ranking).
     SERVE_CACHE_BYTES = 1 << 30
 
     def _serve_blocks(self, list_ids: Sequence[int]) -> list:
@@ -393,7 +393,7 @@ class IVFIndex:
         t = pq.read_table(d, columns=[self.id_col, "embedding"])
         ids = t.column(self.id_col).to_numpy()
         flat = t.column("embedding").combine_chunks().flatten()
-        return ids, np.asarray(flat).reshape(len(t), -1)
+        return ids, np.asarray(flat, dtype=np.float64).reshape(len(t), -1)
 
     def search_plan(
         self,
@@ -446,11 +446,14 @@ class PostFilterBackend(LadderBackend):
     index: on ``local_probe`` (a persisted layout whose probed lists fit
     the serve budget) from :meth:`IVFIndex.local_ranking` — an Arrow read
     of the probed lists, cached across queries, and no Spark job; else
-    from one collect of :meth:`IVFIndex.search_plan`. On a resident
-    corpus whose filter set was seen before, a search then submits no
-    Spark job at all — the reference's in-memory metadata gather.
-    Scores on the local route are numpy's float64 GEMV, equal to the
-    plan's sequential float64 sum to ~1e-16."""
+    from one collect of :meth:`IVFIndex.search_plan`. On a corpus the
+    serve tier holds, a search then submits no Spark job at all — the
+    reference's in-memory metadata gather — and the first such search
+    on ``local_probe`` reads every list once, when the whole float64
+    layout (N × (D×8 + 8) bytes) fits ``IVFIndex.SERVE_CACHE_BYTES``: the
+    reference's index held whole in memory, so no later query reads a
+    probed list cold. Scores on the local route are numpy's float64
+    GEMV, equal to the plan's sequential float64 sum to ~1e-16."""
 
     name = "post_filter"
 
@@ -473,6 +476,7 @@ class PostFilterBackend(LadderBackend):
         self._index = index
         self._nlist = nlist
         self._seed = seed
+        self._layout_read = False
 
     @property
     def index(self) -> IVFIndex:
@@ -492,12 +496,17 @@ class PostFilterBackend(LadderBackend):
         kept = join_candidates(self.corpus, pred, candidates, self.id_col)
         return topk(kept, k, id_col=self.id_col), None
 
-    def _ranking(self, q):
+    def _ranking(self, q, resident):
         from hybrid_vector_search_spark.serving import ann_serve_or_plan
 
         index, kmax = self.index, max(self.k_ladder)
         route = ann_serve_or_plan(index, self.nprobe, n=self.n).route
         if route == "local_probe":
+            if resident and not self._layout_read:
+                d = int(index.centroids.shape[1])
+                if self.n * (d * 8 + 8) <= index.SERVE_CACHE_BYTES:
+                    index._serve_blocks(range(index.nlist))
+                self._layout_read = True
             ids, scores, _ = index.local_ranking(q, kmax, self.nprobe)
         else:
             plan, _probed = index.search_plan(q, kmax, self.nprobe)

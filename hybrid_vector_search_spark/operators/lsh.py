@@ -217,7 +217,12 @@ class LSHPostFilterBackend(LadderBackend):
         _, kept, probes = self._probe(qvec, pred, radius)
         return topk(kept, k, id_col=self.id_col), probes
 
-    def _prepare(self, q, pred, filters, counted):
+    def _served(self):
+        # each radius pushes the filter into its own bucket scan: no
+        # candidate membership to take from the serve tier
+        return None
+
+    def _prepare(self, q, passing, resident):
         return None  # each radius scans its own buckets: no shared ranking
 
     def _rung(self, radius, q, pred, k, prepared):

@@ -18,7 +18,9 @@ Strategy ↔ plan shape:
   K′ ∈ (200, 500, 1000) with early stop, then filter candidates and keep
   the best K — see operators/ivf.py for the index. The ladder itself
   (costed entry, escalation, stats) is :class:`LadderBackend`, shared
-  with the HNSW and LSH candidate sources.
+  with the HNSW and LSH candidate sources. On a corpus the serve tier
+  holds, filter membership and the costed |allowed| come from that same
+  tier, with no Spark job.
 * ``random`` (reference P4, src/backends/random.py:9-31): seeded sample,
   ignores filters (kept as the recall floor; reference quirk Q7).
 
@@ -30,12 +32,12 @@ the serve tier's filter mask.
 from __future__ import annotations
 
 import json
-import threading
 import time
 import uuid
 from abc import ABC, abstractmethod
 from collections.abc import Callable, Mapping, Sequence
-from concurrent.futures import Future, ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 from typing import Any
 
 import numpy as np
@@ -50,7 +52,7 @@ from hybrid_vector_search_spark.functions.predicates import (
 )
 from hybrid_vector_search_spark.functions.vector import ensure_unit_l2
 from hybrid_vector_search_spark.operators.topk import topk, topk_positions
-from hybrid_vector_search_spark.session import resident_artifact, stored
+from hybrid_vector_search_spark.session import resident_artifact
 from hybrid_vector_search_spark.sources.loaders import validate_K
 
 
@@ -106,6 +108,11 @@ class SearchBackend(ABC):
             stats["notes"] = note
         return ids, stats
 
+    def _served(self) -> Any:
+        """The memoized serve dispatch of a resident corpus, or None
+        (:func:`serve_dispatch`)."""
+        return serve_dispatch(self.corpus, self.id_col)
+
     def compose_notes(self, base: str | None = None) -> str | None:
         """Join a strategy's own notes with the K6 fallback provenance
         (set by ``load_corpus_index`` when this backend was landed via the
@@ -128,79 +135,42 @@ def allowed_count(
     corpus: DataFrame,
     filters: Mapping[str, Any] | None,
     pred: Column,
-    id_col: str = "id",
-) -> tuple[int, np.ndarray | None]:
-    """``(|allowed|, allowed ids)`` for the rows of ``corpus`` passing
-    ``pred`` (compiled from ``filters``). Neither changes with the query
-    vector, and the rows of a resident corpus cannot change under its
-    cache, so on a resident corpus the answer is memoized per (Spark
-    cache entry, canonical filters) in the session artifact store
+) -> int:
+    """|rows of ``corpus`` passing ``pred``| (compiled from
+    ``filters``), by a count job. The count does not change with the
+    query vector, and the rows of a resident corpus cannot change under
+    its cache, so on a resident corpus it is memoized per (Spark cache
+    entry, canonical filters) in the session artifact store
     (:func:`session.resident_artifact`; ``invalidate_caches()`` clears
-    it, and a re-cached plan is a new entry): a count job, then, when
-    the ids fit the broadcast budget (|allowed| × 8 B ≤
-    ``spark.sql.autoBroadcastJoinThreshold``), one collect of the ids,
-    kept sorted as int64 so membership is one ``np.searchsorted``. Past
-    the budget the ids are ``None`` and the caller tests membership with
-    a job. The same budget bounds all the memo's id arrays together:
-    keeping one evicts the least recently used others until their bytes
-    fit, and an evicted array is collected again on its next use (its
-    count is kept). An uncached handle counts on every call and keeps
-    no ids: its files may change between queries. Reusing work that
-    does not depend on the query vector across the queries of a session
-    is the idea of the incremental top-K similarity search framework
-    for interactive sessions (EDBT 2020, PAPERS.md)."""
+    it, and a re-cached plan is a new entry). A resident corpus the
+    serve tier holds answers from the tier instead
+    (:meth:`LadderBackend.search`), so the memo serves the corpora
+    :func:`serving.serve_or_plan` routes ``distributed`` and the filters
+    the tier does not hold. An uncached handle counts on every call: its
+    files may change between queries. Reusing work that does not depend
+    on the query vector across the queries of a session is the idea of
+    the incremental top-K similarity search framework for interactive
+    sessions (EDBT 2020, PAPERS.md)."""
     key = (
         "allowed_count",
-        id_col,
         json.dumps(filters or {}, sort_keys=True, default=str),
     )
     memo = resident_artifact(
-        corpus, key, lambda: _Allowed(corpus.filter(pred).count())
+        corpus, key, lambda: corpus.filter(pred).count()
     )
-    if memo is None:
-        return corpus.filter(pred).count(), None
-    # the threshold as the planner reads it: bytes, -1 when off
-    conf = corpus.sparkSession._jsparkSession.sessionState().conf()
-    budget = conf.autoBroadcastJoinThreshold()
-    if memo.n * 8 > budget:
-        return memo.n, None
-    with _ALLOWED_LOCK:
-        memo.used = time.monotonic()
-        if memo.ids is None:
-            rows = corpus.filter(pred).select(id_col).collect()
-            ids = np.fromiter((r[0] for r in rows), np.int64)
-            ids.sort()
-            _evict_allowed(budget - ids.nbytes)
-            memo.ids = ids
-        return memo.n, memo.ids
+    return int(memo if memo is not None else corpus.filter(pred).count())
 
 
-class _Allowed:
-    """One :func:`allowed_count` memo: the count, the sorted ids while
-    they are kept, and when they were last used."""
+def serve_dispatch(corpus: DataFrame, id_col: str = "id") -> Any:
+    """The memoized serve dispatch (:func:`serving.resident_serve`) of a
+    corpus held in Spark's cache manager, or None: an uncached corpus,
+    or an empty one, which has nothing to hold."""
+    from hybrid_vector_search_spark.serving import resident_serve
 
-    def __init__(self, n: int):
-        self.n = int(n)
-        self.ids: np.ndarray | None = None
-        self.used = 0.0
-
-
-_ALLOWED_LOCK = threading.Lock()
-
-
-def _evict_allowed(room: int) -> None:
-    """Drop the least recently used allowed-id arrays until the kept
-    ones take at most ``room`` bytes."""
-    held = sorted(
-        (m for m in stored("allowed_count") if m.ids is not None),
-        key=lambda m: m.used,
-    )
-    total = sum(m.ids.nbytes for m in held)
-    for m in held:
-        if total <= room:
-            break
-        total -= m.ids.nbytes
-        m.ids = None
+    try:
+        return resident_serve(corpus, id_col=id_col)
+    except ValidationError:  # an empty corpus
+        return None
 
 
 #: filter-dict key → the column it actually constrains (geo box keys
@@ -287,15 +257,6 @@ class ExactBackend(SearchBackend):
         ids, stats = served.tier_search(q, filters, k, self.name)
         stats["notes"] = self.compose_notes(stats["notes"])
         return ids, stats
-
-    def _served(self) -> Any:
-        """The memoized serve dispatch of a resident corpus, or None."""
-        from hybrid_vector_search_spark.serving import resident_serve
-
-        try:
-            return resident_serve(self.corpus, id_col=self.id_col)
-        except ValidationError:  # an empty corpus: nothing to hold
-            return None
 
     def plan(self, qvec, filters, k):
         from hybrid_vector_search_spark.functions.vector import (
@@ -454,15 +415,20 @@ class LadderBackend(SearchBackend):
     of a (score DESC, id ASC) ranking is the K′-prefix of the top
     max(ladder), so stop rung and survivors are those of the loop the
     reference runs, for one candidate ranking instead of one per rung.
-    Membership comes from :func:`allowed_count`: on a resident corpus
-    its memo holds the sorted allowed ids, so a filter set seen before
-    costs no Spark job; an uncached handle, or an allowed set past the
-    broadcast budget, runs one filter job per search that returns the
-    candidate ids passing the filters (:meth:`_passing`). A source whose
-    rungs are not prefixes of one ranking (LSH: each radius scans other
-    buckets) overrides ``_prepare`` and ``_rung`` instead. ``ladder``
-    names the rungs; ``_universe`` / ``_coverage`` map them onto
-    :func:`ladder_entry`.
+    Membership and |allowed| come from one place per search. On a
+    resident corpus the serve tier holds — :func:`serve_dispatch`
+    routes it ``resident`` or ``sharded`` and the tier's metadata holds
+    every filter column — they come from the tier (``passing`` and
+    ``count_allowed`` over its resident metadata, the reference's
+    in-RAM metadata gather): no Spark job and no ``Column`` is built,
+    and filters are checked by the pure-Python validator, so a bad one
+    raises the same ``FilterSpecError``. Otherwise (an uncached handle,
+    a corpus routed ``distributed``, a filter on the embedding column)
+    one filter job per search returns the candidate ids passing the
+    filters (:meth:`_passing`). A source whose rungs are not prefixes of
+    one ranking (LSH: each radius scans other buckets) overrides
+    ``_prepare`` and ``_rung`` instead. ``ladder`` names the rungs;
+    ``_universe`` / ``_coverage`` map them onto :func:`ladder_entry`.
 
     ``costed=True`` replaces the fixed entry at the first rung with the
     COST-BASED entry of :func:`ladder_entry` (the better-than-reference
@@ -472,10 +438,10 @@ class LadderBackend(SearchBackend):
     broad filters still enter at the first, so the fast path is
     untouched, and the final rung is the same in both regimes. The
     |allowed| input is ``selectivity_hint`` when given — the 100 TB form:
-    catalog column statistics or a sketch, no scan — else
-    :func:`allowed_count`, run alongside ``_prepare``: one count job per
-    search over an uncached corpus, one per (corpus, filters) in the
-    session over a resident one.
+    catalog column statistics or a sketch, no scan — else the tier's
+    count, else :func:`allowed_count`, run alongside ``_prepare``: one
+    count job per search over an uncached corpus, one per (corpus,
+    filters) in the session over a resident one.
 
     Stats (§2.10): ``ladder_entry`` / ``rungs_run`` are the ladder
     economics (the costed win IS ``rungs_run`` < len(ladder) on strict
@@ -509,31 +475,26 @@ class LadderBackend(SearchBackend):
     def _coverage(self, rung: int) -> int:
         return rung
 
-    def _ranking(self, q: Any) -> tuple[np.ndarray, np.ndarray, dict]:
+    def _ranking(
+        self, q: Any, resident: bool
+    ) -> tuple[np.ndarray, np.ndarray, dict]:
         """The candidate ranking at K′ = max(ladder), best first:
-        ``(int64 ids, float64 scores, the source's own stats fields)``."""
+        ``(int64 ids, float64 scores, the source's own stats fields)``;
+        ``resident`` is whether the search runs on the tier route."""
         raise NotImplementedError
 
     def _prepare(
-        self, q: Any, pred: Column, filters: Mapping[str, Any] | None,
-        counted: Future | None,
+        self,
+        q: Any,
+        passing: Callable[[np.ndarray], np.ndarray] | None,
+        resident: bool,
     ) -> Any:
-        """The ranking and which of its candidates pass the filters;
-        ``counted`` is the in-flight :func:`allowed_count`, if any."""
-        ids, scores, fields = self._ranking(q)
-        allowed = None
-        if filters and is_resident(self.corpus):
-            allowed = (
-                counted.result() if counted is not None
-                else allowed_count(self.corpus, filters, pred, self.id_col)
-            )[1]
-        if not filters:
-            keep = np.ones(len(ids), dtype=bool)
-        elif allowed is not None:
-            keep = _in_sorted(allowed, ids)
-        else:
-            keep = self._passing(pred, ids)
-        return ids, scores, keep, fields
+        """The ranking and which of its candidates pass the filters, as
+        ``passing(ids)`` marks them (None: no filters)."""
+        ids, scores, fields = self._ranking(q, resident)
+        if passing is None:
+            return ids, scores, np.ones(len(ids), dtype=bool), fields
+        return ids, scores, passing(ids), fields
 
     def _passing(self, pred: Column, ids: np.ndarray) -> np.ndarray:
         """Which candidate ids pass ``pred``, by one job: the filtered
@@ -557,10 +518,10 @@ class LadderBackend(SearchBackend):
         return np.isin(ids, passing)
 
     def _rung(
-        self, rung: int, q: Any, pred: Column, k: int, prepared: Any
+        self, rung: int, q: Any, pred: Column | None, k: int, prepared: Any
     ) -> tuple[Sequence[int], Sequence[float], dict[str, Any]]:
         """Run one rung: ``(kept ids ≤ K, their scores, best first; own
-        stats)``."""
+        stats)``; ``pred`` is None on the tier route."""
         ids, scores, keep, fields = prepared
         kept = np.flatnonzero(keep[:rung])[:k]
         # K′ at the stopping rung — the reference logs the last rung,
@@ -573,26 +534,36 @@ class LadderBackend(SearchBackend):
     def search(self, qvec, filters, k):
         validate_K(k, self.n)
         q = ensure_unit_l2(qvec)
-        pred = compile_filters(self.corpus.schema, filters)
+        validate_filters_schema(self.corpus.schema, filters)
         t0 = time.perf_counter()
         ladder = tuple(self.ladder)
-        n_allowed: int | None = None
-        # the |allowed| count is independent of the prepare step, so it
-        # runs alongside it; leaving the pool joins its worker, so an
-        # error never orphans an in-flight count job
-        with ThreadPoolExecutor(1) as pool:
-            counted = None
-            if self.costed and self.selectivity_hint is None:
-                counted = pool.submit(
-                    allowed_count, self.corpus, filters, pred, self.id_col
+        n_allowed = self.selectivity_hint if self.costed else None
+        count = self.costed and n_allowed is None
+        served = self._served()
+        pred = passing = None
+        if served is not None and served.holds(filters):
+            tier = served.tier
+            if filters:
+                passing = partial(tier.passing, filters)
+            prepared = self._prepare(q, passing, True)
+            if count:
+                n_allowed = tier.count_allowed(filters)
+        else:
+            pred = compile_filters(self.corpus.schema, filters)
+            if filters:
+                passing = partial(self._passing, pred)
+            # the |allowed| count is independent of the prepare step, so
+            # it runs alongside it; leaving the pool joins its worker, so
+            # an error never orphans an in-flight count job
+            with ThreadPoolExecutor(1) as pool:
+                counted = (
+                    pool.submit(allowed_count, self.corpus, filters, pred)
+                    if count
+                    else None
                 )
-            prepared = self._prepare(q, pred, filters, counted)
-            if self.costed:
-                n_allowed = (
-                    self.selectivity_hint
-                    if counted is None
-                    else counted.result()[0]
-                )
+                prepared = self._prepare(q, passing, False)
+                if counted is not None:
+                    n_allowed = counted.result()
         if n_allowed is not None:
             entry = ladder_entry(
                 ladder, k, n_allowed, self._universe(), self._coverage
@@ -634,14 +605,6 @@ def collect_ranking(
     scores = np.array([r["score"] for r in rows], dtype=np.float64)
     top = topk_positions(ids, scores, k)
     return ids[top], scores[top]
-
-
-def _in_sorted(sorted_ids: np.ndarray, ids: np.ndarray) -> np.ndarray:
-    """Membership of ``ids`` in the sorted array ``sorted_ids``."""
-    if len(sorted_ids) == 0:
-        return np.zeros(len(ids), dtype=bool)
-    pos = np.searchsorted(sorted_ids, ids)
-    return sorted_ids[np.minimum(pos, len(sorted_ids) - 1)] == ids
 
 
 def get_backend(

@@ -34,7 +34,9 @@ from hybrid_vector_search_spark.functions.predicates import (
 from hybrid_vector_search_spark.operators.strategies import (
     ExactBackend,
     SearchBackend,
+    allowed_count,
     get_backend,
+    serve_dispatch,
 )
 from hybrid_vector_search_spark.plans.canonical import CANONICAL_QUERIES, CanonicalQuery
 from hybrid_vector_search_spark.plans.metrics import recall_at_k, selectivity
@@ -178,11 +180,22 @@ def run_queries(
             auto_note = f"auto:{choice} est={est}"
         plan.append((cq, filters, qvec, b, auto_note))
 
+    # |allowed| for filter_selectivity: from the resident tier when it
+    # holds the filters, else a count job (memoized per cache entry on a
+    # resident corpus)
+    dispatch = serve_dispatch(corpus)
+
+    def n_allowed(filters: dict) -> int:
+        if dispatch is not None and dispatch.holds(filters):
+            return dispatch.tier.count_allowed(filters)
+        return allowed_count(
+            corpus, filters, compile_filters(corpus.schema, filters)
+        )
+
     def one(item) -> dict[str, Any]:
         cq, filters, qvec, b, auto_note = item
         kk = cq.k if k is None else k
-        pred = compile_filters(corpus.schema, filters)
-        allowed_count = corpus.filter(pred).count()
+        allowed = n_allowed(filters)
 
         t0 = time.perf_counter()
         ids, stats_q = b.search(qvec, filters, kk)
@@ -195,7 +208,7 @@ def run_queries(
             "K": kk,
             "latency_ms": latency_ms,
             "recall_at_k": recall_at_k(ids, oracle_ids, kk),
-            "filter_selectivity": selectivity(allowed_count, n),
+            "filter_selectivity": selectivity(allowed, n),
             "scored_vectors": stats_q.get("scored_vectors"),
             "lists_probed": stats_q.get("lists_probed"),
             "nprobe": stats_q.get("nprobe"),

@@ -1,4 +1,5 @@
-"""Driver-local serving tier for the exact / pre_filter strategies.
+"""Driver-local serving tier for the exact / pre_filter strategies (and
+the filter membership of the post-filter ladder on a resident corpus).
 
 Why it exists (BASELINE_PARITY.md): every per-query Spark plan is
 bounded below by the job-launch floor (~60-100 ms on the parity host),
@@ -89,10 +90,11 @@ class LocalCorpusServe:
 
     The resident copy never changes, so predicate work that does not
     depend on the query vector is kept beside ``meta``: the lowercased
-    form of each column a ``like`` has searched (filled lazily), and
-    the row set of the last filter set evaluated — a request that runs
-    :meth:`prefilter_topk` and then :meth:`count_allowed` evaluates its
-    mask once."""
+    form of each column a ``like`` has searched (filled lazily), the
+    row set of the last filter set evaluated — a request that runs
+    :meth:`prefilter_topk` (or :meth:`passing`) and then
+    :meth:`count_allowed` evaluates its mask once — and, once a
+    :meth:`passing` call needs it, an id→position index."""
 
     def __init__(self, ids, mat, meta, schema):
         self.ids = ids
@@ -101,6 +103,7 @@ class LocalCorpusServe:
         self.schema = schema
         self._lowered: dict[str, Any] = {}
         self._last_allowed: tuple[str, np.ndarray] | None = None
+        self._by_id: tuple[np.ndarray, np.ndarray] | None = None
 
     @classmethod
     def from_corpus(
@@ -225,6 +228,27 @@ class LocalCorpusServe:
         if not filters:
             return len(self.ids)
         return int(self._allowed(filters).size)
+
+    def passing(
+        self, filters: Mapping[str, Any] | None, ids: np.ndarray
+    ) -> np.ndarray:
+        """Which of ``ids`` pass ``filters``, as a bool array (an id the
+        tier does not hold passes none): each id's row position, from
+        the sorted-id index built on first use, read in the mask of
+        :meth:`_allowed`'s positions. The post-filter ladder's candidate
+        membership, with no Spark job."""
+        if self._by_id is None:
+            order = np.argsort(self.ids, kind="stable")
+            self._by_id = (self.ids[order], order)
+        sorted_ids, order = self._by_id
+        ids = np.asarray(ids, dtype=np.int64)
+        at = np.minimum(np.searchsorted(sorted_ids, ids), len(sorted_ids) - 1)
+        held = sorted_ids[at] == ids
+        if not filters:
+            return held
+        allowed = np.zeros(len(self.ids), dtype=bool)
+        allowed[self._allowed(filters)] = True
+        return held & allowed[order[at]]
 
     def _allowed(self, filters: Mapping[str, Any]) -> np.ndarray:
         """Row positions passing ``filters``; the last filter set's
@@ -447,6 +471,15 @@ class ShardedCorpusServe:
         membership partitions the rows, so the counts are disjoint)."""
         return sum(s.count_allowed(filters) for s in self.shards)
 
+    def passing(
+        self, filters: Mapping[str, Any] | None, ids: np.ndarray
+    ) -> np.ndarray:
+        """Which of ``ids`` pass ``filters``: each id lives in one shard,
+        so the shards' answers are ORed."""
+        return np.logical_or.reduce(
+            [s.passing(filters, ids) for s in self.shards]
+        )
+
 
 class CostedServe:
     """ONE entry point for the exact / pre_filter strategies across
@@ -477,10 +510,13 @@ class CostedServe:
     serves ``ExactBackend.search`` on a resident corpus: its
     ``scored_vectors`` is counted from the mask the answer was computed
     with (each tier keeps its last one), so a filtered request
-    evaluates the predicate once. The distributed route runs the Spark
-    plan (``ExactBackend.plan_search``). Answers are value-identical
-    across the three routes (the registered ``strategy_costed_serve``
-    query hash-pins all three against one DuckDB oracle)."""
+    evaluates the predicate once. The post-filter ladder
+    (``LadderBackend.search``) reads candidate membership and |allowed|
+    from the same tier (``passing``, ``count_allowed``). The distributed
+    route runs the Spark plan (``ExactBackend.plan_search``). Answers
+    are value-identical across the three routes (the registered
+    ``strategy_costed_serve`` query hash-pins all three against one
+    DuckDB oracle)."""
 
     def __init__(self, corpus, route, tier, n, id_col, embedding_col):
         self.corpus = corpus

@@ -153,3 +153,27 @@ def test_auto_backend_routes_per_query(spark):
         assert r["notes"].startswith(f"auto:{want} est={est}")
         methods.add(r["method"])
     assert methods == {"pre_filter", "post_filter"}  # a real mixed batch
+
+
+def test_resident_batch_counts_allowed_from_the_tier(spark, tiny_corpus):
+    """On a resident corpus ``filter_selectivity`` comes from the serve
+    tier, as the exact searches do: a warm batch submits only the
+    dimension probe, no count job per query, and reports the
+    selectivities of the same batch over an uncached handle."""
+    from conftest import jobs_of
+
+    resident = tiny_corpus.filter("id >= 0").cache()
+    try:
+        run_queries(resident, "exact", TINY_QUERIES, n=5)  # builds the tier
+        rows, jobs = jobs_of(
+            spark, lambda: run_queries(resident, "exact", TINY_QUERIES, n=5)
+        )
+    finally:
+        resident.unpersist(blocking=True)
+    plain, plain_jobs = jobs_of(
+        spark, lambda: run_queries(tiny_corpus, "exact", TINY_QUERIES, n=5)
+    )
+    assert jobs == 1 and plain_jobs > len(TINY_QUERIES) + 1
+    assert [r["filter_selectivity"] for r in rows] == [
+        r["filter_selectivity"] for r in plain
+    ] == [pytest.approx(3 / 5), 1.0]

@@ -408,11 +408,15 @@ def test_assignment_drift_psi_and_recluster_polarity(spark):
     assert not (120 - 120) / 120 > 0.1
 
 
-def test_costed_allowed_count_memoized_on_resident_corpus(spark, corpus):
-    """|allowed| does not change with the query vector: on a resident
-    corpus a second costed search with the same filters runs no count
-    job (DataFrame.count is poisoned for it), while new filters, an
+def test_costed_allowed_count_memoized_on_resident_corpus(
+    spark, corpus, monkeypatch
+):
+    """|allowed| does not change with the query vector. On a resident
+    corpus the serve tier holds, a costed search runs no count job at
+    all (DataFrame.count is poisoned); on one routed ``distributed`` the
+    count-only memo runs it once per filter set, while new filters, an
     uncached handle, or a search after invalidate_caches() count."""
+    from hybrid_vector_search_spark import serving
     from hybrid_vector_search_spark.operators.strategies import is_resident
     from hybrid_vector_search_spark.plans.registry import invalidate_caches
 
@@ -436,9 +440,6 @@ def test_costed_allowed_count_memoized_on_resident_corpus(spark, corpus):
         calls.append(1)
         return real_count(self)
 
-    def poisoned(self):
-        raise AssertionError("memoized |allowed| must run no count job")
-
     def counted(backend, filters, seed):
         DataFrame.count = counting
         try:
@@ -448,13 +449,16 @@ def test_costed_allowed_count_memoized_on_resident_corpus(spark, corpus):
             DataFrame.count = real_count
         return len(calls) - before, st
 
+    n0, st0 = counted(resident, f_a, 7)  # the tier route
+    assert n0 == 0
+    # past the driver budgets the corpus is routed ``distributed``
+    monkeypatch.setattr(serving, "MAX_SERVE_BYTES", 1)
+    monkeypatch.setattr(serving, "MAX_TOTAL_SERVE_BYTES", 1)
+    assert resident._served().route == "distributed"
     n1, st1 = counted(resident, f_a, 7)
-    assert n1 == 1
-    DataFrame.count = poisoned
-    try:
-        _ids, st2 = resident.search(query_vector(8), f_a, 10)
-    finally:
-        DataFrame.count = real_count
+    assert n1 == 1 and st1["selectivity_est"] == st0["selectivity_est"]
+    n2, st2 = counted(resident, f_a, 8)
+    assert n2 == 0
     assert st2["selectivity_est"] == st1["selectivity_est"]
     assert st2["ladder_entry"] == st1["ladder_entry"]
     assert counted(resident, f_b, 7)[0] == 1      # new filters
@@ -562,7 +566,7 @@ def test_prepared_ladder_matches_join_per_rung(
                 backend, q, filters, 10
             )
             if handle is corpus:
-                backend.search(q, filters, 10)  # the allowed-id memo
+                backend.search(q, filters, 10)  # reads the layout whole
                 (ids, st), jobs = jobs_of(
                     spark, lambda: backend.search(q, filters, 10)
                 )
@@ -591,19 +595,22 @@ def test_prepared_ladder_matches_join_per_rung(
 def test_warm_costed_search_on_resident_corpus_submits_no_job(
     spark, corpus, fixed_indexes
 ):
-    """On a resident corpus with a persisted layout, once a filter set
-    has been seen, a costed post-filter search submits no Spark job: the
-    candidates come from the cached probed lists and the survivors from
-    the memoized allowed ids. An uncached handle submits its count and
-    one membership job per search."""
+    """On a resident corpus with a persisted layout, once the serve tier
+    exists, a costed post-filter search submits no Spark job, for a
+    filter set never seen before too: the candidates come from the
+    cached lists, membership and |allowed| from the tier. An uncached
+    handle submits its count and one membership job per search."""
     from hybrid_vector_search_spark.functions.predicates import (
         compile_filters,
     )
-    from hybrid_vector_search_spark.operators.strategies import is_resident
+    from hybrid_vector_search_spark.operators.strategies import (
+        is_resident,
+        serve_dispatch,
+    )
 
     index = fixed_indexes["local_probe"]
     n = corpus.count()
-    assert is_resident(corpus)
+    assert is_resident(corpus) and serve_dispatch(corpus).route == "resident"
     filters = {"n_chars": {"ge": 150}, "lang": {"ne": "de"}}
     uncached_df = corpus.filter(F.col("id").isNotNull())
     _, count_jobs = jobs_of(
@@ -614,16 +621,12 @@ def test_warm_costed_search_on_resident_corpus_submits_no_job(
     )
     assert count_jobs >= 1
     resident = PostFilterBackend(corpus, n, index=index, nprobe=4, costed=True)
-    (_ids, st1), first = jobs_of(
-        spark, lambda: resident.search(query_vector(21), filters, 10)
-    )
-    assert first == count_jobs + 1  # the memo: its count, one id collect
-    for seed in (22, 23):
-        (ids, st), warm = jobs_of(
-            spark, lambda: resident.search(query_vector(seed), filters, 10)
+    for i, seed in enumerate((21, 22, 23)):
+        f = {**filters, "label": {"ne": i}}  # a new filter set each time
+        (ids, st), jobs = jobs_of(
+            spark, lambda: resident.search(query_vector(seed), f, 10)
         )
-        assert warm == 0 and len(ids) == 10
-        assert st["selectivity_est"] == st1["selectivity_est"]
+        assert jobs == 0 and len(ids) == 10
     uncached = PostFilterBackend(
         uncached_df, n, index=index, nprobe=4, costed=True
     )
@@ -632,44 +635,176 @@ def test_warm_costed_search_on_resident_corpus_submits_no_job(
             spark, lambda: uncached.search(query_vector(seed), filters, 10)
         )
         assert jobs == count_jobs + 1  # its count, one membership job
-    assert ids == resident.search(query_vector(22), filters, 10)[0]
+    ids_r, st_r = resident.search(query_vector(22), filters, 10)
+    assert ids == ids_r
+    assert {s: st.get(s) for s in LADDER_STATS} == {
+        s: st_r.get(s) for s in LADDER_STATS
+    }
 
 
-def test_allowed_set_over_broadcast_budget_takes_job_path(
-    spark, corpus, fixed_indexes
-):
-    """An allowed set whose ids would pass the broadcast budget keeps
-    only its count in the memo; membership is then one semi-join job per
-    search, with the same answer as the join-per-rung search."""
-    from hybrid_vector_search_spark.functions.predicates import (
-        compile_filters,
-    )
-    from hybrid_vector_search_spark.operators.strategies import allowed_count
+def test_embedding_filter_takes_job_path(spark, corpus, fixed_indexes):
+    """The serve tier does not hold the embedding column (it is the
+    matrix), so a ``like`` filter on it takes the job path on a resident
+    corpus: its count once per filter set (the count-only memo), one
+    membership job per search, with the answer of the join-per-rung
+    search."""
+    from hybrid_vector_search_spark.operators.strategies import serve_dispatch
 
     index = fixed_indexes["local_probe"]
     n = corpus.count()
-    filters = {"n_chars": {"ge": 120}, "label": {"ne": 3}}
-    pred = compile_filters(corpus.schema, filters)
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "64")  # 8 ids
-    try:
-        backend = PostFilterBackend(
-            corpus, n, index=index, nprobe=4, costed=True
-        )
-        backend.search(query_vector(31), filters, 10)  # builds the memo
-        n_allowed, ids_kept = allowed_count(corpus, filters, pred)
-        assert ids_kept is None and n_allowed * 8 > 64
-        q = query_vector(32)
-        (ids, st), jobs = jobs_of(
-            spark, lambda: backend.search(q, filters, 10)
-        )
-    finally:
-        spark.conf.set(key, prev)
-    assert jobs == 1  # the membership semi-join
+    filters = {"embedding": {"like": "0.01"}, "lang": {"eq": "en"}}
+    assert not serve_dispatch(corpus).holds(filters)
+    backend = PostFilterBackend(corpus, n, index=index, nprobe=4, costed=True)
+    backend.search(query_vector(31), filters, 10)  # counts once
+    q = query_vector(32)
+    (ids, st), jobs = jobs_of(spark, lambda: backend.search(q, filters, 10))
+    assert jobs == 1  # the membership job
     want_ids, want_scores, want = _join_per_rung(backend, q, filters, 10)
     assert ids == want_ids
     assert np.allclose(st["scores"], want_scores, rtol=0, atol=1e-9)
     assert {s: st.get(s) for s in LADDER_STATS} == {
         s: want.get(s) for s in LADDER_STATS
     }
+
+
+@pytest.fixture(scope="module")
+def hnsw_index(corpus):
+    from hybrid_vector_search_spark.operators.hnsw import HNSWBackend
+
+    return HNSWBackend(corpus, corpus.count()).index
+
+
+@pytest.mark.parametrize("source", ["local_probe", "distributed", "hnsw"])
+@pytest.mark.parametrize("costed", [False, True])
+def test_tier_route_matches_uncached_twin(
+    spark, corpus, fixed_indexes, hnsw_index, source, costed
+):
+    """On the resident corpus the tier route (membership and |allowed|
+    from the serve tier) returns the ids, scores and ladder stats of its
+    uncached twin (one count and one membership job per search) on
+    every canonical template, the LIKE one included, for both IVF
+    candidate routes and HNSW, fixed and costed ladders. Its only jobs
+    are the ranking's: one collect on the IVF plan route, the graph
+    walk's on HNSW, none on the local route."""
+    from hybrid_vector_search_spark.operators.hnsw import HNSWBackend
+    from hybrid_vector_search_spark.operators.strategies import serve_dispatch
+    from hybrid_vector_search_spark.plans.canonical import CANONICAL_QUERIES
+
+    n = corpus.count()
+    uncached = corpus.filter(F.col("id").isNotNull())
+
+    def backend(handle):
+        if source == "hnsw":
+            return HNSWBackend(handle, n, index=hnsw_index, costed=costed)
+        return PostFilterBackend(
+            handle, n, index=fixed_indexes[source], nprobe=4, costed=costed
+        )
+
+    tiered, twin = backend(corpus), backend(uncached)
+    for cq in CANONICAL_QUERIES:
+        assert serve_dispatch(corpus).holds(cq.filters)
+        q = query_vector(cq.seed)
+        (ids, st), jobs = jobs_of(
+            spark, lambda: tiered.search(q, cq.filters, cq.k)
+        )
+        _, ranking_jobs = jobs_of(spark, lambda: tiered._ranking(q, True))
+        assert jobs == ranking_jobs, cq.qid
+        if source != "hnsw":
+            assert jobs == (source == "distributed"), cq.qid
+        want_ids, want = twin.search(q, cq.filters, cq.k)
+        assert ids == want_ids, cq.qid
+        assert st["scores"] == want["scores"], cq.qid
+        assert {s: st.get(s) for s in LADDER_STATS} == {
+            s: want.get(s) for s in LADDER_STATS
+        }, cq.qid
+
+
+def test_list_blocks_are_float64_with_the_float32_scores(fixed_indexes):
+    """A list block is upcast once, when it is read: the blocks are
+    float64 and the ranking's scores equal, bit for bit, those of
+    scoring each float32 list upcast per query."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from hybrid_vector_search_spark.operators.topk import topk_positions
+
+    built = fixed_indexes["local_probe"]
+    index = IVFIndex(
+        built.assigned, built.centroids, partitioned_path=built.partitioned_path
+    )
+    q = np.asarray(query_vector(41), dtype=np.float64)
+    ids, scores, scored = index.local_ranking(q, 50, nprobe=4)
+    want_ids, want_scores = [], []
+    for li in index.probe(q, 4):
+        d = os.path.join(index.partitioned_path, f"list_id={li}")
+        if not os.path.isdir(d):
+            continue
+        t = pq.read_table(d, columns=["id", "embedding"])
+        f32 = np.asarray(
+            t.column("embedding").combine_chunks().flatten()
+        ).reshape(len(t), -1)
+        assert f32.dtype == np.float32
+        want_ids.append(t.column("id").to_numpy())
+        want_scores.append(f32.astype(np.float64) @ q)
+        blk = index._serve_cache[li][0]
+        assert blk[1].dtype == np.float64
+        assert np.array_equal(blk[1], f32.astype(np.float64))
+    want_ids = np.concatenate(want_ids)
+    want_scores = np.concatenate(want_scores)
+    top = topk_positions(want_ids, want_scores, 50)
+    assert scored == len(want_ids)
+    assert ids.tolist() == want_ids[top].tolist()
+    assert scores.tobytes() == want_scores[top].tobytes()
+
+
+def _fresh_reads(fixed_indexes, monkeypatch):
+    """A new index object over the persisted layout (an empty block
+    cache) and the list ids its ``_read_block`` is asked for."""
+    built = fixed_indexes["local_probe"]
+    index = IVFIndex(
+        built.assigned, built.centroids, partitioned_path=built.partitioned_path
+    )
+    reads = []
+    real = IVFIndex._read_block
+
+    def counting(self, list_id):
+        reads.append(list_id)
+        return real(self, list_id)
+
+    monkeypatch.setattr(IVFIndex, "_read_block", counting)
+    return index, reads
+
+
+def test_tier_route_reads_the_whole_layout_once(
+    spark, corpus, fixed_indexes, monkeypatch
+):
+    """The first tier-route search of a post-filter backend on
+    ``local_probe`` reads every list when the whole float64 layout fits
+    the block budget; a later search with a new vector reads none."""
+    index, reads = _fresh_reads(fixed_indexes, monkeypatch)
+    n = corpus.count()
+    backend = PostFilterBackend(corpus, n, index=index, nprobe=4, costed=True)
+    backend.search(query_vector(51), STRICT, 10)
+    assert sorted(reads) == list(range(index.nlist))
+    del reads[:]
+    ids, _st = backend.search(query_vector(52), BROAD, 10)
+    assert reads == [] and len(ids) == 10
+
+
+def test_layout_past_the_block_budget_loads_lists_lazily(
+    spark, corpus, fixed_indexes, monkeypatch
+):
+    """With the block budget below the layout's float64 bytes the tier
+    route keeps reading only the probed lists, as the serve tier does."""
+    index, reads = _fresh_reads(fixed_indexes, monkeypatch)
+    n = corpus.count()
+    d = index.centroids.shape[1]
+    monkeypatch.setattr(IVFIndex, "SERVE_CACHE_BYTES", n * (d * 8 + 8) - 1)
+    backend = PostFilterBackend(corpus, n, index=index, nprobe=4, costed=True)
+    for seed in (53, 54):
+        q = query_vector(seed)
+        before = set(index._serve_cache)
+        backend.search(q, STRICT, 10)
+        assert sorted(reads) == sorted(set(index.probe(q, 4)) - before)
+        del reads[:]

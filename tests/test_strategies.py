@@ -425,9 +425,14 @@ def test_purge_invalidator_drops_the_tier(spark):
 
 def test_resident_memos_follow_the_cache_entry(spark, tmp_path):
     """A plan unpersisted, its files rewritten and cached again keeps
-    its ``semanticHash`` but is a new cache entry: the allowed-id memo
-    and the serve tier are rebuilt from the new rows, and the entries of
-    the gone cache entry are dropped."""
+    its ``semanticHash`` but is a new cache entry: the count memo and
+    the serve tier are rebuilt from the new rows, so a post-filter
+    search's membership follows them, and the entries of the gone cache
+    entry are dropped."""
+    from hybrid_vector_search_spark.operators.ivf import (
+        IVFIndex,
+        PostFilterBackend,
+    )
 
     path = str(tmp_path / "t")
     schema = "id long, label int, embedding array<float>"
@@ -444,69 +449,39 @@ def test_resident_memos_follow_the_cache_entry(spark, tmp_path):
     def memos():
         return stored("allowed_count") + stored("serve_or_plan")
 
+    def members(corpus):
+        everyone = np.arange(110)
+        return np.flatnonzero(
+            resident_serve(corpus).tier.passing(filters, everyone)
+        ).tolist()
+
     filters = {"label": {"eq": 1}}
     write(range(30))
     others = memos()
     old = spark.read.parquet(path).cache()
     pred = compile_filters(old.schema, filters)
-    assert allowed_count(old, filters, pred)[1].tolist() == list(range(1, 30, 3))
+    assert allowed_count(old, filters, pred) == 10
     old_ids, _ = ExactBackend(old, 30).search(query_vector(9, 4), filters, 3)
+    assert members(old) == list(range(1, 30, 3))
     old_memos = [m for m in memos() if not any(m is o for o in others)]
     assert len(old_memos) == 2
     old.unpersist(blocking=True)
     write(range(100, 105))
     new = spark.read.parquet(path).cache()
     assert new.semanticHash() == old.semanticHash()
-    n, ids = allowed_count(new, filters, compile_filters(new.schema, filters))
-    assert (n, ids.tolist()) == (5, list(range(100, 105)))
+    assert allowed_count(new, filters, compile_filters(new.schema, filters)) == 5
     got, st = ExactBackend(new, 5).search(query_vector(9, 4), filters, 3)
     assert set(got) <= set(range(100, 105)) and st["scored_vectors"] == 5
     assert st["notes"] == "route=resident" and set(old_ids) <= set(range(30))
     assert not any(m is k for m in old_memos for k in memos())
     assert sorted(resident_serve(new).tier.ids.tolist()) == list(range(100, 105))
+    assert members(new) == list(range(100, 105))
+    one_list = IVFIndex.build_fixed(
+        new.select("id", "embedding"), np.asarray([query_vector(9, 4)])
+    )
+    post = PostFilterBackend(new, 5, index=one_list, nprobe=1, k_ladder=(5,))
+    assert post.search(query_vector(9, 4), filters, 3)[0] == got
     new.unpersist(blocking=True)
-
-
-def test_allowed_ids_kept_under_broadcast_budget(spark, monkeypatch):
-    """The allowed-id arrays of the memo together stay under
-    ``autoBroadcastJoinThreshold``: keeping one evicts the least
-    recently used others; an evicted filter set keeps its count and
-    collects its ids again on its next use."""
-
-    corpus = R.load_corpus(spark, SF001)
-    f_a, f_b = {"lang": {"eq": "en"}}, {"lang": {"eq": "de"}}
-    pred_a = compile_filters(corpus.schema, f_a)
-    pred_b = compile_filters(corpus.schema, f_b)
-    n_a = corpus.filter(pred_a).count()
-    n_b = corpus.filter(pred_b).count()
-    budget = 8 * max(n_a, n_b)  # room for either array, not for both
-    assert 0 < min(n_a, n_b)
-
-    def kept_bytes():
-        return sum(
-            m.ids.nbytes for m in stored("allowed_count") if m.ids is not None
-        )
-
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(budget))
-    try:
-        ids_a = allowed_count(corpus, f_a, pred_a)[1]
-        assert len(ids_a) == n_a and kept_bytes() <= budget
-        ids_b = allowed_count(corpus, f_b, pred_b)[1]
-        assert len(ids_b) == n_b and kept_bytes() <= budget
-        DataFrame = type(corpus)
-        with monkeypatch.context() as m:
-
-            def poisoned(self):
-                raise AssertionError("an evicted set keeps its count")
-
-            m.setattr(DataFrame, "count", poisoned)
-            n_again, ids_again = allowed_count(corpus, f_a, pred_a)
-        assert n_again == n_a and ids_again.tolist() == ids_a.tolist()
-        assert kept_bytes() <= budget
-    finally:
-        spark.conf.set(key, prev)
 
 
 def _small_cached(spark, n=40):
@@ -553,32 +528,30 @@ def test_distributed_decision_and_empty_corpus_keep_the_plan(
     empty.unpersist(blocking=True)
 
 
-def test_concurrent_first_searches_share_one_tier_and_budget(spark):
+def test_concurrent_first_searches_share_one_tier(spark):
     """More threads than cores start on a fresh resident corpus at once:
-    they get one tier, built once, and their allowed-id arrays end
-    under the broadcast budget with every answer right."""
+    they get one tier, built once, and every membership and count it
+    answers is right."""
     import sys
     import threading
 
-
     corpus = _small_cached(spark)
-    budget = 8 * 10 + 4  # room for one label's 10 ids, not two
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
-    served, counted, errors = [], [], []
+    served, answered, errors = [], [], []
 
     def work(i):
         try:
-            served.append(resident_serve(corpus))
+            got = resident_serve(corpus)
+            served.append(got)
             f = {"label": {"eq": i % 4}}
-            n, ids = allowed_count(corpus, f, compile_filters(corpus.schema, f))
-            counted.append((i % 4, n, ids.tolist()))
+            keep = got.tier.passing(f, np.arange(40))
+            answered.append(
+                (i % 4, got.tier.count_allowed(f), np.flatnonzero(keep).tolist())
+            )
         except Exception as e:  # noqa: BLE001 — reported below
             errors.append(e)
 
     switch = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
-    spark.conf.set(key, str(budget))
     try:
         threads = [threading.Thread(target=work, args=(i,)) for i in range(8)]
         for t in threads:
@@ -586,16 +559,11 @@ def test_concurrent_first_searches_share_one_tier_and_budget(spark):
         for t in threads:
             t.join(timeout=300)
         assert not any(t.is_alive() for t in threads)
-        kept = sum(
-            m.ids.nbytes for m in stored("allowed_count") if m.ids is not None
-        )
     finally:
         sys.setswitchinterval(switch)
-        spark.conf.set(key, prev)
         corpus.unpersist(blocking=True)
     assert not errors, errors
     assert len(served) == 8 and all(s is served[0] for s in served)
-    assert kept <= budget
-    for label, n, ids in counted:
+    for label, n, ids in answered:
         want = list(range(label, 40, 4))
         assert n == len(want) and ids == want
