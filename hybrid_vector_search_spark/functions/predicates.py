@@ -344,6 +344,10 @@ def filters_to_sql(
             return "TRUE" if v else "FALSE"
         if isinstance(v, str):
             return "'" + v.replace("'", "''") + "'"
+        if isinstance(v, float) and not math.isfinite(v):
+            # a bare nan / inf is a column name to SQL; the cast string
+            # gives DuckDB Spark's order (NaN = NaN, NaN above +inf)
+            return f"CAST('{v!r}' AS DOUBLE)"
         return repr(v)
 
     parts: list[str] = []

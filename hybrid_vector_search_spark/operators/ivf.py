@@ -41,7 +41,6 @@ from hybrid_vector_search_spark.functions.predicates import compile_filters
 from hybrid_vector_search_spark.functions.vector import dot_score_pandas_udf
 from hybrid_vector_search_spark.operators.strategies import (
     LadderBackend,
-    collect_ranking,
     join_candidates,
 )
 from hybrid_vector_search_spark.operators.topk import topk, topk_positions
@@ -442,11 +441,15 @@ class PostFilterBackend(LadderBackend):
     rung's top-K′ is the K′-prefix of the top max(ladder), so each rung
     is a slice and the final rung's survivors are the reference's
     best-score-dedup union (A5) without re-accumulating. The ranking
-    comes from wherever :func:`serving.ann_serve_or_plan` routes the
-    index: on ``local_probe`` (a persisted layout whose probed lists fit
-    the serve budget) from :meth:`IVFIndex.local_ranking` — an Arrow read
-    of the probed lists, cached across queries, and no Spark job; else
-    from one collect of :meth:`IVFIndex.search_plan`. On a corpus the
+    is ``CostedAnnServe.ranking`` of the dispatch
+    :func:`serving.ann_serve_or_plan` builds for the index — the one
+    place the ANN route is chosen: on ``local_probe`` (a persisted
+    layout whose probed lists fit the serve budget) from
+    :meth:`IVFIndex.local_ranking` — an Arrow read of the probed lists,
+    cached across queries, and no Spark job; else from one collect of
+    :meth:`IVFIndex.search_plan`. ``notes`` lead with that route
+    (``route=local_probe(nprobe=…)`` or ``route=distributed(nprobe=…)``)
+    ahead of ``ladder_stop=``. On a corpus the
     serve tier holds, a search then submits no Spark job at all — the
     reference's in-memory metadata gather — and the first such search
     on ``local_probe`` reads every list once, when the whole float64
@@ -499,21 +502,18 @@ class PostFilterBackend(LadderBackend):
     def _ranking(self, q, resident):
         from hybrid_vector_search_spark.serving import ann_serve_or_plan
 
-        index, kmax = self.index, max(self.k_ladder)
-        route = ann_serve_or_plan(index, self.nprobe, n=self.n).route
-        if route == "local_probe":
-            if resident and not self._layout_read:
-                d = int(index.centroids.shape[1])
-                if self.n * (d * 8 + 8) <= index.SERVE_CACHE_BYTES:
-                    index._serve_blocks(range(index.nlist))
-                self._layout_read = True
-            ids, scores, _ = index.local_ranking(q, kmax, self.nprobe)
-        else:
-            plan, _probed = index.search_plan(q, kmax, self.nprobe)
-            ids, scores = collect_ranking(plan, kmax, self.id_col)
+        index = self.index
+        served = ann_serve_or_plan(index, self.nprobe, n=self.n)
+        if served.route == "local_probe" and resident and not self._layout_read:
+            d = int(index.centroids.shape[1])
+            if self.n * (d * 8 + 8) <= index.SERVE_CACHE_BYTES:
+                index._serve_blocks(range(index.nlist))
+            self._layout_read = True
+        ids, scores, _ = served.ranking(q, max(self.k_ladder))
         return ids, scores, {
             "lists_probed": min(self.nprobe, index.nlist),
             "nprobe": self.nprobe,
+            "route": served.note,
         }
 
 

@@ -52,6 +52,7 @@ from hybrid_vector_search_spark.functions.predicates import (
 )
 from hybrid_vector_search_spark.functions.vector import ensure_unit_l2
 from hybrid_vector_search_spark.operators.topk import topk, topk_positions
+from hybrid_vector_search_spark.serving import resident_serve, route_note
 from hybrid_vector_search_spark.session import resident_artifact
 from hybrid_vector_search_spark.sources.loaders import validate_K
 
@@ -83,11 +84,16 @@ class SearchBackend(ABC):
         return self.plan_search(qvec, filters, k)
 
     def plan_search(
-        self, qvec: Sequence[float], filters: Mapping[str, Any] | None, k: int
+        self,
+        qvec: Sequence[float],
+        filters: Mapping[str, Any] | None,
+        k: int,
+        note: str | None = None,
     ) -> tuple[list[int], dict[str, Any]]:
         """Answer by collecting :meth:`plan`: one Spark job, with
         ``scored_vectors`` read from the plan's row-count
-        ``Observation``."""
+        ``Observation``; ``note`` (the route, if a dispatch chose this
+        path) leads ``notes``."""
         validate_K(k, self.n)
         q = ensure_unit_l2(qvec)
         t0 = time.perf_counter()
@@ -103,24 +109,24 @@ class SearchBackend(ABC):
             "scored_vectors": scored,
             "scores": [float(r["score"]) for r in rows],
         }
-        note = self.compose_notes()
+        note = self.compose_notes(note)
         if note:
             stats["notes"] = note
         return ids, stats
 
     def _served(self) -> Any:
         """The memoized serve dispatch of a resident corpus, or None
-        (:func:`serve_dispatch`)."""
-        return serve_dispatch(self.corpus, self.id_col)
+        (:func:`serving.resident_serve`)."""
+        return resident_serve(self.corpus, self.id_col)
 
-    def compose_notes(self, base: str | None = None) -> str | None:
-        """Join a strategy's own notes with the K6 fallback provenance
-        (set by ``load_corpus_index`` when this backend was landed via the
-        chain) — subclasses that build their own ``notes`` route it
-        through here so the fallback record survives."""
+    def compose_notes(self, *own: str | None) -> str | None:
+        """Join a strategy's own notes (the unset ones skipped) with the
+        K6 fallback provenance (set by ``load_corpus_index`` when this
+        backend was landed via the chain) — subclasses that build their
+        own ``notes`` route them through here so the fallback record
+        survives."""
         fb = getattr(self, "fallback_note", None)
-        parts = [p for p in (base, fb) if p]
-        return "; ".join(parts) or None
+        return "; ".join(p for p in (*own, fb) if p) or None
 
 
 def is_resident(df: DataFrame) -> bool:
@@ -161,18 +167,6 @@ def allowed_count(
     return int(memo if memo is not None else corpus.filter(pred).count())
 
 
-def serve_dispatch(corpus: DataFrame, id_col: str = "id") -> Any:
-    """The memoized serve dispatch (:func:`serving.resident_serve`) of a
-    corpus held in Spark's cache manager, or None: an uncached corpus,
-    or an empty one, which has nothing to hold."""
-    from hybrid_vector_search_spark.serving import resident_serve
-
-    try:
-        return resident_serve(corpus, id_col=id_col)
-    except ValidationError:  # an empty corpus
-        return None
-
-
 #: filter-dict key → the column it actually constrains (geo box keys
 #: bind the fixed latitude/longitude pair, everything else is itself)
 _GEO_KEY_COLS = {"lat_between": "latitude", "lon_between": "longitude"}
@@ -199,27 +193,36 @@ class ExactBackend(SearchBackend):
     """P1: filter → float64 exact IP scoring → top-K. Serves as the
     correctness oracle (reference src/backends/exact.py:29-57).
 
-    ``search`` picks its route once per call:
+    ``search`` picks its route once per call, in :meth:`_search`, on a
+    serve dispatch (``serving.CostedServe``): the memoized one of
+    :func:`serving.resident_serve` when the corpus is held in Spark's
+    cache manager, or the one ``CostedServe.search`` passes in — the
+    serving entry point chooses nothing itself, so this method is the
+    one place the exact and pre_filter route is decided:
 
-    * resident — the corpus is held in Spark's cache manager and
-      :func:`serving.resident_serve` (the :func:`serving.serve_or_plan`
-      decision, memoized per cache entry) routes it ``resident`` or
-      ``sharded``, and the tier's metadata holds every filter column.
-      The answer comes from the driver-resident tier (the reference's
-      ``vectors[allowed]`` gather and one GEMV, src/baselines/
-      pre_filter.py:49-52): no Spark job and no ``Column`` is built;
-      filters are checked by the pure-Python validator, so an unknown
-      column raises the same ``FilterSpecError``. The tier is the one
-      object ``serve_or_plan`` returns for the corpus, so the serving
-      tier and this strategy share one driver copy. The first search on
-      a corpus nothing has served yet pays its footprint aggregate and
-      one Arrow collect; a corpus past the driver budgets memoizes the
-      ``distributed`` decision, so the aggregate runs once. Stats come
-      from ``CostedServe.tier_search``: ``scored_vectors`` counts the
-      tier's mask and ``notes`` carries ``route=resident|sharded(n)``.
-    * plan — every other case, and every uncached handle (a snapshot
-      read, say: its files may change between queries): :meth:`plan`,
-      collected by :meth:`plan_search` as one Spark job.
+    * resident — the dispatch routes ``resident`` or ``sharded`` and
+      the tier's metadata holds every filter column. The answer comes
+      from the driver-resident tier (the reference's ``vectors[allowed]``
+      gather and one GEMV, src/baselines/pre_filter.py:49-52): no Spark
+      job and no ``Column`` is built; filters are checked by the
+      pure-Python validator, so an unknown column raises the same
+      ``FilterSpecError``. The tier is the one object ``serve_or_plan``
+      returns for the corpus, so the serving tier and this strategy
+      share one driver copy. The first search on a corpus nothing has
+      served yet pays its footprint aggregate and one Arrow collect; a
+      corpus past the driver budgets memoizes the ``distributed``
+      decision, so the aggregate runs once. ``scored_vectors`` counts
+      the tier's mask (the tier keeps its last one, so a filtered
+      request evaluates the predicate once).
+    * plan — every other case: :meth:`plan`, collected by
+      :meth:`plan_search` as one Spark job. With a dispatch (routed
+      ``distributed``, or a filter on a column the tier does not hold,
+      such as the embedding) ``notes`` say ``route=distributed``; an
+      uncached handle (a snapshot read, say: its files may change
+      between queries) has no dispatch and keeps no route note.
+
+    On the resident route ``notes`` carry ``route=resident`` or
+    ``route=sharded(n)`` (``serving.route_note``).
 
     Scoring is the JVM expression (functions/vector.py dot_score_column,
     no Python worker in the plan): a single-query scan pays an Arrow
@@ -248,15 +251,34 @@ class ExactBackend(SearchBackend):
     name = "exact"
 
     def search(self, qvec, filters, k):
+        return self._search(qvec, filters, k, self._served())
+
+    def _search(self, qvec, filters, k, served):
+        """:meth:`search` on the dispatch ``served`` (a
+        ``serving.CostedServe``, or None: no dispatch, the plan)."""
         validate_K(k, self.n)
         q = ensure_unit_l2(qvec)
         validate_filters_schema(self.corpus.schema, filters)
-        served = self._served()
-        if served is None or not served.holds(filters):
+        if served is None:
             return self.plan_search(q, filters, k)
-        ids, stats = served.tier_search(q, filters, k, self.name)
-        stats["notes"] = self.compose_notes(stats["notes"])
-        return ids, stats
+        if not served.holds(filters):
+            return self.plan_search(q, filters, k, route_note("distributed"))
+        t0 = time.perf_counter()
+        tier = served.tier
+        rows = (
+            tier.prefilter_topk(q, filters, k)
+            if filters
+            else tier.exact_topk(q, k)
+        )
+        stats: dict[str, Any] = {
+            "method": self.name,
+            "K": k,
+            "latency_ms": (time.perf_counter() - t0) * 1000.0,
+            "scored_vectors": tier.count_allowed(filters),
+            "scores": [s for _, s in rows],
+            "notes": self.compose_notes(served.note),
+        }
+        return [i for i, _ in rows], stats
 
     def plan(self, qvec, filters, k):
         from hybrid_vector_search_spark.functions.vector import (
@@ -416,7 +438,7 @@ class LadderBackend(SearchBackend):
     max(ladder), so stop rung and survivors are those of the loop the
     reference runs, for one candidate ranking instead of one per rung.
     Membership and |allowed| come from one place per search. On a
-    resident corpus the serve tier holds — :func:`serve_dispatch`
+    resident corpus the serve tier holds — :func:`serving.resident_serve`
     routes it ``resident`` or ``sharded`` and the tier's metadata holds
     every filter column — they come from the tier (``passing`` and
     ``count_allowed`` over its resident metadata, the reference's
@@ -480,7 +502,9 @@ class LadderBackend(SearchBackend):
     ) -> tuple[np.ndarray, np.ndarray, dict]:
         """The candidate ranking at K′ = max(ladder), best first:
         ``(int64 ids, float64 scores, the source's own stats fields)``;
-        ``resident`` is whether the search runs on the tier route."""
+        a ``route`` field (the ranking's route note) leads ``notes``
+        instead. ``resident`` is whether the search runs on the tier
+        route."""
         raise NotImplementedError
 
     def _prepare(
@@ -573,6 +597,7 @@ class LadderBackend(SearchBackend):
             ids, scores, fields = self._rung(rung, q, pred, k, prepared)
             if len(ids) >= k:
                 break
+        route = fields.pop("route", None)
         latency_ms = (time.perf_counter() - t0) * 1000.0
         scores = [float(s) for s in scores]
         stats: dict[str, Any] = {
@@ -590,7 +615,7 @@ class LadderBackend(SearchBackend):
                 if n_allowed is not None
                 else {}
             ),
-            "notes": self.compose_notes(self._stop_note(rung)),
+            "notes": self.compose_notes(route, self._stop_note(rung)),
         }
         return [int(i) for i in ids], stats
 

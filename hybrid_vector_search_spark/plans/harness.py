@@ -36,11 +36,11 @@ from hybrid_vector_search_spark.operators.strategies import (
     SearchBackend,
     allowed_count,
     get_backend,
-    serve_dispatch,
 )
 from hybrid_vector_search_spark.plans.canonical import CANONICAL_QUERIES, CanonicalQuery
 from hybrid_vector_search_spark.plans.metrics import recall_at_k, selectivity
 from hybrid_vector_search_spark.queryvecs import query_vector
+from hybrid_vector_search_spark.serving import resident_serve
 from hybrid_vector_search_spark.sources.loaders import validate_K
 
 STATS_FIELDS = (
@@ -183,7 +183,7 @@ def run_queries(
     # |allowed| for filter_selectivity: from the resident tier when it
     # holds the filters, else a count job (memoized per cache entry on a
     # resident corpus)
-    dispatch = serve_dispatch(corpus)
+    dispatch = resident_serve(corpus)
 
     def n_allowed(filters: dict) -> int:
         if dispatch is not None and dispatch.holds(filters):

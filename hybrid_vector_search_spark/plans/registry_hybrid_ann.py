@@ -1623,6 +1623,12 @@ LIMIT {case['k']}"""
     )
 
 
+def _route_of(notes: str) -> str:
+    """The route name of a ``notes`` field that leads with the route
+    (``route=sharded(2); …`` → ``sharded``)."""
+    return notes.split(";", 1)[0].partition("=")[2].split("(", 1)[0]
+
+
 @register(
     "strategy_costed_serve",
     _costed_serve_oracle(),
@@ -1684,8 +1690,7 @@ def strategy_costed_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # provenance from the STATS, not from this loop's labels: the
         # hash gate must pin what the dispatch actually did
-        note = stats["notes"].split(";", 1)[0].strip()
-        route = note.removeprefix("route=").split("(", 1)[0]
+        route = _route_of(stats["notes"])
         return [
             (
                 route,
@@ -1757,11 +1762,7 @@ def ann_costed_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             index, nprobe=ANN_IVF_NPROBE, max_probe_bytes=max_bytes
         )
         ids, stats = cs.search(query_vector(ANN_IVF_QSEED), ANN_IVF_K)
-        route = (
-            stats["notes"].split(";", 1)[0].strip()
-            .removeprefix("route=")
-            .split("(", 1)[0]
-        )
+        route = _route_of(stats["notes"])
         return [
             (route, int(i), round(float(s), 6))
             for i, s in zip(ids, stats["scores"])

@@ -59,7 +59,9 @@ def _resident_footprint(
     embedding_near_dup rule: check, then collect), and counts the WHOLE
     collected footprint: matrix float64 + ~8 bytes/row/numeric col +
     measured string bytes ×2 (pandas object-string overhead is at least
-    that — r13 review finding)."""
+    that — r13 review finding). An empty corpus, or one whose embedding
+    dimension is null/zero, is refused here with ``ValidationError``:
+    every tier build and every dispatch measures through this gate."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -78,6 +80,16 @@ def _resident_footprint(
         )
     row = corpus.agg(*aggs).first().asDict()
     n, d = int(row["__n"] or 0), int(row["__d"] or 0)
+    if n == 0 or d == 0:
+        # n=0 sails through the RAM gates (need=0) and then dies in
+        # np.vstack with an opaque numpy error — refuse loudly in the
+        # module's own vocabulary instead (r13 advice)
+        raise ValidationError(
+            "resident tier: nothing to serve — corpus is empty"
+            if n == 0
+            else "resident tier: embedding dimension is null/zero on"
+            f" '{embedding_col}' — cannot build a resident matrix"
+        )
     meta_bytes = 8 * n * max(len(corpus.columns) - 1, 0) + 2 * sum(
         int(row[f"__s_{c}"]) for c in str_cols
     )
@@ -128,16 +140,6 @@ class LocalCorpusServe:
             if _footprint is not None
             else _resident_footprint(corpus, embedding_col)
         )
-        if n == 0 or d == 0:
-            # n=0 sails through the RAM gate (need=0) and then dies in
-            # np.vstack with an opaque numpy error — refuse loudly in
-            # the module's own vocabulary instead (r13 advice)
-            raise ValidationError(
-                "LocalCorpusServe: nothing to serve — corpus is empty"
-                if n == 0
-                else "LocalCorpusServe: embedding dimension is null/zero"
-                f" on '{embedding_col}' — cannot build a resident matrix"
-            )
         if need > max_bytes:
             raise ValidationError(
                 f"LocalCorpusServe: resident corpus is {need/2**30:.1f}"
@@ -397,7 +399,7 @@ class ShardedCorpusServe:
         so the source scan runs once, not once per shard."""
         from pyspark.sql import functions as F
 
-        n, d, need = (
+        _n, _d, need = (
             _footprint
             if _footprint is not None
             else _resident_footprint(corpus, embedding_col)
@@ -405,13 +407,6 @@ class ShardedCorpusServe:
         cap = _driver_max_result_bytes(corpus)
         if cap is not None:
             shard_bytes = min(int(shard_bytes), cap)
-        if n == 0 or d == 0:
-            raise ValidationError(
-                "ShardedCorpusServe: nothing to serve — corpus is empty"
-                if n == 0
-                else "ShardedCorpusServe: embedding dimension is"
-                f" null/zero on '{embedding_col}'"
-            )
         if need > max_total_bytes:
             raise ValidationError(
                 f"ShardedCorpusServe: resident corpus is"
@@ -481,11 +476,18 @@ class ShardedCorpusServe:
         )
 
 
+def route_note(route: str, detail: Any = None) -> str:
+    """The ``notes`` entry naming the route a search took —
+    ``route=<route>``, or ``route=<route>(<detail>)`` — for every
+    strategy whose search has a costed dispatch."""
+    return f"route={route}" if detail is None else f"route={route}({detail})"
+
+
 class CostedServe:
-    """ONE entry point for the exact / pre_filter strategies across
-    every execution tier (r14 verdict, next #1) — the serve-side analog
-    of the reference's ``get_backend`` (src/harness/run.py:71-87): the
-    caller names the workload, the dispatch picks the physical shape.
+    """The costed dispatch of the exact / pre_filter strategies over one
+    corpus (r14 verdict, next #1): the serve-side analog of the
+    reference's ``get_backend`` (src/harness/run.py:71-87) — the caller
+    names the workload, the dispatch records the physical shape.
 
     :func:`serve_or_plan` measures the corpus's resident footprint ONCE
     (one distributed aggregate) and routes:
@@ -497,34 +499,31 @@ class CostedServe:
       driver-RAM budget: a :class:`ShardedCorpusServe` whose shard
       count is DERIVED from the measured bytes (the same sizing the
       r14 probe validated past the 4 GiB gate);
-    * ``distributed`` — past total RAM: the Spark plans
-      (operators/strategies ExactBackend / PreFilterBackend) are the
-      only exact path, exactly the 100 TB regime.
+    * ``distributed`` — past total RAM: the Spark plans are the only
+      exact path, exactly the 100 TB regime.
 
-    ``search`` keeps the §2.10 stats contract of
-    ``SearchBackend.search`` (method/K/latency_ms/scored_vectors/
-    scores) and records the routing decision in ``notes`` —
-    ``route=resident|sharded(n)|distributed`` — so every answer
-    carries its execution-shape provenance. The resident and sharded
-    routes answer through :meth:`tier_search`, the one helper that also
-    serves ``ExactBackend.search`` on a resident corpus: its
-    ``scored_vectors`` is counted from the mask the answer was computed
-    with (each tier keeps its last one), so a filtered request
-    evaluates the predicate once. The post-filter ladder
-    (``LadderBackend.search``) reads candidate membership and |allowed|
-    from the same tier (``passing``, ``count_allowed``). The distributed
-    route runs the Spark plan (``ExactBackend.plan_search``). Answers
-    are value-identical across the three routes (the registered
+    This object is a dispatch record — ``route``, ``tier`` and the
+    route's ``note`` — and chooses no answer path itself: ``search``
+    hands the request to the strategy it names (``pre_filter`` when
+    filtered, else ``exact``), whose ``ExactBackend._search`` answers
+    from the tier when :meth:`holds` says it can and from the Spark plan
+    otherwise (the ``distributed`` route, or a filter on a column the
+    tier does not hold, such as the embedding). ``ExactBackend.search``
+    on a resident corpus takes the same path with the memoized dispatch
+    of :func:`resident_serve`, so the serving tier and the strategy
+    share one driver copy and one route decision. Stats keep the §2.10
+    contract (method/K/latency_ms/scored_vectors/scores) and ``notes``
+    carries ``route=resident|sharded(n)|distributed``. Answers are
+    value-identical across the three routes (the registered
     ``strategy_costed_serve`` query hash-pins all three against one
     DuckDB oracle)."""
 
-    def __init__(self, corpus, route, tier, n, id_col, embedding_col):
+    def __init__(self, corpus, route, tier, n, id_col):
         self.corpus = corpus
         self.route = route
         self.tier = tier
         self.n = int(n)
         self.id_col = id_col
-        self.embedding_col = embedding_col
         self._backends: dict[str, Any] = {}
 
     @property
@@ -533,44 +532,11 @@ class CostedServe:
             1 if self.route == "resident" else 0
         )
 
-    def _note(self) -> str:
-        if self.route == "sharded":
-            return f"route=sharded({self.tier.n_shards})"
-        return f"route={self.route}"
-
-    def _backend(self, method: str):
-        got = self._backends.get(method)
-        if got is None:
-            from hybrid_vector_search_spark.operators.strategies import (
-                get_backend,
-            )
-
-            got = get_backend(
-                method, self.corpus, self.n, id_col=self.id_col
-            )
-            self._backends[method] = got
-        return got
-
-    def search(
-        self,
-        qvec: Sequence[float],
-        filters: Mapping[str, Any] | None,
-        k: int,
-    ) -> tuple[list[int], dict[str, Any]]:
-        from hybrid_vector_search_spark.functions.vector import (
-            ensure_unit_l2,
+    @property
+    def note(self) -> str:
+        return route_note(
+            self.route, self.n_shards if self.route == "sharded" else None
         )
-        from hybrid_vector_search_spark.sources.loaders import validate_K
-
-        validate_K(k, self.n)
-        q = ensure_unit_l2(qvec)
-        method = "pre_filter" if filters else "exact"
-        if self.route != "distributed":
-            return self.tier_search(q, filters, k, method)
-        ids, stats = self._backend(method).plan_search(q, filters, k)
-        base = stats.get("notes")
-        stats["notes"] = f"{self._note()}; {base}" if base else self._note()
-        return ids, stats
 
     def holds(self, filters: Mapping[str, Any] | None) -> bool:
         """Whether the tier can answer ``filters``: the route is
@@ -578,35 +544,28 @@ class CostedServe:
         column."""
         return self.tier is not None and not self.tier.unheld(filters)
 
-    def tier_search(
+    def search(
         self,
-        q: np.ndarray,
+        qvec: Sequence[float],
         filters: Mapping[str, Any] | None,
         k: int,
-        method: str,
     ) -> tuple[list[int], dict[str, Any]]:
-        """The answer from the resident or sharded tier for a validated
-        unit query, with its §2.10 stats: ``method`` as given,
-        ``scored_vectors`` from the tier's mask, ``notes`` the route."""
-        t0 = time.perf_counter()
-        rows = (
-            self.tier.prefilter_topk(q, filters, k)
-            if filters
-            else self.tier.exact_topk(q, k)
-        )
-        stats: dict[str, Any] = {
-            "method": method,
-            "K": int(k),
-            "latency_ms": (time.perf_counter() - t0) * 1000.0,
-            "scored_vectors": self.tier.count_allowed(filters),
-            "scores": [s for _, s in rows],
-            "notes": self._note(),
-        }
-        return [i for i, _ in rows], stats
+        method = "pre_filter" if filters else "exact"
+        backend = self._backends.get(method)
+        if backend is None:
+            from hybrid_vector_search_spark.operators.strategies import (
+                get_backend,
+            )
+
+            backend = get_backend(
+                method, self.corpus, self.n, id_col=self.id_col
+            )
+            self._backends[method] = backend
+        return backend._search(qvec, filters, k, self)
 
 
 class CostedAnnServe:
-    """The post_filter family's q=1 point probe through the SAME costed
+    """The post_filter family's candidate ranking through the SAME costed
     dispatch discipline as :class:`CostedServe` (r15 — completes the
     get_backend analogy for the ANN strategy): the route is decided
     once from measured numbers, recorded in the stats notes, and both
@@ -619,53 +578,59 @@ class CostedAnnServe:
       and the expected probed-block bytes (rows/nlist × nprobe ×
       (D×8 + 8)) fit the probe budget: the driver Arrow-reads ONLY the
       probed list directories and GEMMs in-process
-      (``IVFIndex.serve_local_topk`` — no Spark job, the only shape
+      (``IVFIndex.local_ranking`` — no Spark job, the only shape
       that beats the per-job launch floor at q=1);
     * ``distributed`` — no layout, or probed bytes past the budget
       (the 100 TB regime where even one probe's lists dwarf a node):
       the partition-pruned Spark plan (``IVFIndex.search_plan``).
 
-    Unfiltered point probes only — that is what the serving tier is
-    for; the filtered post_filter strategy (operators/ivf.py
-    PostFilterBackend) takes the same route decision for its candidate
-    ranking and keeps its own ladder."""
+    :meth:`ranking` is the one place the route picks a shape; it serves
+    both the unfiltered q=1 point probe (:meth:`search`, which only adds
+    the stats) and the candidate ranking of the filtered post_filter
+    strategy (operators/ivf.py ``PostFilterBackend._ranking``, which
+    keeps its own ladder and puts :attr:`note` ahead of its stop
+    note)."""
 
     def __init__(self, index, route: str, nprobe: int):
         self.index = index
         self.route = route
         self.nprobe = int(nprobe)
 
+    @property
+    def note(self) -> str:
+        return route_note(self.route, f"nprobe={self.nprobe}")
+
+    def ranking(
+        self, qvec: Sequence[float], k: int
+    ) -> tuple[np.ndarray, np.ndarray, int | None]:
+        """The top ``k`` of the probed lists, best first: ``(int64 ids,
+        float64 scores, rows scored)``. The rows scored are known on the
+        local route only: the distributed plan's scan-side count is the
+        strategies' Observation job, not ours."""
+        if self.route == "local_probe":
+            return self.index.local_ranking(qvec, k, nprobe=self.nprobe)
+        from hybrid_vector_search_spark.operators.strategies import (
+            collect_ranking,
+        )
+
+        plan, _probed = self.index.search_plan(qvec, k=k, nprobe=self.nprobe)
+        return (*collect_ranking(plan, k, self.index.id_col), None)
+
     def search(
         self, qvec: Sequence[float], k: int
     ) -> tuple[list[int], dict[str, Any]]:
         t0 = time.perf_counter()
-        if self.route == "local_probe":
-            ids, scores, scored = self.index.local_ranking(
-                qvec, k, nprobe=self.nprobe
-            )
-            rows = [(int(i), float(s)) for i, s in zip(ids, scores)]
-            notes = f"route=local_probe(nprobe={self.nprobe})"
-        else:
-            plan, _probed = self.index.search_plan(
-                qvec, k=k, nprobe=self.nprobe
-            )
-            idc = self.index.id_col
-            rows = [
-                (int(r[idc]), float(r["score"])) for r in plan.collect()
-            ]
-            scored = None  # the distributed plan's scan-side count is
-            #                the strategies' Observation job, not ours
-            notes = f"route=distributed(nprobe={self.nprobe})"
+        ids, scores, scored = self.ranking(qvec, k)
         stats: dict[str, Any] = {
             "method": "post_filter",
             "K": int(k),
             "latency_ms": (time.perf_counter() - t0) * 1000.0,
-            "scores": [s for _, s in rows],
-            "notes": notes,
+            "scores": [float(s) for s in scores],
+            "notes": self.note,
         }
         if scored is not None:
             stats["scored_vectors"] = scored
-        return [i for i, _ in rows], stats
+        return [int(i) for i in ids], stats
 
 
 def ann_serve_or_plan(
@@ -702,53 +667,6 @@ def ann_serve_or_plan(
     return CostedAnnServe(index, route, int(nprobe))
 
 
-def get_serving_backend(
-    name: str,
-    corpus=None,
-    index=None,
-    **budgets: Any,
-):
-    """ONE name-indexed entry across every strategy — the full serving
-    analog of the reference's ``get_backend`` (src/harness/run.py:71-87)
-    with the physical tier chosen by the costed dispatches instead of a
-    flag: ``exact`` / ``pre_filter`` → :func:`serve_or_plan` (resident /
-    sharded / distributed by corpus footprint), ``post_filter`` →
-    :func:`ann_serve_or_plan` over ``index`` (local Arrow probe /
-    distributed plan by probed-block footprint), ``random`` → the
-    distributed strategy unchanged (a seeded id draw has no residency
-    to optimize). Extra kwargs pass through to the underlying dispatch
-    (budget overrides). Raises ``ValidationError`` for unknown names or
-    a missing required input — same refusal contract as the strategy
-    registry."""
-    if name in ("exact", "pre_filter"):
-        if corpus is None:
-            raise ValidationError(
-                f"get_serving_backend('{name}') requires corpus="
-            )
-        return serve_or_plan(corpus, **budgets)
-    if name == "post_filter":
-        if index is None:
-            raise ValidationError(
-                "get_serving_backend('post_filter') requires index="
-                " (a built IVFIndex)"
-            )
-        return ann_serve_or_plan(index, **budgets)
-    if name == "random":
-        if corpus is None:
-            raise ValidationError(
-                "get_serving_backend('random') requires corpus="
-            )
-        from hybrid_vector_search_spark.operators.strategies import (
-            get_backend,
-        )
-
-        return get_backend("random", corpus)
-    raise ValidationError(
-        f"unknown serving backend '{name}' (choose from ['exact',"
-        " 'pre_filter', 'post_filter', 'random'])"
-    )
-
-
 def serve_or_plan(
     corpus,
     shard_bytes: int = MAX_SERVE_BYTES,
@@ -776,10 +694,14 @@ def serve_or_plan(
 
 def resident_serve(corpus, id_col: str = "id") -> CostedServe | None:
     """``serve_or_plan(corpus, id_col=id_col)`` when ``corpus`` is held
-    in Spark's cache manager (the memoized object), else None."""
-    return _resident_route(
-        corpus, MAX_SERVE_BYTES, MAX_TOTAL_SERVE_BYTES, "embedding", id_col
-    )
+    in Spark's cache manager (the memoized object), else None: an
+    uncached corpus, or an empty one, which has nothing to hold."""
+    try:
+        return _resident_route(
+            corpus, MAX_SERVE_BYTES, MAX_TOTAL_SERVE_BYTES, "embedding", id_col
+        )
+    except ValidationError:  # an empty corpus
+        return None
 
 
 def _resident_route(corpus, *args) -> CostedServe | None:
@@ -796,13 +718,6 @@ def _route(
     id_col: str,
 ) -> CostedServe:
     n, d, need = _resident_footprint(corpus, embedding_col)
-    if n == 0 or d == 0:
-        raise ValidationError(
-            "serve_or_plan: nothing to serve — corpus is empty"
-            if n == 0
-            else "serve_or_plan: embedding dimension is null/zero on"
-            f" '{embedding_col}'"
-        )
     cap = _driver_max_result_bytes(corpus)
     eff = min(int(shard_bytes), cap) if cap is not None else int(shard_bytes)
     if need <= eff:
@@ -827,4 +742,4 @@ def _route(
     else:
         tier = None
         route = "distributed"
-    return CostedServe(corpus, route, tier, n, id_col, embedding_col)
+    return CostedServe(corpus, route, tier, n, id_col)

@@ -603,14 +603,12 @@ def test_warm_costed_search_on_resident_corpus_submits_no_job(
     from hybrid_vector_search_spark.functions.predicates import (
         compile_filters,
     )
-    from hybrid_vector_search_spark.operators.strategies import (
-        is_resident,
-        serve_dispatch,
-    )
+    from hybrid_vector_search_spark.operators.strategies import is_resident
+    from hybrid_vector_search_spark.serving import resident_serve
 
     index = fixed_indexes["local_probe"]
     n = corpus.count()
-    assert is_resident(corpus) and serve_dispatch(corpus).route == "resident"
+    assert is_resident(corpus) and resident_serve(corpus).route == "resident"
     filters = {"n_chars": {"ge": 150}, "lang": {"ne": "de"}}
     uncached_df = corpus.filter(F.col("id").isNotNull())
     _, count_jobs = jobs_of(
@@ -648,12 +646,12 @@ def test_embedding_filter_takes_job_path(spark, corpus, fixed_indexes):
     corpus: its count once per filter set (the count-only memo), one
     membership job per search, with the answer of the join-per-rung
     search."""
-    from hybrid_vector_search_spark.operators.strategies import serve_dispatch
+    from hybrid_vector_search_spark.serving import resident_serve
 
     index = fixed_indexes["local_probe"]
     n = corpus.count()
     filters = {"embedding": {"like": "0.01"}, "lang": {"eq": "en"}}
-    assert not serve_dispatch(corpus).holds(filters)
+    assert not resident_serve(corpus).holds(filters)
     backend = PostFilterBackend(corpus, n, index=index, nprobe=4, costed=True)
     backend.search(query_vector(31), filters, 10)  # counts once
     q = query_vector(32)
@@ -687,7 +685,7 @@ def test_tier_route_matches_uncached_twin(
     are the ranking's: one collect on the IVF plan route, the graph
     walk's on HNSW, none on the local route."""
     from hybrid_vector_search_spark.operators.hnsw import HNSWBackend
-    from hybrid_vector_search_spark.operators.strategies import serve_dispatch
+    from hybrid_vector_search_spark.serving import resident_serve
     from hybrid_vector_search_spark.plans.canonical import CANONICAL_QUERIES
 
     n = corpus.count()
@@ -702,7 +700,7 @@ def test_tier_route_matches_uncached_twin(
 
     tiered, twin = backend(corpus), backend(uncached)
     for cq in CANONICAL_QUERIES:
-        assert serve_dispatch(corpus).holds(cq.filters)
+        assert resident_serve(corpus).holds(cq.filters)
         q = query_vector(cq.seed)
         (ids, st), jobs = jobs_of(
             spark, lambda: tiered.search(q, cq.filters, cq.k)

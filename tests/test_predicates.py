@@ -314,3 +314,33 @@ def test_pandas_mask_geo(spark, tiny_corpus):
         mask = filters_mask_pandas(tiny_corpus.schema, filters, pdf)
         got = sorted(pdf["id"].to_numpy()[np.asarray(mask)].tolist())
         assert got == want, filters
+
+
+def test_non_finite_floats_render_for_duckdb_like_spark(spark):
+    """NaN and ±inf literals render as casts DuckDB binds (a bare ``nan``
+    is a column reference there), and the DuckDB row set of each filter
+    equals the Spark one: NaN equals NaN and sorts above +inf."""
+    import duckdb
+
+    from hybrid_vector_search_spark.functions.predicates import filters_to_sql
+
+    nan, inf = float("nan"), float("inf")
+    rows = [(1, 1.0), (2, nan), (3, inf), (4, None)]
+    df = spark.createDataFrame(rows, "id long, f double")
+    con = duckdb.connect()
+    # built in SQL: a pandas frame would hand DuckDB its NaN as NULL
+    con.execute(
+        "CREATE TABLE t AS SELECT * FROM (VALUES (1, 1.0::DOUBLE),"
+        " (2, 'nan'::DOUBLE), (3, 'inf'::DOUBLE), (4, NULL)) v(id, f)"
+    )
+    for filters in (
+        {"f": {"eq": nan}},
+        {"f": {"gt": inf}},
+        {"f": {"in": [1.0, nan]}},
+        {"f": {"ge": -inf}, "id": {"ne": 2}},
+    ):
+        where = filters_to_sql(df.schema, filters)
+        got = sorted(
+            r[0] for r in con.execute(f"SELECT id FROM t WHERE {where}").fetchall()
+        )
+        assert got == allowed_ids(df, filters), (filters, where)

@@ -330,45 +330,47 @@ def test_ann_serve_or_plan_routes_and_parity(spark):
     )
 
 
-def test_get_serving_backend_name_dispatch(spark):
-    """The full get_backend analog: every strategy name lands on its
-    costed dispatch (or the distributed strategy where residency is
-    moot), unknown names and missing inputs refuse loudly."""
+def test_get_backend_name_dispatch(spark):
+    """Every strategy name lands on its backend through the one strategy
+    registry, ``get_backend``: exact and pre_filter answer through the
+    costed serve dispatch of the resident corpus, post_filter through
+    the costed ANN dispatch of its index; unknown names refuse
+    loudly."""
+    from hybrid_vector_search_spark.operators.ivf import PostFilterBackend
+    from hybrid_vector_search_spark.operators.strategies import (
+        ExactBackend,
+        PreFilterBackend,
+        get_backend,
+    )
     from hybrid_vector_search_spark.plans.registry_hybrid_ann import (
         _ann_ivf_fixed_index,
     )
-    from hybrid_vector_search_spark.serving import (
-        CostedAnnServe,
-        CostedServe,
-        get_serving_backend,
-    )
+    from hybrid_vector_search_spark.queryvecs import query_vector
+    from hybrid_vector_search_spark.serving import CostedServe
 
     sf = "/root/testdata/sf0.001"
     corpus = R.load_corpus(spark, sf)
     index = _ann_ivf_fixed_index(spark, sf, persist=True)
-    assert isinstance(
-        get_serving_backend("exact", corpus=corpus), CostedServe
+    exact = get_backend("exact", corpus)
+    assert isinstance(exact, ExactBackend)
+    assert isinstance(exact._served(), CostedServe)
+    pre = get_backend("pre_filter", corpus, exact.n)
+    assert isinstance(pre, PreFilterBackend)
+    assert pre._served() is exact._served()
+    post = get_backend("post_filter", corpus, exact.n, index=index)
+    assert isinstance(post, PostFilterBackend)
+    assert post.search(query_vector(3), {}, 5)[1]["notes"].startswith(
+        "route=local_probe"
     )
-    assert isinstance(
-        get_serving_backend("pre_filter", corpus=corpus), CostedServe
-    )
-    assert isinstance(
-        get_serving_backend("post_filter", index=index), CostedAnnServe
-    )
-    from hybrid_vector_search_spark.queryvecs import query_vector
 
-    rnd = get_serving_backend("random", corpus=corpus)
+    rnd = get_backend("random", corpus, exact.n)
     ids, stats = rnd.search(query_vector(3), None, 5)
     assert len(ids) == 5 and stats["method"] == "random"
     with pytest.raises(ValidationError, match="unknown"):
-        get_serving_backend("hnsw")
-    with pytest.raises(ValidationError, match="requires corpus"):
-        get_serving_backend("exact")
-    with pytest.raises(ValidationError, match="requires index"):
-        get_serving_backend("post_filter")
+        get_backend("hnsw", corpus, exact.n)
 
 
-def test_costed_serve_one_mask_per_request(serve, monkeypatch):
+def test_costed_serve_one_mask_per_request(spark, serve, monkeypatch):
     """A filtered request evaluates the pandas mask once: the count in
     its stats comes from the same mask as its answer. ``like`` columns
     are lowercased once per tier, and the answers do not change."""
@@ -376,11 +378,16 @@ def test_costed_serve_one_mask_per_request(serve, monkeypatch):
     from hybrid_vector_search_spark.functions import predicates
     from hybrid_vector_search_spark.queryvecs import query_vector
 
-    # a fresh tier over the fixture's arrays: no memo from earlier tests
-    tier = LocalCorpusServe(serve.ids, serve.mat, serve.meta, serve.schema)
-    cs = serving.CostedServe(
-        None, "resident", tier, len(tier.ids), "id", "embedding"
+    # a new cache entry: a fresh memoized tier, with no memo from
+    # earlier tests
+    corpus = (
+        R.load_corpus(spark, "/root/testdata/sf0.001")
+        .filter(F.col("id") >= 0)
+        .cache()
     )
+    cs = serving.serve_or_plan(corpus)
+    assert cs.route == "resident"
+    tier = cs.tier
     filter_sets = (
         {"text": {"like": "the"}},
         {"label": {"in": [1, 2]}},
@@ -411,10 +418,152 @@ def test_costed_serve_one_mask_per_request(serve, monkeypatch):
         "_like_haystack",
         lambda *a: lowered.append(1) or real_hay(*a),
     )
-    for i, f in requests:
-        before = len(calls)
-        ids, stats = cs.search(query_vector(i), f, 10)
-        assert len(calls) - before == 1, f
-        assert stats["scored_vectors"] == n_allowed[i % 3], f
-        assert ids == expect[i], f
-    assert len(lowered) == 1  # the text column, lowercased once
+    try:
+        for i, f in requests:
+            before = len(calls)
+            ids, stats = cs.search(query_vector(i), f, 10)
+            assert len(calls) - before == 1, f
+            assert stats["scored_vectors"] == n_allowed[i % 3], f
+            assert ids == expect[i], f
+        assert len(lowered) == 1  # the text column, lowercased once
+    finally:
+        corpus.unpersist(blocking=True)
+
+
+def test_embedding_filter_on_a_resident_dispatch_runs_the_plan(spark):
+    """The tier does not hold the embedding column (it is the matrix):
+    a resident dispatch answers a ``like`` filter on it from the Spark
+    plan, with the ids, scores and count of the uncached twin, and says
+    so in its route note."""
+    from hybrid_vector_search_spark.operators.strategies import get_backend
+    from hybrid_vector_search_spark.queryvecs import query_vector
+    from hybrid_vector_search_spark.serving import serve_or_plan
+
+    corpus = R.load_corpus(spark, "/root/testdata/sf0.001")
+    cs = serve_or_plan(corpus)
+    assert cs.route == "resident"
+    filters = {"embedding": {"like": "0.01"}, "lang": {"eq": "en"}}
+    ids, st = cs.search(query_vector(3), filters, 5)
+    twin = corpus.filter(F.col("id").isNotNull())
+    want_ids, want = get_backend("pre_filter", twin, cs.n).search(
+        query_vector(3), filters, 5
+    )
+    assert st["notes"] == "route=distributed" and "notes" not in want
+    assert ids == want_ids and st["scores"] == want["scores"]
+    assert st["method"] == want["method"] == "pre_filter"
+    assert st["scored_vectors"] == want["scored_vectors"]
+
+
+def test_stats_keys_and_route_note_per_route(spark):
+    """Each route of each dispatch returns one stats key set, and its
+    ``notes`` lead with the route: the exact-tier dispatch on resident,
+    sharded and distributed; the ANN dispatch on local_probe and
+    distributed; the IVF post-filter ladder on both ranking routes,
+    with the ranking's route ahead of the ladder's stop note."""
+    from hybrid_vector_search_spark.operators.ivf import PostFilterBackend
+    from hybrid_vector_search_spark.plans.registry_hybrid_ann import (
+        ANN_IVF_NPROBE,
+        _ann_ivf_fixed_index,
+    )
+    from hybrid_vector_search_spark.queryvecs import query_vector
+    from hybrid_vector_search_spark.serving import (
+        _resident_footprint,
+        ann_serve_or_plan,
+        serve_or_plan,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    corpus = R.load_corpus(spark, sf)
+    _n, _d, need = _resident_footprint(corpus, "embedding")
+    q, filters = query_vector(5), {"label": {"in": [1, 2]}}
+    exact_keys = {"method", "K", "latency_ms", "scored_vectors", "scores", "notes"}
+    for budgets, prefix in (
+        ({}, "route=resident"),
+        ({"shard_bytes": max(need // 2, 1)}, "route=sharded("),
+        (
+            {"shard_bytes": max(need // 4, 1), "max_total_bytes": max(need // 2, 1)},
+            "route=distributed",
+        ),
+    ):
+        cs = serve_or_plan(corpus, **budgets)
+        for f in (filters, {}):
+            _ids, st = cs.search(q, f, 10)
+            assert set(st) == exact_keys, (prefix, set(st))
+            assert st["notes"].startswith(prefix), st["notes"]
+
+    persisted = _ann_ivf_fixed_index(spark, sf, persist=True)
+    unpersisted = _ann_ivf_fixed_index(spark, sf, persist=False)
+    ann_keys = {"method", "K", "latency_ms", "scores", "notes"}
+    for index, budget, route, keys in (
+        (persisted, None, "local_probe", ann_keys | {"scored_vectors"}),
+        (persisted, 0, "distributed", ann_keys),
+    ):
+        cs = ann_serve_or_plan(
+            index, nprobe=ANN_IVF_NPROBE, max_probe_bytes=budget
+        )
+        _ids, st = cs.search(q, 10)
+        assert set(st) == keys, (route, set(st))
+        assert st["notes"] == f"route={route}(nprobe={ANN_IVF_NPROBE})"
+
+    ladder_keys = {
+        "method", "K", "latency_ms", "scored_vectors", "lists_probed",
+        "nprobe", "kth_at_stop", "bound_at_stop", "scores", "ladder_entry",
+        "rungs_run", "notes",
+    }
+    n = corpus.count()
+    for index, route in (
+        (persisted, "local_probe"),
+        (unpersisted, "distributed"),
+    ):
+        backend = PostFilterBackend(corpus, n, index=index, nprobe=ANN_IVF_NPROBE)
+        _ids, st = backend.search(q, filters, 10)
+        assert set(st) == ladder_keys, (route, set(st))
+        assert st["notes"].startswith(
+            f"route={route}(nprobe={ANN_IVF_NPROBE}); ladder_stop="
+        ), st["notes"]
+
+
+def test_route_notes_have_one_writer():
+    """The literal ``route=`` is written by one package function — the
+    serving helper every dispatch builds its note with — and the second
+    name registry and the dispatch wrapper are gone."""
+    import ast
+    import pathlib
+    import re
+
+    import hybrid_vector_search_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    writers = set()
+
+    def docstring_ids(tree):
+        for node in ast.walk(tree):
+            body = getattr(node, "body", None)
+            if (
+                isinstance(body, list)
+                and body
+                and isinstance(body[0], ast.Expr)
+                and isinstance(body[0].value, ast.Constant)
+            ):
+                yield id(body[0].value)
+
+    def visit(node, owner, path, skip):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            owner = f"{path}:{node.name}"
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and "route=" in node.value
+            and id(node) not in skip
+        ):
+            writers.add(owner)
+        for child in ast.iter_child_nodes(node):
+            visit(child, owner, path, skip)
+
+    for path in sorted(root.rglob("*.py")):
+        text = path.read_text(encoding="utf-8")
+        rel = path.relative_to(root).as_posix()
+        assert not re.search(r"\b(get_serving_backend|serve_dispatch)\b", text), rel
+        tree = ast.parse(text)
+        visit(tree, None, rel, set(docstring_ids(tree)))
+    assert writers == {"serving.py:route_note"}, writers

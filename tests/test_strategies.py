@@ -378,7 +378,7 @@ def test_embedding_filter_falls_back_to_plan(spark):
     (ids, st), jobs = jobs_of(
         spark, lambda: resident.search(query_vector(3), filters, 5)
     )
-    assert jobs >= 1 and "notes" not in st
+    assert jobs >= 1 and st["notes"] == "route=distributed"
     want_ids, want = PreFilterBackend(_uncached_twin(corpus), n).search(
         query_vector(3), filters, 5
     )
@@ -518,7 +518,7 @@ def test_distributed_decision_and_empty_corpus_keep_the_plan(
             spark,
             lambda: backend.search(query_vector(seed, 8), {"label": {"eq": 1}}, 3),
         )
-        assert jobs >= 1 and "notes" not in st and len(ids) == 3
+        assert jobs >= 1 and st["notes"] == "route=distributed" and len(ids) == 3
     assert measured == [1]
     assert serving.resident_serve(corpus).route == "distributed"
     corpus.unpersist(blocking=True)
