@@ -294,12 +294,3 @@ def bloom_positions(
     return F.array(
         *[md5_long(key, f"{salt}{i}") % m for i in range(BLOOM_K)]
     )
-
-
-def bloom_positions_sql(
-    key_expr: str, salt: str = "bloom", m: int = BLOOM_M
-) -> list[str]:
-    return [
-        f"({md5_long_sql(key_expr, f'{salt}{i}')}) % {m}"
-        for i in range(BLOOM_K)
-    ]

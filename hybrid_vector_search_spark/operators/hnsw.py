@@ -64,6 +64,12 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from hybrid_vector_search_spark.scratch import (
+    recover_swap,
+    swap_directory,
+    swap_stage,
+)
+
 DEFAULT_M = 8  # graph degree (FAISS HNSW32 scaled down for 64-d testdata)
 DEFAULT_EF_CONSTRUCTION = 64
 DEFAULT_EF_SEARCH = 64  # reference default (loaders.py:154)
@@ -481,7 +487,7 @@ class HNSWIndex:
         # a crashed purge swap must self-heal on the next READ, not wait
         # for a manual recovery call (r14 advice): between the two swap
         # renames the index dir is missing and every read would fail
-        self.recover_pending_purge(self.path)
+        recover_swap(self.path)
         idx = self.spark.read.parquet(self.path)
         if ef >= EXHAUSTIVE_EF:
             # known-exhaustive plan: every node scores, so graph (and
@@ -511,38 +517,6 @@ class HNSWIndex:
         )
         return topk(cand, kk, id_col=idc)
 
-    @staticmethod
-    def recover_pending_purge(path: str) -> bool:
-        """Finish or roll back a purge swap interrupted by a crash.
-        The swap is stage-write → rename(path→old) → rename(stage→path)
-        → rm old; every interruption point is recoverable: a complete
-        stage with the index dir missing is FINISHED (the purge had
-        committed its content), an unpublished stage next to an intact
-        index is DISCARDED (the purge never happened — retry it), and a
-        leftover old dir is swept. Returns True if anything was done.
-        Call before opening an index whose writer may have crashed —
-        the non-manifest layout's analog of manifest crash-invisible
-        commits."""
-        import os
-        import shutil
-
-        stage, trash = path + ".purge-stage", path + ".purge-old"
-        did = False
-        if not os.path.isdir(path):
-            if os.path.isdir(stage):
-                os.rename(stage, path)  # crash between the two renames
-                did = True
-            elif os.path.isdir(trash):
-                os.rename(trash, path)  # defensive: stage lost — undo
-                did = True
-        elif os.path.isdir(stage):
-            shutil.rmtree(stage, ignore_errors=True)  # never published
-            did = True
-        if os.path.isdir(trash):
-            shutil.rmtree(trash, ignore_errors=True)
-            did = True
-        return did
-
     def purge_nodes(self, subject_ids: Sequence[int]) -> dict:
         """GDPR erasure for the persisted graph artifact (r14) — the
         derived root the manifest-based cascade can't cover: adjacency
@@ -555,21 +529,20 @@ class HNSWIndex:
         vectors; untouched partitions' rows are carried through
         unchanged — cost tracks the subject's partitions, not the
         index (the same bounded-touch shape as the IVF targeted
-        purge). The swap is staged write → rename (this layout is plain
-        parquet, not manifest-committed; the cascade's roots get the
+        purge). The rebuilt artifact is staged, then swapped in through
+        :func:`scratch.swap_directory` (the staged-commit protocol is
+        described at :func:`scratch.staged_commit`; this layout is plain
+        parquet, not manifest-committed — the cascade's roots get the
         atomic version instead). Returns the audit dict the forensic
         scan + integrity validation fill: residual_nodes /
         bad_adjacency_refs / bad_entry_refs must all be 0."""
-        import os
-        import shutil
-
         from pyspark.sql import functions as F
 
         spark = self.spark
         # self-heal a crashed prior swap before touching self.path — a
         # purge retried after a crash must find the committed (or
         # rolled-back) artifact, never the mid-swap gap (r14 advice)
-        self.recover_pending_purge(self.path)
+        recover_swap(self.path)
         subj = sorted({int(i) for i in subject_ids})
         idx = spark.read.parquet(self.path)
         is_subj = F.col("id").isin(subj)
@@ -634,12 +607,9 @@ class HNSWIndex:
             new = idx.filter(~F.col("part").isin(affected)).unionByName(
                 rebuilt
             )
-            stage = self.path + ".purge-stage"
+            stage = swap_stage(self.path)
             new.write.mode("overwrite").parquet(stage)
-            trash = self.path + ".purge-old"
-            os.rename(self.path, trash)
-            os.rename(stage, self.path)
-            shutil.rmtree(trash, ignore_errors=True)
+            swap_directory(stage, self.path)
         # forensic + integrity pass over the artifact as it now exists
         # on disk: no subject node, no adjacency index outside the
         # partition's node range, no dangling entry point

@@ -23,15 +23,10 @@ grid points are exactly representable, so snap(snap(a)+snap(b)) ==
 snap(a+b) for 2-decimal inputs, which is what lets a full-recompute SQL
 oracle hash-match the merged table.
 
-CRASH SAFETY: same begin/commit-marker protocol as the three sibling
-maintenance paths (ivf.py recover_pending_upsert / _compaction, bm25.py
-recover_pending_append) — the merged partitions are staged to an
-immutable scratch directory FIRST, a ``_ROLLUP_PENDING.json`` marker
-brackets the dynamic-overwrite commit, and a crash anywhere inside the
-window is repaired by idempotent replay from the stage on the next
-merge/open. Plain-parquet caveat stands: the overwrite is not atomic
-ACROSS partitions; the marker closes the half-applied window, a table
-format's transactional MERGE is the production upgrade.
+CRASH SAFETY: the merged partitions are staged to scratch, then
+committed through ``scratch.staged_commit`` — the one protocol of every
+plain-parquet layout, described there; a crash is repaired on the next
+merge or open.
 """
 
 from __future__ import annotations
@@ -42,10 +37,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hybrid_vector_search_spark.errors import ValidationError
 from hybrid_vector_search_spark.functions.portable import round_portable
-
-_ROLLUP_PENDING = "_ROLLUP_PENDING.json"
+from hybrid_vector_search_spark.scratch import (
+    overwrite_partitions,
+    recover_staged,
+    scratch_path,
+    staged_commit,
+)
 
 GRID_DIGITS = 2  # events.value lives on a 2-decimal grid
 
@@ -86,29 +84,6 @@ def build_rollup(events: DataFrame, path: str) -> int:
     return int(n_days)
 
 
-def recover_pending_rollup(spark: SparkSession, path: str) -> bool:
-    """Complete a crashed :func:`merge_rollup_batch` commit, if one is
-    pending — replay the dynamic overwrite of the touched days from the
-    immutable staged merge (idempotent: the stage IS the final state of
-    those partitions). A marker whose stage has vanished raises, never
-    exposes a half-merged table. Returns True when recovery ran."""
-    marker = os.path.join(path, _ROLLUP_PENDING)
-    if not os.path.exists(marker):
-        return False
-    with open(marker, encoding="utf-8") as f:
-        info = json.load(f)
-    stage = info.get("stage")
-    if not (stage and os.path.isdir(stage)):
-        raise ValidationError(
-            f"pending rollup merge at '{path}' cannot be replayed: "
-            f"staged merge '{stage}' is missing. Rebuild the touched "
-            f"days from raw events; refusing to expose a half-merged "
-            f"table."
-        )
-    _commit_merge(spark, path, info)
-    return True
-
-
 _ROLLUP_META = "rollup_meta.json"
 
 
@@ -123,15 +98,9 @@ def read_rollup_meta(path: str) -> dict:
 
 
 def _commit_merge(spark: SparkSession, path: str, info: dict) -> None:
-    import shutil
-
-    from hybrid_vector_search_spark.operators.ivf import _dynamic_overwrite
-
-    staged = spark.read.parquet(info["stage"]).repartition(
-        max(int(info.get("n_touched", 1)), 1), "day"
-    )
-    with _dynamic_overwrite(spark):
-        staged.write.mode("overwrite").partitionBy("day").parquet(path)
+    """The merge's staged-commit apply: overwrite the touched day
+    partitions from the stage, then write ``rollup_meta.json``."""
+    overwrite_partitions(spark, path, info, "day")
     # commit_meta lands INSIDE the marker window: a crash after the
     # overwrite but before this write replays the whole commit (both
     # steps idempotent), so meta and table can never split-brain —
@@ -142,8 +111,6 @@ def _commit_merge(spark: SparkSession, path: str, info: dict) -> None:
             os.path.join(path, _ROLLUP_META), "w", encoding="utf-8"
         ) as f:
             json.dump(info["commit_meta"], f)
-    os.remove(os.path.join(path, _ROLLUP_PENDING))
-    shutil.rmtree(info["stage"], ignore_errors=True)
 
 
 def merge_rollup_batch(
@@ -156,9 +123,8 @@ def merge_rollup_batch(
     touched day partitions. ``commit_meta``, when given, is written to
     ``rollup_meta.json`` atomically WITH the merge (same marker
     window). Returns ``{"touched_days": T, "batch_rows": B}``."""
-    from hybrid_vector_search_spark.scratch import scratch_path
-
-    recover_pending_rollup(spark, path)  # never stack on a crash
+    # never stack on a crash
+    recover_staged(path, lambda info: _commit_merge(spark, path, info))
     partials = aggregate_partials(batch)
     touched = sorted(
         r["day"] for r in partials.select("day").distinct().collect()
@@ -198,11 +164,7 @@ def merge_rollup_batch(
         "n_touched": len(touched),
         "commit_meta": commit_meta,
     }
-    with open(
-        os.path.join(path, _ROLLUP_PENDING), "w", encoding="utf-8"
-    ) as f:
-        json.dump(info, f)
-    _commit_merge(spark, path, info)
+    staged_commit(path, info, lambda i: _commit_merge(spark, path, i))
     return {"touched_days": len(touched), "batch_rows": batch_rows}
 
 
@@ -236,5 +198,5 @@ def streaming_merge_batch(table: str, batch: DataFrame, batch_id: int) -> None:
 def open_rollup(spark: SparkSession, path: str) -> DataFrame:
     """Open the rollup for reading, first completing any crashed merge
     (the open_partitioned contract, relational edition)."""
-    recover_pending_rollup(spark, path)
+    recover_staged(path, lambda info: _commit_merge(spark, path, info))
     return spark.read.parquet(path)

@@ -1277,8 +1277,9 @@ def events_incremental_rollup(
     existing day — the reprocessing/backfill shape where naive
     append-only rollups silently double-count and full recomputes cost
     a history re-scan — and partition-local merge combines the
-    algebraic partials, rewriting only touched day directories under
-    the same staged-commit crash marker as its two siblings. The
+    algebraic partials, rewriting only touched day directories through
+    ``scratch.staged_commit`` (the crash protocol is described there).
+    The
     oracle aggregates ALL events from scratch: a hash match proves
     merge ≡ recompute, including float discipline (partials snapped to
     the value column's 2-decimal grid, so merge order cannot drift an
@@ -1338,9 +1339,9 @@ def events_rollup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact per-day pruning), and the late 20% batch lands as a
     ``commit_replace_values`` of ONLY the touched days — merged
     partials rewritten, untouched days carried byte-identical, which
-    upgrades operators/rollup.py's begin/commit-marker protocol
-    (plain-parquet dynamic overwrite: atomic per partition, NOT across
-    partitions) to a genuinely atomic multi-day publish: a dashboard
+    upgrades operators/rollup.py's staged commit (described at
+    ``scratch.staged_commit``; plain-parquet dynamic overwrite: atomic
+    per partition, NOT across partitions) to a genuinely atomic multi-day publish: a dashboard
     reader mid-merge sees v1 or v2, never a half-merged mix, and v1
     stays pinned — yesterday's dashboard is reproducible after the
     backfill. The oracle recomputes BOTH versions from raw events, so

@@ -1271,8 +1271,9 @@ def retrieval_bm25_snapshot_topk(
     """BM25 POSTINGS ROUTED THROUGH THE VERSIONED-MANIFEST LAYOUT —
     the lexical leg of the maintenance-unification story (the r9
     verdict's direction, already walked for IVF by
-    ann_ivf_upsert_snapshot): instead of the bespoke begin/commit
-    marker protocol (operators/bm25.py append_postings_batch), the
+    ann_ivf_upsert_snapshot): instead of the plain-parquet staged
+    commit (operators/bm25.py append_postings_batch; the protocol is
+    described at ``scratch.staged_commit``), the
     postings land via ``commit_append_clustered`` (one immutable file
     per term bucket — footer stats give exact bucket pruning through
     ``read_snapshot_pruned_in``) and the corpus constants (N, total

@@ -456,21 +456,26 @@ def streaming_topk_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the query every dashboard wants ("current best K matches for X,
     live"): each micro-batch computes its own bounded top-K candidates
     (TakeOrderedAndProject inside ``foreachBatch``), merges them with
-    the ≤K-row persisted view state, and swaps the refreshed view in by
-    rename — so per-batch cost is O(batch + K·log K) and the view is
-    always a K-row parquet any reader can scan without touching the
-    stream. Top-K is an algebraic aggregate (merge of two top-Ks is the
-    top-K of their union), which is what makes the incremental
-    maintenance EXACT, not approximate: the oracle computes the batch
-    top-K over everything landed, and the hash certifies the
-    incrementally-maintained view equals it."""
+    the ≤K-row persisted view state, and swaps the refreshed view in
+    through ``scratch.swap_directory`` (the staged-commit protocol is
+    described at ``scratch.staged_commit``; a crashed swap is recovered
+    before the next batch reads the view) — so per-batch cost is
+    O(batch + K·log K) and the view is always a K-row parquet any
+    reader can scan without touching the stream. Top-K is an algebraic
+    aggregate (merge of two top-Ks is the top-K of their union), which
+    is what makes the incremental maintenance EXACT, not approximate:
+    the oracle computes the batch top-K over everything landed, and the
+    hash certifies the incrementally-maintained view equals it."""
     import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
 
     from pyspark.sql import types as T
 
     from hybrid_vector_search_spark.functions.vector import dot_score_column
+    from hybrid_vector_search_spark.scratch import (
+        recover_swap,
+        swap_directory,
+        swap_stage,
+    )
 
     land = _landing(spark, sf_dir, "embeddings")
     root = _session_root(spark, "stream_topk", sf_dir)
@@ -487,6 +492,7 @@ def streaming_topk_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             ANN_IVF_K,
         )
+        recover_swap(state)  # a crash between renames leaves no view
         if _os.path.isdir(state):
             # dedup by id BEFORE the cut: the foreachBatch contract is
             # at-least-once — a replayed micro-batch (crash between the
@@ -502,13 +508,9 @@ def streaming_topk_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.max("score").alias("score")),
                 ANN_IVF_K,
             )
-        stage = f"{state}.stage-{_uuid.uuid4().hex[:12]}"
+        stage = swap_stage(state)
         cand.coalesce(1).write.mode("overwrite").parquet(stage)
-        old = f"{state}.old-{_uuid.uuid4().hex[:12]}"
-        if _os.path.isdir(state):
-            _os.rename(state, old)
-        _os.rename(stage, state)
-        _shutil.rmtree(old, ignore_errors=True)
+        swap_directory(stage, state)
 
     schema = T.StructType(
         [

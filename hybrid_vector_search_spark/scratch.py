@@ -16,15 +16,23 @@ bounds disk for run-to-completion processes (bench, selfcheck, the
 driver); a long-lived service that materializes repeatedly should set
 ``SPARK_GRAFT_SCRATCH`` to storage with its own retention policy — the
 artifacts back live DataFrame plans, so nothing earlier than process
-exit is provably safe to delete without reference counting."""
+exit is provably safe to delete without reference counting.
+
+The module also owns the one crash-safe publish of plain-parquet
+layouts: :func:`staged_commit`, its recovery entry
+:func:`recover_staged` and the directory swap :func:`swap_directory`."""
 
 from __future__ import annotations
 
 import atexit
+import glob
+import json
 import os
 import shutil
 import tempfile
 import uuid
+
+from hybrid_vector_search_spark.errors import ValidationError
 
 _PATHS: list[str] = []
 
@@ -144,3 +152,159 @@ def persistent_artifact(name: str, sources, params, sf_dir: str, build) -> str:
         ) as f:
             f.write("ok\n")
     return path
+
+
+# ------------------------------------------ crash-safe staged commits
+
+
+def pending_marker(target: str) -> str:
+    """The marker path of a staged commit to ``target``."""
+    return target.rstrip("/") + ".PENDING.json"
+
+
+def swap_stage(live: str) -> str:
+    """A fresh stage path beside ``live`` for :func:`swap_directory`
+    (``<live>.stage-<uuid>``). A stage of this name with no marker is
+    torn, and :func:`recover_staged` deletes it."""
+    return f"{live.rstrip('/')}.stage-{uuid.uuid4().hex[:12]}"
+
+
+def staged_commit(target: str, info: dict, apply) -> None:
+    """Publish the complete stage ``info["stage"]`` into ``target`` —
+    the one crash-safe commit protocol of every plain-parquet layout
+    (the IVF upsert and the streaming probe-root drain, the BM25
+    postings append, the rollup merge, the HNSW purge, the streaming
+    top-K view):
+
+    1. the caller writes the new state to an immutable stage first, so
+       no live byte moves while a Spark job can still fail;
+    2. a JSON marker holding ``info`` is written BESIDE ``target``
+       (:func:`pending_marker`: invisible to readers of the target, and
+       it survives a swap that renames the target away), through a temp
+       name, so a marker is never half-written;
+    3. ``apply(info)`` runs. It must be idempotent and read only what
+       ``info`` names: a replay from the same marker converges on the
+       same state whatever prefix of it already ran;
+    4. the marker is removed (the commit point), then the stage is
+       deleted.
+
+    A crash anywhere in 3–4 leaves the marker, and the next
+    :func:`recover_staged` on ``target`` — every open and every writer
+    of the layout calls it first — replays ``apply`` from the stage.
+    ``info`` must be JSON-serializable. A stage that ``apply`` moves
+    whole into a path (:func:`swap_directory`) names that path as
+    ``info["into"]``: once it exists the move has landed, and a
+    recovery no longer needs the stage. Directory operations are
+    ``os``/``shutil`` (local/POSIX filesystems). An apply that
+    overwrites several partitions is not atomic ACROSS them: the marker
+    closes the half-applied window, and a table format's transactional
+    commit (sources/manifest.py) is the production upgrade."""
+    marker = pending_marker(target)
+    tmp = f"{marker}.tmp-{uuid.uuid4().hex[:12]}"
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(info, f)
+    os.replace(tmp, marker)
+    _finish(marker, info, apply)
+
+
+def recover_staged(target: str, apply) -> bool:
+    """Complete a crashed :func:`staged_commit` to ``target``, if one is
+    pending; returns True when a marker was found and replayed.
+
+    With no marker, any :func:`swap_stage` stage (or half-written
+    marker) beside ``target`` is torn — written but never committed —
+    and is deleted; the result is False. With a marker whose stage is
+    gone — e.g. scratch cleanup ran after the crash — the replay is
+    impossible and completing the marker would silently expose a
+    half-applied layout, so it raises ``ValidationError`` and keeps the
+    marker for the operator. Otherwise ``apply`` replays and the marker
+    and stage are removed."""
+    marker = pending_marker(target)
+    if not os.path.exists(marker):
+        for torn in glob.glob(glob.escape(target.rstrip("/")) + ".stage-*"):
+            shutil.rmtree(torn, ignore_errors=True)
+        for torn in glob.glob(glob.escape(marker) + ".tmp-*"):
+            os.remove(torn)
+        return False
+    with open(marker, encoding="utf-8") as f:
+        info = json.load(f)
+    stage, into = info.get("stage"), info.get("into")
+    if not (stage and os.path.isdir(stage)) and not (
+        into and os.path.isdir(into)
+    ):
+        raise ValidationError(
+            f"pending commit at '{target}' cannot be replayed: stage "
+            f"'{stage}' is missing. Restore it or rebuild the layout "
+            f"(the marker '{marker}' names every path involved); "
+            f"refusing to expose a half-applied layout."
+        )
+    _finish(marker, info, apply)
+    return True
+
+
+def _finish(marker: str, info: dict, apply) -> None:
+    apply(info)
+    os.remove(marker)  # ---- commit
+    shutil.rmtree(info["stage"], ignore_errors=True)
+
+
+def swap_directory(stage: str, live: str) -> None:
+    """Replace the directory ``live`` by the complete directory
+    ``stage`` — the one place a live directory is renamed: live → old,
+    stage → live, delete old, as a :func:`staged_commit` whose marker
+    sits beside ``live``. Readers see the old or the new directory,
+    never a mix; a crash between the renames (no live directory) is
+    repaired by :func:`recover_swap`. A pending swap of ``live`` is
+    completed first, and a ``stage`` that is already gone (a replayed
+    caller whose swap landed) is a no-op."""
+    # finish a crashed swap of ``live`` first — without the torn-stage
+    # sweep: ``stage`` is complete, only its marker is still to come
+    if os.path.exists(pending_marker(live)):
+        recover_swap(live)
+    if os.path.isdir(stage):
+        old = f"{live.rstrip('/')}.old-{uuid.uuid4().hex[:12]}"
+        staged_commit(live, {"stage": stage, "into": live, "old": old}, _swap)
+
+
+def recover_swap(live: str) -> bool:
+    """:func:`recover_staged` for a :func:`swap_directory` of ``live``."""
+    return recover_staged(live, _swap)
+
+
+def _swap(info: dict) -> None:
+    stage, live, old = info["stage"], info["into"], info["old"]
+    if os.path.isdir(stage):
+        if os.path.isdir(live):
+            os.rename(live, old)
+        os.rename(stage, live)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def overwrite_partitions(
+    spark, path: str, info: dict, col: str, staged=None
+) -> None:
+    """The shared ``apply`` step "overwrite the touched partitions from
+    the stage": ``partitionOverwriteMode=dynamic`` (scoped, the prior
+    session value restored) rewrite of ``path`` by the staged rows,
+    ``partitionBy(col)``, one task per touched partition
+    (``info["n_touched"]``). Only partitions present in the stage are
+    replaced. The stage is re-read here on a replay; a live commit that
+    already holds the staged read passes it as ``staged``. Idempotent:
+    the stage IS the final state of the partitions it holds."""
+    if staged is None:
+        staged = spark.read.parquet(info["stage"]).repartition(
+            max(int(info.get("n_touched", 1)), 1), col
+        )
+    key = "spark.sql.sources.partitionOverwriteMode"
+    try:
+        prev = spark.conf.get(key)
+    except Exception:
+        prev = None
+    spark.conf.set(key, "dynamic")
+    try:
+        staged.write.mode("overwrite").partitionBy(col).parquet(path)
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
+        else:
+            spark.conf.unset(key)

@@ -54,6 +54,22 @@ MAX_TOTAL_SERVE_BYTES = 24 << 30
 def _resident_footprint(
     corpus, embedding_col: str
 ) -> tuple[int, int, int]:
+    """:func:`_measure_footprint`, memoized per Spark cache entry
+    (:func:`session.resident_artifact`) when ``corpus`` is cached: the
+    footprint depends on the rows alone, not on any budget, so every
+    dispatch over one cached corpus shares one aggregate. An uncached
+    frame (a shard, a filtered view) is measured on every call."""
+    got = resident_artifact(
+        corpus,
+        ("resident_footprint", embedding_col),
+        lambda: _measure_footprint(corpus, embedding_col),
+    )
+    return got or _measure_footprint(corpus, embedding_col)
+
+
+def _measure_footprint(
+    corpus, embedding_col: str
+) -> tuple[int, int, int]:
     """(n, d, estimated resident bytes) via ONE distributed aggregate —
     the gate runs BEFORE any driver materialization (the
     embedding_near_dup rule: check, then collect), and counts the WHOLE

@@ -176,7 +176,10 @@ def test_append_crash_recovery_and_retry_safety(spark, tmp_path):
     from hybrid_vector_search_spark.operators import bm25 as M
     from hybrid_vector_search_spark.operators.bm25 import (
         append_postings_batch,
-        recover_pending_append,
+    )
+    from hybrid_vector_search_spark.scratch import (
+        pending_marker,
+        recover_staged,
     )
 
     base = spark.createDataFrame(
@@ -203,10 +206,10 @@ def test_append_crash_recovery_and_retry_safety(spark, tmp_path):
             append_postings_batch(spark, path, batch)
     finally:
         M._commit_append = real_commit
-    assert os.path.exists(os.path.join(path, M._APPEND_PENDING))
+    assert os.path.exists(pending_marker(path))
 
     # replay completes the append exactly once
-    assert recover_pending_append(spark, path)
+    assert recover_staged(path, lambda info: M._commit_append(path, info))
     full = str(tmp_path / "full")
     build_postings_layout(base.unionByName(batch), full, n_buckets=4)
     for terms in (["spark"], ["vector", "tables"]):
@@ -215,15 +218,15 @@ def test_append_crash_recovery_and_retry_safety(spark, tmp_path):
         want = [(r["id"], r["score"]) for r in
                 bm25_topk_plan(spark, full, terms, k=10).collect()]
         assert got == want, terms
-    assert not os.path.exists(os.path.join(path, M._APPEND_PENDING))
+    assert not os.path.exists(pending_marker(path))
 
     # marker with a LOST stage: readers and appenders refuse
-    with open(os.path.join(path, M._APPEND_PENDING), "w") as f:
+    with open(pending_marker(path), "w") as f:
         json.dump({"stage": path + "_gone", "files": [], "meta": {}}, f)
     with pytest.raises(ValidationError, match="missing"):
         bm25_topk_plan(spark, path, ["spark"], k=5)
-    assert os.path.exists(os.path.join(path, M._APPEND_PENDING))
-    os.remove(os.path.join(path, M._APPEND_PENDING))
+    assert os.path.exists(pending_marker(path))
+    os.remove(pending_marker(path))
 
 
 def test_bucket_compaction_after_appends(spark, tmp_path):

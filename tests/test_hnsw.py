@@ -293,6 +293,18 @@ def test_purge_nodes_rebuilds_affected_partitions(spark, unit_vecs, tmp_path):
     assert again["rows_before"] == audit["rows_after"]
 
 
+def _forge_mid_swap(path, stage):
+    """The shared swap's marker for a swap of ``path`` from ``stage``
+    (scratch.swap_directory), as a crash would leave it."""
+    import json
+
+    from hybrid_vector_search_spark.scratch import pending_marker
+
+    with open(pending_marker(path), "w") as f:
+        json.dump({"stage": stage, "into": path, "old": path + ".old-x"}, f)
+    return path + ".old-x"
+
+
 def test_purge_swap_crash_recovery(spark, unit_vecs, tmp_path):
     """Every interruption point of the purge's staged swap recovers to
     a consistent index: a committed-but-unpublished swap finishes, an
@@ -301,6 +313,7 @@ def test_purge_swap_crash_recovery(spark, unit_vecs, tmp_path):
     import shutil
 
     from hybrid_vector_search_spark.operators.hnsw import HNSWIndex
+    from hybrid_vector_search_spark.scratch import pending_marker, recover_swap
 
     emb = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(unit_vecs[:100])],
@@ -308,36 +321,38 @@ def test_purge_swap_crash_recovery(spark, unit_vecs, tmp_path):
     )
     path = str(tmp_path / "idx.parquet")
     HNSWIndex.build(emb, path)
-    stage, trash = path + ".purge-stage", path + ".purge-old"
+    stage = path + ".stage-x"
 
-    # crash point A: stage written, index untouched → discard stage
+    # crash point A: stage written, no marker, index untouched → the
+    # stage is torn and is discarded (nothing was pending)
     shutil.copytree(path, stage)
-    assert HNSWIndex.recover_pending_purge(path)
+    assert not recover_swap(path)
     assert os.path.isdir(path) and not os.path.isdir(stage)
 
     # crash point B: old moved away, stage not yet published → finish
     shutil.copytree(path, stage)
+    trash = _forge_mid_swap(path, stage)
     os.rename(path, trash)
-    assert HNSWIndex.recover_pending_purge(path)
+    assert recover_swap(path)
     assert os.path.isdir(path)
     assert not os.path.isdir(stage) and not os.path.isdir(trash)
     assert spark.read.parquet(path).count() == 100
 
     # crash point C: published, trash left behind → sweep
-    shutil.copytree(path, trash)
-    assert HNSWIndex.recover_pending_purge(path)
+    shutil.copytree(path, _forge_mid_swap(path, stage))
+    assert recover_swap(path)
     assert not os.path.isdir(trash)
+    assert not os.path.exists(pending_marker(path))
     # quiescent: nothing to do
-    assert not HNSWIndex.recover_pending_purge(path)
+    assert not recover_swap(path)
 
 
 def test_purge_crash_self_heals_on_next_use(spark, unit_vecs, tmp_path):
     """Reads and retried purges must not require a MANUAL recovery
-    call: search_plan and purge_nodes invoke recover_pending_purge
+    call: search_plan and purge_nodes recover the shared swap
     themselves, so a crash between the two swap renames (index dir
     missing, stage complete) heals on the next use (r14 advice)."""
     import os
-    import shutil
 
     from hybrid_vector_search_spark.operators.hnsw import HNSWIndex
 
@@ -348,12 +363,14 @@ def test_purge_crash_self_heals_on_next_use(spark, unit_vecs, tmp_path):
     path = str(tmp_path / "idx.parquet")
     index = HNSWIndex.build(emb, path)
     # simulate the mid-swap crash: stage committed, index dir gone
-    os.rename(path, path + ".purge-stage")
+    _forge_mid_swap(path, path + ".stage-x")
+    os.rename(path, path + ".stage-x")
     got = [r["id"] for r in index.search_plan(unit_vecs[3], 5).collect()]
     assert len(got) == 5  # healed, no manual recovery call
     assert os.path.isdir(path)
     # same for a retried purge after the crash
-    os.rename(path, path + ".purge-stage")
+    _forge_mid_swap(path, path + ".stage-x")
+    os.rename(path, path + ".stage-x")
     audit = index.purge_nodes([0])
     assert audit["purged_rows"] == 1
     assert audit["residual_nodes"] == 0

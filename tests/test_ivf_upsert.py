@@ -153,6 +153,27 @@ def test_compact_partitions_only_rewrites_oversized(spark, layout):
         compact_partitions(spark, path)
 
 
+def test_upsert_deletes_its_stage_once_committed(
+    spark, layout, tmp_path, monkeypatch
+):
+    """A committed upsert leaves neither its stage nor its marker
+    behind: the staged commit deletes the stage after the marker, not
+    at process exit."""
+    from hybrid_vector_search_spark.scratch import pending_marker
+
+    path, cents = layout
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(scratch))
+    upserts = spark.createDataFrame(
+        [(0, _basis(1)), (100, _basis(2))], "id long, embedding array<float>"
+    )
+    deletes = spark.createDataFrame([(5,)], "id long")
+    upsert_partitioned(spark, path, cents, upserts, deletes)
+    assert not [p for p in os.listdir(scratch) if "ivf_upsert_stage" in p]
+    assert not os.path.exists(pending_marker(path))
+
+
 def test_upsert_crash_window_recovered(spark, layout, monkeypatch):
     """Simulate a crash INSIDE the apply window (overwrite committed,
     emptied-dir rmtree not run): a naive read sees the stale deleted
@@ -160,10 +181,10 @@ def test_upsert_crash_window_recovered(spark, layout, monkeypatch):
     (VERDICT r7 "what's wrong" #3)."""
     import shutil as _shutil
 
-    from hybrid_vector_search_spark.operators.ivf import (
-        _UPSERT_PENDING,
-        open_partitioned,
-        recover_pending_upsert,
+    from hybrid_vector_search_spark.operators.ivf import open_partitioned
+    from hybrid_vector_search_spark.scratch import (
+        pending_marker,
+        recover_staged,
     )
 
     path, cents = layout
@@ -184,7 +205,7 @@ def test_upsert_crash_window_recovered(spark, layout, monkeypatch):
             upsert_partitioned(spark, path, cents, empty_up, deletes)
 
     # interrupted state: marker present, emptied list dir still on disk
-    assert os.path.exists(os.path.join(path, _UPSERT_PENDING))
+    assert os.path.exists(pending_marker(path))
     assert os.path.isdir(os.path.join(path, "list_id=5"))
     # the hazard being closed: a naive read returns the deleted ids
     naive = {r["id"] for r in spark.read.parquet(path).collect()}
@@ -195,10 +216,13 @@ def test_upsert_crash_window_recovered(spark, layout, monkeypatch):
     got = {r["id"] for r in repaired.collect()}
     assert not any(i % NLISTS == 5 for i in got)
     assert got == {i for i in range(20) if i % NLISTS != 5}
-    assert not os.path.exists(os.path.join(path, _UPSERT_PENDING))
+    assert not os.path.exists(pending_marker(path))
     assert not os.path.exists(os.path.join(path, "list_id=5"))
+    def no_replay(info):
+        raise AssertionError("nothing is pending")
+
     # recovery is once: second open is a plain read
-    assert not recover_pending_upsert(spark, path)
+    assert not recover_staged(path, no_replay)
 
 
 def test_upsert_crash_before_overwrite_replays(spark, layout):
@@ -207,10 +231,8 @@ def test_upsert_crash_before_overwrite_replays(spark, layout):
     rather than half-applying."""
     import json
 
-    from hybrid_vector_search_spark.operators.ivf import (
-        _UPSERT_PENDING,
-        open_partitioned,
-    )
+    from hybrid_vector_search_spark.operators.ivf import open_partitioned
+    from hybrid_vector_search_spark.scratch import pending_marker
 
     path, cents = layout
     # stage a replacement batch by hand: id 0 moves list 0 → list 1.
@@ -228,7 +250,7 @@ def test_upsert_crash_before_overwrite_replays(spark, layout):
     spark.createDataFrame(
         staged_rows, "id long, embedding array<float>, list_id int"
     ).repartition(2, "list_id").write.mode("overwrite").parquet(stage)
-    with open(os.path.join(path, _UPSERT_PENDING), "w") as f:
+    with open(pending_marker(path), "w") as f:
         json.dump({"stage": stage, "n_touched": 2, "emptied": []}, f)
 
     repaired = open_partitioned(spark, path)
@@ -326,13 +348,11 @@ def test_upsert_recovery_refuses_when_stage_lost(spark, layout):
     import json
 
     from hybrid_vector_search_spark.errors import ValidationError
-    from hybrid_vector_search_spark.operators.ivf import (
-        _UPSERT_PENDING,
-        open_partitioned,
-    )
+    from hybrid_vector_search_spark.operators.ivf import open_partitioned
+    from hybrid_vector_search_spark.scratch import pending_marker
 
     path, cents = layout
-    with open(os.path.join(path, _UPSERT_PENDING), "w") as f:
+    with open(pending_marker(path), "w") as f:
         json.dump(
             {"stage": path + "_gone_stage", "n_touched": 2, "emptied": [5]},
             f,
@@ -340,9 +360,9 @@ def test_upsert_recovery_refuses_when_stage_lost(spark, layout):
     with pytest.raises(ValidationError, match="missing"):
         open_partitioned(spark, path)
     # marker retained, emptied dir untouched: nothing silently committed
-    assert os.path.exists(os.path.join(path, _UPSERT_PENDING))
+    assert os.path.exists(pending_marker(path))
     assert os.path.isdir(os.path.join(path, "list_id=5"))
-    os.remove(os.path.join(path, _UPSERT_PENDING))
+    os.remove(pending_marker(path))
 
 
 def _mk_stream_sink(spark, tmp_path, n_batches: int = 2):
@@ -384,10 +404,12 @@ def test_compaction_swap_crash_window_recovered(spark, tmp_path):
     import shutil
 
     from hybrid_vector_search_spark.operators.ivf import (
-        _COMPACT_PENDING_SUFFIX,
         compact_streaming_layout,
         open_streaming_probe_root,
-        recover_pending_compaction,
+    )
+    from hybrid_vector_search_spark.scratch import (
+        pending_marker,
+        recover_swap,
     )
 
     _, sink, _ = _mk_stream_sink(spark, tmp_path)
@@ -401,8 +423,10 @@ def test_compaction_swap_crash_window_recovered(spark, tmp_path):
     old = probe_root + ".old-crashsim"
     shutil.copytree(probe_root, stage)
     os.rename(probe_root, old)
-    with open(probe_root + _COMPACT_PENDING_SUFFIX, "w") as f:
-        json.dump({"stage": stage, "old": old}, f)
+    marker = pending_marker(probe_root)
+    forged = {"stage": stage, "old": old, "into": probe_root}
+    with open(marker, "w") as f:
+        json.dump(forged, f)
     assert not os.path.isdir(probe_root)  # the hazard: NO probe root
 
     got = {
@@ -410,35 +434,37 @@ def test_compaction_swap_crash_window_recovered(spark, tmp_path):
         for r in open_streaming_probe_root(spark, probe_root).collect()
     }
     assert got == want
-    assert not os.path.exists(probe_root + _COMPACT_PENDING_SUFFIX)
+    assert not os.path.exists(marker)
     assert not os.path.isdir(stage) and not os.path.isdir(old)
 
     # crash BEFORE the first rename (marker + stage, root still live):
     # the next compaction call replays, then drains normally
     shutil.copytree(probe_root, stage)
-    with open(probe_root + _COMPACT_PENDING_SUFFIX, "w") as f:
-        json.dump({"stage": stage, "old": old}, f)
+    with open(marker, "w") as f:
+        json.dump(forged, f)
     stats = compact_streaming_layout(spark, sink, probe_root)
     assert stats["lists"] == NLISTS
-    assert not os.path.exists(probe_root + _COMPACT_PENDING_SUFFIX)
+    assert not os.path.exists(marker)
 
     # crash AFTER the swap but before cleanup (marker, no stage, live
     # root): recovery just drops the marker — idempotent commit tail
     os.makedirs(old, exist_ok=True)
-    with open(probe_root + _COMPACT_PENDING_SUFFIX, "w") as f:
-        json.dump({"stage": stage, "old": old}, f)
-    assert recover_pending_compaction(probe_root) is True
+    with open(marker, "w") as f:
+        json.dump(forged, f)
+    assert recover_swap(probe_root) is True
     assert not os.path.isdir(old)
 
     # stage AND root both lost: refuse loudly, keep the marker
     from hybrid_vector_search_spark.errors import ValidationError
 
     lost_root = str(tmp_path / "lost_probe")
-    with open(lost_root + _COMPACT_PENDING_SUFFIX, "w") as f:
-        json.dump({"stage": lost_root + ".gone", "old": old}, f)
+    with open(pending_marker(lost_root), "w") as f:
+        json.dump(
+            {"stage": lost_root + ".gone", "old": old, "into": lost_root}, f
+        )
     with pytest.raises(ValidationError, match="cannot be replayed"):
-        recover_pending_compaction(lost_root)
-    assert os.path.exists(lost_root + _COMPACT_PENDING_SUFFIX)
+        recover_swap(lost_root)
+    assert os.path.exists(pending_marker(lost_root))
 
 
 def test_compaction_freshness_contract(spark, tmp_path):

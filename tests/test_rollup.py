@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from hybrid_vector_search_spark.errors import ValidationError
 from hybrid_vector_search_spark.operators import rollup as R
+from hybrid_vector_search_spark.scratch import pending_marker, recover_staged
 
 
 def _events(spark, rows):
@@ -109,14 +110,14 @@ def test_merge_crash_window_recovered(spark, tmp_path, base_and_batch):
             R.merge_rollup_batch(spark, path, batch)
     finally:
         R._commit_merge = real_commit
-    assert os.path.exists(os.path.join(path, R._ROLLUP_PENDING))
+    assert os.path.exists(pending_marker(path))
 
     # next open self-heals and serves the fully-merged table
     got = {
         (str(r["day"]), r["event_type"]): r["n_events"]
         for r in R.open_rollup(spark, path).collect()
     }
-    assert not os.path.exists(os.path.join(path, R._ROLLUP_PENDING))
+    assert not os.path.exists(pending_marker(path))
     full = str(tmp_path / "full")
     R.build_rollup(base.unionByName(batch), full)
     want = {
@@ -136,12 +137,12 @@ def test_merge_refuses_when_stage_lost(spark, tmp_path, base_and_batch):
     base, _ = base_and_batch
     path = str(tmp_path / "rollup")
     R.build_rollup(base, path)
-    with open(os.path.join(path, R._ROLLUP_PENDING), "w") as f:
+    with open(pending_marker(path), "w") as f:
         json.dump({"stage": path + "_gone", "n_touched": 2}, f)
     with pytest.raises(ValidationError, match="missing"):
         R.open_rollup(spark, path)
-    assert os.path.exists(os.path.join(path, R._ROLLUP_PENDING))
-    os.remove(os.path.join(path, R._ROLLUP_PENDING))
+    assert os.path.exists(pending_marker(path))
+    os.remove(pending_marker(path))
 
 
 def test_commit_meta_lands_inside_the_marker_window(
@@ -177,7 +178,9 @@ def test_commit_meta_lands_inside_the_marker_window(
     finally:
         R._commit_merge = real_commit
     assert R.read_rollup_meta(path) == {"last_batch_id": 3}  # not yet
-    assert R.recover_pending_rollup(spark, path)
+    assert recover_staged(
+        path, lambda info: R._commit_merge(spark, path, info)
+    )
     assert R.read_rollup_meta(path) == {"last_batch_id": 4}  # both landed
     got = {
         (str(r["day"]), r["event_type"]): r["n_events"]

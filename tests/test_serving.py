@@ -567,3 +567,32 @@ def test_route_notes_have_one_writer():
         tree = ast.parse(text)
         visit(tree, None, rel, set(docstring_ids(tree)))
     assert writers == {"serving.py:route_note"}, writers
+
+
+def test_costed_serve_build_measures_the_corpus_once(spark, monkeypatch):
+    """``strategy_costed_serve`` measures the registry corpus's
+    footprint once per build: the footprint depends on the rows alone,
+    so the builder's own measurement and the three budgeted
+    ``serve_or_plan`` dispatches share one aggregate per Spark cache
+    entry (the shards of the sharded route are still measured each)."""
+    import os
+
+    from hybrid_vector_search_spark import serving
+    from hybrid_vector_search_spark.session import cache_entry, clear_artifacts
+    from hybrid_vector_search_spark.sources.loaders import DEFAULT_SF_DIR
+
+    sf = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
+    corpus = R.load_corpus(spark, sf)
+    for kind in ("costed_serve", "serve_or_plan", "resident_footprint"):
+        clear_artifacts(kind)
+    measured = []
+    measure = serving._measure_footprint
+    monkeypatch.setattr(
+        serving,
+        "_measure_footprint",
+        lambda df, col: measured.append(cache_entry(df)) or measure(df, col),
+    )
+    rows = R.QUERIES["strategy_costed_serve"](spark, sf).collect()
+    assert {r["route"] for r in rows} == {"resident", "sharded", "distributed"}
+    assert measured.count(cache_entry(corpus)) == 1
+    assert None in measured  # per-shard measurements stay

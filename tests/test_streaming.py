@@ -637,14 +637,17 @@ def test_streaming_topk_view_incremental_across_batches(spark, tmp_path):
     view equals the batch top-K over everything landed, including rows
     whose batch arrived early and was later displaced."""
     import os
-    import shutil
-    import uuid
 
     from pyspark.sql import functions as F
 
     from hybrid_vector_search_spark.functions.vector import dot_score_column
     from hybrid_vector_search_spark.operators.topk import topk
     from hybrid_vector_search_spark.queryvecs import query_vector
+    from hybrid_vector_search_spark.scratch import (
+        recover_swap,
+        swap_directory,
+        swap_stage,
+    )
 
     qvec = query_vector(61)
     land = str(tmp_path / "land")
@@ -679,6 +682,7 @@ def test_streaming_topk_view_incremental_across_batches(spark, tmp_path):
             ),
             K,
         )
+        recover_swap(state)
         if os.path.isdir(state):
             # dedup by id before the cut: foreachBatch is at-least-once,
             # so a replayed batch must not occupy two view slots
@@ -690,13 +694,9 @@ def test_streaming_topk_view_incremental_across_batches(spark, tmp_path):
                 .agg(F.max("score").alias("score")),
                 K,
             )
-        stage = f"{state}.stage-{uuid.uuid4().hex[:8]}"
+        stage = swap_stage(state)
         cand.coalesce(1).write.mode("overwrite").parquet(stage)
-        old = f"{state}.old-{uuid.uuid4().hex[:8]}"
-        if os.path.isdir(state):
-            os.rename(state, old)
-        os.rename(stage, state)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_directory(stage, state)
 
     _drain(
         spark.readStream.schema("vec_id long, embedding array<float>, label int")
