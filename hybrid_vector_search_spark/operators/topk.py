@@ -47,6 +47,86 @@ def topk_positions(ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
     return cand[np.lexsort((ids[cand], neg[cand]))[:k]]
 
 
+def screened_topk(
+    ids: np.ndarray,
+    mat: np.ndarray,
+    q,
+    k: int,
+    norm_max: float,
+    rows: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The top ``k`` by (score DESC, id ASC) of ``mat @ q`` scored in
+    float64, as ``(ids, float64 scores)`` best first — over the rows
+    ``rows`` of ``mat`` when given, else every row (``ids`` holds one id
+    per row of ``mat``). ``norm_max`` bounds the L2 norm of every row
+    of finite values.
+
+    Filter and refine with an exact bound (REPOSE, ICDE 2021,
+    PAPERS.md): the whole scan runs in ``mat``'s own dtype (float32 for
+    a corpus of ``ARRAY<FLOAT>`` embeddings: half the bytes of a float64
+    scan over the same values), and only the rows the bound cannot rule
+    out are rescored in float64 and ranked by :func:`topk_positions`.
+    The answer is the one ``topk_positions(ids, mat.astype(float64) @
+    q, k)`` gives, up to float64 summation order.
+
+    The bound. Let ``qs`` be ``q`` rounded to ``mat``'s dtype and ``u``
+    that dtype's unit roundoff (``eps / 2``). A dot product of length
+    ``D`` computed in floating point, in any summation order, is off by
+    at most ``γ_D · Σ|x_i·qs_i| ≤ γ_D·‖x‖·‖qs‖`` (Higham, *Accuracy and
+    Stability of Numerical Algorithms*, §3.1), with ``γ_D = D·u / (1 −
+    D·u)``, and rounding ``q`` to ``qs`` moves the exact score by at
+    most ``‖x‖·‖q − qs‖``: every screened score is within ``b =
+    norm_max·(γ_D·‖qs‖ + ‖q − qs‖)`` of the exact one, and every float64
+    rescore within ``e = norm_max·γ'_D·‖q‖`` (``γ'`` at float64's
+    roundoff). Let ``kth`` be the K-th screened score and ``bound = b +
+    e``. Each of the K rows screened at or above ``kth`` rescores at
+    least ``kth − b − e``; a row screened below ``kth − 2·bound``
+    rescores below ``kth − 2·bound + b + e = kth − b − e``, so K rows
+    beat it and it cannot be in the float64 top K. ``bound`` takes
+    ``γ_{D+2}`` in place of ``γ_D`` in ``b``: the extra ``2u·norm_max·
+    ‖qs‖`` or more absorbs the rounding of the bound's own arithmetic.
+    The cut-off is rounded down to ``mat``'s dtype before the
+    comparison, so rounding it can only keep more rows.
+
+    When ``k`` covers every row, or a screened score is not finite (a
+    NaN or inf row, or an overflow, where the bound says nothing), every
+    row is rescored: NaN then ranks last, as in :func:`topk_positions`."""
+    q = np.asarray(q, dtype=np.float64).reshape(-1)
+    qs = q.astype(mat.dtype)
+    s = mat @ qs
+    if rows is not None:
+        s, ids = s[rows], ids[rows]
+    n = len(s)
+    k = min(int(k), n)
+    cand = None  # every row
+    if 0 < k < n and np.isfinite(s).all():
+        d = mat.shape[1]
+        bound = norm_max * (
+            _gamma(d + 2, mat.dtype) * np.linalg.norm(qs.astype(np.float64))
+            + np.linalg.norm(q - qs)
+            + _gamma(d, np.float64) * np.linalg.norm(q)
+        )
+        thr = float(np.partition(s, n - k)[n - k]) - 2.0 * bound
+        if np.isfinite(thr):
+            cut = mat.dtype.type(thr)
+            if float(cut) > thr:
+                cut = np.nextafter(cut, mat.dtype.type(-np.inf))
+            cand = np.flatnonzero(s >= cut)
+    if cand is not None:
+        ids, rows = ids[cand], cand if rows is None else rows[cand]
+    exact = (mat if rows is None else mat[rows]).astype(np.float64) @ q
+    top = topk_positions(ids, exact, k)
+    return ids[top], exact[top]
+
+
+def _gamma(d: int, dtype) -> float:
+    """Higham's ``γ_d = d·u / (1 − d·u)`` at ``dtype``'s unit roundoff
+    ``u``: the relative error bound of a length-``d`` dot product (inf
+    once ``d·u ≥ 1``, where it bounds nothing)."""
+    du = d * np.finfo(dtype).eps / 2
+    return du / (1 - du) if du < 1 else np.inf
+
+
 def grouped_topk(
     df: DataFrame,
     group_cols: list[str],

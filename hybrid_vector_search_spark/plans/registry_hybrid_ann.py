@@ -1465,7 +1465,7 @@ def hybrid_topk_local_exact(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The EXACT strategy's q=1 serving fast path (serving.py): the
-    resident float64 matrix GEMMs against the query with no Spark job —
+    resident matrix GEMVs against the query with no Spark job —
     the execution shape the reference's ~136 ms/query exact row assumes
     (whole corpus in one process's RAM). Shares
     ``hybrid_topk_unfiltered``'s DuckDB oracle verbatim: same scoring,

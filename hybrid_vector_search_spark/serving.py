@@ -8,14 +8,17 @@ whole corpus in RAM (artifacts/artifacts.py:165-194 loads the matrix +
 metadata once at startup) — never pays. The IVF q=1 row was closed in
 r13 by ``IVFIndex.serve_local_topk`` (read only the probed lists); the
 exact and pre_filter strategies scan the WHOLE corpus by definition, so
-their serving twin is the reference's own residency model: the float64
-matrix + the filterable metadata columns live in driver RAM, queries
-are a GEMM (optionally over the predicate-masked row subset) plus a
-(score DESC, id ASC) merge.
+their serving twin is the reference's own residency model: the
+embedding matrix (in the embedding column's own element type, float32
+for an ``ARRAY<FLOAT>`` corpus) + the filterable metadata columns live
+in driver RAM, queries are a GEMV in that type (optionally over the
+predicate-masked row subset) whose few candidates are rescored in
+float64 (``topk.screened_topk``), plus a (score DESC, id ASC) merge.
 
 This is a SERVING-TIER choice, not the engine's execution model: the
-build is RAM-gated on the real matrix footprint (N×D×8, the same gate
-as operators.dedup.embedding_near_dup) and refuses loudly beyond it —
+build is RAM-gated on an N×D×8 matrix estimate (the same gate as
+operators.dedup.embedding_near_dup; it bounds the collect-and-convert
+peak, above the float32 matrix kept) and refuses loudly beyond it —
 at 100 TB the distributed plans remain the only exact path, and this
 tier serves only a corpus (or replica shard) that fits one machine,
 exactly the regime where the reference's numbers were measured. Filter
@@ -37,7 +40,10 @@ from hybrid_vector_search_spark.errors import ValidationError
 from hybrid_vector_search_spark.functions.predicates import (
     filters_mask_pandas,
 )
-from hybrid_vector_search_spark.operators.topk import topk_positions
+from hybrid_vector_search_spark.operators.topk import (
+    screened_topk,
+    topk_positions,
+)
 from hybrid_vector_search_spark.session import resident_artifact
 
 #: matrix-footprint budget for ONE resident shard (N×D×8 bytes + the
@@ -73,11 +79,16 @@ def _measure_footprint(
     """(n, d, estimated resident bytes) via ONE distributed aggregate —
     the gate runs BEFORE any driver materialization (the
     embedding_near_dup rule: check, then collect), and counts the WHOLE
-    collected footprint: matrix float64 + ~8 bytes/row/numeric col +
-    measured string bytes ×2 (pandas object-string overhead is at least
-    that — r13 review finding). An empty corpus, or one whose embedding
-    dimension is null/zero, is refused here with ``ValidationError``:
-    every tier build and every dispatch measures through this gate."""
+    collected footprint: matrix at 8 bytes per element + ~8
+    bytes/row/numeric col + measured string bytes ×2 (pandas
+    object-string overhead is at least that). The matrix term is the
+    float64 size even though the tier keeps the embedding column's own
+    type (float32 for ``ARRAY<FLOAT>``): the Arrow objects and the
+    ``np.vstack`` copy of the collect need about that much at once, and
+    that peak is what the gate bounds. An empty
+    corpus, or one whose embedding dimension is null/zero, is refused
+    here with ``ValidationError``: every tier build and every dispatch
+    measures through this gate."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -113,8 +124,14 @@ def _measure_footprint(
 
 
 class LocalCorpusServe:
-    """In-RAM corpus: ids (int64), unit-norm float64 matrix, metadata
-    frame, and the corpus schema the filter DSL validates against.
+    """In-RAM corpus: ids (int64), the unit-norm embedding matrix in the
+    embedding column's own element type (float32 for ``ARRAY<FLOAT>``,
+    so the stored values are exact; float64 for ``ARRAY<DOUBLE>``), its
+    largest row L2 norm ``norm_max`` (float64, computed once), the
+    metadata frame, and the corpus schema the filter DSL validates
+    against. Searches scan the matrix in its own type and rescore the
+    rows the scan cannot rule out in float64 (:func:`screened_topk`),
+    so scores and order are those of a float64 scan.
 
     The resident copy never changes, so predicate work that does not
     depend on the query vector is kept beside ``meta``: the lowercased
@@ -127,6 +144,7 @@ class LocalCorpusServe:
     def __init__(self, ids, mat, meta, schema):
         self.ids = ids
         self.mat = mat
+        self.norm_max = _max_row_norm(mat)
         self.meta = meta
         self.schema = schema
         self._lowered: dict[str, Any] = {}
@@ -166,7 +184,8 @@ class LocalCorpusServe:
             )
         pdf = corpus.toPandas()
         mat = np.ascontiguousarray(
-            np.vstack(pdf[embedding_col].to_numpy()), dtype=np.float64
+            np.vstack(pdf[embedding_col].to_numpy()),
+            dtype=_matrix_dtype(corpus.schema[embedding_col].dataType),
         )
         ids = pdf[id_col].to_numpy(dtype=np.int64)
         meta = pdf.drop(columns=[embedding_col])
@@ -179,20 +198,26 @@ class LocalCorpusServe:
             for i in topk_positions(ids, scores, k)
         ]
 
+    def _screened(self, qvec, k: int, ids, mat, rows=None):
+        """:func:`screened_topk` over ``mat`` (one row per id of
+        ``ids``) as ``(id, score)`` pairs."""
+        return self._topk(
+            *screened_topk(ids, mat, qvec, k, self.norm_max, rows), k
+        )
+
     def exact_topk(
         self, qvec: Sequence[float], k: int
     ) -> list[tuple[int, float]]:
-        q = np.asarray(qvec, dtype=np.float64).reshape(-1)
-        return self._topk(self.ids, self.mat @ q, k)
+        return self._screened(qvec, k, self.ids, self.mat)
 
     #: above this survivor fraction, fancy-indexing the embedding matrix
-    #: copies more bytes than the full GEMM re-reads — score everything
-    #: and mask the (8-byte) scores instead. A broad filter at 2/3
-    #: selectivity was copying ~300 MB per query through mat[idx]; the
-    #: full-GEMM form reads the resident matrix in place (measured: the
-    #: broad canonical queries drop to ~exact-scan cost, the strict ones
-    #: keep the small-submatrix win).
-    PREFILTER_GATHER_FRAC = 0.25
+    #: costs more than the full GEMV re-reads — scan every row in place
+    #: and rank only the survivors' scores instead. Measured with
+    #: ``screened_topk`` on a 50,000×384 float32 matrix (4-vCPU host,
+    #: median of 60 calls, 3 random survivor sets each): the gather
+    #: costs 1.4 ms at 8% and 4.2 ms at 16% against a flat ~3.0 ms
+    #: scan, crossing at ~12%.
+    PREFILTER_GATHER_FRAC = 0.12
 
     def prefilter_topk(
         self,
@@ -202,14 +227,15 @@ class LocalCorpusServe:
     ) -> list[tuple[int, float]]:
         """The pre_filter strategy in-process: predicate over the
         resident metadata (same DSL, pandas evaluator), then score the
-        survivors — a submatrix GEMM when the filter is selective
+        survivors — a submatrix GEMV when the filter is selective
         (cost ∝ selectivity, the reference's headline property), an
-        in-place full GEMM + score mask when it is broad (gather cost
-        would exceed the scan). Same answer either way.
+        in-place full GEMV ranked over the survivors only when it is
+        broad (gather cost would exceed the scan). Both go through
+        :func:`screened_topk`, so the answer is the same either way.
 
         Filters naming the embedding column (legal in the DSL — ``like``
         stringifies arrays) are REFUSED loudly: the metadata frame does
-        not hold the embedding column (it lives as the float64 matrix),
+        not hold the embedding column (it lives as the matrix),
         and a silent KeyError is worse than a documented divergence —
         route such filters through the distributed plan."""
         unheld = self.unheld(filters)
@@ -222,11 +248,9 @@ class LocalCorpusServe:
         idx = self._allowed(filters)
         if idx.size == 0:
             return []
-        q = np.asarray(qvec, dtype=np.float64).reshape(-1)
         if idx.size > self.PREFILTER_GATHER_FRAC * len(self.ids):
-            scores = self.mat @ q
-            return self._topk(self.ids[idx], scores[idx], k)
-        return self._topk(self.ids[idx], self.mat[idx] @ q, k)
+            return self._screened(qvec, k, self.ids, self.mat, rows=idx)
+        return self._screened(qvec, k, self.ids[idx], self.mat[idx])
 
     def unheld(self, filters: Mapping[str, Any] | None) -> list[str]:
         """The columns ``filters`` names that the resident metadata does
@@ -282,6 +306,29 @@ class LocalCorpusServe:
         )
         self._last_allowed = (key, idx)
         return idx
+
+
+def _matrix_dtype(emb_type) -> type:
+    """The resident matrix dtype of an embedding column of Spark type
+    ``emb_type``: float32 for ``ARRAY<FLOAT>`` (the values as stored),
+    else float64."""
+    from pyspark.sql import types as T
+
+    element = getattr(emb_type, "elementType", None)
+    return np.float32 if isinstance(element, T.FloatType) else np.float64
+
+
+def _max_row_norm(mat: np.ndarray) -> float:
+    """The largest row L2 norm of ``mat``, in float64 (upcast 8,192
+    rows at a time; NaN when a row holds NaN, 0.0 for no rows)."""
+    peaks = [
+        np.einsum("ij,ij->i", b, b).max()
+        for b in (
+            np.asarray(mat[lo : lo + 8192], dtype=np.float64)
+            for lo in range(0, len(mat), 8192)
+        )
+    ]
+    return float(np.sqrt(np.max(peaks))) if peaks else 0.0
 
 
 def _jvm_size_bytes(s: str) -> int:

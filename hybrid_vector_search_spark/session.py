@@ -89,16 +89,32 @@ def cache_entry(df) -> int | None:
     plan make a new entry with a new id, while the plan (and its
     ``semanticHash``) stays the same. The lookup is by plan, as
     ``df.storageLevel``'s is, so every handle over a cached plan finds
-    the entry."""
-    got = (
-        df.sparkSession._jsparkSession.sharedState()
-        .cacheManager()
-        .lookupCachedData(df._jdf)
+    the entry.
+
+    The full lookup is nine py4j round trips. The id it finds is kept on
+    the handle (with the session it was found in), and a later call
+    confirms it with two: whether the SparkContext still holds the RDD
+    as persistent. That is sound because a plan has at most one cache
+    entry, ``unpersist()`` removes the entry's RDD id, and RDD ids are
+    never reused within one SparkContext; once the id is gone, the next
+    call looks the plan up again."""
+    spark = df.sparkSession
+    known = getattr(df, "_hvs_cache_entry", None)
+    if (
+        known is not None
+        and known[0] is spark
+        and spark.sparkContext._jsc.getPersistentRDDs().containsKey(known[1])
+    ):
+        return known[1]
+    got = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(
+        df._jdf
     )
     if got.isEmpty():
         return None
     builder = got.get().cachedRepresentation().cacheBuilder()
-    return int(builder.cachedColumnBuffers().id())
+    entry = int(builder.cachedColumnBuffers().id())
+    df._hvs_cache_entry = (spark, entry)
+    return entry
 
 
 _RESIDENT_LOCK = threading.RLock()

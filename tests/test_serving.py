@@ -4,12 +4,18 @@ registry oracle gate (hybrid_topk_local_* share the hybrid_topk_*
 oracles verbatim); these tests pin the RAM gate, the empty-result
 contract, and tiebreak order."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from hybrid_vector_search_spark.errors import ValidationError
 from hybrid_vector_search_spark.plans import registry as R
 from hybrid_vector_search_spark.serving import LocalCorpusServe
+from hybrid_vector_search_spark.sources.loaders import DEFAULT_SF_DIR
+
+#: the sf0.001 test corpus, beside the default one
+SF0001 = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
 
 
 @pytest.fixture(scope="module")
@@ -596,3 +602,100 @@ def test_costed_serve_build_measures_the_corpus_once(spark, monkeypatch):
     assert {r["route"] for r in rows} == {"resident", "sharded", "distributed"}
     assert measured.count(cache_entry(corpus)) == 1
     assert None in measured  # per-shard measurements stay
+
+
+def test_resident_answers_equal_a_float64_brute_force(
+    spark, serve, monkeypatch
+):
+    """The tier holds the ``ARRAY<FLOAT>`` corpus as float32 and rescores
+    in float64: on the 10 canonical templates its exact and pre_filter
+    answers equal a float64 brute force over the corpus — ids, order
+    and scores — on the gather and the full-scan branch, for the
+    float64 query and its float32 form (what the strategies pass)."""
+    import numpy as np
+
+    from hybrid_vector_search_spark.functions.predicates import (
+        compile_filters,
+    )
+    from hybrid_vector_search_spark.functions.vector import ensure_unit_l2
+    from hybrid_vector_search_spark.operators.topk import topk_positions
+    from hybrid_vector_search_spark.plans.canonical import CANONICAL_QUERIES
+    from hybrid_vector_search_spark.queryvecs import query_vector
+
+    assert serve.mat.dtype == np.float32
+    corpus = R.load_corpus(spark, SF0001)
+    pdf = corpus.select("id", "embedding").toPandas()
+    ids = pdf["id"].to_numpy(dtype=np.int64)
+    emb = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+
+    def brute(q, rows, k):
+        scores = emb[rows] @ np.asarray(q, dtype=np.float64)
+        top = topk_positions(ids[rows], scores, k)
+        return ids[rows][top].tolist(), scores[top]
+
+    def check(got, want):
+        assert [i for i, _ in got] == want[0]
+        np.testing.assert_allclose(
+            [s for _, s in got], want[1], rtol=0, atol=1e-12
+        )
+
+    everyone = np.arange(len(ids))
+    for cq in CANONICAL_QUERIES:
+        allowed = {
+            r["id"]
+            for r in corpus.filter(compile_filters(corpus.schema, cq.filters))
+            .select("id")
+            .collect()
+        }
+        rows = np.flatnonzero(np.isin(ids, list(allowed)))
+        for q in (query_vector(cq.seed), ensure_unit_l2(query_vector(cq.seed))):
+            check(serve.exact_topk(q, cq.k), brute(q, everyone, cq.k))
+            for frac in (0.0, 1.0):  # full scan, then gather
+                monkeypatch.setattr(
+                    LocalCorpusServe, "PREFILTER_GATHER_FRAC", frac
+                )
+                check(
+                    serve.prefilter_topk(q, cq.filters, cq.k),
+                    brute(q, rows, cq.k),
+                )
+
+
+def test_warm_dispatch_confirms_its_cache_entry_in_two_calls(
+    spark, monkeypatch
+):
+    """A warm search finds its memoized dispatch with two py4j round
+    trips (is the cache entry's RDD still persistent?), not a cache
+    manager lookup; unpersisting and caching the same handle again is
+    a new entry, so the next search gets the new entry's tier."""
+    from hybrid_vector_search_spark import serving
+    from hybrid_vector_search_spark.operators.strategies import get_backend
+    from hybrid_vector_search_spark.queryvecs import query_vector
+
+    corpus = (
+        R.load_corpus(spark, SF0001)
+        .filter(F.col("id") >= 2)
+        .cache()
+    )
+    backend = get_backend("exact", corpus, corpus.count())
+    first = backend._served()
+    assert first.route == "resident"
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    real = client.send_command
+    monkeypatch.setattr(
+        client,
+        "send_command",
+        lambda *a, **kw: sent.append(a) or real(*a, **kw),
+    )
+    assert backend._served() is first
+    monkeypatch.undo()
+    assert len(sent) == 2, sent
+    corpus.unpersist(blocking=True)
+    corpus.cache()
+    second = backend._served()
+    assert second is not first and second.tier is not first.tier
+    assert second is serving.serve_or_plan(corpus)
+    got, stats = backend.search(query_vector(5), None, 5)
+    assert stats["notes"] == "route=resident"
+    assert got == [i for i, _ in second.tier.exact_topk(query_vector(5), 5)]
+    corpus.unpersist()

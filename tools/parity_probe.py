@@ -635,7 +635,7 @@ def main() -> None:
         local_ms[cq.qid] = best * 1000.0
     mean_local = sum(local_ms.values()) / len(local_ms)
     # driver-local EXACT / PRE_FILTER serving tier (r13 serving.py):
-    # the resident float64 matrix + metadata frame — the reference's own
+    # the resident float32 matrix + metadata frame — the reference's own
     # residency model (its ~136/54.4 ms rows are in-process NumPy over a
     # RAM corpus) — behind the distributed size gate. Same DSL via
     # filters_mask_pandas (parity pytest-pinned), same tiebreak; the
@@ -819,8 +819,9 @@ def main() -> None:
         "  bounds only serving nodes that cannot mount the storage.",
         "* **The exact/pre_filter rows get the same serving twin**",
         "  (r13 serving.py LocalCorpusServe): the reference's own",
-        "  residency model — resident float64 matrix + metadata,",
-        "  RAM-gated on the real N×D×8 footprint — answers the exact",
+        "  residency model — resident float32 matrix + metadata,",
+        "  rescored exactly in float64, RAM-gated on an N×D×8",
+        "  estimate of the conversion peak — answers the exact",
         f"  scan at {mean_exact_local:.1f} ms/query",
         f"  ({mean_exact_local / 136:.2f}× ref) and the strict/broad",
         f"  pre_filter set at {mean_pre_local:.1f} ms/query",

@@ -12,8 +12,10 @@ FAISS-rate proxy: faiss is not installable in this sandbox, and
 BASELINE.md has no number at this shape. The reference's exact path is
 IndexFlatIP = one BLAS GEMV over the resident matrix + a partial sort
 (src/dataio/loaders.py) — so the proxy is exactly that, built here as
-one monolithic float64 matrix (concatenating the shards — no second
-collect) queried with the same numpy kernel the tier uses. The verdict
+one monolithic float64 matrix (concatenating the shards, upcast — no
+second collect) queried with one numpy GEMV, which is also the float64
+truth the tier's answers (a float32 scan, rescored in float64) must
+equal. The verdict
 gate is sharded ≤ 2× proxy; the expected result is ~1× since the
 sharded scan reads the same total bytes in S blocks.
 
@@ -120,9 +122,12 @@ def main() -> None:
     sharded = cs.tier
 
     # FAISS-rate proxy: the reference's residency model — ONE matrix,
-    # same kernel. Built from the shards (no second collect).
+    # one GEMV. Built from the shards (no second collect), upcast so it
+    # is also the float64 truth.
     ids = np.concatenate([s.ids for s in sharded.shards])
-    mat = np.ascontiguousarray(np.vstack([s.mat for s in sharded.shards]))
+    mat = np.ascontiguousarray(
+        np.vstack([s.mat for s in sharded.shards]), dtype=np.float64
+    )
 
     def mono_topk(q, k):
         scores = mat @ q
@@ -138,6 +143,8 @@ def main() -> None:
         a = sharded.exact_topk(q, 10)
         b = mono_topk(q, 10)
         assert [i for i, _ in a] == [i for i, _ in b], (a, b)
+        gap = np.subtract([s for _, s in a], [s for _, s in b])
+        assert np.abs(gap).max() <= 1e-12, (a, b)
 
     mono_mean, mono_med = _bench(mono_topk, queries)
     shard_mean, shard_med = _bench(sharded.exact_topk, queries)
