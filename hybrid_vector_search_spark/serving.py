@@ -14,6 +14,13 @@ for an ``ARRAY<FLOAT>`` corpus) + the filterable metadata columns live
 in driver RAM, queries are a GEMV in that type (optionally over the
 predicate-masked row subset) whose few candidates are rescored in
 float64 (``topk.screened_topk``), plus a (score DESC, id ASC) merge.
+The matrix is partitioned once at build (a seeded spherical k-means,
+``ivf.default_nlist`` clusters, each with a float64 center and a
+rounded-up radius), and a search first tries to read only the clusters
+a score bound cannot rule out (``topk.pruned_topk``): on clustered
+embeddings that is a few percent of the rows, and where it would read
+more than a full scan costs (isotropic data, say) the search scans
+every row as before. Both give the same answer.
 
 This is a SERVING-TIER choice, not the engine's execution model: the
 build is RAM-gated on an N×D×8 matrix estimate (the same gate as
@@ -41,6 +48,9 @@ from hybrid_vector_search_spark.functions.predicates import (
     filters_mask_pandas,
 )
 from hybrid_vector_search_spark.operators.topk import (
+    BLOCK_ROWS,
+    cluster_bounds,
+    pruned_topk,
     screened_topk,
     topk_positions,
 )
@@ -133,22 +143,35 @@ class LocalCorpusServe:
     rows the scan cannot rule out in float64 (:func:`screened_topk`),
     so scores and order are those of a float64 scan.
 
+    ``clusters`` partitions the rows once (:func:`_partition`; member
+    positions, not a reordered copy of the matrix), and
+    :meth:`exact_topk` and :meth:`prefilter_topk` first try
+    :func:`pruned_topk`: the clusters a score bound cannot rule out,
+    gathered, unless that would take more rows than
+    :attr:`PREFILTER_GATHER_FRAC` of the matrix — then they scan as
+    before. The answer, and ``scored_vectors`` (|allowed|), are the
+    same either way.
+
     The resident copy never changes, so predicate work that does not
     depend on the query vector is kept beside ``meta``: the lowercased
     form of each column a ``like`` has searched (filled lazily), the
-    row set of the last filter set evaluated — a request that runs
-    :meth:`prefilter_topk` (or :meth:`passing`) and then
-    :meth:`count_allowed` evaluates its mask once — and, once a
-    :meth:`passing` call needs it, an id→position index."""
+    row positions, row mask and rows per cluster of the last filter set
+    evaluated — a request that runs :meth:`prefilter_topk` (or
+    :meth:`passing`) and then :meth:`count_allowed` evaluates its mask
+    once — and, once a :meth:`passing` call needs it, an id→position
+    index."""
 
     def __init__(self, ids, mat, meta, schema):
         self.ids = ids
         self.mat = mat
         self.norm_max = _max_row_norm(mat)
+        self.clusters = _partition(mat)
         self.meta = meta
         self.schema = schema
         self._lowered: dict[str, Any] = {}
-        self._last_allowed: tuple[str, np.ndarray] | None = None
+        self._last_allowed: (
+            tuple[str, np.ndarray, np.ndarray, np.ndarray] | None
+        ) = None
         self._by_id: tuple[np.ndarray, np.ndarray] | None = None
 
     @classmethod
@@ -205,14 +228,39 @@ class LocalCorpusServe:
             *screened_topk(ids, mat, qvec, k, self.norm_max, rows), k
         )
 
+    def _pruned(self, qvec, k: int, allowed, counts):
+        """:func:`pruned_topk` over the rows the mask ``allowed`` keeps
+        (``counts`` of them per cluster; every row when None) as ``(id,
+        score)`` pairs, or None when pruning would open more rows than
+        :attr:`PREFILTER_GATHER_FRAC` of the matrix (or cannot apply)
+        and the caller scans instead."""
+        got = pruned_topk(
+            self.ids,
+            self.mat,
+            qvec,
+            k,
+            self.norm_max,
+            self.clusters,
+            allowed,
+            counts,
+            int(self.PREFILTER_GATHER_FRAC * len(self.ids)),
+        )
+        return None if got is None else self._topk(*got, k)
+
     def exact_topk(
         self, qvec: Sequence[float], k: int
     ) -> list[tuple[int, float]]:
-        return self._screened(qvec, k, self.ids, self.mat)
+        got = self._pruned(qvec, k, None, self.clusters.count(None))
+        return (
+            got
+            if got is not None
+            else self._screened(qvec, k, self.ids, self.mat)
+        )
 
     #: above this survivor fraction, fancy-indexing the embedding matrix
     #: costs more than the full GEMV re-reads — scan every row in place
-    #: and rank only the survivors' scores instead. Measured with
+    #: and rank only the survivors' scores instead; it also caps the
+    #: rows a pruned search may gather. Measured with
     #: ``screened_topk`` on a 50,000×384 float32 matrix (4-vCPU host,
     #: median of 60 calls, 3 random survivor sets each): the gather
     #: costs 1.4 ms at 8% and 4.2 ms at 16% against a flat ~3.0 ms
@@ -227,10 +275,12 @@ class LocalCorpusServe:
     ) -> list[tuple[int, float]]:
         """The pre_filter strategy in-process: predicate over the
         resident metadata (same DSL, pandas evaluator), then score the
-        survivors — a submatrix GEMV when the filter is selective
-        (cost ∝ selectivity, the reference's headline property), an
-        in-place full GEMV ranked over the survivors only when it is
-        broad (gather cost would exceed the scan). Both go through
+        survivors — only those in the clusters the score bound keeps
+        when that is few enough rows (:func:`pruned_topk`), else a
+        submatrix GEMV when the filter is selective (cost ∝
+        selectivity, the reference's headline property), an in-place
+        full GEMV ranked over the survivors only when it is broad
+        (gather cost would exceed the scan). All three go through
         :func:`screened_topk`, so the answer is the same either way.
 
         Filters naming the embedding column (legal in the DSL — ``like``
@@ -245,9 +295,12 @@ class LocalCorpusServe:
                 " in the serving metadata (embedding-column filters"
                 " run on the distributed plan)"
             )
-        idx = self._allowed(filters)
+        idx, mask, counts = self._allowed(filters)
         if idx.size == 0:
             return []
+        got = self._pruned(qvec, k, mask, counts)
+        if got is not None:
+            return got
         if idx.size > self.PREFILTER_GATHER_FRAC * len(self.ids):
             return self._screened(qvec, k, self.ids, self.mat, rows=idx)
         return self._screened(qvec, k, self.ids[idx], self.mat[idx])
@@ -269,7 +322,7 @@ class LocalCorpusServe:
         second mask pass)."""
         if not filters:
             return len(self.ids)
-        return int(self._allowed(filters).size)
+        return int(self._allowed(filters)[0].size)
 
     def passing(
         self, filters: Mapping[str, Any] | None, ids: np.ndarray
@@ -288,24 +341,24 @@ class LocalCorpusServe:
         held = sorted_ids[at] == ids
         if not filters:
             return held
-        allowed = np.zeros(len(self.ids), dtype=bool)
-        allowed[self._allowed(filters)] = True
-        return held & allowed[order[at]]
+        return held & self._allowed(filters)[1][order[at]]
 
-    def _allowed(self, filters: Mapping[str, Any]) -> np.ndarray:
-        """Row positions passing ``filters``; the last filter set's
-        answer is kept (keyed by its canonical JSON)."""
+    def _allowed(
+        self, filters: Mapping[str, Any]
+    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """``(row positions, bool row mask, rows per cluster)`` of the
+        rows passing ``filters``; the last filter set's answer is kept
+        (keyed by its canonical JSON)."""
         key = json.dumps(filters, sort_keys=True, default=str)
         last = self._last_allowed
         if last is not None and last[0] == key:
-            return last[1]
-        idx = np.flatnonzero(
-            filters_mask_pandas(
-                self.schema, filters, self.meta, lowered=self._lowered
-            )
+            return last[1:]
+        mask = filters_mask_pandas(
+            self.schema, filters, self.meta, lowered=self._lowered
         )
-        self._last_allowed = (key, idx)
-        return idx
+        idx = np.flatnonzero(mask)
+        self._last_allowed = (key, idx, mask, self.clusters.count(mask))
+        return self._last_allowed[1:]
 
 
 def _matrix_dtype(emb_type) -> type:
@@ -316,6 +369,70 @@ def _matrix_dtype(emb_type) -> type:
 
     element = getattr(emb_type, "elementType", None)
     return np.float32 if isinstance(element, T.FloatType) else np.float64
+
+
+#: the resident partition's k-means: seeds taken farthest-first from
+#: about :data:`PARTITION_SEED_ROWS` rows of a sample of at most
+#: :data:`PARTITION_SAMPLE` rows, :data:`PARTITION_ITERS` Lloyd steps on
+#: the sample, then one assignment pass over every row
+PARTITION_SAMPLE = 8192
+PARTITION_SEED_ROWS = 2048
+PARTITION_ITERS = 3
+
+
+def _partition(mat: np.ndarray):
+    """The :class:`topk.ClusterBounds` the resident searches prune with:
+    the :func:`ivf.default_nlist` clusters of a seeded spherical k-means
+    (see :data:`PARTITION_SAMPLE`), every row assigned to its nearest
+    unit centroid :data:`topk.BLOCK_ROWS` rows at a time. Farthest-first
+    seeds give each well-separated group of rows a centroid of its own,
+    where random seeds leave some groups sharing one cluster of a wide
+    radius. The clustering only decides which rows
+    :func:`topk.pruned_topk` can skip; any partition gives the same
+    answers."""
+    from hybrid_vector_search_spark.operators.ivf import default_nlist
+
+    n = len(mat)
+    nlist = default_nlist(n)
+    rng = np.random.default_rng(0)
+    taken = rng.choice(n, min(n, PARTITION_SAMPLE), replace=False)
+    sample = mat[np.sort(taken)]
+    step = max(len(sample) // max(PARTITION_SEED_ROWS, nlist), 1)
+    cents = _farthest_first(sample[::step], nlist)
+    with np.errstate(invalid="ignore"):  # NaN rows: pruning is off
+        for _ in range(PARTITION_ITERS):
+            lab = _nearest(sample, cents)
+            order = np.argsort(lab, kind="stable")
+            cut = np.flatnonzero(np.r_[True, np.diff(lab[order]) != 0])
+            sums = np.add.reduceat(sample.T[:, order], cut, axis=1).T
+            norms = np.linalg.norm(sums, axis=1)
+            moved = norms > 0
+            cents[lab[order][cut][moved]] = sums[moved] / norms[moved, None]
+        labels = np.concatenate(
+            [
+                _nearest(mat[lo : lo + BLOCK_ROWS], cents)
+                for lo in range(0, n, BLOCK_ROWS)
+            ]
+        )
+        return cluster_bounds(mat, labels, nlist)
+
+
+def _farthest_first(rows: np.ndarray, nlist: int) -> np.ndarray:
+    """``nlist`` of ``rows``: the first, then each time the row least
+    similar (by inner product) to every one taken so far."""
+    cents = np.empty((nlist, rows.shape[1]), dtype=rows.dtype)
+    cents[0] = rows[0]
+    best = rows @ cents[0]
+    for j in range(1, nlist):
+        cents[j] = rows[np.argmin(best)]
+        np.maximum(best, rows @ cents[j], out=best)
+    return cents
+
+
+def _nearest(rows: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """The centroid of largest inner product with each row (the first
+    on a tie)."""
+    return (rows @ cents.T).argmax(axis=1)
 
 
 def _max_row_norm(mat: np.ndarray) -> float:
@@ -389,14 +506,17 @@ class ShardedCorpusServe:
     same refusal contract as before, just at the honest limit (total
     RAM) instead of the single-collect artifact (one 4 GiB blob).
 
-    Per-query cost is the SAME total GEMM bytes as the monolithic tier
-    (the matrix is merely split), so throughput tracks the reference's
-    in-RAM brute-force rate — BLAS sees S smaller row-blocks instead of
-    one; the merge handles ≤ S×k tuples (tools/shard_serve_probe.py
-    pins the measured ratio on a corpus past the single-shard gate).
-    Answers are value-identical to the monolithic path: shard
-    membership only partitions the scan, and ``_merge_topk`` applies
-    the engine-wide (score DESC, id ASC) tiebreak."""
+    Each shard is partitioned and pruned on its own
+    (:meth:`LocalCorpusServe.exact_topk`): a shard whose clusters the
+    score bound rules out reads only the rest, and one where it cannot
+    scans its whole block, so a query reads about the GEMM bytes of
+    the monolithic tier's search (the matrix is merely split) — BLAS sees
+    S smaller row-blocks instead of one; the merge handles ≤ S×k tuples
+    (tools/shard_serve_probe.py pins the measured ratio on a corpus
+    past the single-shard gate). Answers are value-identical to the
+    monolithic path: shard membership only partitions the rows, and
+    ``_merge_topk`` applies the engine-wide (score DESC, id ASC)
+    tiebreak."""
 
     def __init__(self, shards: list[LocalCorpusServe]):
         if not shards:

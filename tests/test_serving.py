@@ -4,6 +4,7 @@ registry oracle gate (hybrid_topk_local_* share the hybrid_topk_*
 oracles verbatim); these tests pin the RAM gate, the empty-result
 contract, and tiebreak order."""
 
+import gc
 import os
 
 import pytest
@@ -680,6 +681,10 @@ def test_warm_dispatch_confirms_its_cache_entry_in_two_calls(
     first = backend._served()
     assert first.route == "resident"
     client = spark.sparkContext._gateway._gateway_client
+    # py4j sends one delete command for each Java proxy the garbage
+    # collector frees: collect the garbage of earlier tests now, so no
+    # cycle collection falls inside the counted window
+    gc.collect()
     sent = []
     real = client.send_command
     monkeypatch.setattr(
